@@ -2,6 +2,8 @@
 compaction view, and an end-to-end file-stream run where the index
 persists across two stream restarts."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +17,8 @@ CLEAN_A = "fresh unique sentence describing partition layout choices for large t
 NEAR_A = CLEAN_A.replace("large", "huge")
 CLEAN_B = "another standalone paragraph covering watermark semantics in streaming jobs"
 JUNK = "!!!! ???? !!!! ???? !!!! ???? !!!! ????"
+JUNK2 = ";;;; :::: ;;;; :::: ;;;; :::: ;;;; ::::"
+CLEAN_C = "a third clean paragraph about bucketed joins and sorted row groups"
 
 
 def _frame(spark, rows):
@@ -317,6 +321,10 @@ def pindex(spark):
         spark.sql(f"DROP TABLE IF EXISTS ingest_pidx_t{s}")
 
 
+def _stats(s: ingest.IngestStats) -> dict:
+    return {k: v for k, v in s.__dict__.items() if k != "epoch_id"}
+
+
 def test_gate_works_over_prefix_index(spark, pindex, tmp_path):
     # same gate, v2 prefix-pruned index underneath (auto-detected via
     # the meta table): stage counts and accepted set must be identical
@@ -336,15 +344,134 @@ def test_gate_works_over_prefix_index(spark, pindex, tmp_path):
         (13, JUNK), (14, NEAR_A), (15, CLEAN_B),
     ])
     fn(batch, epoch_id=0)
-    assert stats[-1].corpus_near_dup == 1 and stats[-1].accepted == 2
+    assert _stats(stats[-1]) == {
+        "arrived": 6, "already_known": 0, "exact_dup": 1,
+        "low_quality": 1, "corpus_near_dup": 1, "batch_near_dup": 1,
+        "accepted": 2,
+    }
     assert {r["doc_id"] for r in
             spark.read.parquet(accepted_path).collect()} == {11, 15}
-    # extends went through the prefix layout (idempotent on replay)
+    # extends went through the prefix layout (idempotent on replay):
+    # the replayed epoch accepts nothing — 12 is now rank 1 of its
+    # text but near-dups (here: equals) the admitted 11
     fn(batch, epoch_id=0)
-    assert stats[-1].already_known == 2 and stats[-1].accepted == 0
+    assert _stats(stats[-1]) == {
+        "arrived": 6, "already_known": 2, "exact_dup": 0,
+        "low_quality": 1, "corpus_near_dup": 3, "batch_near_dup": 0,
+        "accepted": 0,
+    }
     members = {r["doc_id"]
                for r in spark.table(di._docs_table(pindex)).collect()}
     assert members == {1, 2, 11, 15}
+
+    # an insert and an update of one doc_id in one poll window: two
+    # rows, both rank 1 of their texts. Quality is a doc_id-level
+    # semi-join, so the junk row rides on its clean twin — counted once
+    # per ROW at every stage, never per (row, quality row) pair
+    fn(_frame(spark, [
+        (20, CLEAN_C), (20, JUNK2), (21, JUNK), (22, CLEAN_C),
+    ]), epoch_id=1)
+    assert _stats(stats[-1]) == {
+        "arrived": 4, "already_known": 0, "exact_dup": 1,
+        "low_quality": 1, "corpus_near_dup": 0, "batch_near_dup": 0,
+        "accepted": 2,
+    }
+    got = sorted((r["doc_id"], r["text"]) for r in
+                 spark.read.parquet(accepted_path).collect())
+    assert got == sorted([(11, CLEAN_A), (15, CLEAN_B),
+                          (20, CLEAN_C), (20, JUNK2)])
+
+
+def test_gate_without_stats_and_empty_epoch(spark, pindex, tmp_path):
+    di.build_prefix_index(
+        spark, _frame(spark, [(1, BASE), (2, OTHER)]), pindex,
+        threshold=0.5,
+    )
+    accepted_path = str(tmp_path / "accepted_n")
+    fn = ingest.make_ingest_batch_fn(
+        spark, pindex, accepted_path, min_quality=0.05, threshold=0.5,
+    )
+    # nothing passes: a corpus near-dup, junk, and a corpus member
+    fn(_frame(spark, [(10, NEAR_BASE), (13, JUNK), (2, OTHER)]),
+       epoch_id=0)
+    assert not os.path.exists(accepted_path)
+    fn(_frame(spark, [(11, CLEAN_A), (14, NEAR_A), (15, CLEAN_B)]),
+       epoch_id=1)
+    assert {r["doc_id"] for r in
+            spark.read.parquet(accepted_path).collect()} == {11, 15}
+    assert {r["doc_id"] for r in
+            spark.table(di._docs_table(pindex)).collect()} == {1, 2, 11, 15}
+
+
+def _rows(spark, table):
+    return sorted(tuple(r) for r in spark.table(table).collect())
+
+
+def test_gate_append_matches_extend_prefix_index(spark, pindex, tmp_path):
+    """The gate hands its accepted frame straight to the prefix append,
+    skipping extend_prefix_index's membership anti-join: the index must
+    end up holding exactly the rows extend_prefix_index writes for the
+    same documents, and the next epoch must see them."""
+    ref = "ingest_pidx_ref"
+    corpus = _frame(spark, [(1, BASE), (2, OTHER)])
+    di.build_prefix_index(spark, corpus, pindex, threshold=0.5)
+    di.build_prefix_index(spark, corpus, ref, threshold=0.5)
+    try:
+        accepted_path = str(tmp_path / "accepted_h")
+        stats: list[ingest.IngestStats] = []
+        fn = ingest.make_ingest_batch_fn(
+            spark, pindex, accepted_path,
+            min_quality=0.05, threshold=0.5, stats=stats,
+        )
+        fn(_frame(spark, [(10, NEAR_BASE), (11, CLEAN_A), (15, CLEAN_B)]),
+           epoch_id=0)
+        acc = spark.read.parquet(accepted_path).select("doc_id", "text")
+        assert {r["doc_id"] for r in acc.collect()} == {11, 15}
+        assert di.extend_prefix_index(spark, acc, ref) == 2
+        for sfx in ("", "_full", "_docs"):
+            assert _rows(spark, pindex + sfx) == _rows(spark, ref + sfx)
+
+        # the next epoch's near-dup of an admitted doc is a corpus hit
+        fn(_frame(spark, [(30, NEAR_A), (31, CLEAN_C)]), epoch_id=1)
+        assert stats[-1].corpus_near_dup == 1
+        assert stats[-1].accepted == 1
+    finally:
+        for sfx in ("", "_full", "_docs", "_meta"):
+            spark.sql(f"DROP TABLE IF EXISTS {ref}{sfx}")
+
+
+#: Spark jobs (adaptive-execution map stages included) that one gate
+#: epoch over a prefix index runs on the six-document batch below, with
+#: every stage executed once. A stage that re-executes its lineage — a
+#: stats count() that re-runs the probe, an extend that repeats the
+#: membership anti-join — pushes an epoch over this.
+GATE_EPOCH_MAX_JOBS = 59
+
+
+def test_gate_epoch_spark_job_budget(spark, pindex, tmp_path):
+    di.build_prefix_index(
+        spark, _frame(spark, [(1, BASE), (2, OTHER)]), pindex,
+        threshold=0.5,
+    )
+    stats: list[ingest.IngestStats] = []
+    fn = ingest.make_ingest_batch_fn(
+        spark, pindex, str(tmp_path / "accepted_j"),
+        min_quality=0.05, threshold=0.5, stats=stats,
+    )
+    batch = _frame(spark, [
+        (10, NEAR_BASE), (11, CLEAN_A), (12, CLEAN_A),
+        (13, JUNK), (14, NEAR_A), (15, CLEAN_B),
+    ])
+    sc = spark.sparkContext
+    group = f"gate-epoch-{id(fn)}"
+    sc.setJobGroup(group, "one gate epoch")
+    try:
+        fn(batch, epoch_id=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert stats[-1].accepted == 2
+    assert 0 < jobs <= GATE_EPOCH_MAX_JOBS, jobs
 
 
 def test_embedding_gate_over_ivfpq_index(spark, tmp_path):

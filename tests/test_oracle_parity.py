@@ -50,3 +50,10 @@ def test_every_query_has_oracle():
     driver's weaker rows-only check unnoticed."""
     missing = sorted(set(_QUERIES) - set(_ORACLES))
     assert missing == [], f"queries without oracle_sql: {missing}"
+
+
+def test_j7_range_join_in_first_50_registered():
+    """The per-round correctness sample takes the first 50 registered
+    names; the range join must stay inside it (the core-bound
+    ann_cosine_allpairs is registered after it for that reason)."""
+    assert "j7_range_join" in list(_QUERIES)[:50]

@@ -294,16 +294,17 @@ PROBE_BLOCK_BYTES = 256 * 1024
 #: native In pushdown (Spark 4 default) handles large sets.
 VERIFY_COLLECT_MAX = 65_536
 
-#: distinct-shingle ceiling for the v4 probe FAST path (round 11): the
-#: fast path pushes the batch's shingle hashes into the probe table as
-#: one parsed ``In`` literal list, and Catalyst's parse/canonicalize/
-#: parquet-filter conversion on a multi-tens-of-thousands literal list
-#: costs SECONDS per execution (measured ~15 s per job at the sf0.1
-#: bench batch: 714 docs → 19 926 distinct shingles — and the
-#: un-checkpointed candidate plan executes twice). A poll-cycle batch
-#: is a few hundred shingles; anything bigger takes the join path,
-#: whose broadcast-hash candidate join against the bucketed probe
-#: table is the right cost model for batch-shaped work.
+#: distinct-shingle ceiling for the v4 probe FAST path. The fast path
+#: collects the batch's shingle rows to the driver and ships them back
+#: as a literal frame built from Python rows; past a few thousand
+#: shingles that round trip costs more than the join path's
+#: broadcast-hash candidate join against the bucketed probe table.
+#: Measured on a 4-core box, warm median of 5: a 200-doc batch of
+#: 60-word texts (~11.6 k distinct shingles) against a 200-doc index
+#: probes in 1.87 s with this gate disarmed against 1.41 s on the join
+#: path. (The round-11 reason — the shingles pushed as one huge parsed
+#: ``In`` list on the candidate scan — went away in round 12, when the
+#: candidate scan became a plain broadcast join.)
 FAST_PROBE_SHINGLES = 4_096
 
 #: sorted-run file count for v4 builds/compactions — one range
@@ -624,9 +625,9 @@ def _probe_v4_fast(
         by_doc.setdefault(r["batch_doc"], set()).add(int(r["shingle"]))
     shingles = sorted({s for ss in by_doc.values() for s in ss})
     if len(shingles) > FAST_PROBE_SHINGLES:
-        # a literal list this long costs seconds of plan work PER JOB
-        # (and this plan runs twice) — batch-shaped it is not; the
-        # join path's broadcast-hash candidate join wins from here
+        # past this the Python-row literal frame below costs more than
+        # the join path's broadcast-hash candidate join (measured — see
+        # FAST_PROBE_SHINGLES)
         return None
     bszs = {d: len(ss) for d, ss in by_doc.items()}
     bsh_lit = F.broadcast(
@@ -965,19 +966,34 @@ def extend_prefix_index(
     table: str,
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> int:
-    """Append new documents (idempotent under replay). Prefix rows for
-    the new docs rank against the *new batch's own* df snapshot — safe
-    because corpus-side prefix pruning is lossless under any per-doc
-    shingle choice of the required length (see module notes); the df
-    order only tunes posting-list length."""
-    meta = _meta_row(spark, table)
+    """Append new documents (idempotent under replay): the membership
+    anti-join drops docs the index already holds, then
+    ``_append_prefix_docs`` writes the rest. Returns the number of
+    documents added."""
     known = spark.table(_docs_table(table)).select("doc_id")
     fresh = batch_anti_join(docs, known, "doc_id").localCheckpoint(
         eager=True
     )
-    added = fresh.count()
+    return _append_prefix_docs(spark, fresh, table, fresh.count(), n_buckets)
+
+
+def _append_prefix_docs(
+    spark: SparkSession,
+    fresh: DataFrame,
+    table: str,
+    added: int,
+    n_buckets: int = DEFAULT_BUCKETS,
+) -> int:
+    """Append ``added`` documents that the caller has already
+    anti-joined against the membership sidecar and materialized (the
+    text gate's accepted set is such a frame: its first stage is that
+    anti-join). Prefix rows for the new docs rank against the *new
+    batch's own* df snapshot — safe because corpus-side prefix pruning
+    is lossless under any per-doc shingle choice of the required length
+    (see module notes); the df order only tunes posting-list length."""
     if added == 0:
         return 0
+    meta = _meta_row(spark, table)
     (
         _prefix_rows(fresh, meta.n, meta.threshold)
         .write.mode("append")

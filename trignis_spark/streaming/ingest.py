@@ -24,7 +24,9 @@ and each epoch passes through
    may over-reject on chains a~b~c, which fuzzy clustering
    (``dedup.cluster_near_duplicates``) resolves offline if needed);
 6. **accept** — append ``(doc_id, text, epoch_id)`` to the accepted
-   store and ``dedup_index.extend`` the same rows.
+   store and add the same rows to the index. A prefix index takes them
+   straight through its append (they passed step 1's anti-join this
+   epoch); a v1 index goes through ``dedup_index.extend``.
 
 Delivery semantics match the rest of the engine (at-least-once,
 idempotent where it matters): the index extend is exactly-once by
@@ -36,8 +38,14 @@ batch and nothing is re-written.
 
 Scale shape: every gate is an executor-side join against either a
 broadcast batch or the bucketed index — the corpus is never shuffled
-per epoch. The only driver-side materialization is the per-stage
-counter row (one tiny agg per epoch) when stats are requested.
+per epoch. Each stage runs once per epoch. The gate makes four
+batch-sized ``localCheckpoint``s (the arrived batch; steps 1-3 as one
+frame tagged with the dedup rank and quality verdict; the survivors of
+step 4, so the probe's verify runs once; the accepted set) and one
+``count()`` of the accepted set. Stats add a ``count()`` of the batch,
+one aggregate over the tagged frame and a ``count()`` of the step-4
+survivors. Batch rows reach the driver only through the v4 probe's
+bounded collects (``dedup_index._probe_v4_fast``).
 """
 
 from __future__ import annotations
@@ -97,8 +105,8 @@ def make_ingest_batch_fn(
     The returned callable takes ``(batch_df, epoch_id)``; ``batch_df``
     needs an ``id_col`` (long, unique per document) and a ``text_col``.
     Pass a list as ``stats`` to collect per-epoch :class:`IngestStats`
-    (costs one counting aggregation per epoch; omit for zero telemetry
-    overhead on the hot path).
+    (costs three small actions over already-materialized stages per
+    epoch — see the module notes; omit to skip them).
     """
 
     def ingest_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -108,47 +116,54 @@ def make_ingest_batch_fn(
         )
         docs = docs.localCheckpoint(eager=True)  # cut the stream lineage
         known = spark.table(di._docs_table(index_table)).select("doc_id")
-        fresh = batch_anti_join(docs, known, "doc_id")
-
         w = Window.partitionBy(F.sha2(F.col("text"), 256)).orderBy("doc_id")
-        uniq = (
-            fresh.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
+        ranked = batch_anti_join(docs, known, "doc_id").withColumn(
+            "_rn", F.row_number().over(w)
         )
-
-        good = uniq.join(
-            quality_scores(uniq)
-            .filter(F.col("quality_score") >= min_quality)
-            .select("doc_id"),
+        # quality verdict per doc_id over the rank-1 rows: a row is good
+        # when ANY rank-1 row of its doc_id passes (semi-join semantics —
+        # an insert and an update of one doc_id in a batch are two rows),
+        # aggregated first so the join below never multiplies rows
+        verdict = (
+            quality_scores(ranked.filter(F.col("_rn") == 1))
+            .groupBy("doc_id")
+            .agg(F.max(F.col("quality_score") >= min_quality).alias("_q"))
+        )
+        # stages 1-3 materialized once, tagged: fresh = every row,
+        # uniq = _rn 1, good = _good
+        fresh = ranked.join(verdict, "doc_id", "left").select(
             "doc_id",
-            "left_semi",
+            "text",
+            "_rn",
+            ((F.col("_rn") == 1) & F.coalesce(F.col("_q"), F.lit(False)))
+            .alias("_good"),
         ).localCheckpoint(eager=True)
-        # checkpointed: good feeds the probe's broadcast gate, the
-        # probe itself, two anti-joins and (optionally) stats counts —
-        # without it the window dedup + quality scoring re-run for each
+        good = fresh.filter("_good").select("doc_id", "text")
 
         corpus_hits = (
             di.probe(spark, index_table, good, threshold, n)
             .select(F.col("batch_doc").alias("doc_id"))
             .distinct()
         )
-        no_corpus_dup = good.join(corpus_hits, "doc_id", "left_anti")
+        # checkpointed: the in-batch pass reads the survivors twice and
+        # the stats count once more — the probe's verify runs only here
+        no_corpus_dup = good.join(corpus_hits, "doc_id", "left_anti") \
+            .localCheckpoint(eager=True)
         accepted = no_corpus_dup.join(
             _in_batch_rejects(no_corpus_dup, threshold, n),
             "doc_id",
             "left_anti",
         ).localCheckpoint(eager=True)
+        n_acc = accepted.count()
 
         if stats is not None:
-            n_docs, n_fresh, n_uniq, n_good, n_nocorp, n_acc = (
-                docs.count(),
-                fresh.count(),
-                uniq.count(),
-                good.count(),
-                no_corpus_dup.count(),
-                accepted.count(),
-            )
+            n_docs = docs.count()
+            n_fresh, n_uniq, n_good = fresh.agg(
+                F.count(F.lit(1)),
+                F.count_if(F.col("_rn") == 1),
+                F.count_if("_good"),
+            ).first()
+            n_nocorp = no_corpus_dup.count()
             stats.append(
                 IngestStats(
                     epoch_id=epoch_id,
@@ -162,14 +177,19 @@ def make_ingest_batch_fn(
                 )
             )
 
-        if accepted.isEmpty():
+        if n_acc == 0:
             return
         (
             accepted.withColumn("epoch_id", F.lit(epoch_id).cast("long"))
             .write.mode("append")
             .parquet(accepted_path)
         )
-        di.extend(spark, accepted, index_table, n)
+        if di.is_prefix_index(spark, index_table):
+            # accepted ⊆ fresh, which already passed the membership
+            # anti-join this epoch: append without repeating it
+            di._append_prefix_docs(spark, accepted, index_table, n_acc)
+        else:
+            di.extend(spark, accepted, index_table, n)
 
     return ingest_batch
 
