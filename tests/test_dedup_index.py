@@ -17,61 +17,62 @@ def _frame(spark, rows):
 
 
 @pytest.fixture
-def index(spark):
-    yield "dedup_idx_t"
-    spark.sql("DROP TABLE IF EXISTS dedup_idx_t")
-    spark.sql("DROP TABLE IF EXISTS dedup_idx_t_docs")
-
-
-def test_probe_matches_one_shot_operator(spark, index):
-    corpus = _frame(spark, [(1, BASE), (2, BASE), (3, OTHER)])
-    batch = _frame(spark, [(10, NEAR), (11, "nothing shared with anyone")])
-    di.build_index(spark, corpus, index)
-
-    via_index = {
-        (r["batch_doc"], r["corpus_doc"], round(r["jaccard"], 9))
-        for r in di.probe_index(spark, index, batch, threshold=0.5).collect()
-    }
-    one_shot = {
-        (r["batch_doc"], r["corpus_doc"], round(r["jaccard"], 9))
-        for r in dd.incremental_pairs(
-            dd.shingle_table(corpus), dd.shingle_table(batch), threshold=0.5
-        ).collect()
-    }
-    assert via_index == one_shot
-    assert {(b, c) for b, c, _ in via_index} == {(10, 1), (10, 2)}
-
-
-def test_extend_is_idempotent_and_grows_probe_results(spark, index):
-    di.build_index(spark, _frame(spark, [(1, OTHER)]), index)
-    batch = _frame(spark, [(10, NEAR)])
-    assert di.probe_index(spark, index, batch, threshold=0.5).count() == 0
-
-    # a replayed extend adds the new doc exactly once
-    newcomer = _frame(spark, [(2, BASE)])
-    assert di.extend_index(spark, newcomer, index) == 1
-    assert di.extend_index(spark, newcomer, index) == 0  # replay: no-op
-    docs = spark.table("dedup_idx_t_docs")
-    assert docs.filter(F.col("doc_id") == 2).count() == 1
-
-    # and the probe now sees the near-dup through the extended index
-    got = di.probe_index(spark, index, batch, threshold=0.5).collect()
-    assert [(r["batch_doc"], r["corpus_doc"]) for r in got] == [(10, 2)]
-
-
-def test_index_layout_is_bucketed_on_shingle(spark, index):
-    di.build_index(spark, _frame(spark, [(1, BASE), (3, OTHER)]), index)
-    ddl = spark.sql("DESCRIBE TABLE EXTENDED dedup_idx_t").collect()
-    info = {r["col_name"]: r["data_type"] for r in ddl}
-    assert "shingle" in info.get("Bucket Columns", "")
-    assert "shingle" in info.get("Sort Columns", "")
-
-
-@pytest.fixture
 def pindex(spark):
     yield "dedup_pidx_t"
     for suffix in ("", "_full", "_docs", "_meta"):
         spark.sql(f"DROP TABLE IF EXISTS dedup_pidx_t{suffix}")
+
+
+def _pairs(df):
+    return {(r["batch_doc"], r["corpus_doc"], round(r["jaccard"], 9))
+            for r in df.collect()}
+
+
+def _one_shot(corpus, batch, threshold):
+    """Reference oracle: the one-shot operator over the raw documents
+    (no index, no prefix pruning)."""
+    return _pairs(dd.incremental_pairs(
+        dd.shingle_table(corpus), dd.shingle_table(batch), threshold
+    ))
+
+
+def test_probe_matches_one_shot_operator(spark, pindex):
+    corpus = _frame(spark, [(1, BASE), (2, BASE), (3, OTHER)])
+    batch = _frame(spark, [(10, NEAR), (11, "nothing shared with anyone")])
+    di.build_prefix_index(spark, corpus, pindex, threshold=0.5)
+
+    via_index = _pairs(di.probe(spark, pindex, batch, threshold=0.5))
+    assert via_index == _one_shot(corpus, batch, 0.5)
+    assert {(b, c) for b, c, _ in via_index} == {(10, 1), (10, 2)}
+
+
+def test_extend_is_idempotent_and_grows_probe_results(spark, pindex):
+    di.build_prefix_index(spark, _frame(spark, [(1, OTHER)]), pindex,
+                          threshold=0.5)
+    batch = _frame(spark, [(10, NEAR)])
+    assert di.probe(spark, pindex, batch, threshold=0.5).count() == 0
+
+    # a replayed extend adds the new doc exactly once
+    newcomer = _frame(spark, [(2, BASE)])
+    assert di.extend(spark, newcomer, pindex) == 1
+    assert di.extend(spark, newcomer, pindex) == 0  # replay: no-op
+    docs = spark.table(di._docs_table(pindex))
+    assert docs.filter(F.col("doc_id") == 2).count() == 1
+
+    # and the probe now sees the near-dup through the extended index
+    got = di.probe(spark, pindex, batch, threshold=0.5).collect()
+    assert [(r["batch_doc"], r["corpus_doc"]) for r in got] == [(10, 2)]
+
+
+def test_index_layout_is_bucketed_on_shingle(spark, pindex):
+    # the sort-merge fallback relies on the probe table's bucket spec to
+    # co-locate the batch without shuffling the corpus side
+    di.build_prefix_index(spark, _frame(spark, [(1, BASE), (3, OTHER)]),
+                          pindex, threshold=0.5)
+    ddl = spark.sql(f"DESCRIBE TABLE EXTENDED {pindex}").collect()
+    info = {r["col_name"]: r["data_type"] for r in ddl}
+    assert "shingle" in info.get("Bucket Columns", "")
+    assert "shingle" in info.get("Sort Columns", "")
 
 
 def _rand_docs(seed, n_docs, start=0):
@@ -91,19 +92,25 @@ def _rand_docs(seed, n_docs, start=0):
     return rows
 
 
-def test_prefix_probe_matches_full_probe(spark, index, pindex):
-    corpus = _frame(spark, _rand_docs(3, 16))
-    batch = _frame(spark, _rand_docs(4, 6, start=1000))
-    di.build_index(spark, corpus, index)
+def test_prefix_probe_matches_full_probe(spark, pindex):
+    """Prefix pruning is lossless: the probe returns exactly the pairs
+    of the full (unpruned) one-shot computation at three thresholds, on
+    the broadcast path and on the sort-merge fallback."""
+    rows = _rand_docs(3, 16)
+    corpus = _frame(spark, rows)
+    # unrelated docs, one-word edits of corpus docs (jaccard spread over
+    # the three thresholds by doc length) and one verbatim copy
+    batch = _frame(spark, _rand_docs(4, 6, start=1000) + [
+        (1100 + i, rows[i][1].rsplit(" ", 1)[0] + " zz") for i in range(8)
+    ] + [(1200, rows[20][1])])
     di.build_prefix_index(spark, corpus, pindex, threshold=0.5)
     for t in (0.5, 0.7, 0.9):
-        full = {(r["batch_doc"], r["corpus_doc"], round(r["jaccard"], 9))
-                for r in di.probe_index(spark, index, batch,
-                                        threshold=t).collect()}
-        pref = {(r["batch_doc"], r["corpus_doc"], round(r["jaccard"], 9))
-                for r in di.probe_prefix_index(spark, pindex, batch,
-                                               threshold=t).collect()}
-        assert pref == full
+        want = _one_shot(corpus, batch, t)
+        assert want
+        for broadcast_batch in (None, False):
+            got = _pairs(di.probe(spark, pindex, batch, threshold=t,
+                                  broadcast_batch=broadcast_batch))
+            assert got == want, (t, broadcast_batch)
 
 
 def test_prefix_probe_rejects_looser_threshold(spark, pindex):
@@ -111,27 +118,28 @@ def test_prefix_probe_rejects_looser_threshold(spark, pindex):
         spark, _frame(spark, [(1, BASE)]), pindex, threshold=0.8
     )
     with pytest.raises(ValueError, match="threshold"):
-        di.probe_prefix_index(
+        di.probe(
             spark, pindex, _frame(spark, [(10, NEAR)]), threshold=0.5
         )
 
 
-def test_prefix_extend_idempotent_and_lossless(spark, index, pindex):
+def test_prefix_extend_idempotent_and_lossless(spark, pindex):
     start = _frame(spark, _rand_docs(5, 10))
-    di.build_index(spark, start, index)
     di.build_prefix_index(spark, start, pindex, threshold=0.5)
-    newcomers = _frame(spark, _rand_docs(6, 8, start=500))
-    assert di.extend_index(spark, newcomers, index) == 12
-    assert di.extend_prefix_index(spark, newcomers, pindex) == 12
-    assert di.extend_prefix_index(spark, newcomers, pindex) == 0  # replay
-    batch = _frame(spark, _rand_docs(7, 5, start=2000))
-    full = {(r["batch_doc"], r["corpus_doc"], round(r["jaccard"], 9))
-            for r in di.probe_index(spark, index, batch,
-                                    threshold=0.5).collect()}
-    pref = {(r["batch_doc"], r["corpus_doc"], round(r["jaccard"], 9))
-            for r in di.probe_prefix_index(spark, pindex, batch,
-                                           threshold=0.5).collect()}
-    assert pref == full
+    new_rows = _rand_docs(6, 8, start=500)
+    newcomers = _frame(spark, new_rows)
+    assert di.extend(spark, newcomers, pindex) == 12
+    assert di.extend(spark, newcomers, pindex) == 0  # replay
+    # extends rank their prefixes against their own df snapshot; the
+    # grown index must still return every pair of the one-shot operator,
+    # including near-copies of the extended docs
+    batch = _frame(spark, _rand_docs(7, 5, start=2000) + [
+        (2100 + i, text.rsplit(" ", 1)[0] + " zz")
+        for i, (_, text) in enumerate(new_rows)
+    ])
+    got = _pairs(di.probe(spark, pindex, batch, threshold=0.5))
+    assert got == _one_shot(start.unionByName(newcomers), batch, 0.5)
+    assert got
 
 
 def test_prefix_index_excludes_hot_shingles(spark, pindex):
@@ -167,14 +175,14 @@ def test_prefix_index_compaction_preserves_probe_results(spark, pindex):
         spark, _frame(spark, _rand_docs(8, 10)), pindex, threshold=0.5
     )
     for seed, start in ((9, 500), (10, 600), (11, 700)):
-        di.extend_prefix_index(
+        di.extend(
             spark, _frame(spark, _rand_docs(seed, 4, start=start)), pindex
         )
     # same generator seed as the corpus build => identical texts under
     # fresh doc ids, so the probe is guaranteed non-empty
     batch = _frame(spark, _rand_docs(8, 5, start=3000))
     before = {(r.batch_doc, r.corpus_doc, round(r.jaccard, 9))
-              for r in di.probe_prefix_index(spark, pindex, batch,
+              for r in di.probe(spark, pindex, batch,
                                              0.5).collect()}
     files_before = sum(
         len(table_data_files(spark, t))
@@ -183,43 +191,24 @@ def test_prefix_index_compaction_preserves_probe_results(spark, pindex):
     n_after = di.compact_prefix_index(spark, pindex)
     assert n_after < files_before
     after = {(r.batch_doc, r.corpus_doc, round(r.jaccard, 9))
-             for r in di.probe_prefix_index(spark, pindex, batch,
+             for r in di.probe(spark, pindex, batch,
                                             0.5).collect()}
     assert after == before and len(before) > 0
     # compaction is idempotent: a re-run with no new appends converges
     assert di.compact_prefix_index(spark, pindex) == n_after
 
 
-def _replay_duplicate_rows(spark, table, bucket_col, sort=False,
-                           partitioned=None):
+def _replay_duplicate_rows(spark, table, bucket_col=None):
     """Re-append a table's current rows to itself — the state a crashed
     extend leaves behind when the next at-least-once replay re-appends
     a batch whose _docs-sidecar write never landed (ADVICE r5)."""
-    rows = spark.table(table)
-    w = rows.write.mode("append").format("parquet")
-    if partitioned and partitioned in rows.columns:
-        w = rows.repartition(partitioned).write.mode("append") \
-            .format("parquet").partitionBy(partitioned)
-    elif bucket_col is not None:
-        w = w.bucketBy(di.DEFAULT_BUCKETS, bucket_col)
-        if sort:
-            w = w.sortBy(bucket_col)
-    # else: v4 doc-sorted verify table — a plain append IS the crash
+    w = spark.table(table).write.mode("append").format("parquet")
+    if bucket_col is not None:
+        w = w.bucketBy(di.DEFAULT_BUCKETS, bucket_col).sortBy(bucket_col)
+    # else: the doc-sorted verify table — a plain append IS the crash
     # shape (a replayed extend appends an identical sorted run)
     w.saveAsTable(table)
     spark.catalog.refreshTable(table)
-
-
-def test_probe_unaffected_by_replayed_duplicate_index_rows(spark, index):
-    corpus = _frame(spark, [(1, BASE), (2, BASE), (3, OTHER)])
-    batch = _frame(spark, [(10, NEAR)])
-    di.build_index(spark, corpus, index)
-    before = {(r.batch_doc, r.corpus_doc, round(r.jaccard, 9))
-              for r in di.probe_index(spark, index, batch, 0.5).collect()}
-    _replay_duplicate_rows(spark, index, "shingle", sort=True)
-    after = {(r.batch_doc, r.corpus_doc, round(r.jaccard, 9))
-             for r in di.probe_index(spark, index, batch, 0.5).collect()}
-    assert after == before and before
 
 
 def test_prefix_probe_unaffected_by_replayed_duplicate_rows(spark):
@@ -229,16 +218,15 @@ def test_prefix_probe_unaffected_by_replayed_duplicate_rows(spark):
     try:
         di.build_prefix_index(spark, corpus, name, threshold=0.5)
         before = {(r.batch_doc, r.corpus_doc, round(r.jaccard, 9))
-                  for r in di.probe_prefix_index(
+                  for r in di.probe(
                       spark, name, batch, 0.5).collect()}
         # the crash window duplicates the probe AND verify tables but
         # not the _docs sidecar; jaccard (isz from the verify table)
         # must not double-count
-        _replay_duplicate_rows(spark, name, "shingle", sort=True)
-        _replay_duplicate_rows(spark, di._full_table(name), None,
-                               partitioned="pb")
+        _replay_duplicate_rows(spark, name, "shingle")
+        _replay_duplicate_rows(spark, di._full_table(name))
         after = {(r.batch_doc, r.corpus_doc, round(r.jaccard, 9))
-                 for r in di.probe_prefix_index(
+                 for r in di.probe(
                      spark, name, batch, 0.5).collect()}
         assert after == before and before
         assert all(j <= 1.0 for _, _, j in after)
@@ -272,10 +260,10 @@ def test_prefix_probe_sort_merge_fallback_identical_pairs(spark):
     try:
         di.build_prefix_index(spark, corpus, name, threshold=0.5)
         want = {(r.batch_doc, r.corpus_doc, round(r.jaccard, 9))
-                for r in di.probe_prefix_index(
+                for r in di.probe(
                     spark, name, batch, 0.5).collect()}
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        smj = di.probe_prefix_index(
+        smj = di.probe(
             spark, name, batch, 0.5, broadcast_batch=False
         )
         assert_no_cartesian_product(smj)
@@ -292,7 +280,7 @@ def test_prefix_probe_sort_merge_fallback_identical_pairs(spark):
         orig = di.MAX_BROADCAST_SHINGLES
         di.MAX_BROADCAST_SHINGLES = 10  # 2 long docs >> 10 shingles
         try:
-            auto = di.probe_prefix_index(spark, name, batch, 0.5)
+            auto = di.probe(spark, name, batch, 0.5)
             plan = auto._jdf.queryExecution().executedPlan().toString()
             assert "BroadcastHashJoin" not in plan
             got2 = {(r.batch_doc, r.corpus_doc, round(r.jaccard, 9))
@@ -322,7 +310,7 @@ def test_attach_prefix_index_restores_probes(spark, pindex):
     batch = _frame(spark, [(1000 + i, rows[i][1]) for i in range(3)])
     di.build_prefix_index(spark, corpus, pindex, threshold=0.5)
     want = {(r["batch_doc"], r["corpus_doc"], round(r["jaccard"], 9))
-            for r in di.probe_prefix_index(spark, pindex, batch,
+            for r in di.probe(spark, pindex, batch,
                                            threshold=0.5).collect()}
     assert want
 
@@ -337,7 +325,7 @@ def test_attach_prefix_index_restores_probes(spark, pindex):
     try:
         di.attach_prefix_index(spark, twin)
         got = {(r["batch_doc"], r["corpus_doc"], round(r["jaccard"], 9))
-               for r in di.probe_prefix_index(spark, twin, batch,
+               for r in di.probe(spark, twin, batch,
                                               threshold=0.5).collect()}
         assert got == want
     finally:
@@ -346,89 +334,6 @@ def test_attach_prefix_index_restores_probes(spark, pindex):
             dst = os.path.join(wh, twin + suffix)
             if os.path.isdir(dst):
                 shutil.rmtree(dst)
-
-
-def test_prefix_probe_dispatches_on_legacy_row_verify_layout(
-    spark, pindex
-):
-    """Pre-round-10 persisted indexes store the verify table as one
-    row per (doc, shingle); round-10 builds store one doc-array row
-    per doc. Probe and extend dispatch on the stored schema, and the
-    two layouts must return identical pairs."""
-    rows = [(i, f"alpha beta gamma doc {i} tail words here") for i in
-            range(30)] + [(100, "alpha beta gamma doc 3 tail words here")]
-    docs = _frame(spark, rows)
-    di.build_prefix_index(spark, docs, pindex, threshold=0.8)
-    batch = _frame(spark, [(500, "alpha beta gamma doc 3 tail words here")])
-    want = {(r["batch_doc"], r["corpus_doc"], r["jaccard"])
-            for r in di.probe_prefix_index(spark, pindex, batch,
-                                           0.8).collect()}
-    assert want
-    # rewrite the verify table in the legacy row-level layout
-    meta = di._meta_row(spark, pindex)
-    legacy = di._sized_shingles(docs, meta.n).withColumn(
-        "pb", di._pb(parts=meta.n_parts)
-    )
-    spark.sql(f"DROP TABLE {di._full_table(pindex)}")
-    (
-        legacy.repartition("pb").write.mode("overwrite")
-        .partitionBy("pb").format("parquet")
-        .saveAsTable(di._full_table(pindex))
-    )
-    got = {(r["batch_doc"], r["corpus_doc"], r["jaccard"])
-           for r in di.probe_prefix_index(spark, pindex, batch,
-                                          0.8).collect()}
-    assert got == want
-    # extend follows the STORED layout: appended rows stay row-level
-    di.extend_prefix_index(
-        spark, _frame(spark, [(600, "totally different new words "
-                                    "number six hundred")]), pindex)
-    assert "shingle" in spark.table(di._full_table(pindex)).columns
-    got2 = {(r["batch_doc"], r["corpus_doc"], r["jaccard"])
-            for r in di.probe_prefix_index(spark, pindex, batch,
-                                           0.8).collect()}
-    assert got2 == want
-
-
-def test_prefix_probe_dispatches_on_v3_partitioned_doc_array_layout(
-    spark, pindex
-):
-    """Round-10 persisted indexes store the doc-array verify table
-    hash-partitioned on ``pb``; round-11 builds store it doc_id-sorted
-    with no ``pb``. Probe and extend dispatch on the stored schema and
-    the layouts must return identical pairs."""
-    rows = [(i, f"alpha beta gamma doc {i} tail words here") for i in
-            range(30)] + [(100, "alpha beta gamma doc 3 tail words here")]
-    docs = _frame(spark, rows)
-    di.build_prefix_index(spark, docs, pindex, threshold=0.8)
-    assert "pb" not in spark.table(di._full_table(pindex)).columns  # v4
-    batch = _frame(spark, [(500, "alpha beta gamma doc 3 tail words here")])
-    want = {(r["batch_doc"], r["corpus_doc"], round(r["jaccard"], 12))
-            for r in di.probe_prefix_index(spark, pindex, batch,
-                                           0.8).collect()}
-    assert want
-    # rewrite the verify table in the v3 pb-partitioned doc-array layout
-    meta = di._meta_row(spark, pindex)
-    v3 = di._doc_shingles(docs, meta.n, meta.n_parts)
-    spark.sql(f"DROP TABLE {di._full_table(pindex)}")
-    (
-        v3.repartition("pb").write.mode("overwrite")
-        .partitionBy("pb").format("parquet")
-        .saveAsTable(di._full_table(pindex))
-    )
-    got = {(r["batch_doc"], r["corpus_doc"], round(r["jaccard"], 12))
-           for r in di.probe_prefix_index(spark, pindex, batch,
-                                          0.8).collect()}
-    assert got == want
-    # extend follows the STORED layout: appended rows keep pb
-    di.extend_prefix_index(
-        spark, _frame(spark, [(600, "totally different new words "
-                                    "number six hundred")]), pindex)
-    assert "pb" in spark.table(di._full_table(pindex)).columns
-    got2 = {(r["batch_doc"], r["corpus_doc"], round(r["jaccard"], 12))
-            for r in di.probe_prefix_index(spark, pindex, batch,
-                                           0.8).collect()}
-    assert got2 == want
 
 
 def test_compaction_after_attach_swaps_external_tables(spark, pindex):
@@ -446,12 +351,12 @@ def test_compaction_after_attach_swaps_external_tables(spark, pindex):
     di.build_prefix_index(
         spark, _frame(spark, _rand_docs(8, 10)), pindex, threshold=0.5
     )
-    di.extend_prefix_index(
+    di.extend(
         spark, _frame(spark, _rand_docs(9, 4, start=500)), pindex
     )
     batch = _frame(spark, _rand_docs(8, 5, start=3000))
     want = {(r.batch_doc, r.corpus_doc, round(r.jaccard, 9))
-            for r in di.probe_prefix_index(spark, pindex, batch,
+            for r in di.probe(spark, pindex, batch,
                                            0.5).collect()}
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     twin = pindex + "_reatt"
@@ -466,12 +371,12 @@ def test_compaction_after_attach_swaps_external_tables(spark, pindex):
         n = di.compact_prefix_index(spark, twin)
         assert n > 0
         got = {(r.batch_doc, r.corpus_doc, round(r.jaccard, 9))
-               for r in di.probe_prefix_index(spark, twin, batch,
+               for r in di.probe(spark, twin, batch,
                                               0.5).collect()}
         assert got == want and got
         # the swapped-in tables accept further extends (spec intact)
         more = _rand_docs(10, 3, start=900)
-        assert di.extend_prefix_index(
+        assert di.extend(
             spark, _frame(spark, more), twin
         ) == len(more)
     finally:

@@ -28,12 +28,14 @@ def _frame(spark, rows):
 @pytest.fixture
 def index(spark):
     yield "ingest_idx_t"
-    spark.sql("DROP TABLE IF EXISTS ingest_idx_t")
-    spark.sql("DROP TABLE IF EXISTS ingest_idx_t_docs")
+    for s in ("", "_full", "_docs", "_meta"):
+        spark.sql(f"DROP TABLE IF EXISTS ingest_idx_t{s}")
 
 
 def test_gate_stages_filter_and_extend(spark, index, tmp_path):
-    di.build_index(spark, _frame(spark, [(1, BASE), (2, OTHER)]), index)
+    di.build_prefix_index(
+        spark, _frame(spark, [(1, BASE), (2, OTHER)]), index, threshold=0.5
+    )
     accepted_path = str(tmp_path / "accepted")
     stats: list[ingest.IngestStats] = []
     fn = ingest.make_ingest_batch_fn(
@@ -82,7 +84,9 @@ def test_accepted_corpus_compacts_duplicate_appends(spark, tmp_path):
 
 
 def test_stream_runs_and_index_survives_restart(spark, index, tmp_path):
-    di.build_index(spark, _frame(spark, [(1, BASE)]), index)
+    di.build_prefix_index(
+        spark, _frame(spark, [(1, BASE)]), index, threshold=0.5
+    )
     src = str(tmp_path / "src")
     accepted_path = str(tmp_path / "accepted")
     ckpt = str(tmp_path / "ckpt")
@@ -118,7 +122,9 @@ def test_ingest_from_dsv2_outbox_source(spark, index, tmp_path):
     import datetime as dt
 
     spark.dataSource.register(OutboxDataSource)
-    di.build_index(spark, _frame(spark, [(1, BASE)]), index)
+    di.build_prefix_index(
+        spark, _frame(spark, [(1, BASE)]), index, threshold=0.5
+    )
     path = str(tmp_path / "outbox")
     accepted_path = str(tmp_path / "accepted")
     ckpt = str(tmp_path / "ckpt")
@@ -252,7 +258,9 @@ def test_curate_sink_through_poll_pipeline(spark, index, tmp_path):
     from trignis_spark.state import StateStore
     from trignis_spark.streaming.poller import PollPipeline
 
-    di.build_index(spark, _frame(spark, [(1, BASE)]), index)
+    di.build_prefix_index(
+        spark, _frame(spark, [(1, BASE)]), index, threshold=0.5
+    )
     accepted = str(tmp_path / "accepted")
     sink = build_sink(
         "curate", "cur",
@@ -326,9 +334,8 @@ def _stats(s: ingest.IngestStats) -> dict:
 
 
 def test_gate_works_over_prefix_index(spark, pindex, tmp_path):
-    # same gate, v2 prefix-pruned index underneath (auto-detected via
-    # the meta table): stage counts and accepted set must be identical
-    # to the v1 run above
+    # the stage counts of three epochs: a fresh batch, its replay, and
+    # an insert plus an update of one doc_id in one poll window
     di.build_prefix_index(
         spark, _frame(spark, [(1, BASE), (2, OTHER)]), pindex,
         threshold=0.5,
@@ -351,7 +358,7 @@ def test_gate_works_over_prefix_index(spark, pindex, tmp_path):
     }
     assert {r["doc_id"] for r in
             spark.read.parquet(accepted_path).collect()} == {11, 15}
-    # extends went through the prefix layout (idempotent on replay):
+    # the accepted docs went into the index (idempotent on replay):
     # the replayed epoch accepts nothing — 12 is now rank 1 of its
     # text but near-dups (here: equals) the admitted 11
     fn(batch, epoch_id=0)
@@ -409,9 +416,9 @@ def _rows(spark, table):
 
 def test_gate_append_matches_extend_prefix_index(spark, pindex, tmp_path):
     """The gate hands its accepted frame straight to the prefix append,
-    skipping extend_prefix_index's membership anti-join: the index must
-    end up holding exactly the rows extend_prefix_index writes for the
-    same documents, and the next epoch must see them."""
+    skipping ``dedup_index.extend``'s membership anti-join: the index
+    must end up holding exactly the rows ``extend`` writes for the same
+    documents, and the next epoch must see them."""
     ref = "ingest_pidx_ref"
     corpus = _frame(spark, [(1, BASE), (2, OTHER)])
     di.build_prefix_index(spark, corpus, pindex, threshold=0.5)
@@ -427,7 +434,7 @@ def test_gate_append_matches_extend_prefix_index(spark, pindex, tmp_path):
            epoch_id=0)
         acc = spark.read.parquet(accepted_path).select("doc_id", "text")
         assert {r["doc_id"] for r in acc.collect()} == {11, 15}
-        assert di.extend_prefix_index(spark, acc, ref) == 2
+        assert di.extend(spark, acc, ref) == 2
         for sfx in ("", "_full", "_docs"):
             assert _rows(spark, pindex + sfx) == _rows(spark, ref + sfx)
 

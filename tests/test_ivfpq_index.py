@@ -676,7 +676,7 @@ def test_meta_rewrite_crash_recovery(spark, index):
     new_margin = float(live["adc_margin"]) + 0.25
     spark.createDataFrame(
         [(live["m"], live["k"], live["n_buckets"], new_margin, True,
-          2, True)],
+          2, True, True)],
         ipq._META_SCHEMA,
     ).write.format("parquet").saveAsTable(f"{mt}__staged")
     drop_table_and_location(spark, mt)
@@ -688,7 +688,7 @@ def test_meta_rewrite_crash_recovery(spark, index):
     # attach from a headless-catalog state heals through the same path
     spark.createDataFrame(
         [(live["m"], live["k"], live["n_buckets"], new_margin, True,
-          2, True)],
+          2, True, True)],
         ipq._META_SCHEMA,
     ).write.format("parquet").saveAsTable(f"{mt}__staged")
     drop_table_and_location(spark, mt)
@@ -1135,11 +1135,25 @@ def test_banded_rerank_disarmed_for_legacy_meta(spark, index):
     assert got.count() > 0
 
 
-def test_compaction_preserves_v_sorted_gather(spark, index):
-    """``compact_ivfpq_index`` re-sorts the float base within cells, so
-    the banded gather stays armed and identical after the rewrite."""
-    emb = _clustered_vframe(spark)
+def _row_groups(spark, table):
+    """Parquet row-group count of every data file of ``table``."""
+    import pyarrow.parquet as papq
+
+    from trignis_spark.maintenance import table_data_files
+
+    return [papq.ParquetFile(f).num_row_groups
+            for f in table_data_files(spark, table)]
+
+
+def test_compaction_preserves_v_sorted_gather(spark, index, monkeypatch):
+    """``compact_ivfpq_index`` re-sorts the float base within cells and
+    keeps its bounded row groups, so the banded gather stays armed and
+    identical after the rewrite. The row-group bound is shrunk so the
+    small fixture spans several groups per cell file."""
+    monkeypatch.setattr(ipq, "FLOAT_BLOCK_BYTES", 1024)
+    emb = _clustered_vframe(spark, n_per=150)
     ipq.build_ivfpq_index(spark, emb, index, m=2, k=2, n_buckets=4)
+    assert max(_row_groups(spark, index)) > 1
     nd = spark.createDataFrame(
         [(501, [-1.002, 1.002, 1.002, -1.002])],
         "vec_id long, embedding array<float>",
@@ -1149,6 +1163,50 @@ def test_compaction_preserves_v_sorted_gather(spark, index):
                                      include_score=True))
     ipq.compact_ivfpq_index(spark, index)
     assert ipq._probe_state(spark, index)["v_sorted"] is True
+    # the rewrite kept the bound: a cell file of ~150 rows still holds
+    # several row groups (the default bound would write one)
+    assert max(_row_groups(spark, index)) > 1
     after = _rowset(ipq.ivfpq_probe(spark, index, emb, k=3, nprobe=2,
                                     include_score=True))
     assert after == before
+
+
+def _pushes_vec_ids(df):
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return re.search(r"pushedfilters: \[[^\]]*in\(vec_id",
+                     buf.getvalue().lower()) is not None
+
+
+def test_sampled_margin_disarms_banded_gather(spark, index):
+    """A ``margin_rows`` build stores a sampled, uncertified margin: the
+    exact re-rank must keep the classic gather (no pushed vec_id filter)
+    and return its top-k. A full remeasure certifies the margin and arms
+    the band again."""
+    emb = _clustered_vframe(spark)
+    ipq.build_ivfpq_index(spark, emb, index, m=2, k=2, n_buckets=4,
+                          margin_rows=4)
+    st = ipq._probe_state(spark, index)
+    assert st["v_sorted"] and not st["margin_certified"]
+    assert st["adc_margin"] < ipq.BAND_MARGIN_MAX  # only the flag disarms
+    assert not ipq.band_armed(st)
+    got = ipq.ivfpq_probe(spark, index, emb, k=3, nprobe=2,
+                          include_score=True)
+    assert not _pushes_vec_ids(got)
+    old = ipq.BAND_MARGIN_MAX
+    ipq.BAND_MARGIN_MAX = -1.0  # force the classic gather
+    try:
+        classic = _rowset(ipq.ivfpq_probe(spark, index, emb, k=3,
+                                          nprobe=2, include_score=True))
+    finally:
+        ipq.BAND_MARGIN_MAX = old
+    assert _rowset(got) == classic and classic
+    # a full remeasure certifies the bound and arms the band
+    ipq.remeasure_adc_margin(spark, index)
+    assert ipq._probe_state(spark, index)["margin_certified"] is True
+    assert _pushes_vec_ids(ipq.ivfpq_probe(spark, index, emb, k=3,
+                                           nprobe=2, include_score=True))
+    # a sampled remeasure disarms it again
+    ipq.remeasure_adc_margin(spark, index, sample_rows=4)
+    assert not ipq.band_armed(ipq._probe_state(spark, index))

@@ -136,6 +136,43 @@ def test_partitioned_compaction_normal_path_roundtrip(spark):
         spark.sql(f"DROP TABLE IF EXISTS {table}__compacting")
 
 
+def test_partitioned_compaction_applies_write_options(spark):
+    """``write_options`` reach the final ``insertInto``, which drops
+    ``DataFrameWriter.option``s: a table written without a row-group
+    bound in its catalog options is rewritten with the requested
+    ``parquet.block.size`` (several row groups per partition file), and
+    the Hadoop configuration is restored afterwards."""
+    import pyarrow.parquet as papq
+
+    from trignis_spark.maintenance import (
+        compact_partitioned_table,
+        table_data_files,
+    )
+
+    table = "maint_part_opts"
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    try:
+        spark.range(0, 600).select(
+            F.col("id").alias("doc_id"),
+            (F.col("id") % 2).cast("int").alias("pb"),
+        ).repartition("pb").write.mode("overwrite").partitionBy("pb") \
+            .format("parquet").saveAsTable(table)
+        assert {papq.ParquetFile(f).num_row_groups
+                for f in table_data_files(spark, table)} == {1}
+        compact_partitioned_table(
+            spark, table, "pb", sort_cols=["doc_id"],
+            write_options={"parquet.block.size": "1024"},
+        )
+        groups = [papq.ParquetFile(f).num_row_groups
+                  for f in table_data_files(spark, table)]
+        assert len(groups) == 2 and min(groups) > 1, groups
+        assert spark.table(table).count() == 600
+        assert hconf.get("parquet.block.size") is None
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        spark.sql(f"DROP TABLE IF EXISTS {table}__compacting")
+
+
 def test_partitioned_compaction_ignores_stale_sidecar_after_appends(spark):
     """A sidecar orphaned by a long-past crash must NOT roll back rows
     appended since: when the target holds at least the snapshot's rows

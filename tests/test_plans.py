@@ -145,25 +145,6 @@ def test_shard_assign_single_shard_shuffle(spark):
     assert_max_exchanges(df, 2)
 
 
-def test_index_probe_broadcasts_batch_never_cartesian(spark):
-    from trignis_spark.operators import dedup_index as di
-    from trignis_spark.plans import assert_broadcast_join
-
-    docs = load(spark, SF, "documents")
-    spark.sql("DROP TABLE IF EXISTS plan_idx")
-    spark.sql("DROP TABLE IF EXISTS plan_idx_docs")
-    try:
-        di.build_index(spark, docs.limit(50), "plan_idx")
-        probe = di.probe_index(
-            spark, "plan_idx", docs.limit(5), threshold=0.5
-        )
-        assert_broadcast_join(probe)
-        assert_no_cartesian_product(probe)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS plan_idx")
-        spark.sql("DROP TABLE IF EXISTS plan_idx_docs")
-
-
 def test_kmeans_seed_has_no_global_window(spark):
     # VERDICT r02 #1: the seed must be a distributed TakeOrdered, never
     # a partition-less window funnelling the corpus through one task.
@@ -265,7 +246,7 @@ def test_prefix_index_probe_pushes_candidate_ids_into_verify_scan(spark):
             spark, docs.filter("doc_id % 7 <> 3"), "plans_pidx",
             threshold=0.8,
         )
-        probe = di.probe_prefix_index(
+        probe = di.probe(
             spark, "plans_pidx", docs.filter("doc_id % 7 = 3"), 0.8
         )
         assert_no_cartesian_product(probe)

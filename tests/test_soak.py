@@ -99,9 +99,10 @@ def test_soak_advancing_feed_failures_and_reloads(spark, tmp_path, monkeypatch):
     docs = load(spark, SF, "documents").localCheckpoint(eager=True)
     n_docs = docs.count()
     idx = "soak_dedup_idx"
-    for t in (idx, idx + "_docs"):
+    for t in di._tables(idx):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-    di.build_index(spark, docs.filter("doc_id % 10 = 0"), idx)
+    di.build_prefix_index(spark, docs.filter("doc_id % 10 = 0"), idx,
+                          threshold=0.4)
     # persistent ANN (IVF-PQ) index, extended under the same load
     # (VERDICT r5 #6): the codebook trains once on the seed slice and
     # stays frozen through every extend
@@ -149,7 +150,7 @@ def test_soak_advancing_feed_failures_and_reloads(spark, tmp_path, monkeypatch):
                 )
             # per-cycle corpus ingest: extend the index with this step's
             # document slice while the poller is mid-traffic
-            di.extend_index(
+            di.extend(
                 spark, docs.filter(f"doc_id % 10 = {step % 10}"), idx
             )
             # the margin was certified on the seed slice; later slices
@@ -210,23 +211,24 @@ def test_soak_advancing_feed_failures_and_reloads(spark, tmp_path, monkeypatch):
 
     # every document slice was folded in; replays added nothing
     assert spark.table(idx + "_docs").count() == n_docs
-    assert di.extend_index(spark, docs, idx) == 0
+    assert di.extend(spark, docs, idx) == 0
     probe_batch = docs.filter("doc_id % 7 = 3")
     before = {
         (r["batch_doc"], r["corpus_doc"], r["jaccard"])
-        for r in di.probe_index(spark, idx, probe_batch, 0.4).collect()
+        for r in di.probe(spark, idx, probe_batch, 0.4).collect()
     }
-    files_before = len(table_data_files(spark, idx)) + len(
-        table_data_files(spark, idx + "_docs")
+    files_before = sum(
+        len(table_data_files(spark, t))
+        for t in (idx, idx + "_full", idx + "_docs")
     )
-    files_after = di.compact_index(spark, idx)
+    files_after = di.compact_prefix_index(spark, idx)
     assert files_after < files_before, (
         f"compaction did not shrink the file count "
         f"({files_before} -> {files_after})"
     )
     after = {
         (r["batch_doc"], r["corpus_doc"], r["jaccard"])
-        for r in di.probe_index(spark, idx, probe_batch, 0.4).collect()
+        for r in di.probe(spark, idx, probe_batch, 0.4).collect()
     }
     assert after == before and before, "probe results changed across compaction"
     print(

@@ -53,7 +53,7 @@ def main() -> int:
     ap.add_argument("--skip-gen", action="store_true")
     ap.add_argument("--skip-build", action="store_true")
     # chunked build: seed build_prefix_index with the first slice, then
-    # extend_prefix_index the rest slice by slice. Same lossless prefix
+    # dedup_index.extend the rest slice by slice. Same lossless prefix
     # semantics (per-slice df ranking is sanctioned by the per-doc
     # pigeonhole — see dedup_index module notes); bounds the build's
     # transient shuffle by the SLICE, not the corpus — the 50 M-doc
@@ -145,7 +145,7 @@ def main() -> int:
             )
             for c in range(1, nc):
                 tc = time.time()
-                added = di.extend_prefix_index(
+                added = di.extend(
                     spark, docs.filter(pred == c), args.name
                 )
                 print(json.dumps({
@@ -194,7 +194,7 @@ def main() -> int:
     probe_secs, n_pairs = [], None
     for _ in range(3):
         t0 = time.time()
-        n_pairs = di.probe_prefix_index(
+        n_pairs = di.probe(
             spark, args.name, batch, args.threshold
         ).count()
         probe_secs.append(round(time.time() - t0, 2))
@@ -218,10 +218,10 @@ def main() -> int:
         .localCheckpoint(eager=True)
     )
     t0 = time.time()
-    added = di.extend_prefix_index(spark, ext, args.name)
+    added = di.extend(spark, ext, args.name)
     dt = round(time.time() - t0, 2)
     t0 = time.time()
-    replay = di.extend_prefix_index(spark, ext, args.name)
+    replay = di.extend(spark, ext, args.name)
     dt2 = round(time.time() - t0, 2)
     print(json.dumps({
         "leg": "extend", "batch": args.extend_batch, "added": added,

@@ -204,8 +204,8 @@ def compact_bucketed_table(
     """Rewrite a bucketed managed table into ~one file per bucket.
 
     The persistent dedup/ANN index tables append one file set per poll
-    cycle (``extend_index`` / ``extend_ann_index`` / ``extend_ivfpq_
-    index``); under sustained polling that is the same small-files
+    cycle (``dedup_index.extend`` / ``extend_ann_index`` /
+    ``extend_ivfpq_index``); under sustained polling that is the same small-files
     cliff ``ParquetCompactor`` handles for flat directories, but a
     bucketed table cannot be generation-swapped file-wise — the bucket
     spec lives in the catalog. Instead: rewrite into a same-spec
@@ -280,7 +280,7 @@ def compact_sorted_table(
     block_bytes: int | None = None,
 ) -> int:
     """``compact_plain_table`` for a GLOBALLY-SORTED managed table (the
-    v4 doc-sorted verify table): every extend appends its own sorted
+    near-dup index's doc-sorted verify table): every extend appends its own sorted
     run, which keeps row-group min-max pruning correct but accretes
     overlapping runs whose footers every probe must consult. Rewrite
     restores one global sorted run (``repartitionByRange`` +
@@ -388,11 +388,13 @@ def compact_partitioned_table(
     write_options: dict[str, str] | None = None,
 ) -> int:
     """`compact_bucketed_table`'s twin for *partitioned* managed tables
-    (the v2 prefix index's verify table is partitioned on
-    ``pb = pmod(hash(doc_id))`` for dynamic partition pruning, and every
-    ``extend_prefix_index`` appends a file set into each touched
-    partition). Same sidecar + two-catalog-rename swap and the same
-    contract: one maintenance writer, appends quiesced during the swap.
+    (the IVF-PQ index's cell-partitioned float and codes tables, where
+    every fold appends a file set into each touched cell partition).
+    Same contract: one maintenance writer, appends quiesced during the
+    rewrite. ``sort_cols`` keeps a within-partition sort and
+    ``write_options`` (e.g. ``parquet.block.size``) apply to both data
+    writes — the final ``insertInto`` ignores writer options, so they
+    are set on the session's Hadoop configuration for its duration.
 
     Unlike the bucketed variant this does NOT use the rename swap: a
     partitioned managed table's catalog keeps *per-partition* locations
@@ -521,11 +523,9 @@ def compact_partitioned_table(
     src = src.repartition(F.col(part_col))
     if sort_cols:
         src = src.sortWithinPartitions(part_col, *sort_cols)
-    w = src.write.mode("overwrite")
-    for opt, val in (write_options or {}).items():
-        w = w.option(opt, val)
-    with _static_partition_overwrite(spark):
-        w.insertInto(table)
+    with _static_partition_overwrite(spark), \
+            _hadoop_conf(spark, write_options or {}):
+        src.write.mode("overwrite").insertInto(table)
     spark.catalog.refreshTable(table)
     got = spark.table(table).count()
     want = spark.table(tmp).count() + (
@@ -543,6 +543,30 @@ def compact_partitioned_table(
     for t in (apx, apx_stage):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
     return len(table_data_files(spark, table))
+
+
+@contextmanager
+def _hadoop_conf(spark: SparkSession, opts: dict[str, str]):
+    """Set ``opts`` on the SparkContext's Hadoop configuration for the
+    duration, restoring the previous values after. ``insertInto`` drops
+    ``DataFrameWriter.option``s (measured: a ``parquet.block.size``
+    option left the rewritten files at the default row-group size),
+    while every write copies this configuration when it starts. The
+    configuration is shared by the context's sessions, so a concurrent
+    write elsewhere sees the values too — maintenance runs with appends
+    quiesced."""
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    prev = {k: conf.get(k) for k in opts}
+    for k, v in opts.items():
+        conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
 
 
 @contextmanager

@@ -3,29 +3,41 @@
 ``operators.dedup.incremental_pairs`` recomputes corpus shingles and
 sizes on every call — right for a one-shot query, wrong for the
 production loop where the same 100 TB corpus is probed by every poll
-cycle. This module materializes the inverted index once and makes each
-cycle a cheap probe:
+cycle. This module materializes a prefix-pruned index once and makes
+each cycle a cheap probe. Four tables per index ``<name>``:
 
-- **index table** ``<name>`` — (shingle BIGINT, doc_id BIGINT, sz INT),
-  bucketed *and sorted* by shingle. Per-doc shingle-set size is
-  denormalized onto every row, so a probe never runs a corpus-wide
-  size aggregation — the Jaccard denominator ships with the candidate.
-- **membership sidecar** ``<name>_docs`` — (doc_id BIGINT, sz INT),
-  bucketed by doc_id. Gives O(lookup) idempotence for extends (a
-  replayed batch anti-joins to nothing) without scanning the index.
+- ``<name>`` (probe table): only each corpus doc's
+  floor((1-t)·|d|)+1 *rarest* shingles (rarest-first under the
+  build-time df order), (shingle, doc_id, sz) bucketed+sorted by
+  shingle. A stop-shingle ("the quick brown" in 10% of the corpus) is
+  absent by construction, so a probe never pays its posting list.
+  Corpus-side-only prefix pruning is lossless for J ≥ t by a per-document
+  pigeonhole: a qualifying pair shares ≥ ceil(t·|C|) shingles, and the
+  stored prefix's complement holds only ceil(t·|C|)-1 of C's shingles,
+  so at least one shared shingle is always stored. The argument never
+  compares orders across documents — any per-doc choice of that many
+  shingles works — so extends may rank against their *own* df
+  snapshot; df ordering is a performance heuristic (short posting
+  lists), not a correctness requirement, and staleness cannot lose
+  pairs.
+- ``<name>_full`` (verify table): one (doc_id, shs ARRAY<BIGINT>, sz)
+  row per corpus doc, GLOBALLY SORTED by doc_id in small parquet row
+  groups. A probe collects its bounded candidate ids and pushes them
+  into the scan as an ``In`` filter, so row-group min-max pruning bounds
+  verify I/O by the CANDIDATES at any corpus size.
+- ``<name>_docs`` — (doc_id, sz) membership sidecar bucketed by doc_id:
+  O(lookup) idempotence for extends (a replayed batch anti-joins to
+  nothing) without scanning the index.
+- ``<name>_meta`` — (threshold, n): probes below the build threshold are
+  rejected (the stored prefix would be too short), and the shingle
+  width is read from here by every probe, extend and caller.
 
 Probe shape at scale: the batch side is one poll cycle (small), so it
-broadcasts and the bucketed index is scanned in place — no shuffle of
-the corpus, candidate aggregation shuffles only the collision set. A
-batch whose shingle rows outgrow broadcast (``MAX_BROADCAST_SHINGLES``,
-e.g. a Full initial resync) automatically takes the co-located
-sort-merge path in
-``probe_prefix_index``: only the batch repartitions to the bucket
+broadcasts and the bucketed probe table is scanned in place — no shuffle
+of the corpus. A batch whose shingle rows outgrow broadcast
+(``MAX_BROADCAST_SHINGLES``, e.g. a Full initial resync) takes the
+co-located sort-merge path: only the batch repartitions to the bucket
 count; the corpus is still never shuffled.
-
-Extends append with the same bucket spec, so the layout survives
-incremental growth; at-least-once upstream delivery is safe because
-``extend_index`` drops documents already present before appending.
 """
 
 from __future__ import annotations
@@ -43,22 +55,35 @@ def _docs_table(table: str) -> str:
     return f"{table}_docs"
 
 
+def _full_table(table: str) -> str:
+    return f"{table}_full"
+
+
+def _meta_table(table: str) -> str:
+    return f"{table}_meta"
+
+
+def _tables(table: str) -> tuple[str, str, str, str]:
+    return (table, _full_table(table), _docs_table(table),
+            _meta_table(table))
+
+
 def _refresh(spark: SparkSession, table: str) -> None:
-    """Invalidate the caller session's cached file listing for both
+    """Invalidate the caller session's cached file listing for the
     index tables. Needed because writes may run on a *different* session
     than later reads — inside ``foreachBatch`` the write goes through the
     micro-batch's cloned session, and without this the probing session
     keeps serving the pre-append file list."""
-    spark.catalog.refreshTable(table)
-    spark.catalog.refreshTable(_docs_table(table))
+    for t in _tables(table):
+        spark.catalog.refreshTable(t)
 
 
-#: per-(warehouse, table) cache of the v2 meta row (threshold, n,
-#: n_parts) — immutable after build (extends never rewrite it), yet
-#: every probe re-collected it: one driver action per poll cycle on
-#: the text gate's hot path (the same fixed overhead VERDICT r8 #1
-#: flagged on the IVF-PQ probes; see ``ivfpq_index._STATE_CACHE``).
-#: Build and attach — the only meta writers/registrars — drop entries.
+#: per-(warehouse, table) cache of the meta row (threshold, n) —
+#: immutable after build (extends never rewrite it), yet every probe
+#: re-collected it: one driver action per poll cycle on the text gate's
+#: hot path (the same fixed overhead VERDICT r8 #1 flagged on the IVF-PQ
+#: probes; see ``ivfpq_index._STATE_CACHE``). Build and attach — the
+#: only meta writers/registrars — drop entries.
 _META_CACHE: dict = {}
 
 
@@ -76,282 +101,95 @@ def _drop_meta_cache(spark: SparkSession, table: str) -> None:
     )
 
 
-def _sized_shingles(docs: DataFrame, n: int) -> DataFrame:
-    sh = shingle_table(docs, n)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    return sh.join(sizes, "doc_id").select("shingle", "doc_id", "sz")
-
-
-def build_index(
-    spark: SparkSession,
-    docs: DataFrame,
-    table: str,
-    n: int = 3,
-    n_buckets: int = DEFAULT_BUCKETS,
-) -> None:
-    """Materialize the corpus inverted index (overwrites both tables,
-    including orphaned locations left by other sessions)."""
-    from trignis_spark.maintenance import drop_table_and_location
-
-    drop_table_and_location(spark, table)
-    drop_table_and_location(spark, _docs_table(table))
-    rows = _sized_shingles(docs, n)
-    (
-        rows.write.mode("overwrite")
-        .bucketBy(n_buckets, "shingle")
-        .sortBy("shingle")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-    (
-        rows.select("doc_id", "sz")
-        .distinct()
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "doc_id")
-        .format("parquet")
-        .saveAsTable(_docs_table(table))
-    )
-    _refresh(spark, table)
-
-
-def probe_index(
-    spark: SparkSession,
-    table: str,
-    batch_docs: DataFrame,
-    threshold: float,
-    n: int = 3,
-) -> DataFrame:
-    """Near-dup matches of a batch against the stored corpus:
-    (batch_doc, corpus_doc, jaccard) at or above ``threshold``.
-
-    Broadcast batch shingles probe the index map-side; the stored ``sz``
-    rides along so the only post-join work is the candidate aggregation
-    and the Jaccard arithmetic."""
-    bsh = shingle_table(batch_docs, n)
-    bsz = bsh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("szb"))
-    b = F.broadcast(
-        bsh.select(F.col("doc_id").alias("batch_doc"), "shingle")
-    )
-    idx = spark.table(table).select(
-        "shingle", F.col("doc_id").alias("corpus_doc"), F.col("sz").alias("szc")
-    )
-    inter = (
-        idx.join(b, "shingle")
-        # count DISTINCT shingles, not rows: a crash between the index
-        # append and the _docs-sidecar append makes the next at-least-
-        # once replay re-append the same rows, and duplicate
-        # (doc_id, shingle) rows would double-count the intersection
-        # (inflating jaccard past 1.0) — distinct makes replayed
-        # appends harmless (ADVICE r5)
-        .groupBy("batch_doc", "corpus_doc")
-        .agg(F.countDistinct("shingle").alias("isz"),
-             F.max("szc").alias("szc"))
-    )
-    return (
-        inter.join(
-            F.broadcast(bsz.withColumnRenamed("doc_id", "batch_doc")),
-            "batch_doc",
-        )
-        .select(
-            "batch_doc",
-            "corpus_doc",
-            (
-                F.col("isz").cast("double")
-                / (F.col("szb") + F.col("szc") - F.col("isz"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def extend_index(
-    spark: SparkSession,
-    docs: DataFrame,
-    table: str,
-    n: int = 3,
-    n_buckets: int = DEFAULT_BUCKETS,
-) -> int:
-    """Append new documents to the index, skipping any doc_id already
-    present (idempotent under at-least-once replay). Returns the number
-    of documents actually added.
-
-    Appends go through ``saveAsTable`` with the same bucket spec, so
-    new files land in the correct buckets and the sorted-bucket layout
-    survives incremental growth."""
-    known = spark.table(_docs_table(table)).select("doc_id")
-    fresh = batch_anti_join(docs, known, "doc_id")
-    rows = _sized_shingles(fresh, n).localCheckpoint(eager=True)
-    added = rows.select("doc_id").distinct().count()
-    if added == 0:
-        return 0
-    (
-        rows.write.mode("append")
-        .bucketBy(n_buckets, "shingle")
-        .sortBy("shingle")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-    (
-        rows.select("doc_id", "sz")
-        .distinct()
-        .write.mode("append")
-        .bucketBy(n_buckets, "doc_id")
-        .format("parquet")
-        .saveAsTable(_docs_table(table))
-    )
-    _refresh(spark, table)
-    return added
-
-
-def compact_index(
-    spark: SparkSession, table: str, n_buckets: int = DEFAULT_BUCKETS
-) -> int:
-    """Housekeeping for sustained polling: every ``extend_index`` call
-    appends a file set per bucket, so a 30 s poll cadence accretes
-    thousands of small files per day (the flat-directory twin is
-    ``maintenance.ParquetCompactor``). Rewrites both tables to ~one
-    file per bucket via catalog-swap; probe results are unchanged by
-    construction (same rows, same bucket spec — asserted under load in
-    tests/test_soak.py). Run between poll cycles; appends must be
-    quiesced during the swap. Returns the post-compaction file count."""
-    from trignis_spark.maintenance import compact_bucketed_table
-
-    n = compact_bucketed_table(
-        spark, table, "shingle", n_buckets, sort_col="shingle"
-    )
-    n += compact_bucketed_table(spark, _docs_table(table), "doc_id", n_buckets)
-    _refresh(spark, table)
-    return n
-
-
-# --------------------------------------------------------------------------
-# Prefix-pruned index (v2): hot-shingle-proof probes
-# --------------------------------------------------------------------------
-#
-# ``probe_index`` joins the batch against the *full* inverted index, so
-# a stop-shingle ("the quick brown" appearing in 10% of the corpus)
-# makes every probe pay that shingle's full posting list. The v2 layout
-# splits the two jobs the full index was doing:
-#
-# - ``<name>`` (probe table): only each corpus doc's
-#   floor((1-t)·|d|)+1 *rarest* shingles (rarest-first under the
-#   build-time df order), bucketed+sorted by shingle. Corpus-side-only
-#   prefix pruning is lossless for J ≥ t by a per-document pigeonhole:
-#   a qualifying pair shares ≥ ceil(t·|C|) shingles, and the stored
-#   prefix's complement holds only ceil(t·|C|)-1 of C's shingles, so at
-#   least one shared shingle is always stored. Crucially the argument
-#   never compares orders across documents — any per-doc choice of that
-#   many shingles works — so extends may rank against their *own* df
-#   snapshot; df ordering is a performance heuristic (short posting
-#   lists), not a correctness requirement, and staleness cannot lose
-#   pairs.
-# - ``<name>_full`` (verify table, v4 — round 11): one
-#   (doc_id, shs ARRAY<BIGINT>, sz) row per corpus doc, GLOBALLY SORTED
-#   by doc_id in small parquet row groups. The probe collects its
-#   bounded candidate ids and pushes them into the scan as an ``In``
-#   filter, so row-group min-max pruning bounds verify I/O by the
-#   CANDIDATES at any corpus size. (v3 — round 10 — hash-partitioned
-#   the same doc-array rows on ``pb = pmod(hash(doc_id), P)`` for DPP,
-#   which stops pruning once candidates out-spread the P=64 fixed
-#   partitions: the 5 M-doc decade leg's probe re-read the whole
-#   narrow corpus every batch — VERDICT r10 #1. Pre-r10 indexes store
-#   row-level (doc_id, shingle, sz). Probes/extends dispatch on the
-#   stored schema, so persisted indexes of every generation keep
-#   working.)
-# - ``<name>_docs`` membership sidecar as in v1.
-# - ``<name>_meta``: (threshold, n, n_parts) — probes below the build
-#   threshold are rejected (the stored prefix would be too short).
-
-VERIFY_PARTS = 64
-
-#: v4 verify layout (round 11): parquet row-group size for the
-#: doc_id-SORTED doc-array verify table. Small groups are the pruning
-#: granularity — a probe pushes its collected candidate ids as an
-#: ``In`` filter and the reader keeps only row groups whose doc_id
-#: min-max admits a candidate, so verify I/O is O(candidates ×
-#: rows-per-group) INDEPENDENT of corpus size (the v3 ``pb``-partition
-#: DPP stopped pruning once candidates exceeded the 64 fixed
-#: partitions — VERDICT r10 #1: the 5 M-doc leg's probe re-read the
-#: whole narrow corpus every batch). 2 MiB ≈ ~1–2 k doc rows per group
-#: at realistic shingle counts; measured at 5 M rows: isin(3 500) warm
-#: 0.11 s vs 2.53 s full scan.
+#: parquet row-group size for the doc_id-SORTED doc-array verify table.
+#: Small groups are the pruning granularity — a probe pushes its
+#: collected candidate ids as an ``In`` filter and the reader keeps only
+#: row groups whose doc_id min-max admits a candidate, so verify I/O is
+#: O(candidates × rows-per-group) INDEPENDENT of corpus size (a
+#: hash-partitioned verify table pruned by DPP stopped pruning once
+#: candidates out-spread its 64 fixed partitions — VERDICT r10 #1: the
+#: 5 M-doc leg's probe re-read the whole narrow corpus every batch).
+#: Measured at 5 M rows: isin(3 500) warm 0.11 s vs 2.53 s full scan.
 VERIFY_BLOCK_BYTES = 512 * 1024
 
-#: row-group size for the v4 PROBE table (shingle-sorted buckets):
-#: the fast path pushes the batch's collected shingle hashes as an
-#: ``In`` filter, and each distinct value can hit at most one group
-#: per sorted run — small groups bound the candidate scan by the
-#: BATCH's shingles, not the corpus's posting rows
+#: row-group size for the shingle-sorted PROBE table, written by builds,
+#: appends and compactions alike. It does not drive pruning: the
+#: candidate scan is a plain broadcast join (measured faster than
+#: In-pushed shingle legs at 5 M and 20 M docs, round 12).
 PROBE_BLOCK_BYTES = 256 * 1024
 
-#: candidate-id ceiling for the collected ``In`` pushdown — past this
-#: the filter's plan/footer-check cost outgrows its pruning (and a
-#: candidate set this size means a corpus-shaped probe anyway); the
-#: probe falls back to the broadcast-join full verify, which is the
-#: exact v3 cost model. NOTE: never route this through a raised
+#: candidate-pair ceiling for the probe's bounded candidate collect —
+#: past this the collected ``In`` filter's plan/footer-check cost
+#: outgrows its pruning (and a candidate set this size means a
+#: corpus-shaped probe anyway); the probe then keeps a distributed,
+#: checkpointed candidate plan and joins it to the full verify scan.
+#: NOTE: never route this through a raised
 #: ``spark.sql.parquet.pushdown.inFilterThreshold`` — past ~1 k values
 #: the or-of-eq expansion StackOverflows the executor (measured); the
 #: native In pushdown (Spark 4 default) handles large sets.
 VERIFY_COLLECT_MAX = 65_536
 
-#: distinct-shingle ceiling for the v4 probe FAST path. The fast path
-#: collects the batch's shingle rows to the driver and ships them back
-#: as a literal frame built from Python rows; past a few thousand
-#: shingles that round trip costs more than the join path's
-#: broadcast-hash candidate join against the bucketed probe table.
-#: Measured on a 4-core box, warm median of 5: a 200-doc batch of
-#: 60-word texts (~11.6 k distinct shingles) against a 200-doc index
-#: probes in 1.87 s with this gate disarmed against 1.41 s on the join
-#: path. (The round-11 reason — the shingles pushed as one huge parsed
-#: ``In`` list on the candidate scan — went away in round 12, when the
-#: candidate scan became a plain broadcast join.)
-FAST_PROBE_SHINGLES = 4_096
-
-#: sorted-run file count for v4 builds/compactions — one range
-#: partition per file, each internally sorted by doc_id
+#: sorted-run file count for builds/compactions of the verify table —
+#: one range partition per file, each internally sorted by doc_id
 VERIFY_SORT_FILES = 64
 
+#: probes whose batch SHINGLE set exceeds this row count take the
+#: co-located sort-merge path instead of broadcasting the batch. The
+#: broadcast payload is the batch's shingle rows — which scale with
+#: total batch text length, not document count (ADVICE r6: a batch of
+#: few but very long documents blows a per-document gate) — so the
+#: gate counts what it actually ships: ~10 M (doc_id, shingle-hash)
+#: rows ≈ a few hundred MB hashed relation. A poll-cycle batch is a
+#: few hundred docs × a few hundred shingles; only a Full initial
+#: resync routed through ``probe`` approaches this.
+MAX_BROADCAST_SHINGLES = 10_000_000
 
-def _full_table(table: str) -> str:
-    return f"{table}_full"
+#: values per ``In`` pushdown leg (round 11). Two Spark limits shape
+#: this: past ``spark.sql.parquet.pushdown.inFilterThreshold`` the
+#: pushed filter COLLAPSES to the list's [min, max] range — which over
+#: xxhash64 values spans everything, so row-group pruning silently
+#: prunes NOTHING (the 50 M-doc decade leg measured the "In-pruned"
+#: probe at 43.8 s warm = a full 550 M-row posting scan, ~10× the 5 M
+#: number); and parquet evaluates an under-threshold In as a RECURSIVE
+#: OR tree, which stack-overflows executor task threads somewhere past
+#: ~2 000 values (measured: StackOverflowError inside the scan at
+#: 2.5 k). So: raise the threshold past the leg size (sticky session
+#: conf, set on first probe) and split big value lists into ≤LEG-value
+#: scans unioned together — each leg's OR tree is shallow, each row
+#: matches exactly one leg (value chunks are disjoint), so the union
+#: IS the single-In scan with working row-group pruning.
+IN_PUSHDOWN_LEG = 512
+
+#: id-count ceiling for pushing collected candidate ids into the
+#: verify scan as In legs — past this the per-leg row-group STAT
+#: evaluation (a 512-deep OR visited per group per leg) outgrows the
+#: pruning and the full narrow scan joined to the broadcast candidates
+#: wins: measured at the 50 M decade fixture, 42 legs (21 424 ids)
+#: cost 15.6 s against the full scan's ~11 s, while a few thousand
+#: ids prune to seconds. The length filter keeps real poll batches
+#: far under this.
+VERIFY_IN_MAX = 16_384
 
 
-def _meta_table(table: str) -> str:
-    return f"{table}_meta"
+def _doc_shingles(docs: DataFrame, n: int) -> DataFrame:
+    """(doc_id, shs ARRAY<BIGINT> sorted, sz) — one row per doc: the
+    verify table's layout, and the probe's per-batch-doc arrays.
 
-
-def _pb(col: str = "doc_id", parts: int = VERIFY_PARTS) -> F.Column:
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(parts)).cast("int")
-
-
-def _doc_shingles(docs: DataFrame, n: int,
-                  n_parts: int | None = None) -> DataFrame:
-    """(doc_id, shs ARRAY<BIGINT> sorted, sz[, pb]) — the verify
-    table's DOC-LEVEL layout (round 10). ``n_parts`` appends the v3
-    ``pb`` hash-partition column (only extends of persisted v3 tables
-    pass it; v4 builds sort by doc_id instead — round 11).
-
-    The row-level layout scanned one row
-    per (doc, shingle): at the 5 M-doc decade leg that was a 260 M-row
-    scan through two joins and a countDistinct aggregation per probe
-    (~16 s of the 29 s probe — the decade leg's saturation point),
-    because a realistic candidate set (~3 500 docs) hashes across all
-    64 ``pb`` partitions and DPP prunes nothing. One array row per doc
-    is 52× fewer rows, intersections compute INSIDE a projection
-    (``array_intersect`` against the broadcast batch arrays — no
-    explode, no aggregation shuffle), and the only corpus-sized work
-    left is the narrow doc-row scan.
+    One array row per doc is ~52× fewer rows than one row per (doc,
+    shingle) (at the 5 M-doc decade leg the row-level verify was a
+    260 M-row scan through two joins and a countDistinct aggregation per
+    probe), and intersections compute INSIDE a projection
+    (``array_intersect`` against the broadcast batch arrays — no explode,
+    no aggregation shuffle).
 
     Built entirely MAP-SIDE: the per-doc shingle hashes are already an
     array before ``shingle_table`` explodes them, so sorting the
-    distinct array in place produces the identical row with zero
-    shuffles — an explode→groupBy form would re-gather the corpus's
-    shingle rows through a full exchange just to undo the explode
-    (750 M rows at the 5 M-doc decade leg). Side effect (an
-    improvement): docs with fewer than ``n`` tokens now appear with
-    ``shs = []`` instead of vanishing in the explode, so the docs
-    sidecar records them and extends stop re-adding them every cycle;
-    they carry no shingles, so probe results are untouched."""
+    distinct array in place produces the row with zero shuffles — an
+    explode→groupBy form would re-gather the shingle rows through a full
+    exchange just to undo the explode. Docs with fewer than ``n`` tokens
+    appear with ``shs = []``, so the docs sidecar records them and
+    extends stop re-adding them every cycle; they carry no shingles, so
+    probe results are untouched."""
     from trignis_spark.functions import portable as pf
 
     toks = docs.select(
@@ -361,7 +199,7 @@ def _doc_shingles(docs: DataFrame, n: int,
         "doc_id",
         F.expr(pf.token_hashes(pf.SPARK, "tokens")).alias("th"),
     )
-    out = (
+    return (
         th.select(
             "doc_id",
             F.array_sort(
@@ -372,9 +210,6 @@ def _doc_shingles(docs: DataFrame, n: int,
         )
         .withColumn("sz", F.size("shs").cast("long"))
     )
-    if n_parts is not None:
-        out = out.withColumn("pb", _pb(parts=n_parts))
-    return out
 
 
 def _prefix_rows(docs: DataFrame, n: int, threshold: float) -> DataFrame:
@@ -410,17 +245,14 @@ def build_prefix_index(
     threshold: float,
     n: int = 3,
     n_buckets: int = DEFAULT_BUCKETS,
-    n_parts: int = VERIFY_PARTS,
 ) -> None:
     """Materialize the prefix-pruned probe table, the doc_id-SORTED
-    doc-array verify table (v4 — see ``VERIFY_BLOCK_BYTES``; probes
-    push collected candidate ids into the scan, making verify I/O
-    O(candidates) at any corpus size), the membership sidecar and the
-    meta row."""
+    doc-array verify table (see ``VERIFY_BLOCK_BYTES``), the membership
+    sidecar and the meta row (overwrites all four, including orphaned
+    locations left by other sessions)."""
     from trignis_spark.maintenance import drop_table_and_location
 
-    for t in (table, _full_table(table), _docs_table(table),
-              _meta_table(table)):
+    for t in _tables(table):
         drop_table_and_location(spark, t)
     (
         _prefix_rows(docs, n, threshold)
@@ -448,32 +280,16 @@ def build_prefix_index(
         .saveAsTable(_docs_table(table))
     )
     spark.createDataFrame(
-        [(float(threshold), n, n_parts)],
-        "threshold double, n int, n_parts int",
+        [(float(threshold), n)], "threshold double, n int"
     ).write.mode("overwrite").format("parquet").saveAsTable(
         _meta_table(table)
     )
     _drop_meta_cache(spark, table)
-    for t in (table, _full_table(table), _docs_table(table),
-              _meta_table(table)):
-        spark.catalog.refreshTable(t)
-
-
-#: probes whose batch SHINGLE set exceeds this row count take the
-#: co-located sort-merge path instead of broadcasting the batch. The
-#: broadcast payload is the batch's shingle rows — which scale with
-#: total batch text length, not document count (ADVICE r6: a batch of
-#: few but very long documents blows a per-document gate) — so the
-#: gate counts what it actually ships: ~10 M (doc_id, shingle-hash)
-#: rows ≈ a few hundred MB hashed relation. A poll-cycle batch is a
-#: few hundred docs × a few hundred shingles; only a Full initial
-#: resync routed through ``probe`` approaches this.
-MAX_BROADCAST_SHINGLES = 10_000_000
+    _refresh(spark, table)
 
 
 def _bucket_count(spark: SparkSession, table: str) -> int:
-    """Bucket count from the catalog (the v2 meta row predates the
-    sort-merge path and does not carry it)."""
+    """Bucket count from the catalog (the meta row does not carry it)."""
     for row in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
         if (row["col_name"] or "").strip() == "Num Buckets":
             return int(row["data_type"].strip())
@@ -486,8 +302,9 @@ def attach_prefix_index(spark: SparkSession, table: str,
     session's catalog (see ``ivfpq_index.attach_ivfpq_index`` — same
     in-memory-catalog restart story). The shingle and docs tables
     re-declare their bucket specs so bucketed extends still append;
-    the v2 meta row predates the bucket count (see ``_bucket_count``),
-    so an index built with a non-default count must pass it."""
+    the meta row does not carry the bucket count (see
+    ``_bucket_count``), so an index built with a non-default count must
+    pass it."""
     from trignis_spark.maintenance import attach_table
 
     attach_table(spark, table, bucket_cols=["shingle"],
@@ -523,33 +340,6 @@ def _in_pred(col: str, values) -> str:
     )
 
 
-#: values per ``In`` pushdown leg (round 11). Two Spark limits shape
-#: this: past ``spark.sql.parquet.pushdown.inFilterThreshold`` the
-#: pushed filter COLLAPSES to the list's [min, max] range — which over
-#: xxhash64 values spans everything, so row-group pruning silently
-#: prunes NOTHING (the 50 M-doc decade leg measured the "In-pruned"
-#: probe at 43.8 s warm = a full 550 M-row posting scan, ~10× the 5 M
-#: number); and parquet evaluates an under-threshold In as a RECURSIVE
-#: OR tree, which stack-overflows executor task threads somewhere past
-#: ~2 000 values (measured: StackOverflowError inside the scan at
-#: 2.5 k). So: raise the threshold past the leg size (sticky session
-#: conf, set on first probe) and split big value lists into ≤LEG-value
-#: scans unioned together — each leg's OR tree is shallow, each row
-#: matches exactly one leg (value chunks are disjoint), so the union
-#: IS the single-In scan with working row-group pruning.
-IN_PUSHDOWN_LEG = 512
-
-#: id-count ceiling for pushing collected candidate ids into the
-#: verify scan as In legs — past this the per-leg row-group STAT
-#: evaluation (a 512-deep OR visited per group per leg) outgrows the
-#: pruning and the full narrow scan joined to the broadcast candidates
-#: wins: measured at the 50 M decade fixture, 42 legs (21 424 ids)
-#: cost 15.6 s against the full scan's ~11 s, while a few thousand
-#: ids prune to seconds. The length filter keeps real poll batches
-#: far under this.
-VERIFY_IN_MAX = 16_384
-
-
 def _in_pushdown_conf(spark: SparkSession) -> None:
     """Raise the parquet In-pushdown threshold past IN_PUSHDOWN_LEG
     (sticky — a restore-after-plan would un-push the filter at the
@@ -582,88 +372,99 @@ def _in_scan(spark: SparkSession, df: DataFrame, col: str,
     return reduce(DataFrame.unionByName, legs)
 
 
-def _probe_v4_fast(
+def probe(
     spark: SparkSession,
     table: str,
-    full: DataFrame,
-    bsh: DataFrame,
+    batch_docs: DataFrame,
     threshold: float,
-) -> DataFrame | None:
-    """Poll-cycle probe of a v4 index, sub-linear in CORPUS size end to
-    end (round 11): the batch's shingle rows are collected once
-    (bounded), pushed into the shingle-sorted probe table as an ``In``
-    filter — row-group pruning bounds the candidate scan by the batch,
-    not the corpus's posting rows — and the resulting candidate ids are
-    pushed into the doc_id-sorted verify table the same way. Three
-    bounded jobs total (batch shingles → candidates → verify), every
-    broadcast a driver-literal frame. Returns None when the batch or
-    its candidate set outgrows ``VERIFY_COLLECT_MAX`` — the caller's
-    distributed join path is the right cost model there. Results are
-    identical to the join path by construction: same shingle sets, same
-    candidate pairs, same jaccard arithmetic (asserted in tests)."""
-    # respect the operator's broadcast dial too: a batch the join path
-    # would refuse to broadcast must not ride in as driver literals.
-    # The row cap rides the distinct-shingle gate below: a batch with
-    # ≤ FAST_PROBE_SHINGLES distinct shingles across 8× as many rows
-    # is already not batch-shaped, so a bigger collect would only pay
-    # to discover the fallthrough it could assume
-    bound = min(VERIFY_COLLECT_MAX, MAX_BROADCAST_SHINGLES,
-                FAST_PROBE_SHINGLES * 8)
-    rows = bsh.limit(bound + 1).collect()
-    out_schema = (
-        f"batch_doc {bsh.schema['batch_doc'].dataType.simpleString()}, "
-        f"corpus_doc {full.schema['doc_id'].dataType.simpleString()}, "
-        "jaccard double"
-    )
-    if not rows:
-        # no batch doc long enough to shingle → nothing can match
-        return spark.createDataFrame([], out_schema)
-    if len(rows) > bound:
-        return None
-    by_doc: dict = {}
-    for r in rows:
-        by_doc.setdefault(r["batch_doc"], set()).add(int(r["shingle"]))
-    shingles = sorted({s for ss in by_doc.values() for s in ss})
-    if len(shingles) > FAST_PROBE_SHINGLES:
-        # past this the Python-row literal frame below costs more than
-        # the join path's broadcast-hash candidate join (measured — see
-        # FAST_PROBE_SHINGLES)
-        return None
-    bszs = {d: len(ss) for d, ss in by_doc.items()}
-    bsh_lit = F.broadcast(
-        spark.createDataFrame(
-            [(r["batch_doc"], int(r["shingle"]), bszs[r["batch_doc"]])
-             for r in rows],
-            f"batch_doc "
-            f"{bsh.schema['batch_doc'].dataType.simpleString()}, "
-            "shingle bigint, szb bigint",
+    broadcast_batch: bool | None = None,
+) -> DataFrame:
+    """Near-dup matches of a batch against the index:
+    (batch_doc, corpus_doc, jaccard ≥ threshold) — identical to
+    ``dedup.incremental_pairs`` over the raw documents at any threshold
+    ≥ the build threshold (asserted in tests).
+
+    Phase 1 (candidates): the batch's shingle rows ⋈ the pruned probe
+    table — hot shingles are absent from the index by construction, so
+    candidate volume tracks rare-shingle collisions only. Phase 2
+    (verify): the doc-array verify table — one narrow row per corpus
+    doc, the exact intersection computed by ``array_intersect`` inside
+    the projection — joined to the candidates and, separately, to the
+    batch arrays (one per batch doc, never duplicated per pair — ADVICE
+    r10). On the broadcast path one bounded limit-collect of the
+    candidate pairs answers the size gate from the row count, replaces
+    the distributed candidate plan with a literal frame, and supplies
+    the candidate ids pushed into the verify scan as a parquet ``In``
+    filter, so row-group pruning bounds verify I/O by the candidates at
+    any corpus size. Both phases are map-side on the corpus.
+
+    **Broadcast-overflow fallback** (VERDICT r5 #3): a batch that
+    outgrows broadcast (a Full initial resync routed through ``probe``
+    would hit the executor broadcast ceiling) takes the co-located
+    sort-merge path instead — the batch shingles repartition to the
+    probe table's bucket count so the bucketed corpus side is *still*
+    never shuffled, and the verify joins run as plain shuffle joins
+    (corpus-sized work is inherent when the batch is corpus-sized).
+    ``broadcast_batch=None`` decides from the batch's SHINGLE-row count
+    (> ``MAX_BROADCAST_SHINGLES`` ⇒ sort-merge) — the payload actually
+    broadcast, so a batch of few but very long documents is gated
+    correctly (ADVICE r6); results are identical on either path
+    (asserted in tests)."""
+    meta = _meta_row(spark, table)
+    if threshold < meta.threshold - 1e-12:
+        raise ValueError(
+            f"index {table!r} was built for threshold >= {meta.threshold}; "
+            f"probing at {threshold} would lose pairs (rebuild the index)"
         )
+    # ONE per-batch-doc frame feeds every consumer: its exploded rows
+    # drive the candidate join, its ``szb`` the length filter, its
+    # arrays the verify — built map-side, no aggregation of shingle rows
+    barr = _doc_shingles(batch_docs, meta.n).select(
+        F.col("doc_id").alias("batch_doc"),
+        F.col("shs").alias("bshs"),
+        F.col("sz").alias("szb"),
     )
-    # candidate scan: broadcast-join the batch shingles over the PLAIN
-    # narrow posting scan — never In legs here (round 12, measured at
-    # the regenerated 5 M and 20 M decade legs). The join is the
-    # filter either way (the legs were only a scan pre-filter), and
-    # the legs lose at every scale measured: a poll batch's ~2.5 k
-    # shingles blanket the 256 KiB row groups so pruning skips almost
-    # nothing while every surviving row pays the pushed In's row-level
-    # evaluation — warm candidate phase at 5 M docs 3.8 s (5-leg
-    # union) vs 0.9 s (join); at 20 M on the single-shot build's
-    # many-file-per-bucket layout the legs degenerated super-linearly
-    # to 217 s vs the join's 2.4 s, identical 4 571 candidates. The
-    # pushed-In leg machinery remains the right tool where it was
-    # measured to win and is plan-locked: the doc_id-sorted WIDE
-    # verify table below, where each pruned row group saves a whole
-    # shingle-array payload, not an 18-byte posting row.
+
+    def _bsh(arrs: DataFrame) -> DataFrame:
+        # explode_outer, not explode: for explode the optimizer infers a
+        # size(bshs) > 0 filter and pushes it below the projection,
+        # inlining the whole tokenize/hash pipeline into it again
+        # (measured on a 170-doc batch: 1.1 s vs 0.3 s per pass). An
+        # empty array yields one null shingle, which no join matches.
+        return arrs.select(
+            "batch_doc", F.explode_outer("bshs").alias("shingle"), "szb"
+        )
+
+    if broadcast_batch is None:
+        from trignis_spark.operators.similarity import exceeds
+
+        # limit-bounded probe, not a full count: this gate runs on
+        # every poll-cycle probe and the batch plan can be expensive
+        broadcast_batch = not exceeds(_bsh(barr), MAX_BROADCAST_SHINGLES)
+    if broadcast_batch:
+        # batch-sized by the gate — materialize the arrays ONCE so the
+        # batch's tokenize/hash/shingle pipeline runs once per probe,
+        # not once per consumer. Corpus-shaped batches (a Full resync
+        # routed through probe) keep the unmaterialized plan — the
+        # sort-merge path's scratch-disk profile is deliberate.
+        barr = barr.localCheckpoint(eager=True)
+        bsh = F.broadcast(_bsh(barr))
+    else:
+        # align the batch with the bucketed probe table's layout so the
+        # candidate join sort-merges without shuffling the corpus side
+        bsh = _bsh(barr).repartition(_bucket_count(spark, table), "shingle")
+
+    def _b(df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if broadcast_batch else df
+
     cand = (
         spark.table(table)
-        .join(bsh_lit, "shingle")
+        .join(bsh, "shingle")
         # lossless SSJoin length filter (Arasu/Chaudhuri prefix-filter
         # family, public algorithm): jaccard ≥ t ⇒ t·|A| ≤ |B| ≤ |A|/t
         # — the probe table rows carry the corpus doc's shingle-set
-        # size, so size-incompatible collisions drop BEFORE the verify
-        # scan (the 50 M decade leg measured 21 424 candidate ids from
-        # a 50-doc batch, most of them rare-shingle collisions between
-        # decorrelated near-copies of incompatible lengths). Outward
+        # size, so size-incompatible rare-shingle collisions drop
+        # before the distinct shuffle and the verify scan. Outward
         # 1e-6 slack on both bounds: a float ulp must widen, never
         # shorten, a lossless bound (round-5 rule).
         .filter(
@@ -675,39 +476,31 @@ def _probe_v4_fast(
         .select("batch_doc", F.col("doc_id").alias("corpus_doc"))
         .distinct()
     )
-    # ONE bounded limit-collect executes the In-pruned candidate scan
-    # exactly once and answers the size gate from the row count (round
-    # 11: the previous checkpoint-then-count-then-collect trio ran the
-    # same gate in three serial jobs per probe; the limit caps driver
-    # memory at VERIFY_COLLECT_MAX+1 pair rows either way)
-    crows = cand.limit(VERIFY_COLLECT_MAX + 1).collect()
-    if len(crows) > VERIFY_COLLECT_MAX:
-        return None
-    if not crows:
-        return spark.createDataFrame([], out_schema)
-    cand_lit = F.broadcast(spark.createDataFrame(crows, cand.schema))
-    ids = sorted({int(r["corpus_doc"]) for r in crows})
-    barr_schema = (
-        f"batch_doc {bsh.schema['batch_doc'].dataType.simpleString()}, "
-        "bshs array<bigint>, szb bigint"
-    )
-    barr_lit = F.broadcast(
-        spark.createDataFrame(
-            [(d, sorted(ss), len(ss)) for d, ss in by_doc.items()],
-            barr_schema,
-        )
-    )
-    # past VERIFY_IN_MAX ids the leg-plan cost outgrows the pruning —
-    # the full narrow scan joined to the broadcast candidates is the
-    # right cost model there (same dial as the join path)
-    vsrc = (
-        _in_scan(spark, full, "doc_id", ids)
-        if len(ids) <= VERIFY_IN_MAX else full
-    )
+    scan = spark.table(_full_table(table))
+    if broadcast_batch:
+        # ONE bounded limit-collect materializes the candidate pairs
+        # driver-side: the size gate, the pushed id filter, and the
+        # literal candidate frame (the LocalLimit caps driver memory
+        # and stops a corpus-shaped candidate scan early)
+        rows = cand.limit(VERIFY_COLLECT_MAX + 1).collect()
+        if len(rows) <= VERIFY_COLLECT_MAX:
+            cand = spark.createDataFrame(rows, cand.schema)
+            ids = {r["corpus_doc"] for r in rows}
+            if len(ids) <= VERIFY_IN_MAX:
+                # chunked In legs so parquet row-group pruning actually
+                # bites (see IN_PUSHDOWN_LEG); a bigger id set is
+                # corpus-shaped and the full narrow scan is the right
+                # cost model
+                scan = _in_scan(spark, scan, "doc_id", ids)
+        else:
+            # corpus-shaped candidate set — keep a distributed plan,
+            # materialized once so the verify join does not re-run the
+            # candidate scan
+            cand = cand.localCheckpoint(eager=True)
     pairs = (
-        vsrc
-        .join(cand_lit, full["doc_id"] == cand_lit["corpus_doc"])
-        .join(barr_lit, "batch_doc")
+        scan.withColumnRenamed("doc_id", "corpus_doc")
+        .join(_b(cand), "corpus_doc")
+        .join(_b(barr), "batch_doc")
         .select(
             "batch_doc",
             "corpus_doc",
@@ -715,7 +508,11 @@ def _probe_v4_fast(
             F.col("sz").alias("szc"),
             "szb",
         )
-        # replay guard — see probe_prefix_index
+        # replayed crash-window extends can duplicate whole doc rows;
+        # dedup AFTER the projection so the guard shuffle carries
+        # scalars, not shingle arrays (duplicate rows hold identical
+        # arrays ⇒ identical isz — which survives is immaterial; same
+        # pattern as ivfpq_probe's guard)
         .dropDuplicates(["batch_doc", "corpus_doc"])
     )
     return pairs.select(
@@ -728,239 +525,7 @@ def _probe_v4_fast(
     ).filter(F.col("jaccard") >= threshold)
 
 
-def probe_prefix_index(
-    spark: SparkSession,
-    table: str,
-    batch_docs: DataFrame,
-    threshold: float,
-    broadcast_batch: bool | None = None,
-) -> DataFrame:
-    """Near-dup matches of a batch against the prefix index:
-    (batch_doc, corpus_doc, jaccard ≥ threshold) — identical results to
-    ``probe_index`` at any threshold ≥ the build threshold (asserted).
-
-    Phase 1 (candidates): broadcast batch shingles ⋈ the pruned probe
-    table — hot shingles are absent from the index by construction, so
-    candidate volume tracks rare-shingle collisions only. Phase 2
-    (verify): the doc-array verify table — one narrow row per corpus
-    doc, the exact intersection computed by ``array_intersect`` inside
-    the projection (round 10; see ``_doc_shingles``) — joined to the
-    broadcast candidates and, separately, the broadcast batch arrays
-    (one per batch doc, never duplicated per pair — ADVICE r10). On a
-    v4 (doc_id-sorted) table the collected candidate ids are pushed
-    into the scan as a parquet ``In`` filter, so row-group pruning
-    bounds verify I/O by the candidates at any corpus size (round 11;
-    VERDICT r10 #1 — v3's partition-key DPP stopped pruning past ~64
-    candidates, leaving a corpus-linear narrow scan per probe batch).
-    Both phases are map-side on the corpus; pre-round-11 persisted
-    indexes keep their stored verify layout (dispatched on schema).
-
-    **Broadcast-overflow fallback** (VERDICT r5 #3): a batch that
-    outgrows broadcast (a Full initial resync routed through ``probe``
-    would hit the executor broadcast ceiling) takes the co-located
-    sort-merge path instead — the batch shingles repartition to the
-    probe table's bucket count so the bucketed corpus side is *still*
-    never shuffled, and the verify/size joins run as plain shuffle
-    joins (corpus-sized work is inherent when the batch is
-    corpus-sized). ``broadcast_batch=None`` decides from the batch's
-    SHINGLE-row count (> ``MAX_BROADCAST_SHINGLES`` ⇒ sort-merge) —
-    the payload actually broadcast, so a batch of few but very long
-    documents is gated correctly (ADVICE r6); results are identical on
-    either path (asserted in tests)."""
-    meta = _meta_row(spark, table)
-    if threshold < meta.threshold - 1e-12:
-        raise ValueError(
-            f"index {table!r} was built for threshold >= {meta.threshold}; "
-            f"probing at {threshold} would lose pairs (rebuild the index)"
-        )
-    n = meta.n
-    bsh = shingle_table(batch_docs, n).select(
-        F.col("doc_id").alias("batch_doc"), "shingle"
-    )
-    if broadcast_batch is None:
-        from trignis_spark.operators.similarity import exceeds
-
-        # limit-bounded probe, not a full count: this gate runs on
-        # every poll-cycle probe and the batch plan can be expensive
-        broadcast_batch = not exceeds(bsh, MAX_BROADCAST_SHINGLES)
-    if broadcast_batch:
-        # batch-sized by the gate — materialize the shingle rows ONCE
-        # (round 11): the probe otherwise re-ran the batch's tokenize/
-        # hash/shingle pipeline per consumer (fast-path collect, sizes,
-        # candidate join, batch arrays — four to five executions of the
-        # same HOF plan per poll cycle, ~0.4 s each at the sf0.1 bench
-        # batch). Corpus-shaped batches (a Full resync routed through
-        # probe) keep the unmaterialized plan — the sort-merge path's
-        # scratch-disk profile is deliberate.
-        bsh = bsh.localCheckpoint(eager=True)
-    full = spark.table(_full_table(table))
-    if (
-        "shs" in full.columns and "pb" not in full.columns
-        and broadcast_batch
-    ):
-        # v4 fast path: fully candidate-bounded probe (see
-        # ``_probe_v4_fast``); falls through to the join path when the
-        # batch or candidate set outgrows the collect bound
-        fast = _probe_v4_fast(spark, table, full, bsh, threshold)
-        if fast is not None:
-            return fast
-
-    def _b(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_batch else df
-    if not broadcast_batch:
-        # align the batch with the bucketed probe table's layout so the
-        # candidate join sort-merges without shuffling the corpus side
-        bsh = bsh.repartition(_bucket_count(spark, table), "shingle")
-    bsz = bsh.groupBy("batch_doc").agg(F.count(F.lit(1)).alias("szb"))
-    cand = (
-        spark.table(table)
-        .join(_b(bsh), "shingle")
-        .join(_b(bsz), "batch_doc")
-        # lossless SSJoin length filter — same bound as the fast path
-        # (jaccard ≥ t ⇒ t·|A| ≤ |B| ≤ |A|/t, outward 1e-6 slack);
-        # cuts size-incompatible rare-shingle collisions before the
-        # distinct shuffle and the verify join
-        .filter(
-            (F.col("sz").cast("double")
-             >= F.lit(threshold) * F.col("szb") - F.lit(1e-6))
-            & (F.col("sz").cast("double")
-               <= F.col("szb") / F.lit(threshold) + F.lit(1e-6))
-        )
-        .select("batch_doc", F.col("doc_id").alias("corpus_doc"))
-        .distinct()
-        # NOTE: not checkpointed HERE — the v3/legacy layouts need the
-        # plan (with its selective joins visible) for dynamic
-        # partition pruning of the verify scan; the v4 branch
-        # checkpoints it itself, since it re-executes the candidates
-        # for the id collect and prunes via the pushed In filter
-        # instead of DPP
-    )
-    if "shs" in full.columns:
-        # doc-array layout (rounds 10/11 — see ``_doc_shingles``): the
-        # verify is ONE narrow doc-row scan joined to the candidates
-        # with the intersection computed inside the projection — no
-        # per-shingle explode, no aggregation. The batch arrays are
-        # broadcast ONCE PER BATCH DOC as their own join (``barr``),
-        # never pre-joined onto the candidate pairs — a
-        # boilerplate-heavy batch doc colliding with a large candidate
-        # set would otherwise duplicate its array per pair inside the
-        # broadcast relation (ADVICE r10: that payload scales with
-        # candidates × per-doc shingles and can blow the 8 GB
-        # broadcast ceiling the shingle-row gate never sees).
-        barr = bsh.groupBy("batch_doc").agg(
-            F.array_sort(F.collect_list("shingle")).alias("bshs"),
-            F.count(F.lit(1)).alias("szb"),
-        )
-        if "pb" in full.columns:
-            # v3: hash-partitioned verify table — DPP from the
-            # broadcast candidate join prunes while candidates are
-            # fewer than the fixed partition count
-            cand_pb = cand.withColumn("pb", _pb("corpus_doc",
-                                                meta.n_parts))
-            scan = full.join(
-                _b(cand_pb),
-                (full.doc_id == cand_pb.corpus_doc)
-                & (full.pb == cand_pb.pb),
-            )
-        else:
-            # v4: doc_id-sorted verify table — collect the bounded
-            # candidate ids and PUSH them into the parquet scan, so
-            # row-group min-max pruning makes verify I/O
-            # O(candidates) at any corpus size (VERDICT r10 #1: v3's
-            # DPP pruned nothing once candidates out-spread the 64
-            # partitions, leaving a full narrow corpus scan per probe
-            # batch — linear forever). The candidate plan is
-            # checkpointed so the collect and the verify join pay it
-            # once.
-            scan = full
-            if broadcast_batch:
-                # ONE bounded limit-collect materializes the candidate
-                # pairs driver-side: it answers the size gate from the
-                # row count, supplies the pushed id filter, AND
-                # replaces the distributed candidate plan with a
-                # literal frame — so the whole probe is gate + collect
-                # + verify (round 11: the checkpoint-then-count-then-
-                # collect shape paid two extra serial jobs per poll
-                # cycle; the LocalLimit caps driver memory and stops a
-                # corpus-shaped candidate scan early)
-                rows = cand.limit(VERIFY_COLLECT_MAX + 1).collect()
-                if len(rows) <= VERIFY_COLLECT_MAX:
-                    cand = spark.createDataFrame(rows, cand.schema)
-                    ids = sorted({r["corpus_doc"] for r in rows})
-                    if len(ids) <= VERIFY_IN_MAX:
-                        # chunked In legs so parquet row-group pruning
-                        # actually bites (see IN_PUSHDOWN_LEG); a
-                        # bigger id set is corpus-shaped and the full
-                        # narrow scan is the right cost model
-                        scan = _in_scan(spark, full, "doc_id", ids)
-                else:
-                    # corpus-shaped candidate set (a Full resync
-                    # routed through probe) — keep a distributed plan,
-                    # materialized once so the verify join does not
-                    # re-run the candidate scan; the In filter would
-                    # only bloat the plan
-                    cand = cand.localCheckpoint(eager=True)
-            # else: corpus-shaped candidate set (a Full resync routed
-            # through probe) — the broadcast/shuffle join below is the
-            # right cost model and the In filter would only bloat the
-            # plan
-            scan = scan.join(_b(cand),
-                             full.doc_id == cand.corpus_doc)
-        pairs = (
-            scan.join(_b(barr), "batch_doc")
-            .select(
-                "batch_doc",
-                "corpus_doc",
-                F.size(F.array_intersect("shs", "bshs")).alias("isz"),
-                F.col("sz").alias("szc"),
-                "szb",
-            )
-            # replayed crash-window extends can duplicate whole doc
-            # rows; dedup AFTER the projection so the guard shuffle
-            # carries scalars, not shingle arrays (duplicate rows hold
-            # identical arrays ⇒ identical isz — which survives is
-            # immaterial; same pattern as ivfpq_probe's guard)
-            .dropDuplicates(["batch_doc", "corpus_doc"])
-        )
-        return pairs.select(
-            "batch_doc",
-            "corpus_doc",
-            (
-                F.col("isz").cast("double")
-                / (F.col("szb") + F.col("szc") - F.col("isz"))
-            ).alias("jaccard"),
-        ).filter(F.col("jaccard") >= threshold)
-    cand_pb = cand.withColumn("pb", _pb("corpus_doc", meta.n_parts))
-    # legacy row-level verify table (pre-round-10 persisted indexes)
-    inter = (
-        full.join(
-            _b(cand_pb),
-            (full.doc_id == cand_pb.corpus_doc)
-            & (full.pb == cand_pb.pb),
-        )
-        .join(_b(bsh), ["batch_doc", "shingle"])
-        # countDistinct: verify-table rows duplicated by a replayed
-        # crash-window extend must not double-count isz (ADVICE r5; see
-        # probe_index)
-        .groupBy("batch_doc", "corpus_doc")
-        .agg(F.countDistinct("shingle").alias("isz"),
-             F.max("sz").alias("szc"))
-    )
-    return (
-        inter.join(_b(bsz), "batch_doc")
-        .select(
-            "batch_doc",
-            "corpus_doc",
-            (
-                F.col("isz").cast("double")
-                / (F.col("szb") + F.col("szc") - F.col("isz"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def extend_prefix_index(
+def extend(
     spark: SparkSession,
     docs: DataFrame,
     table: str,
@@ -990,7 +555,12 @@ def _append_prefix_docs(
     anti-join). Prefix rows for the new docs rank against the *new
     batch's own* df snapshot — safe because corpus-side prefix pruning
     is lossless under any per-doc shingle choice of the required length
-    (see module notes); the df order only tunes posting-list length."""
+    (see module notes); the df order only tunes posting-list length.
+
+    Each append writes its own doc_id-sorted run to the verify table —
+    row-group min-max stats are per-file, so probe pruning keeps working
+    across overlapping runs; ``compact_prefix_index`` restores one
+    global run."""
     if added == 0:
         return 0
     meta = _meta_row(spark, table)
@@ -1003,126 +573,51 @@ def _append_prefix_docs(
         .format("parquet")
         .saveAsTable(table)
     )
-    # follow the stored verify layout: doc_id-sorted doc-array (v4),
-    # pb-partitioned doc-array (v3) or legacy row-level — an append
-    # must never mix schemas in one table
-    full_cols = spark.table(_full_table(table)).columns
-    if "shs" in full_cols and "pb" not in full_cols:
-        # v4: each extend appends its own sorted run — row-group
-        # min-max stats are per-file, so probe pruning keeps working
-        # across overlapping runs; compact_prefix_index restores one
-        # global run
-        full = _doc_shingles(fresh, meta.n)
-        sizes = full.select("doc_id", "sz")
-        n_files = max(1, min(VERIFY_SORT_FILES, added // 1_000_000 + 1))
-        (
-            full.repartitionByRange(n_files, "doc_id")
-            .sortWithinPartitions("doc_id")
-            .write.mode("append")
-            .option("parquet.block.size", str(VERIFY_BLOCK_BYTES))
-            .format("parquet")
-            .saveAsTable(_full_table(table))
-        )
-    else:
-        if "shs" in full_cols:
-            full = _doc_shingles(fresh, meta.n, meta.n_parts)
-            sizes = full.select("doc_id", "sz")
-        else:
-            full = _sized_shingles(fresh, meta.n).withColumn(
-                "pb", _pb(parts=meta.n_parts)
-            )
-            sizes = full.select("doc_id", "sz").distinct()
-        (
-            full.repartition("pb")
-            .write.mode("append")
-            .partitionBy("pb")
-            .format("parquet")
-            .saveAsTable(_full_table(table))
-        )
+    full = _doc_shingles(fresh, meta.n)
+    n_files = max(1, min(VERIFY_SORT_FILES, added // 1_000_000 + 1))
     (
-        sizes
+        full.repartitionByRange(n_files, "doc_id")
+        .sortWithinPartitions("doc_id")
+        .write.mode("append")
+        .option("parquet.block.size", str(VERIFY_BLOCK_BYTES))
+        .format("parquet")
+        .saveAsTable(_full_table(table))
+    )
+    (
+        full.select("doc_id", "sz")
         .write.mode("append")
         .bucketBy(n_buckets, "doc_id")
         .format("parquet")
         .saveAsTable(_docs_table(table))
     )
-    for t in (table, _full_table(table), _docs_table(table)):
-        spark.catalog.refreshTable(t)
+    _refresh(spark, table)
     return added
-
-
-# --------------------------------------------------------------------------
-# Layout-agnostic dispatch (v1 full index or v2 prefix index)
-# --------------------------------------------------------------------------
-
-
-def is_prefix_index(spark: SparkSession, table: str) -> bool:
-    """v2 indexes are recognized by their meta table."""
-    return spark.catalog.tableExists(_meta_table(table))
-
-
-def probe(
-    spark: SparkSession,
-    table: str,
-    batch_docs: DataFrame,
-    threshold: float,
-    n: int = 3,
-    broadcast_batch: bool | None = None,
-) -> DataFrame:
-    """Probe whichever index layout ``table`` holds — identical results
-    either way (v2's shingle width comes from its meta row; ``n`` is
-    only used for v1; ``broadcast_batch`` — v2's oversize-batch
-    fallback dial — only for v2)."""
-    if is_prefix_index(spark, table):
-        return probe_prefix_index(
-            spark, table, batch_docs, threshold, broadcast_batch
-        )
-    return probe_index(spark, table, batch_docs, threshold, n)
-
-
-def extend(
-    spark: SparkSession,
-    docs: DataFrame,
-    table: str,
-    n: int = 3,
-    n_buckets: int = DEFAULT_BUCKETS,
-) -> int:
-    """Extend whichever index layout ``table`` holds (idempotent)."""
-    if is_prefix_index(spark, table):
-        return extend_prefix_index(spark, docs, table, n_buckets)
-    return extend_index(spark, docs, table, n, n_buckets)
 
 
 def compact_prefix_index(
     spark: SparkSession, table: str, n_buckets: int = DEFAULT_BUCKETS
 ) -> int:
-    """Housekeeping for the v2 layout under sustained polling: every
-    ``extend_prefix_index`` appends a file set to the bucketed probe
-    table, the partitioned verify table, and the docs sidecar. Rewrites
-    all three to ~one file per bucket/partition via the maintenance
+    """Housekeeping under sustained polling: every ``extend`` appends a
+    file set to the bucketed probe table, a sorted run to the verify
+    table, and a file set to the docs sidecar. Rewrites the bucketed
+    tables to ~one file per bucket and merges the verify table's runs
+    back into one global doc_id-sorted run, via the maintenance
     catalog-swap helpers; probe results are unchanged by construction
     (same rows, same specs — asserted in tests). Appends must be
     quiesced during the swap. Returns the post-compaction file count."""
     from trignis_spark.maintenance import (
         compact_bucketed_table,
-        compact_partitioned_table,
         compact_sorted_table,
     )
 
-    is_v4 = "pb" not in spark.table(_full_table(table)).columns
     n = compact_bucketed_table(
         spark, table, "shingle", n_buckets, sort_col="shingle",
-        block_bytes=PROBE_BLOCK_BYTES if is_v4 else None,
+        block_bytes=PROBE_BLOCK_BYTES,
     )
-    if not is_v4:
-        n += compact_partitioned_table(spark, _full_table(table), "pb")
-    else:
-        # v4: merge the appended sorted runs back into one global run
-        n += compact_sorted_table(
-            spark, _full_table(table), "doc_id",
-            n_files=VERIFY_SORT_FILES, block_bytes=VERIFY_BLOCK_BYTES,
-        )
+    n += compact_sorted_table(
+        spark, _full_table(table), "doc_id",
+        n_files=VERIFY_SORT_FILES, block_bytes=VERIFY_BLOCK_BYTES,
+    )
     n += compact_bucketed_table(spark, _docs_table(table), "doc_id", n_buckets)
-    for t in (table, _full_table(table), _docs_table(table)):
-        spark.catalog.refreshTable(t)
+    _refresh(spark, table)
     return n

@@ -170,6 +170,12 @@ def _probe_state(spark: SparkSession, table: str) -> dict:
             "v_sorted": bool(meta["v_sorted"])
             if "v_sorted" in fields and meta["v_sorted"] is not None
             else False,
+            # adc_margin is a max over EVERY indexed vector (not a
+            # sample); indexes persisted before the flag read False
+            "margin_certified": bool(meta["margin_certified"])
+            if "margin_certified" in fields
+            and meta["margin_certified"] is not None
+            else False,
             "wide": "sub" not in spark.table(_codes_table(table)).columns,
             "cell_partitioned": _cell_partitioned(spark, table),
             "ids_bucketed": _is_bucketed(spark, _ids_table(table)),
@@ -637,9 +643,15 @@ _MARGIN_SAMPLE = 65536
 #: cell-partitioned base tables are guaranteed duplicate-free (fresh
 #: round-9+ builds — see ``build_ivfpq_index``), letting probes skip
 #: their replay-duplicate guards when no tail exists.
+#: ``margin_certified`` is true only when ``adc_margin`` was measured
+#: over every indexed vector (``margin_rows=None`` builds,
+#: ``remeasure_adc_margin(sample_rows=None)``) — a sampled max is
+#: statistical, and only a certified bound may arm the exact re-rank's
+#: banded gather (``band_armed``).
 _META_SCHEMA = (
     "m int, k int, n_buckets int, adc_margin double, "
-    "base_distinct boolean, bucket_v int, v_sorted boolean"
+    "base_distinct boolean, bucket_v int, v_sorted boolean, "
+    "margin_certified boolean"
 )
 
 
@@ -764,6 +776,22 @@ def _unit_residual_max(rows: DataFrame, codebook: DataFrame, m: int,
     return float(r["mx"]) if r["mx"] is not None else 0.0
 
 
+def band_armed(st: dict) -> bool:
+    """Whether the exact re-rank of an index with serving state ``st``
+    (``_probe_state``) takes the margin-band deferred float gather: the
+    float base is vec_id-sorted within cells, and the ADC margin is
+    certified over every indexed vector and narrow enough to be useful.
+    A sampled margin never arms it — an unsampled vector can exceed a
+    sampled max, and the banded gather would then drop a true top-k
+    member (see ``ivfpq_probe``)."""
+    return (
+        st["v_sorted"]
+        and st["margin_certified"]
+        and st["adc_margin"] is not None
+        and st["adc_margin"] < BAND_MARGIN_MAX
+    )
+
+
 def stored_adc_margin(spark: SparkSession, table: str) -> float | None:
     """The index's certified ADC error bound, or ``None`` for indexes
     persisted before the bound existed (rebuild to certify). Served
@@ -776,7 +804,8 @@ def stored_adc_margin(spark: SparkSession, table: str) -> float | None:
 def _rewrite_meta(spark: SparkSession, table: str, m: int, k: int,
                   n_buckets: int, adc_margin: float | None,
                   base_distinct: bool, bucket_v: int = 1,
-                  v_sorted: bool = False) -> None:
+                  v_sorted: bool = False,
+                  margin_certified: bool = False) -> None:
     """Replace the one-row meta table, crash-safe (ADVICE r8): the new
     row is durably written to a ``__staged`` sidecar BEFORE the live
     table is dropped, so no crash point loses the metadata — a crash
@@ -792,7 +821,7 @@ def _rewrite_meta(spark: SparkSession, table: str, m: int, k: int,
     drop_table_and_location(spark, staged)
     spark.createDataFrame(
         [(m, k, n_buckets, adc_margin, base_distinct, bucket_v,
-          v_sorted)],
+          v_sorted, margin_certified)],
         _META_SCHEMA,
     ).write.format("parquet").saveAsTable(staged)
     drop_table_and_location(spark, mt)
@@ -843,11 +872,12 @@ def remeasure_adc_margin(
     ``sample_rows=None`` (default) measures the full corpus — the max
     is then a true bound for every indexed vector. An integer measures
     a deterministic ~``sample_rows`` hash-sample: cheaper, but the
-    bound becomes statistical (unsampled vectors can exceed it) —
-    extend's per-batch check and drift widening keep such a margin
-    honest over time. The rewrite is crash-safe via a staged sidecar
-    (``_rewrite_meta``); a crash mid-rewrite is healed here or at
-    attach time (``_recover_meta``)."""
+    bound becomes statistical (unsampled vectors can exceed it) and is
+    stored uncertified, which disarms the banded gather
+    (``band_armed``); extend's per-batch check and drift widening keep
+    such a margin honest over time. The rewrite is crash-safe via a
+    staged sidecar (``_rewrite_meta``); a crash mid-rewrite is healed
+    here or at attach time (``_recover_meta``)."""
     _recover_meta(spark, table)
     meta = spark.table(_meta_table(table)).first()
     rows = spark.table(table)
@@ -881,7 +911,7 @@ def remeasure_adc_margin(
     )
     _rewrite_meta(spark, table, int(meta["m"]), int(meta["k"]),
                   int(meta["n_buckets"]), margin, base_distinct,
-                  bucket_v, v_sorted)
+                  bucket_v, v_sorted, margin_certified=sample_rows is None)
     _refresh(spark, table)
     return margin
 
@@ -928,9 +958,10 @@ def build_ivfpq_index(
     reconstruction pass with no re-encode, Arrow-dispatched at scale.
     An explicit integer opts into a deterministic hash-sample of about
     that size — cheaper for a huge one-shot build, but the stored
-    bound is then only statistical until ``remeasure_adc_margin`` (or
-    extend's per-batch widening) tightens it, and adc-gated callers
-    should treat decisions near the threshold accordingly.
+    bound is then only statistical until a full
+    ``remeasure_adc_margin`` certifies it, adc-gated callers should
+    treat decisions near the threshold accordingly, and the exact
+    re-rank keeps the classic gather (``band_armed``).
 
     ``bucket_version`` is a compat hook (tests only): 1 writes the
     pre-round-9 leading-bits cell layout so the version-dispatch path
@@ -1039,7 +1070,8 @@ def build_ivfpq_index(
     # replay-duplicate guards whenever no tail exists. Indexes persisted
     # before this marker keep the guards (see ``_probe_state``).
     meta = spark.createDataFrame(
-        [(m, k, n_buckets, margin, True, bucket_version, True)],
+        [(m, k, n_buckets, margin, True, bucket_version, True,
+          margin_rows is None)],
         _META_SCHEMA,
     )
     meta.write.mode("overwrite").format("parquet").saveAsTable(
@@ -1146,9 +1178,12 @@ def extend_ivfpq_index(
             if got > cert:
                 import warnings
 
+                # a full measurement of the batch over a certified
+                # corpus bound keeps the widened bound certified
                 _rewrite_meta(spark, table, st["m"], st["k"],
                               st["n_buckets"], got, st["base_distinct"],
-                              st["bucket_v"], st["v_sorted"])
+                              st["bucket_v"], st["v_sorted"],
+                              st["margin_certified"])
                 st = _probe_state(spark, table)
                 warnings.warn(
                     f"extend_ivfpq_index({table}): batch residual "
@@ -1491,12 +1526,7 @@ def ivfpq_probe(
     # — cannot contain an excluded row. Margins are widened outward by
     # BAND_SAFETY (see the constant) so plan-computed doubles cannot
     # leak across the bound; non-finite bounds keep their rows.
-    band = (
-        rerank
-        and st["v_sorted"]
-        and st["adc_margin"] is not None
-        and st["adc_margin"] < BAND_MARGIN_MAX
-    )
+    band = rerank and band_armed(st)
     # the banded shortlist needs per-candidate reconstruction norms
     # (and qn2) to place the interval; rerank-free probes need the same
     # columns for their quantized cosine — one flag drives both

@@ -2410,15 +2410,16 @@ def dedup_embedding_cosine_clustered_capped(
 )
 def dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe-only near-dup search over the *persisted prefix-pruned
-    index* (`operators/dedup_index.py` v2) — the serving shape of the
+    index* (`operators/dedup_index.py`) — the serving shape of the
     every-poll-cycle dedup: the corpus (doc_id % 7 <> 3) is indexed at
     most once per (session, sf_dir); each call then runs only the
-    two-phase probe (pruned-probe-table candidates → DPP-pruned verify)
-    for the batch (doc_id % 7 = 3). The oracle recomputes the exact
-    same pairs from the raw documents table — persistence and prefix
-    pruning must change cost, never results (the per-document
-    pigeonhole guarantees losslessness; tests/test_dedup_index.py
-    proves probe ≡ full-index probe at three thresholds)."""
+    two-phase probe (pruned-probe-table candidates → verify scan pruned
+    by the pushed candidate ids) for the batch (doc_id % 7 = 3). The
+    oracle recomputes the exact same pairs from the raw documents
+    table — persistence and prefix pruning must change cost, never
+    results (the per-document pigeonhole guarantees losslessness;
+    tests/test_dedup_index.py proves probe ≡ the one-shot
+    ``dedup.incremental_pairs`` at three thresholds)."""
     import hashlib
 
     from trignis_spark.operators import dedup_index as di
@@ -2433,7 +2434,7 @@ def dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, docs.filter("doc_id % 7 <> 3"), name, threshold=0.8
         )
     return (
-        di.probe_prefix_index(
+        di.probe(
             spark, name, docs.filter("doc_id % 7 = 3"), threshold=0.8
         )
         .orderBy("batch_doc", "corpus_doc")

@@ -39,23 +39,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    )
-    # Scale-dependent knob, parameterised rather than constant (round
-    # 12, guide §2.2): AQE's advisory post-shuffle partition size
-    # should track input scale (~100 MB–1 GB partitions on a cluster),
-    # not the 64 MB default tuned for neither. UNSET by default so
-    # every driver-run bench keeps the exact prior configuration; the
-    # sf1/sf10 local legs and cluster deployments set
-    # SPARK_GRAFT_ADVISORY_MB explicitly (production sizing rationale
-    # in OPTIMIZATION_r12.md).
-    adv_mb = os.environ.get("SPARK_GRAFT_ADVISORY_MB")
-    if adv_mb:
-        builder = builder.config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            str(int(adv_mb) * 1024 * 1024),
-        )
-    builder = (
-        builder
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -59,7 +59,6 @@ def build_sink(kind: str, name: str, options: dict, env=None) -> Sink:
             accepted_path=options["accepted_path"],
             min_quality=options.get("min_quality", 0.0),
             threshold=options.get("threshold", 0.8),
-            n=options.get("n", 3),
             id_col=options.get("id_col", "doc_id"),
             text_col=options.get("text_col", "text"),
             props_json=options.get("props_json", True),

@@ -13,9 +13,10 @@ streaming ``foreachBatch`` export, exactly like the mirror and rollup
 sinks — so curation advances with the watermark and inherits the
 at-least-once replay contract (a replayed batch re-admits nothing).
 
-Options: ``index_table``, ``accepted_path``; optional ``min_quality``
-(default 0.0), ``threshold`` (0.8), ``n`` (3-shingles),
-``id_col``/``text_col`` (payload column names after extraction), and
+Options: ``index_table`` (a ``dedup_index.build_prefix_index`` index,
+whose meta row fixes the shingle width), ``accepted_path``; optional
+``min_quality`` (default 0.0), ``threshold`` (0.8), ``id_col``/
+``text_col`` (payload column names after extraction), and
 ``props_json`` (default true: lift (doc_id, text) from the ``props``
 JSON payload via ``documents_from_outbox``; set false when the batch
 already carries the columns).
@@ -38,7 +39,6 @@ class CurateSink(DataFrameSink):
     accepted_path: str
     min_quality: float = 0.0
     threshold: float = 0.8
-    n: int = 3
     id_col: str = "doc_id"
     text_col: str = "text"
     props_json: bool = True
@@ -57,7 +57,6 @@ class CurateSink(DataFrameSink):
             self.accepted_path,
             min_quality=self.min_quality,
             threshold=self.threshold,
-            n=self.n,
             id_col=self.id_col,
             text_col=self.text_col,
             stats=self.stats,

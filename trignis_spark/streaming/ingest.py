@@ -14,19 +14,21 @@ and each epoch passes through
 2. **exact in-batch dedup** — lowest ``doc_id`` per content hash wins;
 3. **quality gate** — ``operators.text.quality_scores`` at or above
    ``min_quality``;
-4. **corpus near-dup probe** — ``dedup_index.probe`` (v1 full or v2
-   prefix-pruned layout, auto-detected) at or above
-   ``threshold`` rejects (exact corpus duplicates are the Jaccard-1.0
-   special case, so the probe subsumes an exact check);
+4. **corpus near-dup probe** — ``dedup_index.probe`` against the
+   prefix index at or above ``threshold`` rejects (exact corpus
+   duplicates are the Jaccard-1.0 special case, so the probe subsumes
+   an exact check);
 5. **in-batch near-dup** — among survivors, a document is rejected when
    a *lower-id* survivor in the same batch is its near-duplicate
    (conservative greedy: deterministic, never admits a near-dup pair;
    may over-reject on chains a~b~c, which fuzzy clustering
    (``dedup.cluster_near_duplicates``) resolves offline if needed);
 6. **accept** — append ``(doc_id, text, epoch_id)`` to the accepted
-   store and add the same rows to the index. A prefix index takes them
-   straight through its append (they passed step 1's anti-join this
-   epoch); a v1 index goes through ``dedup_index.extend``.
+   store and add the same rows to the index straight through its
+   append (they passed step 1's anti-join this epoch).
+
+Both near-dup passes use the shingle width the index was built with
+(its meta row), so corpus and in-batch decisions agree.
 
 Delivery semantics match the rest of the engine (at-least-once,
 idempotent where it matters): the index extend is exactly-once by
@@ -44,8 +46,8 @@ frame tagged with the dedup rank and quality verdict; the survivors of
 step 4, so the probe's verify runs once; the accepted set) and one
 ``count()`` of the accepted set. Stats add a ``count()`` of the batch,
 one aggregate over the tagged frame and a ``count()`` of the step-4
-survivors. Batch rows reach the driver only through the v4 probe's
-bounded collects (``dedup_index._probe_v4_fast``).
+survivors. Batch rows never reach the driver; the probe collects only
+its bounded candidate pairs.
 """
 
 from __future__ import annotations
@@ -95,14 +97,15 @@ def make_ingest_batch_fn(
     *,
     min_quality: float = 0.0,
     threshold: float = 0.8,
-    n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
     stats: list[IngestStats] | None = None,
 ):
     """Build the ``foreachBatch`` body for a curated-ingestion stream.
 
-    The returned callable takes ``(batch_df, epoch_id)``; ``batch_df``
+    ``index_table`` is a ``dedup_index.build_prefix_index`` index; its
+    meta row sets the shingle width of both near-dup passes. The
+    returned callable takes ``(batch_df, epoch_id)``; ``batch_df``
     needs an ``id_col`` (long, unique per document) and a ``text_col``.
     Pass a list as ``stats`` to collect per-epoch :class:`IngestStats`
     (costs three small actions over already-materialized stages per
@@ -115,6 +118,7 @@ def make_ingest_batch_fn(
             F.col(text_col).alias("text"),
         )
         docs = docs.localCheckpoint(eager=True)  # cut the stream lineage
+        n = di._meta_row(spark, index_table).n
         known = spark.table(di._docs_table(index_table)).select("doc_id")
         w = Window.partitionBy(F.sha2(F.col("text"), 256)).orderBy("doc_id")
         ranked = batch_anti_join(docs, known, "doc_id").withColumn(
@@ -141,7 +145,7 @@ def make_ingest_batch_fn(
         good = fresh.filter("_good").select("doc_id", "text")
 
         corpus_hits = (
-            di.probe(spark, index_table, good, threshold, n)
+            di.probe(spark, index_table, good, threshold)
             .select(F.col("batch_doc").alias("doc_id"))
             .distinct()
         )
@@ -184,12 +188,9 @@ def make_ingest_batch_fn(
             .write.mode("append")
             .parquet(accepted_path)
         )
-        if di.is_prefix_index(spark, index_table):
-            # accepted ⊆ fresh, which already passed the membership
-            # anti-join this epoch: append without repeating it
-            di._append_prefix_docs(spark, accepted, index_table, n_acc)
-        else:
-            di.extend(spark, accepted, index_table, n)
+        # accepted ⊆ fresh, which already passed the membership
+        # anti-join this epoch: append without repeating it
+        di._append_prefix_docs(spark, accepted, index_table, n_acc)
 
     return ingest_batch
 
@@ -215,7 +216,6 @@ def run_ingest_stream(
     *,
     min_quality: float = 0.0,
     threshold: float = 0.8,
-    n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
     stats: list[IngestStats] | None = None,
@@ -231,7 +231,6 @@ def run_ingest_stream(
         accepted_path,
         min_quality=min_quality,
         threshold=threshold,
-        n=n,
         id_col=id_col,
         text_col=text_col,
         stats=stats,
@@ -533,12 +532,7 @@ def make_embedding_ingest_fn(
             # waste the storage memory AND replace the parquet scan the
             # pushed legs prune with an InMemoryRelation whose 10 k-row
             # cached batches prune nothing.
-            bst = ipq._probe_state(spark, ann_table)
-            banded = (
-                bst["v_sorted"]
-                and bst["adc_margin"] is not None
-                and bst["adc_margin"] < ipq.BAND_MARGIN_MAX
-            )
+            banded = ipq.band_armed(ipq._probe_state(spark, ann_table))
         if precision != "adc" and not banded:
             # the rerank-free adc probe never reads the float base —
             # pinning it (5.9 GB at 2 M × 768) wastes storage memory
