@@ -184,3 +184,20 @@ def test_mq_sink_validation_matrix():
     ):
         errs, _ = validate_environment(env_with(sink))
         assert errs == []
+
+
+def test_curate_sink_rejects_unknown_options():
+    valid = {"index_table": "idx", "accepted_path": "/tmp/acc",
+             "min_quality": 0.1, "threshold": 0.8, "id_col": "doc_id",
+             "text_col": "text", "props_json": False}
+    errs, _ = validate_environment(
+        _env(destinations=(SinkConfig("c", "curate", valid),))
+    )
+    assert errs == []
+    # the removed shingle width and a misspelled threshold would
+    # otherwise run silently on the defaults
+    for bad in ("n", "treshold"):
+        errs, _ = validate_environment(_env(destinations=(
+            SinkConfig("c", "curate", {**valid, bad: 3}),
+        )))
+        assert errs == [f"sink 'c': unknown curate option(s) ['{bad}']"]

@@ -2,6 +2,7 @@
 compaction view, and an end-to-end file-stream run where the index
 persists across two stream restarts."""
 
+import logging
 import os
 
 import pytest
@@ -19,6 +20,7 @@ CLEAN_B = "another standalone paragraph covering watermark semantics in streamin
 JUNK = "!!!! ???? !!!! ???? !!!! ???? !!!! ????"
 JUNK2 = ";;;; :::: ;;;; :::: ;;;; :::: ;;;; ::::"
 CLEAN_C = "a third clean paragraph about bucketed joins and sorted row groups"
+CLEAN_D = "one more clean note on observed metrics over checkpointed frames"
 
 
 def _frame(spark, rows):
@@ -398,7 +400,9 @@ def test_gate_without_stats_and_empty_epoch(spark, pindex, tmp_path):
     fn = ingest.make_ingest_batch_fn(
         spark, pindex, accepted_path, min_quality=0.05, threshold=0.5,
     )
+    # an empty batch (its observed counts still arrive), then one where
     # nothing passes: a corpus near-dup, junk, and a corpus member
+    fn(_frame(spark, []), epoch_id=0)
     fn(_frame(spark, [(10, NEAR_BASE), (13, JUNK), (2, OTHER)]),
        epoch_id=0)
     assert not os.path.exists(accepted_path)
@@ -442,17 +446,66 @@ def test_gate_append_matches_extend_prefix_index(spark, pindex, tmp_path):
         fn(_frame(spark, [(30, NEAR_A), (31, CLEAN_C)]), epoch_id=1)
         assert stats[-1].corpus_near_dup == 1
         assert stats[-1].accepted == 1
+        # an insert and an update of one doc_id: both rows are admitted
+        fn(_frame(spark, [(40, CLEAN_D), (40, JUNK2)]), epoch_id=2)
+        assert stats[-1].accepted == 2
+        later = spark.read.parquet(accepted_path).filter("epoch_id > 0")
+        assert di.extend(spark, later.select("doc_id", "text"), ref) == 3
+        for sfx in ("", "_full", "_docs"):
+            assert _rows(spark, pindex + sfx) == _rows(spark, ref + sfx)
     finally:
         for sfx in ("", "_full", "_docs", "_meta"):
             spark.sql(f"DROP TABLE IF EXISTS {ref}{sfx}")
+
+
+def test_self_probe_rejects_what_incremental_pairs_rejects(spark):
+    """The gate's in-batch pass over the shingle arrays rejects exactly
+    the docs that the rule over ``dd.incremental_pairs`` of
+    ``dd.shingle_table`` does (a doc with a lower-id near-dup in the
+    batch loses), at three thresholds, broadcast and sort-merge."""
+    from trignis_spark.operators import dedup as dd
+
+    words = [f"w{i}" for i in range(30)]
+    a = " ".join(words)
+    b = " ".join(words[:-1] + ["x"])               # a~b: J 0.93
+    c = " ".join(words[:14] + ["y"] + words[15:-1] + ["x"])  # b~c 0.81
+    v = " ".join(f"v{i}" for i in range(12))
+    u = " ".join(f"u{i}" for i in range(30))
+    frame = _frame(spark, [
+        (1, a), (2, b), (3, c),            # chain: a~b~c, a~c only at 0.5
+        (10, v), (11, v),                  # verbatim pair
+        (20, "too short"), (21, "too short"),  # fewer than 3 tokens
+        (30, u), (31, u.replace("u29", "z")), (31, v),  # doc_id 31 twice
+        (40, a.replace("w0 ", "")),       # near a, in the chain's reach
+    ])
+    arrs = di._doc_shingles(frame, 3).localCheckpoint(eager=True)
+    sh = dd.shingle_table(frame)
+    seen = set()
+    for t in (0.5, 0.8, 0.9):
+        want = {
+            r["batch_doc"] for r in
+            dd.incremental_pairs(sh, sh, t, broadcast_batch=False)
+            .filter("corpus_doc < batch_doc").collect()
+        }
+        seen.add(frozenset(want))
+        for broadcast in (True, False):
+            rej = ingest._self_probe_rejects(arrs, t, broadcast)
+            plan = rej._jdf.queryExecution().executedPlan().toString()
+            assert ("BroadcastHashJoin" in plan) == broadcast, plan
+            got = {r["doc_id"] for r in rej.collect()}
+            assert got == want, (t, broadcast)
+    # the thresholds decide differently, so the comparison has teeth
+    assert len(seen) == 3, seen
 
 
 #: Spark jobs (adaptive-execution map stages included) that one gate
 #: epoch over a prefix index runs on the six-document batch below, with
 #: every stage executed once. A stage that re-executes its lineage — a
 #: stats count() that re-runs the probe, an extend that repeats the
-#: membership anti-join — pushes an epoch over this.
-GATE_EPOCH_MAX_JOBS = 59
+#: membership anti-join — pushes an epoch over this. Measured: 27 jobs
+#: in each of three fresh sessions on a 4-core box; the margin of 3 is
+#: the run-to-run spread of adaptive map stages seen before (56-59).
+GATE_EPOCH_MAX_JOBS = 30
 
 
 def test_gate_epoch_spark_job_budget(spark, pindex, tmp_path):
@@ -661,12 +714,6 @@ def test_embedding_gate_cache_index_stays_correct_across_extends(
             cos_threshold=0.99, nprobe=4, stats=stats,
             cache_index=True,
         )
-        fn(vframe([(50, Q)]), epoch_id=0)           # new direction
-        assert stats[-1].accepted == 1
-        fn(vframe([(51, [2.0 * x for x in Q])]), epoch_id=1)
-        # the scaled copy of the JUST-extended vector must reject via
-        # the tail, with the base cache untouched
-        assert stats[-1].near_dup == 1 and stats[-1].accepted == 0
         # round 12: this v_sorted index with a usable margin serves the
         # exact re-rank through the banded In-leg gather, so the gate
         # deliberately does NOT pin the float base (caching would both
@@ -675,6 +722,17 @@ def test_embedding_gate_cache_index_stays_correct_across_extends(
         # still pinned
         assert not spark.catalog.isCached("emb_gate_ci")
         assert spark.catalog.isCached("emb_gate_ci_codes")
+        fn(vframe([(50, Q)]), epoch_id=0)           # new direction
+        assert stats[-1].accepted == 1
+        fn(vframe([(51, [2.0 * x for x in Q])]), epoch_id=1)
+        # the scaled copy of the JUST-extended vector must reject via
+        # the tail, which no cached base table holds
+        assert stats[-1].near_dup == 1 and stats[-1].accepted == 0
+        # accepting Q widened the margin past BAND_MARGIN_MAX (drift),
+        # which disarms the band: the gate re-decides every epoch, so
+        # epoch 1 pinned the float base its re-rank now scans
+        assert not ipq.band_armed(ipq._probe_state(spark, "emb_gate_ci"))
+        assert spark.catalog.isCached("emb_gate_ci")
     finally:
         for t in ("", "_codes"):
             try:
@@ -684,6 +742,63 @@ def test_embedding_gate_cache_index_stays_correct_across_extends(
         for t in ("", "_ids", "_codes", "_codebook", "_meta", "__tail",
                   "__tail_codes"):
             spark.sql(f"DROP TABLE IF EXISTS emb_gate_ci{t}")
+
+
+def test_embedding_gate_pins_float_base_when_band_disarms(
+    spark, tmp_path, caplog
+):
+    """The exact gate with ``cache_index`` re-decides the banded gather
+    every epoch: once a sampled ``remeasure_adc_margin`` disarms it, the
+    next epoch pins the float base the re-rank now scans, logged once."""
+    from trignis_spark.operators import ivfpq_index as ipq
+
+    P = [1.0, 1.0, 1.0, 1.0]
+    idx = "emb_gate_band"
+
+    def vframe(rows):
+        return spark.createDataFrame(
+            rows, "vec_id long, embedding array<float>"
+        )
+
+    for t in ("", "_ids", "_codes", "_codebook", "_meta", "__tail",
+              "__tail_codes"):
+        spark.sql(f"DROP TABLE IF EXISTS {idx}{t}")
+    try:
+        ipq.build_ivfpq_index(
+            spark,
+            vframe([(i, [x * (1.0 + 0.01 * i) for x in P])
+                    for i in range(6)]),
+            idx, m=2, k=2, n_buckets=4,
+        )
+        stats: list[ingest.EmbeddingIngestStats] = []
+        fn = ingest.make_embedding_ingest_fn(
+            spark, idx, str(tmp_path / "acc_band"), cos_threshold=0.99,
+            nprobe=4, stats=stats, cache_index=True,
+        )
+        # near-dups only: nothing is extended, so the band stays armed
+        fn(vframe([(50, [2.0 * x for x in P])]), epoch_id=0)
+        assert stats[-1].near_dup == 1
+        assert not spark.catalog.isCached(idx)
+        ipq.remeasure_adc_margin(spark, idx, sample_rows=4)
+        assert not ipq.band_armed(ipq._probe_state(spark, idx))
+        with caplog.at_level(logging.INFO, logger="trignis_spark.ingest"):
+            for ep in (1, 2):
+                fn(vframe([(50 + ep, [3.0 * x for x in P])]), epoch_id=ep)
+                assert stats[-1].near_dup == 1
+        assert spark.catalog.isCached(idx)
+        assert [r.getMessage() for r in caplog.records] == [
+            f"ingest gate {idx}: banded gather not armed, float base "
+            "pinned in the storage cache"
+        ]
+    finally:
+        for t in ("", "_codes"):
+            try:
+                spark.catalog.uncacheTable(f"{idx}{t}")
+            except Exception:
+                pass
+        for t in ("", "_ids", "_codes", "_codebook", "_meta", "__tail",
+                  "__tail_codes"):
+            spark.sql(f"DROP TABLE IF EXISTS {idx}{t}")
 
 
 def test_cache_index_rejects_float_ann_family(spark, tmp_path):

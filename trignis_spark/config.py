@@ -137,11 +137,18 @@ def validate_environment(env: EnvironmentConfig) -> tuple[list[str], list[str]]:
                         f"sink '{sink.name}': rollup sink requires {req}"
                     )
         if sink.kind == "curate":
+            from trignis_spark.sinks.curate import OPTIONS
+
             for req in ("index_table", "accepted_path"):
                 if not sink.options.get(req):
                     errors.append(
                         f"sink '{sink.name}': curate sink requires {req}"
                     )
+            unknown = sorted(set(sink.options) - set(OPTIONS))
+            if unknown:
+                errors.append(
+                    f"sink '{sink.name}': unknown curate option(s) {unknown}"
+                )
         # MQ-type requirement matrix (ConfigurationValidator.cs:270-341);
         # 'send' is the injectable-transport escape hatch
         if sink.kind in _MQ_REQUIREMENTS and "send" not in sink.options:

@@ -45,7 +45,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trignis_spark.operators.dedup import shingle_table
 from trignis_spark.plans.bucketing import batch_anti_join
 
 DEFAULT_BUCKETS = 16
@@ -171,9 +170,10 @@ IN_PUSHDOWN_LEG = 512
 VERIFY_IN_MAX = 16_384
 
 
-def _doc_shingles(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, shs ARRAY<BIGINT> sorted, sz) — one row per doc: the
-    verify table's layout, and the probe's per-batch-doc arrays.
+def _doc_shingles(docs: DataFrame, n: int, *keep: str) -> DataFrame:
+    """(doc_id, *keep, shs ARRAY<BIGINT> sorted, sz) — one row per doc:
+    the verify table's layout, and the array frame every index writer
+    and the probe read.
 
     One array row per doc is ~52× fewer rows than one row per (doc,
     shingle) (at the 5 M-doc decade leg the row-level verify was a
@@ -193,15 +193,15 @@ def _doc_shingles(docs: DataFrame, n: int) -> DataFrame:
     from trignis_spark.functions import portable as pf
 
     toks = docs.select(
-        "doc_id", F.expr(pf.tokens(pf.SPARK, "text")).alias("tokens")
+        "doc_id", *keep, F.expr(pf.tokens(pf.SPARK, "text")).alias("tokens")
     )
     th = toks.select(
-        "doc_id",
+        "doc_id", *keep,
         F.expr(pf.token_hashes(pf.SPARK, "tokens")).alias("th"),
     )
     return (
         th.select(
-            "doc_id",
+            "doc_id", *keep,
             F.array_sort(
                 F.array_distinct(
                     F.expr(pf.shingle_hashes(pf.SPARK, "th", n))
@@ -212,12 +212,14 @@ def _doc_shingles(docs: DataFrame, n: int) -> DataFrame:
     )
 
 
-def _prefix_rows(docs: DataFrame, n: int, threshold: float) -> DataFrame:
+def _prefix_rows(arrs: DataFrame, threshold: float) -> DataFrame:
     """(shingle, doc_id, sz) for each doc's rarest floor((1-t)sz)+1
-    shingles under this batch's df order."""
+    shingles under this batch's df order, from a ``_doc_shingles``
+    array frame. ``sz`` counts the shingle rows of the doc_id, so a
+    doc_id given twice is ranked as one doc over both texts' rows."""
     from pyspark.sql import Window
 
-    sh = shingle_table(docs, n)
+    sh = arrs.select("doc_id", F.explode("shs").alias("shingle"))
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
     ranked = (
         sh.join(dfreq, "shingle")
@@ -249,28 +251,30 @@ def build_prefix_index(
     """Materialize the prefix-pruned probe table, the doc_id-SORTED
     doc-array verify table (see ``VERIFY_BLOCK_BYTES``), the membership
     sidecar and the meta row (overwrites all four, including orphaned
-    locations left by other sessions)."""
+    locations left by other sessions). The corpus is tokenized once:
+    the verify table is written first and the other two read it."""
     from trignis_spark.maintenance import drop_table_and_location
 
     for t in _tables(table):
         drop_table_and_location(spark, t)
     (
-        _prefix_rows(docs, n, threshold)
+        _doc_shingles(docs, n)
+        .repartitionByRange(VERIFY_SORT_FILES, "doc_id")
+        .sortWithinPartitions("doc_id")
+        .write.mode("overwrite")
+        .option("parquet.block.size", str(VERIFY_BLOCK_BYTES))
+        .format("parquet")
+        .saveAsTable(_full_table(table))
+    )
+    full = spark.table(_full_table(table))
+    (
+        _prefix_rows(full, threshold)
         .write.mode("overwrite")
         .option("parquet.block.size", str(PROBE_BLOCK_BYTES))
         .bucketBy(n_buckets, "shingle")
         .sortBy("shingle")
         .format("parquet")
         .saveAsTable(table)
-    )
-    full = _doc_shingles(docs, n)
-    (
-        full.repartitionByRange(VERIFY_SORT_FILES, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .option("parquet.block.size", str(VERIFY_BLOCK_BYTES))
-        .format("parquet")
-        .saveAsTable(_full_table(table))
     )
     (
         full.select("doc_id", "sz")
@@ -384,6 +388,13 @@ def probe(
     ``dedup.incremental_pairs`` over the raw documents at any threshold
     ≥ the build threshold (asserted in tests).
 
+    ``batch_docs`` is either (doc_id, text) or an array frame that
+    already carries the ``_doc_shingles`` columns ``shs``/``sz`` at the
+    index's shingle width. The probe tokenizes the former once and
+    reads the latter as given — the text gate shingles each epoch once
+    and hands the same materialized frame to the probe, its in-batch
+    pass and the index append.
+
     Phase 1 (candidates): the batch's shingle rows ⋈ the pruned probe
     table — hot shingles are absent from the index by construction, so
     candidate volume tracks rare-shingle collisions only. Phase 2
@@ -419,7 +430,10 @@ def probe(
     # ONE per-batch-doc frame feeds every consumer: its exploded rows
     # drive the candidate join, its ``szb`` the length filter, its
     # arrays the verify — built map-side, no aggregation of shingle rows
-    barr = _doc_shingles(batch_docs, meta.n).select(
+    given = "shs" in batch_docs.columns
+    if not given:
+        batch_docs = _doc_shingles(batch_docs, meta.n)
+    barr = batch_docs.select(
         F.col("doc_id").alias("batch_doc"),
         F.col("shs").alias("bshs"),
         F.col("sz").alias("szb"),
@@ -444,10 +458,12 @@ def probe(
     if broadcast_batch:
         # batch-sized by the gate — materialize the arrays ONCE so the
         # batch's tokenize/hash/shingle pipeline runs once per probe,
-        # not once per consumer. Corpus-shaped batches (a Full resync
-        # routed through probe) keep the unmaterialized plan — the
-        # sort-merge path's scratch-disk profile is deliberate.
-        barr = barr.localCheckpoint(eager=True)
+        # not once per consumer (given arrays are the caller's to
+        # materialize). Corpus-shaped batches (a Full resync routed
+        # through probe) keep the unmaterialized plan — the sort-merge
+        # path's scratch-disk profile is deliberate.
+        if not given:
+            barr = barr.localCheckpoint(eager=True)
         bsh = F.broadcast(_bsh(barr))
     else:
         # align the batch with the bucketed probe table's layout so the
@@ -536,23 +552,26 @@ def extend(
     ``_append_prefix_docs`` writes the rest. Returns the number of
     documents added."""
     known = spark.table(_docs_table(table)).select("doc_id")
-    fresh = batch_anti_join(docs, known, "doc_id").localCheckpoint(
-        eager=True
-    )
+    fresh = _doc_shingles(
+        batch_anti_join(docs, known, "doc_id"), _meta_row(spark, table).n
+    ).localCheckpoint(eager=True)
     return _append_prefix_docs(spark, fresh, table, fresh.count(), n_buckets)
 
 
 def _append_prefix_docs(
     spark: SparkSession,
-    fresh: DataFrame,
+    arrs: DataFrame,
     table: str,
     added: int,
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> int:
-    """Append ``added`` documents that the caller has already
-    anti-joined against the membership sidecar and materialized (the
-    text gate's accepted set is such a frame: its first stage is that
-    anti-join). Prefix rows for the new docs rank against the *new
+    """Append ``added`` documents given as a materialized array frame
+    (doc_id, shs, sz) at the index's shingle width (``_doc_shingles``;
+    other columns are ignored), which the caller has already
+    anti-joined against the membership sidecar (the text gate's
+    accepted set is such a frame: its first stage is that anti-join).
+    All three tables are written from these arrays; nothing is
+    tokenized here. Prefix rows for the new docs rank against the *new
     batch's own* df snapshot — safe because corpus-side prefix pruning
     is lossless under any per-doc shingle choice of the required length
     (see module notes); the df order only tunes posting-list length.
@@ -565,7 +584,7 @@ def _append_prefix_docs(
         return 0
     meta = _meta_row(spark, table)
     (
-        _prefix_rows(fresh, meta.n, meta.threshold)
+        _prefix_rows(arrs, meta.threshold)
         .write.mode("append")
         .option("parquet.block.size", str(PROBE_BLOCK_BYTES))
         .bucketBy(n_buckets, "shingle")
@@ -573,10 +592,12 @@ def _append_prefix_docs(
         .format("parquet")
         .saveAsTable(table)
     )
-    full = _doc_shingles(fresh, meta.n)
+    full = arrs.select("doc_id", "shs", "sz")
     n_files = max(1, min(VERIFY_SORT_FILES, added // 1_000_000 + 1))
+    # one file needs no range bounds: a coalesce skips the sampling job
     (
-        full.repartitionByRange(n_files, "doc_id")
+        (full.coalesce(1) if n_files == 1
+         else full.repartitionByRange(n_files, "doc_id"))
         .sortWithinPartitions("doc_id")
         .write.mode("append")
         .option("parquet.block.size", str(VERIFY_BLOCK_BYTES))

@@ -9,7 +9,7 @@ embarrassingly parallel map-only stages with no shuffle at all.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from trignis_spark.functions import portable as pf
@@ -46,30 +46,46 @@ def token_stats(docs: DataFrame) -> DataFrame:
     )
 
 
+def _quality_parts(tokens: str, text: str) -> dict[str, Column]:
+    n_tok = F.expr(f"CAST(size({tokens}) AS BIGINT)")
+    stop_n = F.expr(pf.count_in_list(pf.SPARK, tokens, STOPWORDS))
+    tok_chars = F.expr(pf.sum_lengths(pf.SPARK, tokens))
+    punct_n = F.expr(
+        f"length({text}) - length(regexp_replace({text}, '{PUNCT_CLASS}', ''))"
+    )
+    return {
+        "n_tokens": n_tok,
+        "stopword_ratio": stop_n.cast("double") / n_tok,
+        "avg_token_len": tok_chars.cast("double") / n_tok,
+        "punct_ratio": punct_n.cast("double") / F.expr(f"length({text})"),
+    }
+
+
+def _score(p: dict[str, Column]) -> Column:
+    return F.least(F.lit(1.0), F.greatest(
+        F.lit(0.0),
+        F.lit(0.2) + F.lit(0.1) * p["avg_token_len"]
+        - F.lit(0.5) * p["stopword_ratio"] - F.lit(2.0) * p["punct_ratio"],
+    ))
+
+
+def quality_score(text_col: str = "text") -> Column:
+    """``quality_scores``' score as one column expression over the text
+    column, for callers that gate on it inside a larger projection."""
+    return _score(_quality_parts(pf.tokens(pf.SPARK, text_col), text_col))
+
+
 def quality_scores(docs: DataFrame) -> DataFrame:
     """Quality scoring: length, punctuation density, stopword ratio and
     average token length, combined into a clamped linear score. All
     divisions are double-over-int with a fixed expression shape, so the
     oracle reproduces results bit-for-bit."""
-    t = with_tokens(docs)
-    n_tok = F.expr("CAST(size(tokens) AS BIGINT)")
-    stop_n = F.expr(pf.count_in_list(pf.SPARK, "tokens", STOPWORDS))
-    tok_chars = F.expr(pf.sum_lengths(pf.SPARK, "tokens"))
-    punct_n = F.expr(
-        f"length(text) - length(regexp_replace(text, '{PUNCT_CLASS}', ''))"
-    )
-    d = t.select(
+    p = _quality_parts("tokens", "text")
+    return with_tokens(docs).select(
         "doc_id",
-        n_tok.alias("n_tokens"),
-        (stop_n.cast("double") / n_tok).alias("stopword_ratio"),
-        (tok_chars.cast("double") / n_tok).alias("avg_token_len"),
-        (punct_n.cast("double") / F.expr("length(text)")).alias("punct_ratio"),
+        *[c.alias(k) for k, c in p.items()],
+        _score(p).alias("quality_score"),
     )
-    score = F.expr(
-        "LEAST(1.0D, GREATEST(0.0D, "
-        "0.2D + 0.1D * avg_token_len - 0.5D * stopword_ratio - 2.0D * punct_ratio))"
-    )
-    return d.withColumn("quality_score", score)
 
 
 def lang_id(docs: DataFrame) -> DataFrame:

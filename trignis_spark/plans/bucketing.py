@@ -54,7 +54,8 @@ BATCH_BROADCAST_MAX = 1_000_000
 
 def batch_anti_join(batch: DataFrame, corpus: DataFrame,
                     on: str,
-                    broadcast_max: int = BATCH_BROADCAST_MAX) -> DataFrame:
+                    broadcast_max: int = BATCH_BROADCAST_MAX,
+                    rows: int | None = None) -> DataFrame:
     """``batch LEFT ANTI corpus``, planned for a poll-sized left side
     against a corpus-sized keyed right side. The naive
     ``batch.join(corpus, on, "left_anti")`` cannot broadcast — only the
@@ -73,17 +74,23 @@ def batch_anti_join(batch: DataFrame, corpus: DataFrame,
     keys never multiply an anti/semi output.
 
     Poll-sized is a *contract*, gated not assumed (ADVICE r7): a batch
-    above ``broadcast_max`` rows (checked with a LocalLimit probe, not
-    a full count) falls back to the plain anti-join — one corpus
-    sort-merge, the price of a backfill, instead of an unbounded
-    driver broadcast."""
+    above ``broadcast_max`` rows falls back to the plain anti-join — one
+    corpus sort-merge, the price of a backfill, instead of an unbounded
+    driver broadcast. A caller that knows the batch's row count passes
+    it as ``rows``; otherwise a LocalLimit probe (not a full count)
+    checks it.
+
+    The broadcast key side is not de-duplicated: duplicate build keys
+    change neither a semi- nor an anti-join's output, and a
+    ``distinct`` would cost a shuffle of the batch keys."""
     from pyspark.sql import functions as F
 
     from trignis_spark.operators.similarity import exceeds
 
-    if exceeds(batch, broadcast_max):
+    if (exceeds(batch, broadcast_max) if rows is None
+            else rows > broadcast_max):
         return batch.join(corpus.select(on), on, "left_anti")
     present = corpus.select(on).join(
-        F.broadcast(batch.select(on).distinct()), on, "left_semi"
+        F.broadcast(batch.select(on)), on, "left_semi"
     )
     return batch.join(F.broadcast(present), on, "left_anti")

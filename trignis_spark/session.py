@@ -14,7 +14,10 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS`` when set, else the cores this process may
+    run on (its CPU affinity, not the machine's core count)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def get_spark(

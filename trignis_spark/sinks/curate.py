@@ -31,6 +31,11 @@ from pyspark.sql import DataFrame
 from trignis_spark.sinks.base import ExportContext
 from trignis_spark.sinks.spark_file import DataFrameSink
 
+#: every option a ``curate`` sink config may set (the list above);
+#: ``config.validate_environment`` rejects any other key
+OPTIONS = ("index_table", "accepted_path", "min_quality", "threshold",
+           "id_col", "text_col", "props_json")
+
 
 @dataclass
 class CurateSink(DataFrameSink):

@@ -12,7 +12,7 @@ and each epoch passes through
    index sidecar are dropped first, so a replayed epoch (at-least-once
    upstream) re-admits nothing;
 2. **exact in-batch dedup** — lowest ``doc_id`` per content hash wins;
-3. **quality gate** — ``operators.text.quality_scores`` at or above
+3. **quality gate** — ``operators.text.quality_score`` at or above
    ``min_quality``;
 4. **corpus near-dup probe** — ``dedup_index.probe`` against the
    prefix index at or above ``threshold`` rejects (exact corpus
@@ -22,13 +22,17 @@ and each epoch passes through
    a *lower-id* survivor in the same batch is its near-duplicate
    (conservative greedy: deterministic, never admits a near-dup pair;
    may over-reject on chains a~b~c, which fuzzy clustering
-   (``dedup.cluster_near_duplicates``) resolves offline if needed);
+   (``dedup.cluster_near_duplicates``) resolves offline if needed) —
+   a self-join of the survivors' shingle arrays;
 6. **accept** — append ``(doc_id, text, epoch_id)`` to the accepted
    store and add the same rows to the index straight through its
    append (they passed step 1's anti-join this epoch).
 
 Both near-dup passes use the shingle width the index was built with
-(its meta row), so corpus and in-batch decisions agree.
+(its meta row), so corpus and in-batch decisions agree. The batch is
+shingled once per epoch: steps 1-3 leave one (doc_id, text, shs, sz)
+array row per good document, and the probe, the in-batch pass and the
+index append all read those arrays.
 
 Delivery semantics match the rest of the engine (at-least-once,
 idempotent where it matters): the index extend is exactly-once by
@@ -41,28 +45,32 @@ batch and nothing is re-written.
 Scale shape: every gate is an executor-side join against either a
 broadcast batch or the bucketed index — the corpus is never shuffled
 per epoch. Each stage runs once per epoch. The gate makes four
-batch-sized ``localCheckpoint``s (the arrived batch; steps 1-3 as one
-frame tagged with the dedup rank and quality verdict; the survivors of
-step 4, so the probe's verify runs once; the accepted set) and one
-``count()`` of the accepted set. Stats add a ``count()`` of the batch,
-one aggregate over the tagged frame and a ``count()`` of the step-4
-survivors. Batch rows never reach the driver; the probe collects only
-its bounded candidate pairs.
+batch-sized ``localCheckpoint``s: the arrived batch; the good rows of
+steps 1-3 with their shingle arrays; the survivors of step 4, so the
+probe's verify runs once; and the accepted set. Every stage count comes
+from a ``DataFrame.observe`` on one of those checkpoints, so the counts
+(and ``IngestStats``) cost no Spark action of their own. The summed
+shingle count of the good rows makes the probe's broadcast decision
+without a row-count probe. An epoch with no good rows skips the probe,
+and one with no survivors skips the in-batch pass. Batch rows never
+reach the driver; the probe collects only its bounded candidate pairs.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 import threading
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from trignis_spark.operators import dedup as dd
 from trignis_spark.operators import dedup_index as di
-from trignis_spark.operators.text import quality_scores
+from trignis_spark.operators.text import quality_score
 from trignis_spark.plans.bucketing import batch_anti_join
+
+log = logging.getLogger("trignis_spark.ingest")
 
 
 @dataclass(frozen=True)
@@ -79,15 +87,35 @@ class IngestStats:
     accepted: int
 
 
-def _in_batch_rejects(survivors: DataFrame, threshold: float, n: int) -> DataFrame:
-    """doc_ids rejected by the greedy lower-id-wins in-batch rule."""
-    sh = dd.shingle_table(survivors, n)
-    pairs = dd.incremental_pairs(sh, sh, threshold, broadcast_batch=False)
-    return (
-        pairs.filter(F.col("corpus_doc") < F.col("batch_doc"))
-        .select(F.col("batch_doc").alias("doc_id"))
-        .distinct()
+def _self_probe_rejects(arrs: DataFrame, threshold: float,
+                        broadcast: bool) -> DataFrame:
+    """doc_ids rejected by the greedy lower-id-wins in-batch rule over an
+    array frame (doc_id, shs, sz): one self-join of the exploded arrays
+    on the shingle and one ``groupBy`` count for the intersection. The
+    decisions are those of ``dedup.incremental_pairs`` over
+    ``dedup.shingle_table`` of the texts — a doc_id given twice counts
+    as one document over both rows' shingles, as it does there.
+    ``broadcast`` is the probe's ``MAX_BROADCAST_SHINGLES`` decision
+    for the same frame; otherwise the self-join sort-merges."""
+    ex = arrs.withColumn(
+        "dsz", F.sum("sz").over(Window.partitionBy("doc_id"))
+    ).select("doc_id", F.explode("shs").alias("shingle"), "dsz")
+    lo = ex.select(F.col("doc_id").alias("lo"), "shingle",
+                   F.col("dsz").alias("szlo"))
+    hi = ex.select(F.col("doc_id").alias("hi"), "shingle",
+                   F.col("dsz").alias("szhi"))
+    pairs = (
+        hi.join(F.broadcast(lo) if broadcast else lo.hint("merge"),
+                "shingle")
+        .filter(F.col("lo") < F.col("hi"))
+        .groupBy("lo", "hi", "szlo", "szhi")
+        .agg(F.count(F.lit(1)).alias("isz"))
     )
+    return pairs.filter(
+        F.col("isz").cast("double")
+        / (F.col("szhi") + F.col("szlo") - F.col("isz"))
+        >= threshold
+    ).select(F.col("hi").alias("doc_id"))
 
 
 def make_ingest_batch_fn(
@@ -107,75 +135,94 @@ def make_ingest_batch_fn(
     meta row sets the shingle width of both near-dup passes. The
     returned callable takes ``(batch_df, epoch_id)``; ``batch_df``
     needs an ``id_col`` (long, unique per document) and a ``text_col``.
-    Pass a list as ``stats`` to collect per-epoch :class:`IngestStats`
-    (costs three small actions over already-materialized stages per
-    epoch — see the module notes; omit to skip them).
+    Pass a list as ``stats`` to collect per-epoch :class:`IngestStats`;
+    they are observed on the checkpoints the gate makes anyway, so they
+    cost no extra Spark action (see the module notes).
     """
 
     def ingest_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        arrived = Observation()
         docs = batch_df.select(
             F.col(id_col).cast("long").alias("doc_id"),
             F.col(text_col).alias("text"),
-        )
+        ).observe(arrived, F.count(F.lit(1)).alias("n"))
         docs = docs.localCheckpoint(eager=True)  # cut the stream lineage
+        n_docs = arrived.get["n"]
         n = di._meta_row(spark, index_table).n
         known = spark.table(di._docs_table(index_table)).select("doc_id")
-        w = Window.partitionBy(F.sha2(F.col("text"), 256)).orderBy("doc_id")
-        ranked = batch_anti_join(docs, known, "doc_id").withColumn(
-            "_rn", F.row_number().over(w)
-        )
-        # quality verdict per doc_id over the rank-1 rows: a row is good
+        by_text = Window.partitionBy(F.sha2(F.col("text"), 256)) \
+            .orderBy("doc_id")
+        ranked = batch_anti_join(docs, known, "doc_id", rows=n_docs) \
+            .withColumn("_rn", F.row_number().over(by_text))
+        # quality verdict per doc_id over its rank-1 rows: a row is good
         # when ANY rank-1 row of its doc_id passes (semi-join semantics —
-        # an insert and an update of one doc_id in a batch are two rows),
-        # aggregated first so the join below never multiplies rows
-        verdict = (
-            quality_scores(ranked.filter(F.col("_rn") == 1))
-            .groupBy("doc_id")
-            .agg(F.max(F.col("quality_score") >= min_quality).alias("_q"))
+        # an insert and an update of one doc_id in a batch are two rows)
+        passes = F.max(
+            F.when(F.col("_rn") == 1, quality_score() >= min_quality)
+        ).over(Window.partitionBy("doc_id"))
+        tagged = ranked.withColumn(
+            "_good", (F.col("_rn") == 1) & F.coalesce(passes, F.lit(False))
         )
-        # stages 1-3 materialized once, tagged: fresh = every row,
-        # uniq = _rn 1, good = _good
-        fresh = ranked.join(verdict, "doc_id", "left").select(
-            "doc_id",
-            "text",
-            "_rn",
-            ((F.col("_rn") == 1) & F.coalesce(F.col("_q"), F.lit(False)))
-            .alias("_good"),
-        ).localCheckpoint(eager=True)
-        good = fresh.filter("_good").select("doc_id", "text")
-
-        corpus_hits = (
-            di.probe(spark, index_table, good, threshold)
-            .select(F.col("batch_doc").alias("doc_id"))
-            .distinct()
-        )
-        # checkpointed: the in-batch pass reads the survivors twice and
-        # the stats count once more — the probe's verify runs only here
-        no_corpus_dup = good.join(corpus_hits, "doc_id", "left_anti") \
+        # stages 1-3 materialized once, shingled once: every later stage
+        # reads these (doc_id, text, shs, sz) rows
+        staged = Observation()
+        good = (
+            di._doc_shingles(tagged, n, "text", "_rn", "_good")
+            .observe(
+                staged,
+                F.count(F.lit(1)).alias("fresh"),
+                F.count_if(F.col("_rn") == 1).alias("uniq"),
+                F.count_if("_good").alias("good"),
+                F.sum(F.when(F.col("_good"), F.col("sz"))).alias("shingles"),
+            )
+            .filter("_good")
+            .drop("_rn", "_good")
             .localCheckpoint(eager=True)
-        accepted = no_corpus_dup.join(
-            _in_batch_rejects(no_corpus_dup, threshold, n),
-            "doc_id",
-            "left_anti",
-        ).localCheckpoint(eager=True)
-        n_acc = accepted.count()
+        )
+        c = staged.get
+        # the probe's own broadcast-vs-sort-merge gate, on the shingle
+        # rows it would broadcast; the in-batch pass follows it
+        bcast = (c["shingles"] or 0) <= di.MAX_BROADCAST_SHINGLES
+
+        def _b(df: DataFrame) -> DataFrame:
+            return F.broadcast(df) if bcast else df
+
+        n_nocorp = n_acc = 0
+        if c["good"]:
+            hits = di.probe(
+                spark, index_table, good, threshold, broadcast_batch=bcast
+            ).select(F.col("batch_doc").alias("doc_id"))
+            # checkpointed: the in-batch pass reads the survivors twice —
+            # the probe's verify runs only here
+            probed = Observation()
+            survivors = (
+                good.join(_b(hits), "doc_id", "left_anti")
+                .observe(probed, F.count(F.lit(1)).alias("n"))
+                .localCheckpoint(eager=True)
+            )
+            n_nocorp = probed.get["n"]
+        if n_nocorp:
+            kept = Observation()
+            accepted = (
+                survivors.join(
+                    _b(_self_probe_rejects(survivors, threshold, bcast)),
+                    "doc_id",
+                    "left_anti",
+                )
+                .observe(kept, F.count(F.lit(1)).alias("n"))
+                .localCheckpoint(eager=True)
+            )
+            n_acc = kept.get["n"]
 
         if stats is not None:
-            n_docs = docs.count()
-            n_fresh, n_uniq, n_good = fresh.agg(
-                F.count(F.lit(1)),
-                F.count_if(F.col("_rn") == 1),
-                F.count_if("_good"),
-            ).first()
-            n_nocorp = no_corpus_dup.count()
             stats.append(
                 IngestStats(
                     epoch_id=epoch_id,
                     arrived=n_docs,
-                    already_known=n_docs - n_fresh,
-                    exact_dup=n_fresh - n_uniq,
-                    low_quality=n_uniq - n_good,
-                    corpus_near_dup=n_good - n_nocorp,
+                    already_known=n_docs - c["fresh"],
+                    exact_dup=c["fresh"] - c["uniq"],
+                    low_quality=c["uniq"] - c["good"],
+                    corpus_near_dup=c["good"] - n_nocorp,
                     batch_near_dup=n_nocorp - n_acc,
                     accepted=n_acc,
                 )
@@ -184,12 +231,13 @@ def make_ingest_batch_fn(
         if n_acc == 0:
             return
         (
-            accepted.withColumn("epoch_id", F.lit(epoch_id).cast("long"))
+            accepted.select("doc_id", "text")
+            .withColumn("epoch_id", F.lit(epoch_id).cast("long"))
             .write.mode("append")
             .parquet(accepted_path)
         )
         # accepted ⊆ fresh, which already passed the membership
-        # anti-join this epoch: append without repeating it
+        # anti-join this epoch: append its arrays without repeating it
         di._append_prefix_docs(spark, accepted, index_table, n_acc)
 
     return ingest_batch
@@ -494,6 +542,26 @@ def make_embedding_ingest_fn(
             f"extends); {ann_table} is a float-ANN index whose "
             "extends mutate the cached base every cycle"
         )
+    base_cached = [False]
+
+    def cache_base_unless_banded() -> None:
+        # round 12: a v_sorted index with a usable certified margin
+        # serves the exact re-rank through the banded In-leg gather
+        # (``ipq._band_floats``) — a few pushed-In rows per query, never
+        # a base scan. Caching the float base would both waste the
+        # storage memory AND replace the parquet scan the pushed legs
+        # prune with an InMemoryRelation whose 10 k-row cached batches
+        # prune nothing. The band can disarm later (a sampled
+        # remeasure, a drift-widened margin), so the exact gate asks
+        # again every epoch and pins the base the first time it is off.
+        if base_cached[0] or ipq.band_armed(ipq._probe_state(spark,
+                                                             ann_table)):
+            return
+        spark.catalog.cacheTable(ann_table, storageLevel=level)
+        base_cached[0] = True
+        log.info("ingest gate %s: banded gather not armed, float base "
+                 "pinned in the storage cache", ann_table)
+
     if cache_index:
         # pin the serving-side corpus tables in Spark's storage cache:
         # a long-lived poller's probe re-reads them EVERY cycle, and
@@ -523,21 +591,11 @@ def make_embedding_ingest_fn(
                 "pyspark.StorageLevel name (e.g. MEMORY_AND_DISK, "
                 "MEMORY_ONLY, DISK_ONLY)"
             ) from None
-        banded = False
-        if is_pq and precision != "adc":
-            # round 12: a v_sorted index with a usable certified margin
-            # serves the exact re-rank through the banded In-leg gather
-            # (``ipq._band_floats``) — a few pushed-In rows per query,
-            # never a base scan. Caching the float base would both
-            # waste the storage memory AND replace the parquet scan the
-            # pushed legs prune with an InMemoryRelation whose 10 k-row
-            # cached batches prune nothing.
-            banded = ipq.band_armed(ipq._probe_state(spark, ann_table))
-        if precision != "adc" and not banded:
+        if precision != "adc":
             # the rerank-free adc probe never reads the float base —
             # pinning it (5.9 GB at 2 M × 768) wastes storage memory
             # and can evict the ~50 MB codes table the probe DOES read
-            spark.catalog.cacheTable(ann_table, storageLevel=level)
+            cache_base_unless_banded()
         spark.catalog.cacheTable(f"{ann_table}_codes", storageLevel=level)
     if fold_tail_rows is not None and not is_pq:
         raise ValueError(
@@ -573,6 +631,8 @@ def make_embedding_ingest_fn(
                 )
         else:
             eff = cos_threshold
+            if cache_index:
+                cache_base_unless_banded()
         t0 = time.time()
         vecs = batch_df.select(
             F.col(id_col).cast("long").alias("vec_id"),
@@ -658,7 +718,7 @@ def make_embedding_ingest_fn(
                 # re-cache happens on next probe)
                 spark.catalog.cacheTable(f"{ann_table}_codes",
                                          storageLevel=level)
-                if precision != "adc":
+                if base_cached[0]:
                     spark.catalog.cacheTable(ann_table,
                                              storageLevel=level)
 
