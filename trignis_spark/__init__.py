@@ -5,8 +5,8 @@ see SURVEY.md) Spark-first:
 
 - change feeds (outbox scan, snapshot diff, column masking, envelopes)
   as declarative DataFrame plans (``trignis_spark.operators.changefeed``)
-- watermark / pause / dead-letter state as parquet-backed tables
-  (``trignis_spark.state``, ``trignis_spark.operators.dlq``)
+- watermark / pause / dead-letter state in stdlib SQLite stores, as the
+  reference keeps them (``trignis_spark.state``, ``trignis_spark.deadletter``)
 - multi-sink at-least-once fan-out with retry/breaker/backoff
   (``trignis_spark.sinks``, ``trignis_spark.streaming``)
 - JDBC incremental sources with dialect tables (``trignis_spark.sources``)

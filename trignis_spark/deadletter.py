@@ -11,22 +11,22 @@ capped at 6h (``DeadLetterReplayService.cs:20-23,137-141``); unroutable
 rows parked ~1 year (``:109-115``); manual replay resets the attempt
 counter (``Program.cs:458-462``).
 
-Same storage stance as ``trignis_spark.state``: the DLQ is metadata-
-scale (failures, not the firehose), so mutations are driver-side with
-atomic parquet swap, while ``as_dataframe`` exposes it to Spark for the
-monitor aggregations (A4–A6) and scale-out replay scans.
+Same storage as ``trignis_spark.state``: one SQLite file
+(``sinkhole.db``) behind ``SqliteDb``. The UNIQUE constraint does the
+dedup, AUTOINCREMENT ids are never reused (a sweep still holding a
+deleted row's id cannot delete a newer payload), and each mutation is one
+statement. ``as_dataframe`` exposes the DLQ to Spark for the monitor
+aggregations (A4–A6) and scale-out replay scans.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import hashlib
-import os
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from trignis_spark.state import _ParquetKV, _utcnow
+from trignis_spark.state import SqliteDb, _utcnow
 
 #: Replay policy defaults (reference values).
 REPLAY_BATCH_SIZE = 25
@@ -36,21 +36,22 @@ BACKOFF_CAP_SECONDS = 6 * 3600
 UNROUTABLE_PARK_DAYS = 365
 RETENTION_DAYS = 60
 
-_DLQ_SCHEMA = pa.schema(
-    [
-        ("id", pa.int64()),
-        ("source_key", pa.string()),
-        ("tracking_object_name", pa.string()),
-        ("environment_name", pa.string()),
-        ("database_name", pa.string()),
-        ("data_hash", pa.string()),
-        ("data", pa.string()),
-        ("error_message", pa.string()),
-        ("timestamp", pa.timestamp("us")),
-        ("attempts", pa.int32()),
-        ("next_attempt", pa.timestamp("us")),
-    ]
-)
+_DDL = """
+CREATE TABLE IF NOT EXISTS dead_letters (
+    id INTEGER PRIMARY KEY AUTOINCREMENT,
+    source_key TEXT NOT NULL,
+    tracking_object_name TEXT,
+    environment_name TEXT,
+    database_name TEXT,
+    data_hash TEXT NOT NULL,
+    data TEXT NOT NULL,
+    error_message TEXT,
+    timestamp INTEGER NOT NULL,
+    attempts INTEGER NOT NULL,
+    next_attempt INTEGER NOT NULL,
+    UNIQUE (source_key, data_hash)
+);
+"""
 
 
 def backoff_seconds(attempts: int, base: int = BACKOFF_BASE_SECONDS,
@@ -66,7 +67,9 @@ def payload_hash(data: str) -> str:
 
 class DeadLetterStore:
     def __init__(self, root: str):
-        self._kv = _ParquetKV(os.path.join(root, "dead_letters.parquet"), _DLQ_SCHEMA)
+        self._db = SqliteDb(root, "sinkhole.db", _DDL, ("timestamp", "next_attempt"))
+        self._db.function("backoff_seconds", 1, backoff_seconds)
+        self._db.function("dlq_matches", 5, self._matches)
 
     # -- capture ----------------------------------------------------------
 
@@ -86,27 +89,14 @@ class DeadLetterStore:
         constraint semantics, ``DeadLetterService.cs:106-136``).
         """
         now = now or _utcnow()
-        h = payload_hash(data)
-        rows = self._kv.read()
-        if any(r["source_key"] == source_key and r["data_hash"] == h for r in rows):
-            return False
-        rows.append(
-            {
-                "id": (max((r["id"] for r in rows), default=0) + 1),
-                "source_key": source_key,
-                "tracking_object_name": tracking_object_name,
-                "environment_name": environment_name,
-                "database_name": database_name,
-                "data_hash": h,
-                "data": data,
-                "error_message": error_message,
-                "timestamp": now,
-                "attempts": 0,
-                "next_attempt": now,
-            }
-        )
-        self._kv.write(rows)
-        return True
+        return self._db.execute(
+            "INSERT INTO dead_letters (source_key, tracking_object_name,"
+            " environment_name, database_name, data_hash, data, error_message,"
+            " timestamp, attempts, next_attempt)"
+            " VALUES (?, ?, ?, ?, ?, ?, ?, ?, 0, ?) ON CONFLICT DO NOTHING",
+            (source_key, tracking_object_name, environment_name, database_name,
+             payload_hash(data), data, error_message, now, now),
+        ) > 0
 
     # -- replay scheduling -------------------------------------------------
 
@@ -119,94 +109,83 @@ class DeadLetterStore:
         """Oldest-first batch of rows whose backoff has elapsed
         (``DeadLetterService.cs:202-227``: attempts < max, next_attempt
         due, environment routable)."""
-        now = now or _utcnow()
-        due = [
-            r
-            for r in self._kv.read()
-            if r["attempts"] < max_attempts
-            and r["next_attempt"] <= now
-            and r["environment_name"] is not None
-        ]
-        due.sort(key=lambda r: (r["timestamp"], r["id"]))
-        return due[:limit]
+        return self._db.query(
+            "SELECT * FROM dead_letters WHERE attempts < ? AND next_attempt <= ?"
+            " AND environment_name IS NOT NULL ORDER BY timestamp, id LIMIT ?",
+            (max_attempts, now or _utcnow(), limit),
+        )
 
     def record_failure(self, dlq_id: int, now: dt.datetime | None = None) -> None:
         """attempts += 1; next_attempt = now + backoff(attempts)."""
-        now = now or _utcnow()
-        rows = self._kv.read()
-        for r in rows:
-            if r["id"] == dlq_id:
-                r["attempts"] += 1
-                r["next_attempt"] = now + dt.timedelta(
-                    seconds=backoff_seconds(r["attempts"])
-                )
-        self._kv.write(rows)
+        self._db.execute(
+            "UPDATE dead_letters SET attempts = attempts + 1,"
+            " next_attempt = add_seconds(?, backoff_seconds(attempts + 1))"
+            " WHERE id = ?",
+            (now or _utcnow(), dlq_id),
+        )
 
     def park_unroutable(self, dlq_id: int, now: dt.datetime | None = None) -> None:
         """No current environment/object route: park ~1 year."""
         now = now or _utcnow()
-        rows = self._kv.read()
-        for r in rows:
-            if r["id"] == dlq_id:
-                r["attempts"] += 1
-                r["next_attempt"] = now + dt.timedelta(days=UNROUTABLE_PARK_DAYS)
-        self._kv.write(rows)
+        self._db.execute(
+            "UPDATE dead_letters SET attempts = attempts + 1, next_attempt = ?"
+            " WHERE id = ?",
+            (now + dt.timedelta(days=UNROUTABLE_PARK_DAYS), dlq_id),
+        )
 
     def reset_attempts(self, dlq_id: int, now: dt.datetime | None = None) -> None:
         """Manual replay rejoin: failed manual replays reset the counter."""
-        now = now or _utcnow()
-        rows = self._kv.read()
-        for r in rows:
-            if r["id"] == dlq_id:
-                r["attempts"] = 0
-                r["next_attempt"] = now
-        self._kv.write(rows)
+        self._db.execute(
+            "UPDATE dead_letters SET attempts = 0, next_attempt = ? WHERE id = ?",
+            (now or _utcnow(), dlq_id),
+        )
 
     def delete(self, dlq_id: int) -> bool:
-        rows = self._kv.read()
-        kept = [r for r in rows if r["id"] != dlq_id]
-        if len(kept) == len(rows):
-            return False
-        self._kv.write(kept)
-        return True
+        return self._db.execute(
+            "DELETE FROM dead_letters WHERE id = ?", (dlq_id,)
+        ) > 0
 
     def purge_older_than(
         self, retention_days: int = RETENTION_DAYS, now: dt.datetime | None = None
     ) -> int:
         """T10 retention purge; returns number of rows removed."""
         now = now or _utcnow()
-        cutoff = now - dt.timedelta(days=retention_days)
-        rows = self._kv.read()
-        kept = [r for r in rows if r["timestamp"] >= cutoff]
-        removed = len(rows) - len(kept)
-        if removed:
-            self._kv.write(kept)
-        return removed
+        return self._db.execute(
+            "DELETE FROM dead_letters WHERE timestamp < ?",
+            (now - dt.timedelta(days=retention_days),),
+        )
 
     # -- introspection -----------------------------------------------------
 
     def rows(self) -> list[dict]:
-        return self._kv.read()
+        return self._db.query("SELECT * FROM dead_letters ORDER BY id")
 
     def get(self, dlq_id: int) -> dict | None:
-        for r in self._kv.read():
-            if r["id"] == dlq_id:
-                return r
-        return None
+        rows = self._db.query("SELECT * FROM dead_letters WHERE id = ?", (dlq_id,))
+        return rows[0] if rows else None
 
     @staticmethod
-    def _matches(r: dict, search: str | None, object_filter: str | None) -> bool:
+    def _matches(tracking_object_name: str | None, error_message: str | None,
+                 database_name: str | None, search: str | None,
+                 object_filter: str | None) -> bool:
         """The dead-letter UI filter (``Program.cs:694-699``): search is a
-        substring over object/error/database; object_filter is exact."""
-        if object_filter and r["tracking_object_name"] != object_filter:
+        substring over object/error/database; object_filter is exact. It
+        runs in Python (as the SQL function ``dlq_matches``) because
+        SQLite's ``lower()`` and ``LIKE`` fold ASCII only."""
+        if object_filter and tracking_object_name != object_filter:
             return False
         if search:
             s = search.lower()
             return any(
-                s in (r[f] or "").lower()
-                for f in ("tracking_object_name", "error_message", "database_name")
+                s in (f or "").lower()
+                for f in (tracking_object_name, error_message, database_name)
             )
         return True
+
+    _MATCHING = (
+        " WHERE dlq_matches(tracking_object_name, error_message,"
+        " database_name, ?, ?)"
+    )
 
     def page(
         self,
@@ -218,11 +197,11 @@ class DeadLetterStore:
         """Paginated newest-first listing (W3: ``ORDER BY Timestamp DESC
         LIMIT @pageSize OFFSET @offset``, ``Program.cs:708-717``).
         Returns (total matching, this page's rows)."""
-        matching = [
-            r for r in self._kv.read()
-            if self._matches(r, search, object_filter)
-        ]
-        matching.sort(key=lambda r: (r["timestamp"], r["id"]), reverse=True)
+        matching = self._db.query(
+            "SELECT * FROM dead_letters" + self._MATCHING
+            + " ORDER BY timestamp DESC, id DESC",
+            (search, object_filter),
+        )
         off = (max(page, 1) - 1) * page_size
         return len(matching), matching[off : off + page_size]
 
@@ -231,39 +210,15 @@ class DeadLetterStore:
     ) -> int:
         """Purge exactly what the filter selects, so the UI cannot delete
         more than it shows (``Program.cs:489-498``)."""
-        rows = self._kv.read()
-        kept = [r for r in rows if not self._matches(r, search, object_filter)]
-        removed = len(rows) - len(kept)
-        if removed:
-            self._kv.write(kept)
-        return removed
+        return self._db.execute(
+            "DELETE FROM dead_letters" + self._MATCHING, (search, object_filter)
+        )
 
     def as_dataframe(self, spark: SparkSession) -> DataFrame:
-        from pyspark.sql.types import (
-            IntegerType,
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-            TimestampNTZType,
+        return spark.createDataFrame(
+            [tuple(r.values()) for r in self.rows()],
+            "id long, source_key string, tracking_object_name string,"
+            " environment_name string, database_name string, data_hash string,"
+            " data string, error_message string, timestamp timestamp_ntz,"
+            " attempts int, next_attempt timestamp_ntz",
         )
-
-        schema = StructType(
-            [
-                StructField("id", LongType()),
-                StructField("source_key", StringType()),
-                StructField("tracking_object_name", StringType()),
-                StructField("environment_name", StringType()),
-                StructField("database_name", StringType()),
-                StructField("data_hash", StringType()),
-                StructField("data", StringType()),
-                StructField("error_message", StringType()),
-                StructField("timestamp", TimestampNTZType()),
-                StructField("attempts", IntegerType()),
-                StructField("next_attempt", TimestampNTZType()),
-            ]
-        )
-        rows = [
-            tuple(r[f.name] for f in schema.fields) for r in self._kv.read()
-        ]
-        return spark.createDataFrame(rows, schema)

@@ -152,7 +152,7 @@ class HealthService:
         ):
             return self._cached
         dlq_stats = self.monitor.stats()
-        versions = self.state._kv.read()  # noqa: SLF001 — health introspection
+        versions = self.state.rows()
         self._cached = {
             "status": "degraded" if dlq_stats["total"] > 0 else "healthy",
             "state": [

@@ -1,4 +1,4 @@
-"""Watermark + pause state, parquet-backed with upsert semantics.
+"""Watermark + pause state in SQLite, with upsert semantics.
 
 Mirrors the reference's SQLite ``state.db`` tables (SURVEY §1.1, FIXTURES
 F5): ``LastVersions(environment_name, object_name, last_version,
@@ -7,154 +7,177 @@ last_updated)`` unique per (env, object)
 ``Pauses(scope, reason, paused_by, paused_at)``
 (``PauseService.cs:28-48``).
 
-State is deliberately tiny (one row per tracked object), so upserts are
-driver-side pyarrow writes with an atomic file swap — spinning up a
-distributed job for a 5-row MERGE would be the wrong tool. The tables
-remain plain parquet, so the data plane can join them at any scale
-(``as_dataframe``), and "delete the row to reset" keeps the reference's
-operational semantics (``Program.cs:401-432``).
+Every control-plane store (these two, the dead-letter store and the
+persisted ingest health) is one stdlib SQLite file behind ``SqliteDb``,
+the only code that knows the storage format. One service shares each
+store between its environment runners, the replay sweeper and the API,
+so every mutation is one SQL statement: an upsert, a conditional
+``UPDATE`` or a ``DELETE``. State is tiny (one row per tracked object);
+``as_dataframe`` hands it to Spark for data-plane joins, and "delete the
+row to reset" keeps the reference's operational semantics
+(``Program.cs:401-432``).
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import os
-import tempfile
+import sqlite3
+import threading
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-_VERSIONS_SCHEMA = pa.schema(
-    [
-        ("environment_name", pa.string()),
-        ("object_name", pa.string()),
-        ("last_version", pa.int64()),
-        ("last_updated", pa.timestamp("us")),
-    ]
+#: store files of the earlier whole-file parquet layout; a root that still
+#: holds one is refused, because starting empty beside it would silently
+#: drop its watermarks or dead letters (its rows are not imported)
+_LEGACY_FILES = (
+    "last_versions.parquet",
+    "pauses.parquet",
+    "dead_letters.parquet",
+    "ingest_health.parquet",
 )
 
-_PAUSES_SCHEMA = pa.schema(
-    [
-        ("scope", pa.string()),
-        ("reason", pa.string()),
-        ("paused_by", pa.string()),
-        ("paused_at", pa.timestamp("us")),
-    ]
-)
+_EPOCH = dt.datetime(1970, 1, 1)
+_MICROSECOND = dt.timedelta(microseconds=1)
 
 
 def _utcnow() -> dt.datetime:
     return dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
 
 
-class _ParquetKV:
-    """A small parquet table with atomic whole-file replace."""
+def _sql_value(v):
+    """Naive-UTC datetimes are stored as integer microseconds."""
+    return (v - _EPOCH) // _MICROSECOND if isinstance(v, dt.datetime) else v
 
-    def __init__(self, path: str, schema: pa.Schema):
-        self.path = path
-        self.schema = schema
-        os.makedirs(os.path.dirname(path), exist_ok=True)
 
-    def read(self) -> list[dict]:
-        if not os.path.exists(self.path):
-            return []
-        return pq.read_table(self.path).to_pylist()
+class SqliteDb:
+    """One SQLite file with one connection, serialized by a lock.
 
-    def write(self, rows: list[dict]) -> None:
-        table = pa.Table.from_pylist(rows, schema=self.schema)
-        fd, tmp = tempfile.mkstemp(
-            dir=os.path.dirname(self.path), suffix=".parquet.tmp"
+    WAL keeps readers off half-written pages, and ``synchronous=FULL``
+    syncs every commit: the dead-letter store and the watermark live in
+    different files, so "dead letter durable before the watermark
+    advances" needs each commit on disk before the call returns.
+    Datetime parameters are stored as integer microseconds, the columns
+    named in ``timestamps`` come back as naive-UTC datetimes, and SQL
+    adds seconds to a stored time with ``add_seconds(time, seconds)``.
+    """
+
+    def __init__(self, root: str, file: str, ddl: str,
+                 timestamps: tuple[str, ...] = ()):
+        for name in _LEGACY_FILES:
+            legacy = os.path.join(root, name)
+            if os.path.exists(legacy):
+                raise RuntimeError(
+                    f"{legacy}: store file of the earlier parquet layout; "
+                    "its rows are not imported — move it out of the store "
+                    "root to start empty"
+                )
+        os.makedirs(root, exist_ok=True)
+        self._timestamps = frozenset(timestamps)
+        self._lock = threading.Lock()
+        self._conn = sqlite3.connect(
+            os.path.join(root, file), isolation_level=None,
+            check_same_thread=False,
         )
-        os.close(fd)
-        try:
-            pq.write_table(table, tmp)
-            os.replace(tmp, self.path)  # atomic on POSIX
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
+        self._conn.execute("PRAGMA journal_mode=WAL")
+        self._conn.execute("PRAGMA synchronous=FULL")
+        self._conn.executescript(ddl)
+        self.function("add_seconds", 2,
+                      lambda t, seconds: t + seconds * 1_000_000)
+
+    def close(self) -> None:
+        with self._lock:
+            self._conn.close()
+
+    def function(self, name: str, n_args: int, fn) -> None:
+        """Make a pure Python function callable from this store's SQL."""
+        self._conn.create_function(name, n_args, fn, deterministic=True)
+
+    def execute(self, sql: str, params: tuple = ()) -> int:
+        """Run one statement in its own transaction; returns its rowcount."""
+        with self._lock:
+            return self._conn.execute(sql, tuple(map(_sql_value, params))).rowcount
+
+    def query(self, sql: str, params: tuple = ()) -> list[dict]:
+        with self._lock:
+            cur = self._conn.execute(sql, tuple(map(_sql_value, params)))
+            names = [c[0] for c in cur.description]
+            rows = cur.fetchall()
+        return [
+            {
+                n: _EPOCH + v * _MICROSECOND
+                if n in self._timestamps and v is not None else v
+                for n, v in zip(names, row)
+            }
+            for row in rows
+        ]
+
+
+_STATE_DDL = """
+CREATE TABLE IF NOT EXISTS last_versions (
+    environment_name TEXT NOT NULL,
+    object_name TEXT NOT NULL,
+    last_version INTEGER NOT NULL,
+    last_updated INTEGER NOT NULL,
+    PRIMARY KEY (environment_name, object_name)
+);
+CREATE TABLE IF NOT EXISTS pauses (
+    scope TEXT PRIMARY KEY,
+    reason TEXT,
+    paused_by TEXT,
+    paused_at INTEGER NOT NULL
+);
+"""
+
+
+def _state_db(root: str, timestamps: tuple[str, ...]) -> SqliteDb:
+    return SqliteDb(root, "state.db", _STATE_DDL, timestamps)
 
 
 class StateStore:
     """Per-(environment, object) watermark store with upsert semantics."""
 
     def __init__(self, root: str):
-        self._kv = _ParquetKV(os.path.join(root, "last_versions.parquet"), _VERSIONS_SCHEMA)
+        self._db = _state_db(root, ("last_updated",))
 
     def get_last_version(self, env: str, obj: str) -> int | None:
-        for row in self._kv.read():
-            if row["environment_name"] == env and row["object_name"] == obj:
-                return row["last_version"]
-        return None
+        rows = self._db.query(
+            "SELECT last_version FROM last_versions"
+            " WHERE environment_name = ? AND object_name = ?",
+            (env, obj),
+        )
+        return rows[0]["last_version"] if rows else None
 
     def set_last_version(self, env: str, obj: str, version: int) -> None:
-        """Upsert ≙ ``INSERT ... ON CONFLICT(env, object) DO UPDATE``."""
-        rows = [
-            r
-            for r in self._kv.read()
-            if not (r["environment_name"] == env and r["object_name"] == obj)
-        ]
-        rows.append(
-            {
-                "environment_name": env,
-                "object_name": obj,
-                "last_version": int(version),
-                "last_updated": _utcnow(),
-            }
+        self._db.execute(
+            "INSERT INTO last_versions VALUES (?, ?, ?, ?)"
+            " ON CONFLICT (environment_name, object_name) DO UPDATE SET"
+            " last_version = excluded.last_version,"
+            " last_updated = excluded.last_updated",
+            (env, obj, int(version), _utcnow()),
         )
-        self._kv.write(rows)
 
     def reset(self, env: str, obj: str) -> bool:
         """T13: delete the watermark row; next cycle re-initializes per
         the object's InitialSyncMode."""
-        rows = self._kv.read()
-        kept = [
-            r
-            for r in rows
-            if not (r["environment_name"] == env and r["object_name"] == obj)
-        ]
-        if len(kept) == len(rows):
-            return False
-        self._kv.write(kept)
-        return True
+        return self._db.execute(
+            "DELETE FROM last_versions"
+            " WHERE environment_name = ? AND object_name = ?",
+            (env, obj),
+        ) > 0
 
     def rows(self) -> list[dict]:
         """All watermark rows, (environment, object)-sorted — the
         ``/health/state`` read shape (``Program.cs:900-983``)."""
-        return sorted(
-            self._kv.read(),
-            key=lambda r: (r["environment_name"], r["object_name"]),
+        return self._db.query(
+            "SELECT * FROM last_versions ORDER BY environment_name, object_name"
         )
 
     def as_dataframe(self, spark: SparkSession) -> DataFrame:
-        rows = self._kv.read()
-        from pyspark.sql.types import (
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-            TimestampNTZType,
-        )
-
-        schema = StructType(
-            [
-                StructField("environment_name", StringType()),
-                StructField("object_name", StringType()),
-                StructField("last_version", LongType()),
-                StructField("last_updated", TimestampNTZType()),
-            ]
-        )
         return spark.createDataFrame(
-            [
-                (
-                    r["environment_name"],
-                    r["object_name"],
-                    r["last_version"],
-                    r["last_updated"],
-                )
-                for r in rows
-            ],
-            schema,
+            [tuple(r.values()) for r in self.rows()],
+            "environment_name string, object_name string, last_version long,"
+            " last_updated timestamp_ntz",
         )
 
 
@@ -175,36 +198,27 @@ class PauseStore:
     """
 
     def __init__(self, root: str):
-        self._kv = _ParquetKV(os.path.join(root, "pauses.parquet"), _PAUSES_SCHEMA)
+        self._db = _state_db(root, ("paused_at",))
 
     def pause(self, scope: str, reason: str = "", paused_by: str = "") -> None:
-        rows = [r for r in self._kv.read() if r["scope"] != scope]
-        rows.append(
-            {
-                "scope": scope,
-                "reason": reason,
-                "paused_by": paused_by,
-                "paused_at": _utcnow(),
-            }
+        self._db.execute(
+            "INSERT INTO pauses VALUES (?, ?, ?, ?)"
+            " ON CONFLICT (scope) DO UPDATE SET reason = excluded.reason,"
+            " paused_by = excluded.paused_by, paused_at = excluded.paused_at",
+            (scope, reason, paused_by, _utcnow()),
         )
-        self._kv.write(rows)
 
     def resume(self, scope: str) -> bool:
         """Returns False when the scope was not paused (resume honesty —
         ``PauseServiceTests``)."""
-        rows = self._kv.read()
-        kept = [r for r in rows if r["scope"] != scope]
-        if len(kept) == len(rows):
-            return False
-        self._kv.write(kept)
-        return True
+        return self._db.execute("DELETE FROM pauses WHERE scope = ?", (scope,)) > 0
 
     def paused_scopes(self) -> set[str]:
-        return {r["scope"] for r in self._kv.read()}
+        return {r["scope"] for r in self._db.query("SELECT scope FROM pauses")}
 
     def rows(self) -> list[dict]:
         """All pause rows with reason/by/at (``/ui/api/pauses``)."""
-        return sorted(self._kv.read(), key=lambda r: r["scope"])
+        return self._db.query("SELECT * FROM pauses ORDER BY scope")
 
     def is_paused(self, env: str, obj: str | None = None) -> bool:
         scopes = self.paused_scopes()
