@@ -119,7 +119,9 @@ def test_2level_build_probe_exhaustive_and_extend(spark, index):
     assert ai.extend_ann_index(spark, rest, index) == 0  # replay no-op
 
     # every stored cell assignment equals the hierarchy's own answer
-    coarse, fine, k_fine = ai._hier_quantizer(spark, index)
+    coarse, fine, k_fine = ai._hier_quantizer(
+        spark, index, *ai._open_index(spark, index)
+    )
     want = {
         (r["vec_id"], r["cid"])
         for r in km.assign_clusters_2level(

@@ -181,7 +181,7 @@ def test_embedding_gate_rejects_near_dups_and_extends(spark, tmp_path):
         health_root = str(tmp_path / "health")
         fn = ingest.make_embedding_ingest_fn(
             spark, "emb_gate_idx", accepted_path,
-            cos_threshold=0.99, nprobe=1, n_buckets=4, stats=stats,
+            cos_threshold=0.99, nprobe=1, stats=stats,
             health_root=health_root,
         )
         batch = vframe([

@@ -210,36 +210,6 @@ def test_probe_immune_to_replayed_extend_duplicates(spark, index):
     assert after == before
 
 
-def test_extend_and_compact_dispatch_on_legacy_bucketed_layout(spark, index):
-    """Indexes persisted before the cell-partitioned layout bucketed
-    the float/codes tables; extends and compaction must dispatch on the
-    stored layout instead of failing the append with a mismatched
-    spec."""
-    emb = load(spark, SF, "embeddings")
-    ipq.build_ivfpq_index(spark, emb.filter("vec_id < 400"), index,
-                          m=M, k=K, n_buckets=16)
-    # rewrite the two cell tables into the legacy bucketed layout
-    for name in (index, ipq._codes_table(index)):
-        rows = spark.table(name).localCheckpoint(eager=True)
-        spark.sql(f"DROP TABLE {name}")
-        (
-            rows.repartition(16, "bucket").write
-            .bucketBy(16, "bucket").format("parquet").saveAsTable(name)
-        )
-    assert not ipq._cell_partitioned(spark, index)
-    added = ipq.extend_ivfpq_index(
-        spark, emb.filter("vec_id >= 400"), index
-    )
-    assert added == emb.filter("vec_id >= 400").count()
-    queries = emb.filter(F.expr(QUERY_PRED))
-    got = _pairs(ipq.ivfpq_probe(spark, index, queries, k=10, nprobe=2))
-    assert got
-    ipq.compact_ivfpq_index(spark, index)
-    assert _pairs(
-        ipq.ivfpq_probe(spark, index, queries, k=10, nprobe=2)
-    ) == got
-
-
 def test_attach_restores_catalog_registration(spark, index):
     """A fresh session's in-memory catalog has no entry for an index a
     prior session persisted; ``attach_ivfpq_index`` must re-register
@@ -276,9 +246,8 @@ def test_attach_restores_catalog_registration(spark, index):
                             shortlist=30)
         )
         assert got == want and got
-        # the extend path needs the ids table's BUCKET SPEC back, not
-        # just its rows — a spec-less re-attach made the bucketed
-        # append fail with a spec mismatch (hit live at the 20 M leg)
+        # the re-attached index extends: the tail sidecars and the
+        # plain ids sidecar take plain appends, replay stays a no-op
         fresh = emb.limit(5).select(
             (F.col("vec_id") + 10_000).alias("vec_id"), "embedding"
         )
@@ -290,6 +259,75 @@ def test_attach_restores_catalog_registration(spark, index):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
             if os.path.isdir(os.path.join(wh, t)):
                 shutil.rmtree(os.path.join(wh, t))
+
+
+#: legacy persisted shapes, each made from one current IVF-PQ build:
+#: (index family opened, suffix of the one table rewritten, the
+#: rewrite — None drops it). An IVF-PQ index's float base, ids and
+#: meta tables also form a valid sign-quantized ANN index.
+_LEGACY = {
+    "ivfpq_v1_meta": (
+        "ivfpq", "_meta",
+        lambda df: df.withColumn("bucket_v", F.lit(1)).write,
+    ),
+    "ivfpq_6col_meta": (
+        "ivfpq", "_meta",
+        lambda df: df.select("m", "k", "n_buckets", "adc_margin",
+                             "base_distinct", "bucket_v").write,
+    ),
+    "ivfpq_narrow_codes": (
+        "ivfpq", "_codes",
+        lambda df: df.select(
+            "vec_id", F.posexplode("codes").alias("sub", "code"), "bucket"
+        ).write.partitionBy("bucket"),
+    ),
+    "ivfpq_bucketed_cells": (
+        "ivfpq", "", lambda df: df.write.bucketBy(4, "bucket"),
+    ),
+    "ivfpq_bucketed_ids": (
+        "ivfpq", "_ids", lambda df: df.write.bucketBy(4, "vec_id"),
+    ),
+    "ann_no_meta": ("ann", "_meta", None),
+    "ann_no_bucket_v": (
+        "ann", "_meta", lambda df: df.select("n_buckets").write,
+    ),
+}
+
+_LEGACY_SRC = "legacy_src"
+
+
+@pytest.mark.parametrize("shape", sorted(_LEGACY))
+def test_opening_a_legacy_layout_is_refused(spark, shape):
+    """One persisted layout per index family: an index whose tables
+    carry an earlier layout is refused when it is opened, with an error
+    naming the offending table, instead of being probed through a
+    compatibility branch. Every case shares one current index (built on
+    first use): it moves one table aside, writes its legacy shape in
+    place, and moves the current table back afterwards."""
+    from trignis_spark.maintenance import drop_table_and_location
+    from trignis_spark.operators import ann_index as ai
+
+    src = _LEGACY_SRC
+    if not ipq.index_exists(spark, src):
+        ipq.build_ivfpq_index(spark, _clustered_vframe(spark), src,
+                              m=2, k=2, n_buckets=4, split_factor=None)
+    family, sfx, rewrite = _LEGACY[shape]
+    name = src + sfx
+    spark.sql(f"ALTER TABLE {name} RENAME TO {name}__cur")
+    try:
+        if rewrite is not None:
+            rewrite(spark.table(f"{name}__cur")).format("parquet") \
+                .saveAsTable(name)
+        queries = _clustered_vframe(spark)
+        with pytest.raises(RuntimeError, match=rf"^{name}: "):
+            if family == "ivfpq":
+                ipq.ivfpq_probe(spark, src, queries, k=2).collect()
+            else:
+                ai.probe_ann_index(spark, src, queries, k=2).collect()
+    finally:
+        drop_table_and_location(spark, name)
+        spark.sql(f"ALTER TABLE {name}__cur RENAME TO {name}")
+        ipq._drop_state(spark, src)
 
 
 def test_wide_codes_match_assign_codes(spark):
@@ -752,33 +790,6 @@ def test_build_margin_is_full_corpus_and_arrow_twin_matches(
     assert ipq.stored_adc_margin(spark, index) <= stored + 1e-12
 
 
-def test_legacy_bucket_version_dispatch(spark, index):
-    """Round 9 changed the sign-quantizer to strided bits (v2) because
-    the leading-bits form collapses cells on clustered corpora — but a
-    persisted pre-round-9 index stores v1 cell ids, and probing or
-    extending it with the v2 expression would compute different cells
-    and silently miss neighbors. The meta row records ``bucket_v``
-    (absent ⇒ 1) and every path dispatches on it: a v1-built index must
-    keep answering identically to the one-shot v1 cascade, and a v1
-    extend must land in cells its own probes can see."""
-    emb = load(spark, SF, "embeddings")
-    ipq.build_ivfpq_index(spark, emb.filter("vec_id < 400"), index,
-                          m=M, k=K, n_buckets=16, bucket_version=1)
-    assert ipq._probe_state(spark, index)["bucket_v"] == 1
-    queries = emb.filter(F.expr(QUERY_PRED))
-    got = ipq.ivfpq_probe(spark, index, queries, k=10, nprobe=2)
-    # extends must bucket with the stored v1 expression
-    ipq.extend_ivfpq_index(spark, emb.filter("vec_id >= 400"), index)
-    after = ipq.ivfpq_probe(spark, index, queries, k=10, nprobe=2)
-    assert after.filter("neighbor_id >= 400").count() > 0
-    # v1 and v2 builds of the same corpus give DIFFERENT cell layouts
-    # (different approximations) — assert the dispatch actually read
-    # the meta, not that the two versions agree
-    ipq.build_ivfpq_index(spark, emb.filter("vec_id < 400"), index,
-                          m=M, k=K, n_buckets=16)
-    assert ipq._probe_state(spark, index)["bucket_v"] == 2
-
-
 def test_dec12_quantize_matches_spark_cast(spark):
     """The Arrow ADC twin's int64 quantizer must reproduce Spark's
     ``CAST(double AS DECIMAL(30,12))`` exactly — HALF_UP at scale 12
@@ -1112,27 +1123,6 @@ def test_banded_rerank_sees_tail_and_survives_fold(spark, index):
     after_fold = top(ipq.ivfpq_probe(spark, index, q, k=2, nprobe=2,
                                      include_score=True))
     assert after_fold == with_tail
-
-
-def test_banded_rerank_disarmed_for_legacy_meta(spark, index):
-    """An index persisted before ``v_sorted`` existed keeps the classic
-    gather: the flag reads back False from a 6-field meta row."""
-    emb = _clustered_vframe(spark)
-    ipq.build_ivfpq_index(spark, emb, index, m=2, k=2, n_buckets=4)
-    mt = ipq._meta_table(index)
-    live = spark.table(mt).first()
-    spark.sql(f"DROP TABLE {mt}")
-    spark.createDataFrame(
-        [(live["m"], live["k"], live["n_buckets"], live["adc_margin"],
-          True, 2)],
-        "m int, k int, n_buckets int, adc_margin double, "
-        "base_distinct boolean, bucket_v int",
-    ).write.format("parquet").saveAsTable(mt)
-    ipq._drop_state(spark, index)
-    assert ipq._probe_state(spark, index)["v_sorted"] is False
-    got = ipq.ivfpq_probe(spark, index, emb, k=3, nprobe=2,
-                          include_score=True)
-    assert got.count() > 0
 
 
 def _row_groups(spark, table):

@@ -129,19 +129,6 @@ def attach_table(spark: SparkSession, table: str,
     return True
 
 
-def warehouse_dir_partitioned(spark: SparkSession, table: str,
-                              col: str) -> bool:
-    """True when ``table``'s warehouse directory carries ``col=``
-    partition subdirectories — the layout sniff ``attach_*`` wrappers
-    use to tell a cell-*partitioned* index table (attach plain, recover
-    partitions) from a legacy cell-*bucketed* one (attach with the
-    bucket spec) before either is in the catalog."""
-    path = _managed_table_dir(spark, table)
-    return os.path.isdir(path) and any(
-        e.startswith(f"{col}=") for e in os.listdir(path)
-    )
-
-
 def table_location(spark: SparkSession, table: str) -> str:
     """Filesystem location of a catalog table (no Delta DESCRIBE DETAIL
     in plain parquet land; the catalog row carries it)."""

@@ -15,10 +15,18 @@ file once and makes each search a bucket probe, mirroring
   (``batch_anti_join``), so a bucket spec buys nothing while forcing
   one file per present bucket on every poll-cycle append.
 
-The coarse quantizer is the same deterministic sign-pattern of the
-leading components as ``ivf_topk`` (a k-means-free stand-in the
-sandbox can verify bit-for-bit; swap in trained centroids by replacing
-``_bucket_expr`` — the index layout and probe shape are unchanged).
+The coarse quantizer is the same deterministic strided sign-pattern
+as ``ivf_topk`` (``similarity.bucket_expr`` — a k-means-free stand-in
+the sandbox can verify bit-for-bit), or trained centroids stored in a
+``<name>_centroids`` sidecar (``build_ann_index(centroids=)``,
+``build_ann_index_2level``) — the index layout and probe shape are
+unchanged.
+
+Every index has a ``<name>_meta`` row (its cell count, and
+``bucket_v = 2`` for the sign quantizer). Opening an index of an
+earlier layout — no meta table, or sign-quantized cells without
+``bucket_v = 2`` — raises a ``RuntimeError`` that names the table;
+such an index is rebuilt, not converted.
 
 ``nprobe`` probes the query's cell plus its nearest neighbor cells
 (sign patterns at Hamming distance 1, the natural neighbor set of a
@@ -33,10 +41,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from trignis_spark.operators.similarity import DOT, _prep
+from trignis_spark.operators.similarity import DOT, _prep, bucket_expr
 from trignis_spark.plans.bucketing import batch_anti_join
-
-DEFAULT_BUCKETS = 16
 
 
 def _ids_table(table: str) -> str:
@@ -51,32 +57,30 @@ def _meta_table(table: str) -> str:
     return f"{table}_meta"
 
 
-def _stored_n_buckets(
-    spark: SparkSession, table: str, fallback: int
-) -> int:
-    """Bucket count the index was built with. The meta sidecar is
-    authoritative — a probe or extend that guessed a different count
-    would compute wrong sign-pattern cell ids and silently miss
-    neighbors; the ``fallback`` only serves indexes built before the
-    sidecar existed."""
+def _open_index(spark: SparkSession, table: str):
+    """(meta row, trained centroids or None) of a persisted index. The
+    meta row is authoritative for the cell count — a probe or extend
+    that guessed a different count would compute wrong cells and
+    silently miss neighbors. An index of an earlier layout is refused:
+    one without a meta table, or a sign-quantized one whose meta lacks
+    ``bucket_v = 2`` (its cells are the leading-bits form, which the
+    strided ``bucket_expr`` would not reproduce)."""
     name = _meta_table(table)
-    if spark.catalog.tableExists(name):
-        return spark.table(name).first()["n_buckets"]
-    return fallback
-
-
-def _stored_bucket_version(spark: SparkSession, table: str) -> int:
-    """Sign-quantizer version the index was built with (see
-    ``similarity.bucket_expr``). Indexes persisted before round 9 have
-    no ``bucket_v`` column — they used the leading-bits form (1), and
-    probing/extending them with the strided form would compute wrong
-    cells and silently miss neighbors."""
-    name = _meta_table(table)
-    if spark.catalog.tableExists(name):
-        row = spark.table(name).first()
-        if "bucket_v" in row.__fields__ and row["bucket_v"] is not None:
-            return int(row["bucket_v"])
-    return 1
+    if not spark.catalog.tableExists(name):
+        raise RuntimeError(
+            f"{name}: missing — ANN index {table} predates the meta "
+            "sidecar, a layout that is no longer read; rebuild it with "
+            "build_ann_index"
+        )
+    meta = spark.table(name).first()
+    cents = _trained_centroids(spark, table)
+    if cents is None and meta.asDict().get("bucket_v") != 2:
+        raise RuntimeError(
+            f"{name}: no bucket_v = 2 — ANN index {table} holds "
+            "leading-bits sign cells, a layout that is no longer read; "
+            "rebuild it with build_ann_index"
+        )
+    return meta, cents
 
 
 def _refresh(spark: SparkSession, table: str) -> None:
@@ -93,21 +97,9 @@ def _trained_centroids(spark: SparkSession, table: str) -> DataFrame | None:
     return None
 
 
-def _bucket_expr(vec_col: str, n_buckets: int, version: int = 2,
-                 dims: int | None = None) -> str:
-    """See ``similarity.bucket_expr`` — v2 (strided sign bits) is the
-    build default; persisted indexes dispatch on their stored
-    ``bucket_v`` so pre-round-9 (leading-bits) layouts stay correct.
-    ``dims`` folds the strided positions to literals for corpus-sized
-    evaluations (VERDICT r9 #2)."""
-    from trignis_spark.operators.similarity import bucket_expr
-
-    return bucket_expr(vec_col, n_buckets, version, dims=dims)
-
-
 def _rows(embeddings: DataFrame, n_buckets: int,
           centroids: DataFrame | None = None,
-          spread: bool = True, version: int = 2) -> DataFrame:
+          spread: bool = True) -> DataFrame:
     if centroids is not None:
         from trignis_spark.operators.kmeans import assign_clusters
 
@@ -118,14 +110,14 @@ def _rows(embeddings: DataFrame, n_buckets: int,
             .select(F.col("cid").alias("bucket"), "vec_id", "v", "n2")
         )
     prepped = _prep(embeddings)
-    # corpus-sized evaluation — bind the width as a literal so the v2
-    # positions fold at plan time (one limit-1 meta read, vs size(v)
-    # once per bit per corpus row)
+    # corpus-sized evaluation — bind the width as a literal so the
+    # strided positions fold at plan time (one limit-1 meta read, vs
+    # size(v) once per bit per corpus row)
     from trignis_spark.operators.similarity import _vec_dims
 
     return prepped.select(
-        F.expr(_bucket_expr("v", n_buckets, version,
-                            dims=_vec_dims(prepped))).alias("bucket"),
+        F.expr(bucket_expr("v", n_buckets,
+                           dims=_vec_dims(prepped))).alias("bucket"),
         "vec_id",
         "v",
         "n2",
@@ -239,17 +231,17 @@ def _coarse_table(table: str) -> str:
     return f"{table}_centroids_coarse"
 
 
-def _hier_quantizer(spark: SparkSession, table: str):
+def _hier_quantizer(spark: SparkSession, table: str, meta, cents):
     """(coarse, fine, k_fine) for an index built by
-    ``build_ann_index_2level``, else None. The fine level is
-    reconstructed from the flat sidecar (ccid = cid ÷ k_fine,
-    fid = cid mod k_fine) so the flat table stays the single source the
-    probe path reads."""
+    ``build_ann_index_2level``, else None; ``meta`` and ``cents`` come
+    from ``_open_index``. The fine level is reconstructed from the flat
+    sidecar (ccid = cid ÷ k_fine, fid = cid mod k_fine) so the flat
+    table stays the single source the probe path reads."""
     name = _coarse_table(table)
     if not spark.catalog.tableExists(name):
         return None
-    k_fine = spark.table(_meta_table(table)).first()["k_fine"]
-    fine = spark.table(_centroids_table(table)).select(
+    k_fine = meta["k_fine"]
+    fine = cents.select(
         (F.col("cid") / k_fine).cast("int").alias("ccid"),
         F.pmod(F.col("cid"), F.lit(k_fine)).cast("int").alias("fid"),
         "cvec",
@@ -347,13 +339,11 @@ def extend_ann_index(
     spark: SparkSession,
     embeddings: DataFrame,
     table: str,
-    n_buckets: int = DEFAULT_BUCKETS,
     assume_fresh: bool = False,
 ) -> int:
     """Append vectors not already present (idempotent under replay);
     returns the number actually added. The bucket count comes from the
-    index's own meta sidecar — ``n_buckets`` is a fallback for
-    pre-sidecar indexes only. Indexes built by ``build_ann_index_2level``
+    index's own meta sidecar. Indexes built by ``build_ann_index_2level``
     assign their extends through the stored hierarchy (k_coarse + k_fine
     evaluations per vector, not cells).
 
@@ -364,17 +354,18 @@ def extend_ann_index(
     nothing: both scans read the same table, so any crash window one
     catches the other does too (the probe's replay-duplicate dedup
     covers the index-rows-appended/ids-not window either way)."""
+    meta, cents = _open_index(spark, table)
+    n_buckets = meta["n_buckets"]
     known = spark.table(_ids_table(table))
 
     def _dedup(df: DataFrame) -> DataFrame:
         return df if assume_fresh else batch_anti_join(df, known, "vec_id")
 
-    hier = _hier_quantizer(spark, table)
+    hier = _hier_quantizer(spark, table, meta, cents)
     if hier is not None:
         from trignis_spark.operators import kmeans as km
 
         coarse, fine, k_fine = hier
-        n_buckets = _stored_n_buckets(spark, table, n_buckets)
         fresh_src = _dedup(embeddings)
         # spread=False: an extend batch is poll-cycle-sized — the
         # corpus-parallelism repartition would be pure overhead here
@@ -393,16 +384,11 @@ def extend_ann_index(
         _write_rows(fresh, table, n_buckets, "append", small=True)
         _refresh(spark, table)
         return added
-    cents = _trained_centroids(spark, table)
-    n_buckets = _stored_n_buckets(spark, table, n_buckets)
-    if cents is not None:
-        n_buckets = max(1, cents.count())  # layout follows the quantizer
     fresh = _rows(
         _dedup(embeddings),
         n_buckets,
         cents,
         spread=False,  # batch-sized input — skip the corpus repartition
-        version=_stored_bucket_version(spark, table),
     ).localCheckpoint(eager=True)
     added = fresh.count()
     if added == 0:
@@ -418,7 +404,6 @@ def probe_ann_index(
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 1,
-    n_buckets: int = DEFAULT_BUCKETS,
     include_score: bool = False,
 ) -> DataFrame:
     """Approximate top-k neighbors of each query vector:
@@ -430,15 +415,13 @@ def probe_ann_index(
     construction, so its cell fan-out (1 + (nprobe-1) Hamming-1
     neighbors) broadcasts and the bucketed index is scanned in place —
     per-search cost is O(probed cells), independent of corpus size.
-    The cell count comes from the index's meta sidecar; ``n_buckets``
-    is a fallback for pre-sidecar indexes only."""
-    n_buckets = _stored_n_buckets(spark, table, n_buckets)
+    The cell count comes from the index's meta sidecar."""
+    meta, cents = _open_index(spark, table)
     base = _prep(queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("n2").alias("qn2"),
     )
-    cents = _trained_centroids(spark, table)
     if cents is not None:
         # trained quantizer: probe the nprobe nearest centroid cells —
         # packed-projection scoring (see kmeans._nearest_expr), so the
@@ -458,14 +441,10 @@ def probe_ann_index(
             .filter(F.col("qbucket").isNotNull())
         )
     else:
+        n_buckets = meta["n_buckets"]
         bits = int(math.log2(n_buckets))
         nprobe = max(1, min(nprobe, bits + 1))
-        q = base.withColumn(
-            "home",
-            F.expr(_bucket_expr(
-                "qv", n_buckets, _stored_bucket_version(spark, table)
-            )),
-        )
+        q = base.withColumn("home", F.expr(bucket_expr("qv", n_buckets)))
         # probe cells: home plus the first (nprobe-1) bit-flip neighbors
         flips = [F.col("home")] + [
             F.col("home").bitwiseXOR(F.lit(1 << i))

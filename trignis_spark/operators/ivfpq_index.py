@@ -19,10 +19,9 @@ search touches only persisted, bucket-pruned tables, mirroring
   *wide* layout): one partition-pruned scan yields both the candidate
   set and its codes (the memory-bandwidth cut — m bytes per vector at
   scale, the float corpus untouched), and the ADC sum computes inside
-  the candidate projection — the legacy narrow (vec_id, sub, code)
-  layout joined and grouped candidate×m rows per probe (~195 M rows
-  shuffled twice at the 20 M-vector decade-4 probe); probes and
-  extends still dispatch on the stored schema for legacy indexes.
+  the candidate projection — a narrow (vec_id, sub, code) layout
+  joined and grouped candidate×m rows per probe (~195 M rows shuffled
+  twice at the 20 M-vector decade-4 probe).
   Partitioning (not bucketing) is load-bearing: Spark prunes a
   *bucketed* scan only under literal bucket predicates, while a
   *partitioned* scan gets dynamic partition pruning from the probe's
@@ -32,9 +31,10 @@ search touches only persisted, bucket-pruned tables, mirroring
 - ``<name>_ids``       — (vec_id BIGINT) membership sidecar, plain
   parquet (consumers are broadcast anti-joins; round 8 unbucketed it —
   see ``ann_index._write_rows``), for idempotent extends.
-- ``<name>_meta``      — one row (m, k, n_buckets, adc_margin): probe
-  calls need no out-of-band parameters; ``adc_margin`` certifies the
-  rerank-free quantized-cosine error bound.
+- ``<name>_meta``      — one row (m, k, n_buckets, adc_margin, plus
+  the layout flags of ``_META_SCHEMA``): probe calls need no
+  out-of-band parameters; ``adc_margin`` certifies the rerank-free
+  quantized-cosine error bound.
 - ``<name>__tail`` / ``<name>__tail_codes`` — write-optimized LSM
   tails (round 8): a poll-cycle extend appends ONE plain file here
   instead of scattering ~cells partition-dir commits across the two
@@ -44,13 +44,20 @@ search touches only persisted, bucket-pruned tables, mirroring
   maintenance cadence.
 
 The coarse quantizer is the deterministic sign-pattern of components
-strided across the vector (same as ``ann_index``; v2 — round 9, see
+strided across the vector (same as ``ann_index``; see
 ``similarity.bucket_expr`` for why leading bits degenerate on
-clustered corpora; the stored ``meta.bucket_v`` keeps pre-round-9
-indexes probing with their own layout) and PQ training is ``pq.train_pq``'s
-deterministic grouped Lloyd — so a probe's result is bit-for-bit
-replayable in SQL (``queries_ext.ann_ivfpq_probe``'s oracle re-derives
-codebook, codes and cascade from the raw ``embeddings`` table).
+clustered corpora) and PQ training is ``pq.train_pq``'s deterministic
+grouped Lloyd — so a probe's result is bit-for-bit replayable in SQL
+(``queries_ext.ann_ivfpq_probe``'s oracle re-derives codebook, codes
+and cascade from the raw ``embeddings`` table).
+
+There is one persisted layout: the one described above, with every
+meta column present, ``bucket_v = 2``, a vec_id-sorted and duplicate-
+free float base (``v_sorted``, ``base_distinct``). Opening an index of
+an earlier layout (``_probe_state`` — every probe, extend, fold,
+compaction, remeasure and attach goes through it) raises a
+``RuntimeError`` that names the table and the legacy property; such an
+index is rebuilt with ``build_ivfpq_index``, not converted.
 
 Scale shape: probe cost is O(probed cells) code lookups + ``shortlist``
 exact dot products per query — independent of corpus size; extends
@@ -61,19 +68,14 @@ reused, drift handled by periodic rebuild).
 
 from __future__ import annotations
 
+from typing import NoReturn
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from trignis_spark.operators.ann_index import _bucket_expr
 from trignis_spark.operators.kmeans import _ACC
-from trignis_spark.operators.pq import (
-    _SUBDOT,
-    assign_codes,
-    split_subvectors,
-    split_v,
-    train_pq,
-)
-from trignis_spark.operators.similarity import DOT, _prep
+from trignis_spark.operators.pq import _SUBDOT, split_subvectors, train_pq
+from trignis_spark.operators.similarity import DOT, _prep, bucket_expr
 from trignis_spark.plans.bucketing import batch_anti_join
 
 
@@ -134,62 +136,66 @@ def _drop_state(spark: SparkSession, table: str) -> None:
     _STATE_CACHE.pop(_state_key(spark, table), None)
 
 
+def _refuse(name: str, what: str) -> NoReturn:
+    raise RuntimeError(
+        f"{name}: {what} — an IVF-PQ layout of an earlier build, which "
+        "is no longer read; rebuild the index with build_ivfpq_index"
+    )
+
+
 def _probe_state(spark: SparkSession, table: str) -> dict:
-    """Cached serving state (see ``_STATE_CACHE``). ``kk`` (validated
-    dense code count) is filled lazily by the first wide probe."""
+    """Cached serving state (see ``_STATE_CACHE``), loaded when the
+    index is opened. ``kk`` (validated dense code count) is filled
+    lazily by the first probe.
+
+    Only the current persisted layout is served (module docstring): a
+    missing or null meta column, ``bucket_v != 2`` (leading-bits
+    cells), a float base not recorded ``v_sorted``/``base_distinct``,
+    a codes table other than the wide (vec_id, codes, bucket) rows, a
+    cell table that buckets rather than partitions its cell, or a
+    bucketed ids sidecar each raise (``_refuse``)."""
     key = _state_key(spark, table)
     st = _STATE_CACHE.get(key)
     if st is None:
-        meta = spark.table(_meta_table(table)).first()
-        fields = meta.__fields__
-        margin = (
-            float(meta["adc_margin"])
-            if "adc_margin" in fields and meta["adc_margin"] is not None
-            else None
-        )
+        mt = _meta_table(table)
+        meta = spark.table(mt).first().asDict()
+        for c in _META_COLS:
+            if meta.get(c) is None:
+                _refuse(mt, f"meta column {c} is missing or null")
+        if meta["bucket_v"] != 2:
+            _refuse(mt, f"bucket_v = {meta['bucket_v']} (leading-bits "
+                        "sign cells)")
+        for flag in ("v_sorted", "base_distinct"):
+            if not meta[flag]:
+                _refuse(mt, f"{flag} is false")
+        codes = _codes_table(table)
+        if set(spark.table(codes).columns) != {"vec_id", "codes", "bucket"}:
+            _refuse(codes, "not the wide (vec_id, codes, bucket) layout")
+        for name in (table, codes):
+            if not _cell_partitioned(spark, name):
+                _refuse(name, "cell-bucketed, not cell-partitioned")
+        if _is_bucketed(spark, _ids_table(table)):
+            _refuse(_ids_table(table), "bucketed ids sidecar")
         st = {
-            "m": int(meta["m"]),
-            "k": int(meta["k"]),
-            "n_buckets": int(meta["n_buckets"]),
-            "adc_margin": margin,
-            # indexes persisted before the duplicate-safe fold (round
-            # 9) may hold base duplicates from a crashed fold window —
-            # absent the marker, probes keep their replay guards on
-            "base_distinct": bool(meta["base_distinct"])
-            if "base_distinct" in fields and meta["base_distinct"] is not None
-            else False,
-            # sign-quantizer version (similarity.bucket_expr):
-            # pre-round-9 indexes used the leading-bits form
-            "bucket_v": int(meta["bucket_v"])
-            if "bucket_v" in fields and meta["bucket_v"] is not None
-            else 1,
-            # round-12 builds sort the float base by vec_id within
-            # each cell partition (512 KiB row groups), so the exact
-            # re-rank's pushed-In gather actually prunes; indexes
-            # persisted earlier keep the broadcast-join gather
-            "v_sorted": bool(meta["v_sorted"])
-            if "v_sorted" in fields and meta["v_sorted"] is not None
-            else False,
+            "m": meta["m"],
+            "k": meta["k"],
+            "n_buckets": meta["n_buckets"],
+            "adc_margin": meta["adc_margin"],
+            # true for every index that opens (checked above)
+            "base_distinct": meta["base_distinct"],
+            "v_sorted": meta["v_sorted"],
             # adc_margin is a max over EVERY indexed vector (not a
-            # sample); indexes persisted before the flag read False
-            "margin_certified": bool(meta["margin_certified"])
-            if "margin_certified" in fields
-            and meta["margin_certified"] is not None
-            else False,
-            "wide": "sub" not in spark.table(_codes_table(table)).columns,
-            "cell_partitioned": _cell_partitioned(spark, table),
-            "ids_bucketed": _is_bucketed(spark, _ids_table(table)),
+            # sample) — see ``band_armed``
+            "margin_certified": meta["margin_certified"],
             "has_tail": spark.catalog.tableExists(_tail_codes_table(table))
             or spark.catalog.tableExists(_tail_table(table)),
             "kk": None,
+            # mega-cell sub-split map, recovered from the codes table's
+            # partition values (one catalog listing, cached with the
+            # rest of the serving state; build/fold/attach drop the
+            # cache)
+            "splits": _stored_splits(spark, codes),
         }
-        # mega-cell sub-split map, recovered from the codes table's
-        # partition values (one catalog listing, cached with the rest
-        # of the serving state; build/fold/attach drop the cache)
-        st["splits"] = (
-            _stored_splits(spark, _codes_table(table))
-            if st["cell_partitioned"] else {}
-        )
         _STATE_CACHE[key] = st
     return st
 
@@ -206,9 +212,7 @@ def _refresh(spark: SparkSession, table: str) -> None:
 
 
 def _is_bucketed(spark: SparkSession, name: str) -> bool:
-    """True when the catalog declares a bucket spec for ``name`` — the
-    legacy ids-sidecar layout; appends must then keep the spec (Spark
-    rejects a plain append into a bucketed table)."""
+    """True when the catalog declares a bucket spec for ``name``."""
     return any(c.isBucket for c in spark.catalog.listColumns(name))
 
 
@@ -217,13 +221,8 @@ def index_exists(spark: SparkSession, table: str) -> bool:
 
 
 def _cell_partitioned(spark: SparkSession, name: str) -> bool:
-    """True when ``name`` stores its IVF cell as a *partition* column
-    (the current layout — dynamic partition pruning at the scan).
-    Indexes persisted by earlier builds bucketed the cell instead;
-    extends and compaction dispatch on the stored layout so an
-    append/rewrite never clashes with the table's own spec (probes
-    need no dispatch — the plan shape differs, the results do not).
-    Rebuild to migrate a bucketed index to the pruned layout."""
+    """True when ``name`` stores its IVF cell as a *partition* column,
+    which gives the probe's scans dynamic partition pruning."""
     return any(
         c.name == "bucket" and c.isPartition
         for c in spark.catalog.listColumns(name)
@@ -242,11 +241,10 @@ def _drop_stale(spark: SparkSession, table: str) -> None:
     _drop_state(spark, table)
 
 
-def _bucketed(embeddings: DataFrame, n_buckets: int,
-              version: int = 2) -> DataFrame:
+def _bucketed(embeddings: DataFrame, n_buckets: int) -> DataFrame:
     """(bucket, vec_id, v, n2) under the sign-pattern coarse quantizer.
-    The strided v2 bit positions are bound to the corpus's measured
-    width (one limit-1 read) so the cell expression folds to literal
+    The strided bit positions are bound to the corpus's measured width
+    (one limit-1 read) so the cell expression folds to literal
     element_at positions instead of re-evaluating ``size(v)`` once per
     bit per corpus row (VERDICT r9 #2) — identical cell ids, and the
     oracle twins compute the same positions from ``len(v)``."""
@@ -254,8 +252,8 @@ def _bucketed(embeddings: DataFrame, n_buckets: int,
 
     prepped = _prep(embeddings)
     return prepped.select(
-        F.expr(_bucket_expr("v", n_buckets, version,
-                            dims=_vec_dims(prepped))).alias("bucket"),
+        F.expr(bucket_expr("v", n_buckets,
+                           dims=_vec_dims(prepped))).alias("bucket"),
         "vec_id",
         "v",
         "n2",
@@ -449,14 +447,10 @@ def _split_cells(rows: DataFrame, split_factor: int):
 def _stored_splits(spark: SparkSession, name: str) -> dict:
     """{original bucket: sub-cell count} recovered from a
     cell-partitioned table's partition values (the split map is never
-    stored separately — the layout IS the record). Empty for unsplit
-    or legacy-bucketed tables."""
-    try:
-        part_rows = spark.sql(f"SHOW PARTITIONS {name}").collect()
-    except Exception:
-        return {}
+    stored separately — the layout IS the record). Empty for an
+    unsplit table."""
     splits: dict = {}
-    for r in part_rows:
+    for r in spark.sql(f"SHOW PARTITIONS {name}").collect():
         v = int(str(r[0]).split("=", 1)[1])
         if v >= CELL_SPLIT_OFFSET:
             b, s = v % CELL_SPLIT_OFFSET, v // CELL_SPLIT_OFFSET
@@ -639,12 +633,13 @@ def _wide_codes(rows: DataFrame, codebook: DataFrame, m: int,
 _MARGIN_SAMPLE = 65536
 
 #: the meta row's schema (one row per index). ``adc_margin`` is the
-#: ADC-cosine error bound; ``base_distinct`` marks an index whose
-#: cell-partitioned base tables are guaranteed duplicate-free (fresh
-#: round-9+ builds — see ``build_ivfpq_index``), letting probes skip
-#: their replay-duplicate guards when no tail exists.
-#: ``margin_certified`` is true only when ``adc_margin`` was measured
-#: over every indexed vector (``margin_rows=None`` builds,
+#: ADC-cosine error bound. ``base_distinct`` (the cell-partitioned base
+#: tables are duplicate-free — see ``build_ivfpq_index``), ``bucket_v``
+#: (= 2, the strided sign quantizer) and ``v_sorted`` (the float base
+#: is vec_id-sorted within cells) are constant for the one layout this
+#: module writes; ``_probe_state`` refuses an index whose row says
+#: otherwise. ``margin_certified`` is true only when ``adc_margin`` was
+#: measured over every indexed vector (``margin_rows=None`` builds,
 #: ``remeasure_adc_margin(sample_rows=None)``) — a sampled max is
 #: statistical, and only a certified bound may arm the exact re-rank's
 #: banded gather (``band_armed``).
@@ -653,6 +648,16 @@ _META_SCHEMA = (
     "base_distinct boolean, bucket_v int, v_sorted boolean, "
     "margin_certified boolean"
 )
+_META_COLS = [c.split()[0] for c in _META_SCHEMA.split(", ")]
+
+
+def _meta_frame(spark: SparkSession, m: int, k: int, n_buckets: int,
+                adc_margin: float, margin_certified: bool) -> DataFrame:
+    """The one-row meta frame of the current layout."""
+    return spark.createDataFrame(
+        [(m, k, n_buckets, adc_margin, True, 2, True, margin_certified)],
+        _META_SCHEMA,
+    )
 
 
 def _unit_residual_max(rows: DataFrame, codebook: DataFrame, m: int,
@@ -778,34 +783,26 @@ def _unit_residual_max(rows: DataFrame, codebook: DataFrame, m: int,
 
 def band_armed(st: dict) -> bool:
     """Whether the exact re-rank of an index with serving state ``st``
-    (``_probe_state``) takes the margin-band deferred float gather: the
-    float base is vec_id-sorted within cells, and the ADC margin is
-    certified over every indexed vector and narrow enough to be useful.
-    A sampled margin never arms it — an unsampled vector can exceed a
-    sampled max, and the banded gather would then drop a true top-k
-    member (see ``ivfpq_probe``)."""
-    return (
-        st["v_sorted"]
-        and st["margin_certified"]
-        and st["adc_margin"] is not None
-        and st["adc_margin"] < BAND_MARGIN_MAX
-    )
+    (``_probe_state``) takes the margin-band deferred float gather over
+    its vec_id-sorted float base: the ADC margin is certified over
+    every indexed vector and narrow enough to be useful. A sampled
+    margin never arms it — an unsampled vector can exceed a sampled
+    max, and the banded gather would then drop a true top-k member (see
+    ``ivfpq_probe``)."""
+    return st["margin_certified"] and st["adc_margin"] < BAND_MARGIN_MAX
 
 
-def stored_adc_margin(spark: SparkSession, table: str) -> float | None:
-    """The index's certified ADC error bound, or ``None`` for indexes
-    persisted before the bound existed (rebuild to certify). Served
-    from the per-table state cache — in-process mutators (extend's
-    drift widening, ``remeasure_adc_margin``) update it, so a
-    long-lived gate re-reading per cycle pays no per-cycle action."""
+def stored_adc_margin(spark: SparkSession, table: str) -> float:
+    """The index's ADC error bound. Served from the per-table state
+    cache — in-process mutators (extend's drift widening,
+    ``remeasure_adc_margin``) update it, so a long-lived gate
+    re-reading per cycle pays no per-cycle action."""
     return _probe_state(spark, table)["adc_margin"]
 
 
 def _rewrite_meta(spark: SparkSession, table: str, m: int, k: int,
-                  n_buckets: int, adc_margin: float | None,
-                  base_distinct: bool, bucket_v: int = 1,
-                  v_sorted: bool = False,
-                  margin_certified: bool = False) -> None:
+                  n_buckets: int, adc_margin: float,
+                  margin_certified: bool) -> None:
     """Replace the one-row meta table, crash-safe (ADVICE r8): the new
     row is durably written to a ``__staged`` sidecar BEFORE the live
     table is dropped, so no crash point loses the metadata — a crash
@@ -819,11 +816,8 @@ def _rewrite_meta(spark: SparkSession, table: str, m: int, k: int,
     mt = _meta_table(table)
     staged = f"{mt}__staged"
     drop_table_and_location(spark, staged)
-    spark.createDataFrame(
-        [(m, k, n_buckets, adc_margin, base_distinct, bucket_v,
-          v_sorted, margin_certified)],
-        _META_SCHEMA,
-    ).write.format("parquet").saveAsTable(staged)
+    _meta_frame(spark, m, k, n_buckets, adc_margin, margin_certified) \
+        .write.format("parquet").saveAsTable(staged)
     drop_table_and_location(spark, mt)
     spark.table(staged).write.format("parquet").saveAsTable(mt)
     drop_table_and_location(spark, staged)
@@ -879,7 +873,7 @@ def remeasure_adc_margin(
     staged sidecar (``_rewrite_meta``); a crash mid-rewrite is healed
     here or at attach time (``_recover_meta``)."""
     _recover_meta(spark, table)
-    meta = spark.table(_meta_table(table)).first()
+    st = _probe_state(spark, table)
     rows = spark.table(table)
     if spark.catalog.tableExists(_tail_table(table)):
         # vectors extended since the last compaction live in the tail
@@ -890,28 +884,10 @@ def remeasure_adc_margin(
         rows = rows.filter(F.pmod(F.hash("vec_id"), F.lit(ratio)) == 0)
         n = min(n, sample_rows)
     margin = _unit_residual_max(
-        rows, spark.table(_codebook_table(table)), int(meta["m"]),
-        n_rows=n,
+        rows, spark.table(_codebook_table(table)), st["m"], n_rows=n,
     )
-    base_distinct = (
-        bool(meta["base_distinct"])
-        if "base_distinct" in meta.__fields__
-        and meta["base_distinct"] is not None
-        else False
-    )
-    bucket_v = (
-        int(meta["bucket_v"])
-        if "bucket_v" in meta.__fields__ and meta["bucket_v"] is not None
-        else 1
-    )
-    v_sorted = (
-        bool(meta["v_sorted"])
-        if "v_sorted" in meta.__fields__ and meta["v_sorted"] is not None
-        else False
-    )
-    _rewrite_meta(spark, table, int(meta["m"]), int(meta["k"]),
-                  int(meta["n_buckets"]), margin, base_distinct,
-                  bucket_v, v_sorted, margin_certified=sample_rows is None)
+    _rewrite_meta(spark, table, st["m"], st["k"], st["n_buckets"],
+                  margin, margin_certified=sample_rows is None)
     _refresh(spark, table)
     return margin
 
@@ -926,7 +902,6 @@ def build_ivfpq_index(
     iters: int = 2,
     train_rows: int | None = None,
     margin_rows: int | None = None,
-    bucket_version: int = 2,
     split_factor: int | None = CELL_SPLIT_FACTOR,
 ) -> None:
     """Train the PQ codebook and materialize all five tables
@@ -961,13 +936,7 @@ def build_ivfpq_index(
     bound is then only statistical until a full
     ``remeasure_adc_margin`` certifies it, adc-gated callers should
     treat decisions near the threshold accordingly, and the exact
-    re-rank keeps the classic gather (``band_armed``).
-
-    ``bucket_version`` is a compat hook (tests only): 1 writes the
-    pre-round-9 leading-bits cell layout so the version-dispatch path
-    (probes/extends of legacy persisted indexes) stays covered;
-    production builds keep the strided default (see
-    ``similarity.bucket_expr``)."""
+    re-rank keeps the classic gather (``band_armed``)."""
     n = embeddings.count()
     if n_buckets is None:
         n_buckets = auto_n_buckets(n)
@@ -992,7 +961,7 @@ def build_ivfpq_index(
         .format("parquet")
         .saveAsTable(_codebook_table(table))
     )
-    rows = _bucketed(embeddings, n_buckets, bucket_version)
+    rows = _bucketed(embeddings, n_buckets)
     if split_factor is not None:
         # mega-cell sub-split (see CELL_SPLIT_FACTOR): both
         # cell-partitioned tables get the SAME remap (rows carries it
@@ -1067,16 +1036,10 @@ def build_ivfpq_index(
     # the cell-partitioned base, extends go to the tail sidecars, and
     # the round-9 fold anti-joins before appending — so the base STAYS
     # duplicate-free for the index's lifetime and probes can skip their
-    # replay-duplicate guards whenever no tail exists. Indexes persisted
-    # before this marker keep the guards (see ``_probe_state``).
-    meta = spark.createDataFrame(
-        [(m, k, n_buckets, margin, True, bucket_version, True,
-          margin_rows is None)],
-        _META_SCHEMA,
-    )
-    meta.write.mode("overwrite").format("parquet").saveAsTable(
-        _meta_table(table)
-    )
+    # replay-duplicate guards whenever no tail exists.
+    _meta_frame(spark, m, k, n_buckets, margin, margin_rows is None) \
+        .write.mode("overwrite").format("parquet") \
+        .saveAsTable(_meta_table(table))
     _refresh(spark, table)
 
 
@@ -1086,16 +1049,12 @@ def attach_ivfpq_index(spark: SparkSession, table: str) -> None:
     forgets ``saveAsTable`` registrations across sessions, so a probe/
     extend server that restarts — or the decade-4 measurement probing
     an index a previous session built — needs this before
-    ``ivfpq_probe`` / ``extend_ivfpq_index``. Cell-partitioned codes/
-    float tables recover their partitions (pruning intact); bucketed
-    tables (ids always; codes/floats on the legacy pre-r6 layout,
-    sniffed from the directory) re-declare their original bucket spec
-    from the meta row so bucketed *extends* still append. Idempotent;
-    no-op per table already in the catalog."""
-    from trignis_spark.maintenance import (
-        attach_table,
-        warehouse_dir_partitioned,
-    )
+    ``ivfpq_probe`` / ``extend_ivfpq_index``. Every table attaches
+    plain; the cell-partitioned codes/float tables recover their
+    partitions (pruning intact). The attached index is then opened
+    (``_probe_state``), so one of an earlier layout is refused here.
+    Idempotent; no-op per table already in the catalog."""
+    from trignis_spark.maintenance import attach_table
 
     _drop_state(spark, table)
     try:
@@ -1104,24 +1063,15 @@ def attach_ivfpq_index(spark: SparkSession, table: str) -> None:
         # a crashed meta rewrite may have left only the staged sidecar
         if not _recover_meta(spark, table):
             raise
-    nb = int(spark.table(_meta_table(table)).first()["n_buckets"])
-    attach_table(spark, _codebook_table(table))
-    # the ids sidecar attaches PLAIN (unbucketed by design since round
-    # 8 — consumers are broadcast anti-joins that never read a spec; a
-    # legacy bucketed sidecar's files are ordinary parquet and read
-    # identically, and later appends/compactions then migrate it)
-    attach_table(spark, _ids_table(table))
-    for name in (table, _codes_table(table)):
-        if warehouse_dir_partitioned(spark, name, "bucket"):
-            attach_table(spark, name)
-        else:
-            attach_table(spark, name, bucket_cols=["bucket"],
-                         n_buckets=nb)
+    for name in (_codebook_table(table), _ids_table(table), table,
+                 _codes_table(table)):
+        attach_table(spark, name)
     for name in (_tail_table(table), _tail_codes_table(table)):
         try:
             attach_table(spark, name)
         except FileNotFoundError:
             pass  # no un-folded tail — nothing extended since compact
+    _probe_state(spark, table)
 
 
 def extend_ivfpq_index(
@@ -1137,142 +1087,77 @@ def extend_ivfpq_index(
     known = spark.table(_ids_table(table))
     fresh_src = embeddings if assume_fresh \
         else batch_anti_join(embeddings, known, "vec_id")
-    rows = _bucketed(fresh_src, st["n_buckets"],
-                     st["bucket_v"]).localCheckpoint(eager=True)
+    rows = _bucketed(fresh_src, st["n_buckets"]).localCheckpoint(
+        eager=True
+    )
     added = rows.count()
     if added == 0:
         return 0
     codebook = spark.table(_codebook_table(table))
     # encode off the checkpointed bucketed rows (no corpus-parallelism
-    # repartition — an extend batch is poll-cycle-sized); the layout
-    # must follow the stored table: wide (current) or narrow (legacy
-    # persisted indexes, whose appends must keep the stored schema)
-    wide = st["wide"]
-    if not wide:
-        codes = assign_codes(
-            split_v(rows, st["m"], carry=("bucket",)), codebook,
-            carry=("bucket",),
-        ).select("vec_id", "sub", F.col("cid").alias("code"), "bucket")
-    else:
-        # checkpoint the encoded batch: the consumers below (margin
-        # check, tail append) would otherwise EACH re-run the Arrow
-        # encode — and the tail's coalesce(1) would re-run it on a
-        # single task (measured 8 s of the extend at 2 M × 768 for a
-        # 600-row batch vs 0.5 s writing materialized rows)
-        codes = _wide_codes(rows, codebook, st["m"]).localCheckpoint(
-            eager=True
-        )
-        # the build certified adc_margin on ITS corpus; a batch from a
-        # drifted distribution can quantize worse, silently widening
-        # the true ADC error past the stored bound — check the batch
-        # (batch-sized reconstruction, free next to the appends) and
-        # WIDEN the stored margin to cover it (ADVICE r8: a warning
-        # alone left adc-gated callers using the stale narrower bound
-        # — silent correctness degradation in the exact mode the
-        # margin protects). The gate re-reads the margin per cycle via
-        # ``stored_adc_margin`` and tightens its threshold to match.
-        cert = st["adc_margin"]
-        if cert is not None:
-            got = _unit_residual_max(rows, codebook, st["m"],
-                                     codes=codes, n_rows=added)
-            if got > cert:
-                import warnings
+    # repartition — an extend batch is poll-cycle-sized), and
+    # checkpoint the encoded batch: the consumers below (margin check,
+    # tail append) would otherwise EACH re-run the Arrow encode — and
+    # the tail's coalesce(1) would re-run it on a single task (measured
+    # 8 s of the extend at 2 M × 768 for a 600-row batch vs 0.5 s
+    # writing materialized rows)
+    codes = _wide_codes(rows, codebook, st["m"]).localCheckpoint(
+        eager=True
+    )
+    # the build certified adc_margin on ITS corpus; a batch from a
+    # drifted distribution can quantize worse, silently widening the
+    # true ADC error past the stored bound — check the batch
+    # (batch-sized reconstruction, free next to the appends) and WIDEN
+    # the stored margin to cover it (ADVICE r8: a warning alone left
+    # adc-gated callers using the stale narrower bound — silent
+    # correctness degradation in the exact mode the margin protects).
+    # The gate re-reads the margin per cycle via ``stored_adc_margin``
+    # and tightens its threshold to match.
+    cert = st["adc_margin"]
+    got = _unit_residual_max(rows, codebook, st["m"], codes=codes,
+                             n_rows=added)
+    if got > cert:
+        import warnings
 
-                # a full measurement of the batch over a certified
-                # corpus bound keeps the widened bound certified
-                _rewrite_meta(spark, table, st["m"], st["k"],
-                              st["n_buckets"], got, st["base_distinct"],
-                              st["bucket_v"], st["v_sorted"],
-                              st["margin_certified"])
-                st = _probe_state(spark, table)
-                warnings.warn(
-                    f"extend_ivfpq_index({table}): batch residual "
-                    f"{got:.4f} exceeds the certified adc_margin "
-                    f"{cert:.4f} — stored margin widened to {got:.4f} "
-                    "so ADC-gated callers (precision='adc') stay "
-                    "sound; their effective thresholds tighten "
-                    "accordingly (rebuild with finer PQ to restore "
-                    "the old bound)"
-                )
-    tail_route = wide and st["cell_partitioned"]
-    if tail_route:
-        # current layout: append to the write-optimized TAIL sidecars
-        # — ONE plain file and ONE commit per table per poll cycle. A
-        # direct append to the cell-partitioned tables is metadata-
-        # bound, not data-bound: a 600-row batch scatters over ~515
-        # cells and each partitionBy append costs ~5.5 s of per-
-        # partition-dir commit work against 0.3 s for a plain file
-        # (measured at the 2 M × 768 index, round 8) — ~11 s/cycle of
-        # pure commit tax a 30 s poll loop pays forever. Probes read
-        # base ∪ tail (the tail is cycle-sized); compact_ivfpq_index
-        # folds the tail into the partitioned layout on the
-        # maintenance cadence, amortizing the metadata cost over many
-        # cycles — the LSM shape: write-optimized tail, read-optimized
-        # base.
-        for df, name in ((rows, _tail_table(table)),
-                         (codes, _tail_codes_table(table))):
-            (
-                df.coalesce(1)
-                .write.mode("append")
-                .format("parquet")
-                .saveAsTable(name)
-            )
-    else:
-        # legacy layouts (narrow codes and/or bucketed cells): append
-        # directly with each table's own stored spec — a partitionBy
-        # append onto a bucketed table is rejected and vice versa
-        for df, name in ((rows, table), (codes, _codes_table(table))):
-            if _cell_partitioned(spark, name):
-                (
-                    df.repartition("bucket")
-                    .write.mode("append")
-                    .partitionBy("bucket")
-                    .format("parquet")
-                    .saveAsTable(name)
-                )
-            else:
-                (
-                    df.repartition(st["n_buckets"], "bucket")
-                    .write.mode("append")
-                    .bucketBy(st["n_buckets"], "bucket")
-                    .format("parquet")
-                    .saveAsTable(name)
-                )
-    ids = rows.select("vec_id")
-    if st["ids_bucketed"]:
-        # legacy bucketed ids sidecar: keep its spec, co-partitioned
-        # so the append cuts one file per present bucket, not
-        # tasks × buckets
-        (
-            ids.repartition(
-                min(st["n_buckets"],
-                    4 * spark.sparkContext.defaultParallelism),
-                "vec_id",
-            )
-            .write.mode("append")
-            .bucketBy(st["n_buckets"], "vec_id")
-            .format("parquet")
-            .saveAsTable(_ids_table(table))
+        # a full measurement of the batch over a certified corpus
+        # bound keeps the widened bound certified
+        _rewrite_meta(spark, table, st["m"], st["k"], st["n_buckets"],
+                      got, st["margin_certified"])
+        st = _probe_state(spark, table)
+        warnings.warn(
+            f"extend_ivfpq_index({table}): batch residual "
+            f"{got:.4f} exceeds the certified adc_margin "
+            f"{cert:.4f} — stored margin widened to {got:.4f} "
+            "so ADC-gated callers (precision='adc') stay "
+            "sound; their effective thresholds tighten "
+            "accordingly (rebuild with finer PQ to restore "
+            "the old bound)"
         )
-    else:
-        # plain ids sidecar (current): one file per cycle
-        ids.coalesce(1).write.mode("append").format("parquet") \
-            .saveAsTable(_ids_table(table))
-    # refresh ONLY what this extend touched: on the tail route the
-    # cell-partitioned base tables did not change, and invalidating
-    # them would evict a `cache_index`-pinned serving cache (the
-    # ingest gate) and void the probing session's file listings for
-    # nothing — the point of the tail is that the base stays immutable
-    # between compactions
-    if tail_route:
-        changed = [_tail_table(table), _tail_codes_table(table)]
-        st["has_tail"] = True  # probes must union the tail from now on
-    else:
-        changed = [table, _codes_table(table)]
-        # base code count grew — the Arrow-dispatch estimate must not
-        # go stale across many legacy-layout appends
-        st.pop("n_codes", None)
-    for t in changed + [_ids_table(table)]:
+    # append to the write-optimized TAIL sidecars — ONE plain file and
+    # ONE commit per table per poll cycle. A direct append to the
+    # cell-partitioned tables is metadata-bound, not data-bound: a
+    # 600-row batch scatters over ~515 cells and each partitionBy
+    # append costs ~5.5 s of per-partition-dir commit work against
+    # 0.3 s for a plain file (measured at the 2 M × 768 index, round 8)
+    # — ~11 s/cycle of pure commit tax a 30 s poll loop pays forever.
+    # Probes read base ∪ tail (the tail is cycle-sized);
+    # compact_ivfpq_index folds the tail into the partitioned layout
+    # on the maintenance cadence, amortizing the metadata cost over
+    # many cycles — the LSM shape: write-optimized tail, read-optimized
+    # base. The ids sidecar is plain too: one file per cycle.
+    for df, name in ((rows, _tail_table(table)),
+                     (codes, _tail_codes_table(table)),
+                     (rows.select("vec_id"), _ids_table(table))):
+        df.coalesce(1).write.mode("append").format("parquet") \
+            .saveAsTable(name)
+    st["has_tail"] = True  # probes must union the tail from now on
+    # refresh ONLY what this extend touched: the cell-partitioned base
+    # tables did not change, and invalidating them would evict a
+    # `cache_index`-pinned serving cache (the ingest gate) and void the
+    # probing session's file listings for nothing — the point of the
+    # tail is that the base stays immutable between compactions
+    for t in (_tail_table(table), _tail_codes_table(table),
+              _ids_table(table)):
         spark.catalog.refreshTable(t)
     return added
 
@@ -1463,11 +1348,11 @@ def ivfpq_probe(
     per-table cache (``_probe_state``) — round 8 re-derived it with
     ~0.25 s of driver actions on every probe. The replay-duplicate
     guards (``dropDuplicates`` below) run only when duplicates are
-    actually possible: an un-folded tail exists (replayed extends
-    append whole duplicate rows there), or the index predates the
-    duplicate-free-base guarantee (``meta.base_distinct`` — see
-    ``build_ivfpq_index``/``fold_ivfpq_tail``); a fresh never-extended
-    index probes guard-free, two shuffles lighter.
+    actually possible — when an un-folded tail exists (replayed extends
+    append whole duplicate rows there); the base is duplicate-free by
+    construction (``build_ivfpq_index``/``fold_ivfpq_tail``), so a
+    fresh or freshly folded index probes guard-free, two shuffles
+    lighter.
 
     ``adc_impl`` selects the candidate-scoring engine on the wide
     layout: ``"expr"`` is the decimal expression fold (every pinned
@@ -1507,9 +1392,6 @@ def ivfpq_probe(
     st = _probe_state(spark, table)
     m, n_buckets = st["m"], st["n_buckets"]
     has_tail = st["has_tail"]
-    needs_guard = has_tail or not (
-        st["wide"] and st["cell_partitioned"] and st["base_distinct"]
-    )
     # margin-band deferred float gather (round 12, VERDICT r11 #4):
     # when the index certifies a *useful* ADC error bound and its float
     # base is vec_id-sorted within cells, the re-rank collects the
@@ -1535,8 +1417,7 @@ def ivfpq_probe(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("n2").alias("qn2"),
-        F.expr(_bucket_expr("v", n_buckets, st["bucket_v"]))
-        .alias("home"),
+        F.expr(bucket_expr("v", n_buckets)).alias("home"),
     )
     flips = [F.col("home")] + [
         F.col("home").bitwiseXOR(F.lit(1 << i))
@@ -1578,392 +1459,346 @@ def ivfpq_probe(
         )
     )
     codes = spark.table(_codes_table(table))
-    # stage-3 re-rank dispatch reads this even on the narrow legacy
-    # layout, whose candidate scoring has no Arrow twin
-    use_arrow = False
-    if "sub" not in codes.columns:
-        # wide layout (current): one (vec_id, codes ARRAY<INT>, bucket)
-        # row per vector. The per-query LUT flattens to one
-        # (sub, code)-ordered array riding the broadcast cell fan-out,
-        # and the ADC sum computes INSIDE the candidate projection — no
-        # per-(query, vec, sub) join fan, no m-row groupBy: the narrow
-        # layout shuffled ~195 M rows twice at the 20 M-vector decade-4
-        # probe. The decimal left-fold equals the narrow SUM(DECIMAL)
-        # exactly (decimal addition is exact), so results are
-        # bit-identical and the oracle replays unchanged.
-        #
-        # The flattened-LUT stride is the number of codes PER SUBSPACE
-        # in the codebook the index actually has — not meta's requested
-        # ``k`` (ADVICE r7): a corpus smaller than k trains a short
-        # codebook (``init_codebook`` seeds min(N, k) centroids), and
-        # indexing ``lut[s*k + cd]`` with the requested k against a
-        # short LUT silently misreads other subspaces' partials. Derive
-        # it from the codebook (a one-row agg over an m·k-row table)
-        # and assert the density the stride arithmetic assumes: every
-        # sub carries the same count of dense codes 0..kk-1. Cached
-        # per table — the codebook is frozen after build, so the
-        # validated density never changes.
-        kk = st["kk"]
-        if kk is None:
-            d = (
-                codebook.groupBy("sub")
-                .agg(
-                    F.countDistinct("cid").alias("n"),
-                    (F.max("cid") + F.lit(1)).alias("span"),
-                )
-                .agg(
-                    F.min("n").alias("lo"),
-                    F.max("n").alias("hi"),
-                    F.max("span").alias("span"),
-                )
-                .first()
+    # wide layout: one (vec_id, codes ARRAY<INT>, bucket) row per
+    # vector. The per-query LUT flattens to one (sub, code)-ordered
+    # array riding the broadcast cell fan-out, and the ADC sum
+    # computes INSIDE the candidate projection — no per-(query, vec,
+    # sub) join fan, no m-row groupBy: a narrow layout shuffled ~195 M
+    # rows twice at the 20 M-vector decade-4 probe. The decimal
+    # left-fold equals a SUM(DECIMAL) over the (sub, code) partials
+    # exactly (decimal addition is exact), so the oracle replays it
+    # bit-for-bit.
+    #
+    # The flattened-LUT stride is the number of codes PER SUBSPACE
+    # in the codebook the index actually has — not meta's requested
+    # ``k`` (ADVICE r7): a corpus smaller than k trains a short
+    # codebook (``init_codebook`` seeds min(N, k) centroids), and
+    # indexing ``lut[s*k + cd]`` with the requested k against a
+    # short LUT silently misreads other subspaces' partials. Derive
+    # it from the codebook (a one-row agg over an m·k-row table)
+    # and assert the density the stride arithmetic assumes: every
+    # sub carries the same count of dense codes 0..kk-1. Cached
+    # per table — the codebook is frozen after build, so the
+    # validated density never changes.
+    kk = st["kk"]
+    if kk is None:
+        d = (
+            codebook.groupBy("sub")
+            .agg(
+                F.countDistinct("cid").alias("n"),
+                (F.max("cid") + F.lit(1)).alias("span"),
             )
-            if d["lo"] != d["hi"] or d["hi"] != d["span"]:
-                raise ValueError(
-                    f"ivfpq_probe: codebook of {table} is not dense — "
-                    f"per-sub code counts span [{d['lo']}, {d['hi']}] "
-                    f"with max code {d['span'] - 1}; the wide-layout "
-                    "ADC stride requires a uniform dense codebook"
-                )
-            st["kk"] = kk = int(d["hi"])
-        lut_flat = lut.groupBy("query_id").agg(
-            F.expr(
-                "transform(array_sort(collect_list("
-                "struct(sub, code, pdot))), t -> t.pdot)"
-            ).alias("lut")
+            .agg(
+                F.min("n").alias("lo"),
+                F.max("n").alias("hi"),
+                F.max("span").alias("span"),
+            )
+            .first()
         )
-        # query-independent reconstruction-norm LUT (same flat
-        # (sub, code) order as ``lut``): |x̂|² = Σ_s |cvec_{s,c_s}|²
-        # — the denominator of the quantized cosine comes from the
-        # broadcast codebook, never the float table
-        nlut_flat = None
-        if carry:
-            nlut_flat = (
-                codebook.select(
-                    "sub", "cid",
-                    F.expr(
-                        "aggregate(cvec, CAST(0.0 AS DOUBLE), "
-                        "(acc, x) -> acc + x * x)"
-                    ).alias("nrm"),
-                )
-                .agg(
-                    F.expr(
-                        "transform(array_sort(collect_list("
-                        "struct(sub, cid, nrm))), t -> t.nrm)"
-                    ).alias("nlut")
-                )
+        if d["lo"] != d["hi"] or d["hi"] != d["span"]:
+            raise ValueError(
+                f"ivfpq_probe: codebook of {table} is not dense — "
+                f"per-sub code counts span [{d['lo']}, {d['hi']}] "
+                f"with max code {d['span'] - 1}; the wide-layout "
+                "ADC stride requires a uniform dense codebook"
             )
-        # --- scoring-engine dispatch (see docstring): bit-identical
-        # paths, chosen on estimated fold elements = candidates × m
-        use_arrow = adc_impl == "arrow"
-        per_q = nq_cap = None
-        # LUT driver-collect budget, in query rows (see
-        # ADC_LUT_BROADCAST_BYTES): past this the Arrow path would
-        # OOM the driver — fall back to the expression fold's Spark
-        # broadcast, which fails loudly at its own limit
-        budget_rows = ADC_LUT_BROADCAST_BYTES // (m * kk * 8)
-        if adc_impl != "expr":
-            n_codes = st.get("n_codes")
-            if n_codes is None:
-                st["n_codes"] = n_codes = spark.table(
-                    _codes_table(table)
+        st["kk"] = kk = int(d["hi"])
+    lut_flat = lut.groupBy("query_id").agg(
+        F.expr(
+            "transform(array_sort(collect_list("
+            "struct(sub, code, pdot))), t -> t.pdot)"
+        ).alias("lut")
+    )
+    # query-independent reconstruction-norm LUT (same flat
+    # (sub, code) order as ``lut``): |x̂|² = Σ_s |cvec_{s,c_s}|²
+    # — the denominator of the quantized cosine comes from the
+    # broadcast codebook, never the float table
+    nlut_flat = None
+    if carry:
+        nlut_flat = (
+            codebook.select(
+                "sub", "cid",
+                F.expr(
+                    "aggregate(cvec, CAST(0.0 AS DOUBLE), "
+                    "(acc, x) -> acc + x * x)"
+                ).alias("nrm"),
+            )
+            .agg(
+                F.expr(
+                    "transform(array_sort(collect_list("
+                    "struct(sub, cid, nrm))), t -> t.nrm)"
+                ).alias("nlut")
+            )
+        )
+    # --- scoring-engine dispatch (see docstring): bit-identical
+    # paths, chosen on estimated fold elements = candidates × m
+    use_arrow = adc_impl == "arrow"
+    per_q = nq_cap = None
+    # LUT driver-collect budget, in query rows (see
+    # ADC_LUT_BROADCAST_BYTES): past this the Arrow path would
+    # OOM the driver — fall back to the expression fold's Spark
+    # broadcast, which fails loudly at its own limit
+    budget_rows = ADC_LUT_BROADCAST_BYTES // (m * kk * 8)
+    if adc_impl != "expr":
+        n_codes = st.get("n_codes")
+        if n_codes is None:
+            st["n_codes"] = n_codes = spark.table(
+                _codes_table(table)
+            ).count()
+        per_q = max(
+            1, n_codes * max(1, nprobe) // max(1, n_buckets)
+        ) * m
+        if adc_impl == "auto":
+            if per_q >= ADC_ARROW_MIN_WORK:
+                use_arrow = True
+            elif per_q * _ADC_ASSUMED_MAX_BATCH >= ADC_ARROW_MIN_WORK:
+                # LocalLimit-bounded row probe, never a full
+                # count: this sits on the poll hot path and a
+                # count() re-executes the caller's whole query
+                # plan once per probe (ADVICE r10 — the same
+                # fixed per-cycle overhead class VERDICT r8 #1
+                # removed). Capping at max(arrow_rows,
+                # budget_rows)+1 answers BOTH thresholds exactly:
+                # nq ≥ arrow_rows and nq > budget_rows are each
+                # decidable from the capped value.
+                arrow_rows = -(-ADC_ARROW_MIN_WORK // per_q)
+                nq_cap = queries.limit(
+                    max(arrow_rows, budget_rows) + 1
                 ).count()
-            per_q = max(
-                1, n_codes * max(1, nprobe) // max(1, n_buckets)
-            ) * m
-            if adc_impl == "auto":
-                if per_q >= ADC_ARROW_MIN_WORK:
-                    use_arrow = True
-                elif per_q * _ADC_ASSUMED_MAX_BATCH >= ADC_ARROW_MIN_WORK:
-                    # LocalLimit-bounded row probe, never a full
-                    # count: this sits on the poll hot path and a
-                    # count() re-executes the caller's whole query
-                    # plan once per probe (ADVICE r10 — the same
-                    # fixed per-cycle overhead class VERDICT r8 #1
-                    # removed). Capping at max(arrow_rows,
-                    # budget_rows)+1 answers BOTH thresholds exactly:
-                    # nq ≥ arrow_rows and nq > budget_rows are each
-                    # decidable from the capped value.
-                    arrow_rows = -(-ADC_ARROW_MIN_WORK // per_q)
-                    nq_cap = queries.limit(
-                        max(arrow_rows, budget_rows) + 1
-                    ).count()
-                    use_arrow = nq_cap >= arrow_rows
-        if use_arrow:
-            if nq_cap is None:
-                nq_cap = queries.limit(budget_rows + 1).count()
-            if nq_cap > budget_rows:
+                use_arrow = nq_cap >= arrow_rows
+    if use_arrow:
+        if nq_cap is None:
+            nq_cap = queries.limit(budget_rows + 1).count()
+        if nq_cap > budget_rows:
+            use_arrow = False
+    qmap = nl_arr = lut_rows = None
+    if use_arrow:
+        import numpy as np
+
+        lut_rows = lut_flat.collect()
+        try:
+            qmap, maxabs = {}, 0
+            for r in lut_rows:
+                arr = _dec12_quantize(r["lut"])
+                qmap[r["query_id"]] = arr
+                if arr.size:
+                    maxabs = max(maxabs, int(np.abs(arr).max()))
+            if carry:
+                nl_arr = _dec12_quantize(nlut_flat.first()["nlut"])
+                if nl_arr.size:
+                    maxabs = max(maxabs, int(np.abs(nl_arr).max()))
+            # int64 headroom: the decimal expressions hold sums to
+            # 1e20, int64 to 9.2e18 fixed-point units — unreachable
+            # for cosine-scale partials, but fall back loudly-
+            # correctly rather than overflow silently
+            if maxabs * max(1, m) >= (1 << 62):
                 use_arrow = False
-        qmap = nl_arr = lut_rows = None
-        if use_arrow:
-            import numpy as np
+        except ValueError:  # non-finite LUT — decimal nulls apply
+            use_arrow = False
+    if use_arrow:
+        from functools import reduce
 
-            lut_rows = lut_flat.collect()
-            try:
-                qmap, maxabs = {}, 0
-                for r in lut_rows:
-                    arr = _dec12_quantize(r["lut"])
-                    qmap[r["query_id"]] = arr
-                    if arr.size:
-                        maxabs = max(maxabs, int(np.abs(arr).max()))
-                if carry:
-                    nl_arr = _dec12_quantize(nlut_flat.first()["nlut"])
-                    if nl_arr.size:
-                        maxabs = max(maxabs, int(np.abs(nl_arr).max()))
-                # int64 headroom: the decimal expressions hold sums to
-                # 1e20, int64 to 9.2e18 fixed-point units — unreachable
-                # for cosine-scale partials, but fall back loudly-
-                # correctly rather than overflow silently
-                if maxabs * max(1, m) >= (1 << 62):
-                    use_arrow = False
-            except ValueError:  # non-finite LUT — decimal nulls apply
-                use_arrow = False
-        if use_arrow:
-            from functools import reduce
+        from pyspark.sql.types import (
+            DoubleType,
+            StructField,
+            StructType,
+        )
 
-            from pyspark.sql.types import (
-                DoubleType,
-                StructField,
-                StructType,
+        # query-side hash chunks spread a skewed mega-cell's
+        # candidates over parallel scan legs (VERDICT r9 #3); the
+        # probed cell files re-scan per leg (~1 MB each — free)
+        # and the candidate UNION is identical, so downstream
+        # dedup/ranking (keyed on query_id) is unaffected
+        est = per_q * max(1, len(lut_rows))
+        chunks = min(ADC_MAX_CHUNKS, max(1, -(-est // ADC_CHUNK_WORK)))
+
+        def _cand_q(src: DataFrame, qleg: DataFrame) -> DataFrame:
+            # broadcast cell join on the *partition* column →
+            # dynamic partition pruning at the base scan
+            return (
+                src.join(F.broadcast(qleg),
+                         src["bucket"] == qleg["qbucket"])
+                .filter(F.col("vec_id") != F.col("query_id"))
             )
 
-            # query-side hash chunks spread a skewed mega-cell's
-            # candidates over parallel scan legs (VERDICT r9 #3); the
-            # probed cell files re-scan per leg (~1 MB each — free)
-            # and the candidate UNION is identical, so downstream
-            # dedup/ranking (keyed on query_id) is unaffected
-            est = per_q * max(1, len(lut_rows))
-            chunks = min(ADC_MAX_CHUNKS, max(1, -(-est // ADC_CHUNK_WORK)))
-
-            def _cand_q(src: DataFrame, qleg: DataFrame) -> DataFrame:
-                # broadcast cell join on the *partition* column →
-                # dynamic partition pruning at the base scan
-                return (
-                    src.join(F.broadcast(qleg),
-                             src["bucket"] == qleg["qbucket"])
-                    .filter(F.col("vec_id") != F.col("query_id"))
-                )
-
-            tail_src = (
-                spark.table(_tail_codes_table(table)) if has_tail
-                else None
+        tail_src = (
+            spark.table(_tail_codes_table(table)) if has_tail
+            else None
+        )
+        legs = []
+        for c in range(chunks):
+            qleg = qb if chunks == 1 else qb.filter(
+                F.pmod(F.hash("query_id"), F.lit(chunks)) == c
             )
-            legs = []
-            for c in range(chunks):
-                qleg = qb if chunks == 1 else qb.filter(
-                    F.pmod(F.hash("query_id"), F.lit(chunks)) == c
-                )
-                legs.append(_cand_q(codes, qleg))
-                if tail_src is not None:
-                    legs.append(_cand_q(tail_src, qleg))
-            cand = reduce(DataFrame.unionByName, legs)
-            # candidates stay scalar-width — no LUT rides the rows;
-            # the quantized LUTs travel once per executor as a Python
-            # broadcast instead of once per candidate row
-            cand = cand.select(
-                "query_id", "vec_id", "codes", "bucket",
-                *(["qn2"] if carry else []),
-            )
-            bq = spark.sparkContext.broadcast(qmap)
-            bn = (
-                spark.sparkContext.broadcast(nl_arr)
-                if nl_arr is not None else None
-            )
-            out_fields = [
-                StructField("query_id",
-                            cand.schema["query_id"].dataType),
-                StructField("neighbor_id",
-                            cand.schema["vec_id"].dataType),
-                StructField("adot", DoubleType()),
-                StructField("nbucket", cand.schema["bucket"].dataType),
+            legs.append(_cand_q(codes, qleg))
+            if tail_src is not None:
+                legs.append(_cand_q(tail_src, qleg))
+        cand = reduce(DataFrame.unionByName, legs)
+        # candidates stay scalar-width — no LUT rides the rows;
+        # the quantized LUTs travel once per executor as a Python
+        # broadcast instead of once per candidate row
+        cand = cand.select(
+            "query_id", "vec_id", "codes", "bucket",
+            *(["qn2"] if carry else []),
+        )
+        bq = spark.sparkContext.broadcast(qmap)
+        bn = (
+            spark.sparkContext.broadcast(nl_arr)
+            if nl_arr is not None else None
+        )
+        out_fields = [
+            StructField("query_id",
+                        cand.schema["query_id"].dataType),
+            StructField("neighbor_id",
+                        cand.schema["vec_id"].dataType),
+            StructField("adot", DoubleType()),
+            StructField("nbucket", cand.schema["bucket"].dataType),
+        ]
+        if carry:
+            out_fields += [
+                StructField("qn2", DoubleType()),
+                StructField("xq2", DoubleType()),
             ]
-            if carry:
-                out_fields += [
-                    StructField("qn2", DoubleType()),
-                    StructField("xq2", DoubleType()),
-                ]
-            mm, kk_ = m, kk
+        mm, kk_ = m, kk
 
-            def gen(batches):
-                import numpy as np
-                import pandas as pd
+        def gen(batches):
+            import numpy as np
+            import pandas as pd
 
-                lm = bq.value
-                nl = bn.value if bn is not None else None
-                step = np.arange(mm, dtype=np.int64) * kk_
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    cm = np.stack(pdf["codes"].to_numpy()).astype(
-                        np.int64, copy=False
+            lm = bq.value
+            nl = bn.value if bn is not None else None
+            step = np.arange(mm, dtype=np.int64) * kk_
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                cm = np.stack(pdf["codes"].to_numpy()).astype(
+                    np.int64, copy=False
+                )
+                offs = cm + step
+                qidx, uniq = pd.factorize(pdf["query_id"])
+                L = np.stack([lm[q] for q in uniq])
+                # (n, m) gather + exact int64 fixed-point sum = the
+                # DECIMAL fold's arithmetic, vectorized
+                sums = L[qidx[:, None], offs].sum(axis=1)
+                out = pd.DataFrame({
+                    "query_id": pdf["query_id"].to_numpy(),
+                    "neighbor_id": pdf["vec_id"].to_numpy(),
+                    "adot": _int12_to_double(sums),
+                    "nbucket": pdf["bucket"].to_numpy(),
+                })
+                if nl is not None:
+                    out["qn2"] = pdf["qn2"].to_numpy()
+                    out["xq2"] = _int12_to_double(
+                        nl[offs].sum(axis=1)
                     )
-                    offs = cm + step
-                    qidx, uniq = pd.factorize(pdf["query_id"])
-                    L = np.stack([lm[q] for q in uniq])
-                    # (n, m) gather + exact int64 fixed-point sum = the
-                    # DECIMAL fold's arithmetic, vectorized
-                    sums = L[qidx[:, None], offs].sum(axis=1)
-                    out = pd.DataFrame({
-                        "query_id": pdf["query_id"].to_numpy(),
-                        "neighbor_id": pdf["vec_id"].to_numpy(),
-                        "adot": _int12_to_double(sums),
-                        "nbucket": pdf["bucket"].to_numpy(),
-                    })
-                    if nl is not None:
-                        out["qn2"] = pdf["qn2"].to_numpy()
-                        out["xq2"] = _int12_to_double(
-                            nl[offs].sum(axis=1)
-                        )
-                    yield out
+                yield out
 
-            # reclaim the Python broadcasts deterministically (ADVICE
-            # r10): on a 30 s poll cadence a per-probe qmap broadcast
-            # otherwise lingers on the driver and executors until
-            # Python GC + ContextCleaner happen to run. ``gen`` is the
-            # only holder the result plan keeps alive, so finalizing on
-            # ITS collection unpersists exactly when no live DataFrame
-            # can re-execute the probe — never sooner (a caller
-            # re-running the returned frame still owns gen via the UDF).
-            import weakref
+        # reclaim the Python broadcasts deterministically (ADVICE
+        # r10): on a 30 s poll cadence a per-probe qmap broadcast
+        # otherwise lingers on the driver and executors until
+        # Python GC + ContextCleaner happen to run. ``gen`` is the
+        # only holder the result plan keeps alive, so finalizing on
+        # ITS collection unpersists exactly when no live DataFrame
+        # can re-execute the probe — never sooner (a caller
+        # re-running the returned frame still owns gen via the UDF).
+        import weakref
 
-            def _reclaim(*bs):
-                for b in bs:
-                    try:
-                        b.unpersist()
-                    except Exception:  # session already stopped
-                        pass
+        def _reclaim(*bs):
+            for b in bs:
+                try:
+                    b.unpersist()
+                except Exception:  # session already stopped
+                    pass
 
-            weakref.finalize(
-                gen, _reclaim, *([bq] if bn is None else [bq, bn])
-            )
-            adc = cand.mapInPandas(gen, StructType(out_fields))
-        else:
-            qbl = qb.join(lut_flat, "query_id")
-            if carry:
-                qbl = qbl.crossJoin(F.broadcast(nlut_flat))
-            # the merge must return the accumulator's exact type, and
-            # the sum type must never hit the precision-38 cap (Spark
-            # then REDUCES SCALE, rounding the 12th decimal away). A
-            # (32,12) accumulator + (30,12) addend adds exactly at
-            # (33,12); the cast back to (32,12) is lossless at these
-            # magnitudes — fixed-point addition is exact, so this
-            # equals the narrow layout's SUM(DECIMAL) bit-for-bit.
-            adot = (
-                f"CAST(aggregate(zip_with(codes, sequence(0, {m - 1}), "
-                f"(cd, s) -> element_at(lut, s * {kk} + cd + 1)), "
-                f"CAST(0 AS DECIMAL(32,12)), "
-                f"(acc, p) -> CAST(acc + CAST(p AS {_ACC}) "
-                "AS DECIMAL(32,12))) AS DOUBLE)"
-            )
-            # decimal accumulation like ``adot``: order-independent, so
-            # the DuckDB oracle's SUM(DECIMAL) over the same per-(sub,
-            # code) norms replays the reconstruction norm bit-for-bit
-            # (``ann_ivfpq_probe_adc``)
-            xq2 = (
-                f"CAST(aggregate(zip_with(codes, sequence(0, {m - 1}), "
-                f"(cd, s) -> element_at(nlut, s * {kk} + cd + 1)), "
-                f"CAST(0 AS DECIMAL(32,12)), "
-                f"(acc, p) -> CAST(acc + CAST(p AS {_ACC}) "
-                "AS DECIMAL(32,12))) AS DOUBLE)"
-            )
-
-            def _cand(src: DataFrame) -> DataFrame:
-                # broadcast cell join on the *partition* column →
-                # dynamic partition pruning at the base scan (asserted
-                # in tests/test_plans.py); the tail source is
-                # cycle-sized and scans whole
-                return (
-                    src.join(F.broadcast(qbl),
-                             src["bucket"] == qbl["qbucket"])
-                    .filter(F.col("vec_id") != F.col("query_id"))
-                )
-
-            cand = _cand(codes)
-            if has_tail:
-                # per-source join then union (not union-then-join):
-                # DPP is planned per scan, and a union under the join
-                # could lose the base side's pruning
-                cand = cand.unionByName(
-                    _cand(spark.table(_tail_codes_table(table)))
-                )
-            adc = (
-                cand
-                .select(
-                    "query_id",
-                    F.col("vec_id").alias("neighbor_id"),
-                    F.expr(adot).alias("adot"),
-                    # a vector lives in exactly one cell; carrying it
-                    # lets the exact re-rank prune the float table's
-                    # partitions
-                    F.col("bucket").alias("nbucket"),
-                    *(
-                        ["qn2", F.expr(xq2).alias("xq2")]
-                        if carry
-                        else []
-                    ),
-                )
-            )
-        if needs_guard:
-            # replayed extend appends duplicate whole rows — within
-            # the tail or across a compaction-crash fold window; a
-            # vector must not surface at two shortlist ranks (same
-            # guard as dedup_index — which row survives is immaterial:
-            # duplicate rows carry identical codes, so they project to
-            # identical ADC sums). Deduping AFTER the projection keeps
-            # the guard shuffle at scalar width — before it every
-            # candidate row still carried the broadcast per-query LUT
-            # array (~m·kk doubles; +the norm LUT in rerank-free mode),
-            # ~8 KB/row through the exchange, measured 15.5 s → the
-            # projected form at the 100 k × 768 parity smoke. Skipped
-            # entirely when the base is duplicate-free by construction
-            # and no tail exists (see docstring).
-            adc = adc.dropDuplicates(["query_id", "neighbor_id"])
-        if not rerank:
-            adc = adc.withColumn(
-                "cos", F.col("adot") / F.sqrt(F.col("qn2") * F.col("xq2"))
-            )
+        weakref.finalize(
+            gen, _reclaim, *([bq] if bn is None else [bq, bn])
+        )
+        adc = cand.mapInPandas(gen, StructType(out_fields))
     else:
-        # narrow legacy layout: (vec_id, sub, code, bucket) rows
-        if not rerank:
-            # per-(sub, code) reconstruction norms ride the broadcast
-            # LUT; their sum per candidate is |x̂|²
-            lut = lut.join(
-                F.broadcast(
-                    codebook.select(
-                        "sub", F.col("cid").alias("code"),
-                        F.expr(
-                            "aggregate(cvec, CAST(0.0 AS DOUBLE), "
-                            "(acc, x) -> acc + x * x)"
-                        ).alias("pn"),
-                    )
-                ),
-                ["sub", "code"],
+        qbl = qb.join(lut_flat, "query_id")
+        if carry:
+            qbl = qbl.crossJoin(F.broadcast(nlut_flat))
+        # the merge must return the accumulator's exact type, and
+        # the sum type must never hit the precision-38 cap (Spark
+        # then REDUCES SCALE, rounding the 12th decimal away). A
+        # (32,12) accumulator + (30,12) addend adds exactly at
+        # (33,12); the cast back to (32,12) is lossless at these
+        # magnitudes — fixed-point addition is exact, so this
+        # equals the oracle's SUM(DECIMAL) bit-for-bit.
+        adot = (
+            f"CAST(aggregate(zip_with(codes, sequence(0, {m - 1}), "
+            f"(cd, s) -> element_at(lut, s * {kk} + cd + 1)), "
+            f"CAST(0 AS DECIMAL(32,12)), "
+            f"(acc, p) -> CAST(acc + CAST(p AS {_ACC}) "
+            "AS DECIMAL(32,12))) AS DOUBLE)"
+        )
+        # decimal accumulation like ``adot``: order-independent, so
+        # the DuckDB oracle's SUM(DECIMAL) over the same per-(sub,
+        # code) norms replays the reconstruction norm bit-for-bit
+        # (``ann_ivfpq_probe_adc``)
+        xq2 = (
+            f"CAST(aggregate(zip_with(codes, sequence(0, {m - 1}), "
+            f"(cd, s) -> element_at(nlut, s * {kk} + cd + 1)), "
+            f"CAST(0 AS DECIMAL(32,12)), "
+            f"(acc, p) -> CAST(acc + CAST(p AS {_ACC}) "
+            "AS DECIMAL(32,12))) AS DOUBLE)"
+        )
+
+        def _cand(src: DataFrame) -> DataFrame:
+            # broadcast cell join on the *partition* column →
+            # dynamic partition pruning at the base scan (asserted
+            # in tests/test_plans.py); the tail source is
+            # cycle-sized and scans whole
+            return (
+                src.join(F.broadcast(qbl),
+                         src["bucket"] == qbl["qbucket"])
+                .filter(F.col("vec_id") != F.col("query_id"))
+            )
+
+        cand = _cand(codes)
+        if has_tail:
+            # per-source join then union (not union-then-join):
+            # DPP is planned per scan, and a union under the join
+            # could lose the base side's pruning
+            cand = cand.unionByName(
+                _cand(spark.table(_tail_codes_table(table)))
             )
         adc = (
-            codes.join(F.broadcast(qb), codes["bucket"] == qb["qbucket"])
-            .filter(F.col("vec_id") != F.col("query_id"))
-            # duplicate (vec_id, sub) rows would double-count the ADC
-            # sum below, corrupting shortlist ranking
-            .dropDuplicates(["query_id", "vec_id", "sub"])
-            .join(F.broadcast(lut), ["query_id", "sub", "code"])
-            .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-            .agg(
-                F.sum(F.col("pdot").cast(_ACC)).cast("double")
-                .alias("adot"),
-                F.max("bucket").alias("nbucket"),
+            cand
+            .select(
+                "query_id",
+                F.col("vec_id").alias("neighbor_id"),
+                F.expr(adot).alias("adot"),
+                # a vector lives in exactly one cell; carrying it
+                # lets the exact re-rank prune the float table's
+                # partitions
+                F.col("bucket").alias("nbucket"),
                 *(
-                    []
-                    if rerank
-                    else [F.sum(F.col("pn").cast(_ACC)).cast("double")
-                          .alias("xq2"),
-                          F.max("qn2").alias("qn2")]
+                    ["qn2", F.expr(xq2).alias("xq2")]
+                    if carry
+                    else []
                 ),
             )
         )
-        if not rerank:
-            adc = adc.withColumn(
-                "cos", F.col("adot") / F.sqrt(F.col("qn2") * F.col("xq2"))
-            )
+    if has_tail:
+        # replayed extend appends duplicate whole rows — within
+        # the tail or across a compaction-crash fold window; a
+        # vector must not surface at two shortlist ranks (same
+        # guard as dedup_index — which row survives is immaterial:
+        # duplicate rows carry identical codes, so they project to
+        # identical ADC sums). Deduping AFTER the projection keeps
+        # the guard shuffle at scalar width — before it every
+        # candidate row still carried the broadcast per-query LUT
+        # array (~m·kk doubles; +the norm LUT in rerank-free mode),
+        # ~8 KB/row through the exchange, measured 15.5 s → the
+        # projected form at the 100 k × 768 parity smoke. Skipped
+        # entirely when no tail exists: the base is duplicate-free by
+        # construction (see docstring).
+        adc = adc.dropDuplicates(["query_id", "neighbor_id"])
+    if not rerank:
+        adc = adc.withColumn(
+            "cos", F.col("adot") / F.sqrt(F.col("qn2") * F.col("xq2"))
+        )
     if not rerank:
         wq = Window.partitionBy("query_id").orderBy(
             F.desc("cos"), F.asc("neighbor_id")
@@ -1995,8 +1830,8 @@ def ivfpq_probe(
         )
     if flo is None:
         # classic gather: broadcast the shortlist against the (cell-
-        # pruned) float scan — the path every pre-round-12 layout and
-        # every banded fallback takes
+        # pruned) float scan — the path of an index whose margin does
+        # not arm the band, and of every banded fallback
         short = ranked.select("query_id", "neighbor_id", "nbucket")
 
         def _floats(src: DataFrame) -> DataFrame:
@@ -2118,7 +1953,7 @@ def ivfpq_probe(
                 ).alias("cos"),
             )
         )
-    if needs_guard:
+    if has_tail:
         # same replay-duplicate guard for the float table: a duplicated
         # vector row would put the same neighbor at two consecutive
         # ranks (skipped with the candidate guard — same conditions)
@@ -2167,6 +2002,7 @@ def fold_ivfpq_tail(spark: SparkSession, table: str) -> int:
     fold's anti-join appends nothing twice and just drops the tail."""
     from trignis_spark.maintenance import drop_table_and_location
 
+    _probe_state(spark, table)  # refuses an index of an earlier layout
     folded = 0
     touched = False
     for tail, target in ((_tail_table(table), table),
@@ -2221,38 +2057,19 @@ def compact_ivfpq_index(spark: SparkSession, table: str) -> int:
     cadence and reserve this for when per-cell file counts have
     actually grown (crash-window semantics documented there)."""
     from trignis_spark.maintenance import (
-        compact_bucketed_table,
         compact_partitioned_table,
         compact_plain_table,
     )
 
-    meta = spark.table(_meta_table(table)).first()
-    nb = meta["n_buckets"]
-    v_sorted = (
-        bool(meta["v_sorted"])
-        if "v_sorted" in meta.__fields__ and meta["v_sorted"] is not None
-        else False
-    )
     fold_ivfpq_tail(spark, table)
-    n = 0
-    for name in (table, _codes_table(table)):
-        if _cell_partitioned(spark, name):
-            # a v_sorted float base re-sorts and keeps its bounded row
-            # groups through the rewrite (folded tail files were the
-            # unsorted part — compaction restores full prunability)
-            sort_cols = ["vec_id"] if v_sorted and name == table else None
-            opts = (
-                {"parquet.block.size": str(FLOAT_BLOCK_BYTES)}
-                if sort_cols else None
-            )
-            n += compact_partitioned_table(spark, name, "bucket",
-                                           sort_cols=sort_cols,
-                                           write_options=opts)
-        else:  # pre-partitioned-layout index — rewrite with its own spec
-            n += compact_bucketed_table(spark, name, "bucket", nb)
-    if _is_bucketed(spark, _ids_table(table)):
-        n += compact_bucketed_table(spark, _ids_table(table), "vec_id", nb)
-    else:
-        n += compact_plain_table(spark, _ids_table(table))
+    # the float base re-sorts and keeps its bounded row groups through
+    # the rewrite (folded tail files were the unsorted part —
+    # compaction restores full prunability)
+    n = compact_partitioned_table(
+        spark, table, "bucket", sort_cols=["vec_id"],
+        write_options={"parquet.block.size": str(FLOAT_BLOCK_BYTES)},
+    )
+    n += compact_partitioned_table(spark, _codes_table(table), "bucket")
+    n += compact_plain_table(spark, _ids_table(table))
     _refresh(spark, table)
     return n

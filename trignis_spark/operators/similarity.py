@@ -73,30 +73,30 @@ def _verify_broadcast_rows(dims: int) -> int:
                       VERIFY_BROADCAST_BYTES // per_row))
 
 
-def bucket_expr(vec_col: str, n_buckets: int, version: int = 2,
+def bucket_expr(vec_col: str, n_buckets: int,
                 dims: int | None = None) -> str:
     """Deterministic sign-pattern coarse-quantizer cell id (SQL text —
     the DuckDB oracles replay the same arithmetic).
 
-    ``version=2`` (round 9, the build default): bit *i* reads the sign
-    of the component at ``1 + (i·dims) div bits`` — the bits are
-    SPREAD across the whole vector. Version 1 read the LEADING
-    ``bits`` components, which degenerates on clustered corpora: on
-    the 2 M × 768 product-manifold fixture the first 96 components are
-    determined by one of 8 planted subspace centers, so ALL 2 048
-    requested cells collapsed onto ~8 realized ones (measured 300 M
-    candidate rows per 1 200-query probe instead of ~2.4 M — a 125×
-    fan-out; real embedding corpora are clustered too). Strided bits
-    draw from every region of the vector — on an isotropic corpus the
-    two versions are statistically identical, on a clustered one v2
-    keeps cell entropy. Persisted indexes record their version in the
-    meta row (``bucket_v``; absent ⇒ 1) and probes/extends dispatch on
-    it, so pre-round-9 indexes stay correct. For heavily clustered
+    Bit *i* reads the sign of the component at ``1 + (i·dims) div
+    bits`` — the bits are SPREAD across the whole vector (round 9).
+    The earlier form read the LEADING ``bits`` components, which
+    degenerates on clustered corpora: on the 2 M × 768 product-manifold
+    fixture the first 96 components are determined by one of 8 planted
+    subspace centers, so ALL 2 048 requested cells collapsed onto ~8
+    realized ones (measured 300 M candidate rows per 1 200-query probe
+    instead of ~2.4 M — a 125× fan-out; real embedding corpora are
+    clustered too). Strided bits draw from every region of the vector —
+    on an isotropic corpus the two forms are statistically identical,
+    on a clustered one the strided form keeps cell entropy. Persisted
+    indexes record it in the meta row as ``bucket_v = 2``; an index
+    without that marker holds leading-bits cells and is refused when
+    opened (``ann_index``, ``ivfpq_index``). For heavily clustered
     corpora the trained two-level quantizer (``build_ann_index_2level``)
     remains the production coarse stage; the sign pattern is the
     zero-training, oracle-replayable default.
 
-    ``dims`` (round 10): the caller-known vector width. The dynamic v2
+    ``dims`` (round 10): the caller-known vector width. The dynamic
     form evaluates ``size(vec)`` once PER BIT per row — 11 size() calls
     per row at 2 048 cells, a measured ~14–23% drag on the corpus-sized
     evaluations (VERDICT r9 #2: `ann_ivfpq_topk`'s best-of-3 drift).
@@ -110,12 +110,6 @@ def bucket_expr(vec_col: str, n_buckets: int, version: int = 2,
     import math
 
     bits = int(math.log2(n_buckets))
-    if version == 1:
-        return " + ".join(
-            f"(CASE WHEN element_at({vec_col}, {i + 1}) >= 0.0D "
-            f"THEN {1 << i} ELSE 0 END)"
-            for i in range(bits)
-        )
     if dims is not None and dims > 0:
         body = " + ".join(
             f"(CASE WHEN element_at({vec_col}, "
@@ -294,7 +288,7 @@ def ivf_topk(
     bits = int(math.log2(n_buckets))
     base = _prep(embeddings)
     # corpus-sized bucket evaluation: bind the vector width as a
-    # literal so the strided v2 positions fold at plan time instead of
+    # literal so the strided positions fold at plan time instead of
     # re-reading size(v) once per bit per row (VERDICT r9 #2)
     base = base.withColumn(
         "bucket", F.expr(bucket_expr("v", n_buckets,

@@ -430,7 +430,6 @@ def make_embedding_ingest_fn(
     *,
     cos_threshold: float = 0.95,
     nprobe: int = 2,
-    n_buckets: int | None = None,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     stats: list[EmbeddingIngestStats] | None = None,
@@ -476,7 +475,6 @@ def make_embedding_ingest_fn(
     from trignis_spark.operators import ann_index as ai
     from trignis_spark.operators import ivfpq_index as ipq
 
-    kw = {} if n_buckets is None else {"n_buckets": n_buckets}
     is_pq = spark.catalog.tableExists(f"{ann_table}_codes")
     if precision not in ("exact", "adc"):
         raise ValueError(
@@ -501,12 +499,6 @@ def make_embedding_ingest_fn(
                 f"({ann_table} has no _codes sidecar)"
             )
         margin = ipq.stored_adc_margin(spark, ann_table)
-        if margin is None:
-            raise ValueError(
-                f"precision='adc': {ann_table} predates the certified "
-                "adc_margin — rebuild the index or run "
-                "remeasure_adc_margin()"
-            )
         eff_threshold = cos_threshold - margin
         if eff_threshold <= 0:
             # a margin this wide means the quantized cosine carries no
@@ -536,7 +528,7 @@ def make_embedding_ingest_fn(
     base_cached = [False]
 
     def cache_base_unless_banded() -> None:
-        # round 12: a v_sorted index with a usable certified margin
+        # round 12: an index with a usable certified margin
         # serves the exact re-rank through the banded In-leg gather
         # (``ipq._band_floats``) — a few pushed-In rows per query, never
         # a base scan. Caching the float base would both waste the
@@ -651,7 +643,7 @@ def make_embedding_ingest_fn(
                 if is_pq
                 else ai.probe_ann_index(
                     spark, ann_table, fresh, k=1, nprobe=nprobe,
-                    include_score=True, **kw,
+                    include_score=True,
                 )
             )
             hits = (
@@ -684,7 +676,7 @@ def make_embedding_ingest_fn(
                                        assume_fresh=True)
             else:
                 ai.extend_ann_index(spark, accepted, ann_table,
-                                    assume_fresh=True, **kw)
+                                    assume_fresh=True)
             t["extend"] = time.time() - t0
             tail_rows[0] += n_acc
 
