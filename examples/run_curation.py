@@ -1,4 +1,4 @@
-"""End-to-end training-corpus curation on the streaming engine.
+"""End-to-end training-corpus curation on the poll engine.
 
 The production composition this repo exists for, in one runnable demo:
 
@@ -6,10 +6,11 @@ The production composition this repo exists for, in one runnable demo:
    (``operators/dedup_index.py`` — the v2 prefix-pruned layout: hot
    boilerplate shingles stay out of the probe table, and the verify
    scan is dynamic-partition-pruned);
-2. deliver new documents as change events through the DataSource-V2
-   outbox source and curate each micro-batch with the ingestion gate
-   (quality → exact dedup → corpus-probe → in-batch near-dup), growing
-   the index exactly-once (``streaming/ingest.py``);
+2. deliver new documents as change events through a parquet outbox:
+   each ``PollPipeline`` cycle hands its batch to a ``CurateSink``,
+   which runs the ingestion gate (quality → exact dedup → corpus-probe
+   → in-batch near-dup) and grows the index exactly-once
+   (``streaming/ingest.py``);
 3. compact the accepted store's per-epoch small files
    (``maintenance.py``);
 4. prepare training sequences from the curated corpus: context-length
@@ -32,12 +33,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from trignis_spark.config import EnvironmentConfig, TrackingObject
+from trignis_spark.deadletter import DeadLetterStore
 from trignis_spark.maintenance import ParquetCompactor
 from trignis_spark.operators import dedup_index as di
 from trignis_spark.session import get_spark
-from trignis_spark.sources.microbatch import OutboxDataSource
-from trignis_spark.sources.parquet_outbox import outbox_schema
-from trignis_spark.streaming import ingest
+from trignis_spark.sinks.curate import CurateSink
+from trignis_spark.sources.parquet_outbox import outbox_schema, read_outbox
+from trignis_spark.state import StateStore
+from trignis_spark.streaming.poller import PollPipeline
 from trignis_spark.tables import load
 
 
@@ -45,11 +49,10 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     work = tempfile.mkdtemp(prefix="trignis-curation-")
     index, outbox = "curation_demo_idx", os.path.join(work, "outbox")
-    accepted, ckpt = os.path.join(work, "accepted"), os.path.join(work, "ckpt")
+    accepted = os.path.join(work, "accepted")
 
     spark = get_spark("curation-demo", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    spark.dataSource.register(OutboxDataSource)
     docs = load(spark, sf_dir, "documents")
 
     # 1. seed the persistent index with the first half of the corpus
@@ -57,7 +60,21 @@ def main() -> int:
     di.build_prefix_index(spark, seed, index, threshold=0.5)
     print(f"index seeded: {spark.table(di._docs_table(index)).count()} docs")
 
-    # 2. the other half arrives as outbox change events, in two waves
+    # 2. the other half arrives as outbox change events, in two waves;
+    # one poll cycle curates each (a Full sync, then a Diff from the
+    # watermark), the gate's epoch id being the batch's sync version
+    sink = CurateSink("curate", index, accepted, min_quality=0.05,
+                      threshold=0.5)
+    env = EnvironmentConfig(
+        name="demo",
+        tracking_objects=(TrackingObject(name="docs", table_name="docs",
+                                         initial_sync_mode="Full"),),
+    )
+    pipe = PollPipeline(
+        spark, env, lambda s, _obj: read_outbox(s, outbox), [],
+        StateStore(os.path.join(work, "state")),
+        DeadLetterStore(os.path.join(work, "dlq")), df_sinks=[sink],
+    )
     arriving = [r.asDict() for r in
                 docs.filter("doc_id % 2 = 1").limit(60).collect()]
     for wave, lo in ((arriving[:30], 1), (arriving[30:], 31)):
@@ -68,16 +85,11 @@ def main() -> int:
         ]
         spark.createDataFrame(rows, outbox_schema()).coalesce(1) \
             .write.mode("append").parquet(outbox)
+        [res] = pipe.run_cycle()
+        if res.failures:
+            raise RuntimeError(f"curate sink failed: {res.failures}")
 
-    stats: list[ingest.IngestStats] = []
-    stream = spark.readStream.format("trignis_outbox") \
-        .option("path", outbox).option("maxversionspertrigger", "30").load()
-    q = ingest.run_ingest_stream(
-        ingest.documents_from_outbox(stream), spark, index, accepted, ckpt,
-        min_quality=0.05, threshold=0.5, stats=stats,
-    )
-    q.awaitTermination(180)
-    for s in stats:
+    for s in sink.stats:
         print(f"epoch {s.epoch_id}: arrived={s.arrived} "
               f"dup={s.exact_dup + s.corpus_near_dup + s.batch_near_dup} "
               f"low_quality={s.low_quality} accepted={s.accepted}")

@@ -102,7 +102,8 @@ def main() -> int:
     print("\n-- dead letters + replay --")
     print(f"  captured: {[(r['source_key'], r['attempts']) for r in dlq.rows()]}")
     replayer = DeadLetterReplayer(
-        dlq, {"demo": env}, sinks_for_env=lambda n: [sinks[0]]  # webhook healed → file
+        dlq, {"demo": env}, sinks_for_env=lambda n: [sinks[0]],  # webhook healed → file
+        pipeline_for_env=lambda n: pipe,
     )
     print(f"  replay: {[o.status for o in replayer.sweep()]}")
     print(f"  dlq after: {len(dlq.rows())} rows")

@@ -40,6 +40,7 @@ def rig(tmp_path):
                 self.dlq,
                 {"e1": self.env},
                 sinks_for_env=lambda name: [self.sink],
+                pipeline_for_env=lambda name: None,
                 retry=RetryPolicy(attempts=1, delay_seconds=0, sleep=lambda _: None),
             )
             self.app = create_app(

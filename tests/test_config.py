@@ -42,6 +42,22 @@ def test_duplicate_object_names():
     assert any("duplicate" in e for e in errors)
 
 
+def test_duplicate_destination_names():
+    """A dead letter's source key ``env/object/<destination>`` routes its
+    replay, so two destinations (an envelope sink and a DataFrame sink
+    included) may not share a name."""
+    mirror = SinkConfig(name="out", kind="mirror", options={
+        "path": "/m", "key_cols": ["id"], "tracked_cols": ["v"]})
+    env = _env(destinations=(
+        SinkConfig(name="out", kind="memory"), mirror,
+    ))
+    errors, _ = validate_environment(env)
+    assert errors == ["environment 'e1': duplicate destination names"]
+    renamed = _env(destinations=(SinkConfig(name="primary", kind="memory"),
+                                 mirror))
+    assert validate_environment(renamed)[0] == []
+
+
 def test_object_needs_table_or_sql():
     env = _env(tracking_objects=(TrackingObject(name="o1"),))
     errors, _ = validate_environment(env)

@@ -1,6 +1,6 @@
-"""Streaming ingestion gate: per-stage filtering, replay idempotence,
-compaction view, and an end-to-end file-stream run where the index
-persists across two stream restarts."""
+"""Ingestion gate: per-stage filtering, replay idempotence, compaction
+view, and end-to-end poll cycles over a parquet outbox where the index
+persists across a relay restart."""
 
 import logging
 import os
@@ -85,79 +85,101 @@ def test_accepted_corpus_compacts_duplicate_appends(spark, tmp_path):
     assert {r["epoch_id"] for r in compacted.collect()} == {0}  # earliest wins
 
 
-def test_stream_runs_and_index_survives_restart(spark, index, tmp_path):
-    di.build_prefix_index(
-        spark, _frame(spark, [(1, BASE)]), index, threshold=0.5
-    )
-    src = str(tmp_path / "src")
-    accepted_path = str(tmp_path / "accepted")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run_wave(rows):
-        _frame(spark, rows).coalesce(1).write.mode("append").parquet(src)
-        stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-        q = ingest.run_ingest_stream(
-            stream, spark, index, accepted_path, ckpt,
-            min_quality=0.05, threshold=0.5,
-        )
-        q.awaitTermination(120)
-
-    run_wave([(11, CLEAN_A), (12, NEAR_BASE)])  # 12 near-dups seed doc 1
-    first = {r["doc_id"] for r in spark.read.parquet(accepted_path).collect()}
-    assert first == {11}
-
-    # second stream run, fresh query, same checkpoint: only the new file
-    # is read, and the probe sees wave-1's admitted doc through the index
-    run_wave([(21, NEAR_A), (22, CLEAN_B)])  # 21 near-dups admitted doc 11
-    final = {r["doc_id"] for r in spark.read.parquet(accepted_path).collect()}
-    assert final == {11, 22}
-
-
-def test_ingest_from_dsv2_outbox_source(spark, index, tmp_path):
-    """Full closure: documents ride the outbox envelope through the
-    DataSource-V2 micro-batch source, the adapter lifts (doc_id, text)
-    from the props JSON, and the gate curates per epoch."""
+def _outbox_curation(spark, index, tmp_path):
+    """Seed the index with BASE and return ``(wave, cycle)``: ``wave``
+    appends outbox-envelope rows whose props JSON carries (doc_id, text);
+    ``cycle`` runs one ``PollPipeline`` cycle over ``read_outbox`` into a
+    fresh ``CurateSink``, with the watermark and DLQ stores under
+    ``tmp_path`` so consecutive cycles act as a restarted relay."""
+    import datetime as dt
     import json
 
-    from trignis_spark.sources.microbatch import OutboxDataSource
-    from trignis_spark.sources.parquet_outbox import outbox_schema
-    import datetime as dt
+    from trignis_spark.config import EnvironmentConfig, TrackingObject
+    from trignis_spark.deadletter import DeadLetterStore
+    from trignis_spark.sinks.base import RetryPolicy
+    from trignis_spark.sinks.curate import CurateSink
+    from trignis_spark.sources.parquet_outbox import outbox_schema, read_outbox
+    from trignis_spark.state import StateStore
+    from trignis_spark.streaming.poller import PollPipeline
 
-    spark.dataSource.register(OutboxDataSource)
     di.build_prefix_index(
         spark, _frame(spark, [(1, BASE)]), index, threshold=0.5
     )
     path = str(tmp_path / "outbox")
     accepted_path = str(tmp_path / "accepted")
-    ckpt = str(tmp_path / "ckpt")
+    env = EnvironmentConfig(
+        name="e",
+        tracking_objects=(TrackingObject(name="docs", table_name="t",
+                                         initial_sync_mode="Full"),),
+    )
 
-    def wave(start, docs_payloads):
+    def wave(start, payloads):
         rows = [
-            (
-                start + i, start + i, "I", 7, ["text"],
-                dt.datetime(2024, 1, 1), 0.0,
-                json.dumps(p) if p is not None else None,
-            )
-            for i, p in enumerate(docs_payloads)
+            (start + i, start + i, "I", 7, ["text"], dt.datetime(2024, 1, 1),
+             0.0, json.dumps(p) if p is not None else None)
+            for i, p in enumerate(payloads)
         ]
         spark.createDataFrame(rows, outbox_schema()).coalesce(1) \
             .write.mode("append").parquet(path)
 
+    def cycle():
+        sink = CurateSink("cur", index, accepted_path,
+                          min_quality=0.05, threshold=0.5)
+        [r] = PollPipeline(
+            spark, env,
+            source_fn=lambda s, o: read_outbox(s, path),
+            sinks=[], df_sinks=[sink],
+            state=StateStore(str(tmp_path / "state")),
+            dlq=DeadLetterStore(str(tmp_path / "dlq")),
+            retry=RetryPolicy(attempts=1, delay_seconds=0, sleep=lambda _: None),
+        ).run_cycle()
+        [st] = sink.stats
+        accepted = {r["doc_id"]
+                    for r in spark.read.parquet(accepted_path).collect()}
+        return (r.mode, r.exported_rows, r.new_watermark, r.failures), st, accepted
+
+    return wave, cycle
+
+
+def test_curate_cycle_lifts_documents_from_outbox_props(
+    spark, index, tmp_path
+):
+    """Documents ride the outbox envelope through a ``PollPipeline``
+    cycle over ``read_outbox`` into ``CurateSink``: the adapter lifts
+    (doc_id, text) from the props JSON, skips a None payload, and the
+    gate rejects the near-dup of a seed doc."""
+    wave, cycle = _outbox_curation(spark, index, tmp_path)
     wave(1, [
         {"doc_id": 11, "text": CLEAN_A},
         {"doc_id": 12, "text": NEAR_BASE},  # near-dup of seed doc 1
         None,                               # malformed payload: skipped
     ])
-    stream = spark.readStream.format("trignis_outbox") \
-        .option("path", path).load()
-    q = ingest.run_ingest_stream(
-        ingest.documents_from_outbox(stream),
-        spark, index, accepted_path, ckpt,
-        min_quality=0.05, threshold=0.5,
-    )
-    q.awaitTermination(120)
-    got = {r["doc_id"] for r in spark.read.parquet(accepted_path).collect()}
-    assert got == {11}
+    result, st, accepted = cycle()
+    assert result == ("full", 3, 3, [])
+    assert (st.arrived, st.corpus_near_dup, st.accepted) == (2, 1, 1)
+    assert accepted == {11}
+
+
+def test_curate_cycles_over_outbox_resume_from_the_watermark(
+    spark, index, tmp_path
+):
+    """A second pipeline over the same watermark store (a restart) reads
+    only the new rows, and the probe sees wave 1's admitted doc through
+    the index."""
+    wave, cycle = _outbox_curation(spark, index, tmp_path)
+    wave(1, [{"doc_id": 11, "text": CLEAN_A},
+             {"doc_id": 12, "text": NEAR_BASE}])  # near-dup of seed doc 1
+    result, st, accepted = cycle()
+    assert result == ("full", 2, 2, [])
+    assert accepted == {11}
+
+    wave(3, [{"doc_id": 21, "text": NEAR_A},   # near-dup of admitted doc 11
+             {"doc_id": 22, "text": CLEAN_B}])
+    result, st, accepted = cycle()
+    assert result == ("sync", 2, 4, [])  # only the new rows
+    assert (st.arrived, st.already_known, st.corpus_near_dup, st.accepted) \
+        == (2, 0, 1, 1)
+    assert accepted == {11, 22}
 
 
 def test_embedding_gate_rejects_near_dups_and_extends(spark, tmp_path):

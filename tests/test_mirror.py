@@ -190,49 +190,110 @@ def test_mirror_as_poll_df_sink(spark, sink, tmp_path):
     assert cur[1][0] == "x2" and cur[2] == ("y", "q")
 
 
-def test_mirror_as_streaming_materialized_view(spark, tmp_path):
-    """V2 stream → foreachBatch df_sink → mirror: the change stream
-    continuously maintains a queryable table, epoch by epoch."""
+class _FlakyMirror(MirrorTableSink):
+    down = False
+
+    def write_df(self, batch, ctx, metadata):
+        if self.down:
+            raise IOError("mirror down")
+        super().write_df(batch, ctx, metadata)
+
+
+def test_mirror_that_recovers_before_the_sweep_keeps_every_change(spark, tmp_path):
+    """The mirror is down for one cycle and back by the next, long before
+    the replay sweep runs. The next cycle must not apply its range over
+    the stale generation: it stretches the dead-lettered manifest, and
+    one replay applies the whole outstanding range in order."""
+    from trignis_spark.config import EnvironmentConfig, TrackingObject
+    from trignis_spark.deadletter import DeadLetterStore
+    from trignis_spark.sinks.base import RetryPolicy
+    from trignis_spark.state import StateStore
+    from trignis_spark.streaming.poller import PollPipeline
+    from trignis_spark.streaming.replay import DeadLetterReplayer
+
+    rows = [(1, 1, "I", 1, "x", "p"), (2, 2, "I", 2, "y", "q")]
+    schema = (
+        "version long, xact_id long, operation string, "
+        "id long, a string, b string"
+    )
+    env = EnvironmentConfig(
+        name="e",
+        tracking_objects=(
+            TrackingObject(name="obj", table_name="t", initial_sync_mode="Full"),
+        ),
+    )
+    mirror = _FlakyMirror("mirror", str(tmp_path / "mirror"), KEYS, TRACKED)
+    dlq = DeadLetterStore(str(tmp_path / "dlq"))
+    p = PollPipeline(
+        spark, env,
+        source_fn=lambda s, o: s.createDataFrame(rows, schema),
+        sinks=[], df_sinks=[mirror],
+        state=StateStore(str(tmp_path / "state")), dlq=dlq,
+        retry=RetryPolicy(attempts=1, delay_seconds=0, sleep=lambda _: None),
+    )
+    replayer = DeadLetterReplayer(dlq, {"e": env}, sinks_for_env=lambda _: [],
+                                  pipeline_for_env=lambda _: p)
+    p.run_cycle()  # Full
+    rows += [(3, 3, "U", 1, "x3", "p3"), (4, 4, "I", 3, "z", "r")]
+    mirror.down = True
+    p.run_cycle()  # Diff (2, 4] fails: its manifest is dead-lettered
+    mirror.down = False
+    rows += [(5, 5, "U", 1, "x5", "p5"), (6, 6, "D", 2, None, None)]
+    [r] = p.run_cycle()  # Diff (4, 6] waits behind (2, 4]
+    assert [f.sink_name for f in r.failures] == ["mirror"]
+    assert _state(spark, mirror) == {1: ("x", "p"), 2: ("y", "q")}
+
+    assert [o.status for o in replayer.sweep()] == ["delivered"]
+    assert _state(spark, mirror) == {1: ("x5", "p5"), 3: ("z", "r")}
+    assert mirror.current_generation(CTX).endswith("gen-6")
+    assert dlq.rows() == []
+
+    rows.append((7, 7, "U", 3, "z7", "r7"))
+    [r] = p.run_cycle()
+    assert r.failures == []
+    assert _state(spark, mirror) == {1: ("x5", "p5"), 3: ("z7", "r7")}
+
+
+def test_mirror_folds_a_diff_cycle_of_insert_insert_update(spark, tmp_path):
+    """PollPipeline → df_sink → mirror: one Diff cycle whose batch holds
+    I, I, U maintains a queryable table, the U folded onto its I."""
     import datetime as dt
 
     from trignis_spark.config import EnvironmentConfig, TrackingObject
     from trignis_spark.deadletter import DeadLetterStore
     from trignis_spark.sinks.base import RetryPolicy
-    from trignis_spark.sources.parquet_outbox import outbox_schema, stream_outbox
+    from trignis_spark.sources.parquet_outbox import outbox_schema
     from trignis_spark.state import StateStore
-    from trignis_spark.streaming.structured import run_export_stream
+    from trignis_spark.streaming.poller import PollPipeline
 
     env = EnvironmentConfig(
         name="mv",
         tracking_objects=(TrackingObject(name="obj", table_name="t"),),
     )
-    obj = env.tracking_objects[0]
     mirror = MirrorTableSink(
         "mirror", str(tmp_path / "mirror"),
         ("user_key",), ("value", "props"),
     )
-    path = str(tmp_path / "outbox")
     rows = [
         (1, 1, "I", 1, None, dt.datetime(2024, 1, 1), 10.0, "{}"),
         (2, 2, "I", 2, None, dt.datetime(2024, 1, 1), 20.0, "{}"),
         (3, 3, "U", 1, ["value"], dt.datetime(2024, 1, 1), 11.0, "{}"),
     ]
-    spark.createDataFrame(rows, outbox_schema()).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-    q = run_export_stream(
-        stream_outbox(spark, path), env, obj, [],
-        StateStore(str(tmp_path / "state")),
-        DeadLetterStore(str(tmp_path / "dlq")),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
+    state = StateStore(str(tmp_path / "state"))
+    state.set_last_version("mv", "obj", 0)  # past the initial sync
+    p = PollPipeline(
+        spark, env,
+        source_fn=lambda s, o: s.createDataFrame(rows, outbox_schema()),
+        sinks=[], df_sinks=[mirror], state=state,
+        dlq=DeadLetterStore(str(tmp_path / "dlq")),
         retry=RetryPolicy(attempts=1, delay_seconds=0, sleep=lambda _: None),
-        df_sinks=[mirror],
     )
-    q.awaitTermination(120)
+    [r] = p.run_cycle()
+    assert (r.mode, r.exported_rows, r.new_watermark, r.failures) \
+        == ("sync", 3, 3, [])
     ctx2 = ExportContext("mv", "", "obj", "mv/obj")
-    state = {
+    current = {
         r["user_key"]: r["value"]
         for r in mirror.read_current(spark, ctx2).collect()
     }
-    assert state == {1: 11.0, 2: 20.0}  # U folded onto the I within the epoch
+    assert current == {1: 11.0, 2: 20.0}  # U folded onto the I within the batch

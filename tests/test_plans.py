@@ -87,23 +87,6 @@ def test_decontaminate_broadcasts_benchmark_and_no_cartesian(spark):
     assert_no_cartesian_product(df)
 
 
-def test_microbatch_v2_partitions_split_version_range(spark):
-    # partition planning is the scale contract of the V2 source: a big
-    # offset range must fan out, not serialize through one task
-    from trignis_spark.sources.microbatch import _OutboxStreamReader
-
-    import pyspark.sql.types as T
-
-    schema = T.StructType([T.StructField("version", T.LongType())])
-    r = _OutboxStreamReader(schema, {"path": "/dev/null", "numpartitions": "8"})
-    parts = r.partitions({"version": 0, "horizon": 0},
-                         {"version": 1_000_000, "horizon": 1_000_001})
-    assert len(parts) == 8
-    assert parts[0].lo == 0 and parts[-1].hi == 1_000_000
-    spans = [p.hi - p.lo for p in parts]
-    assert max(spans) - min(spans) <= 125_000  # balanced slices
-
-
 def test_incremental_dedup_broadcasts_batch_and_no_cartesian(spark):
     from trignis_spark.queries import QUERIES
 

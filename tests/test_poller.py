@@ -1,6 +1,7 @@
 """End-to-end poll-cycle semantics: seed/full modes, watermark advance,
 per-destination failure independence, DLQ capture, replay routing."""
 
+import datetime as dt
 import json
 
 import pytest
@@ -8,7 +9,7 @@ from pyspark.sql import functions as F
 
 from trignis_spark.config import EnvironmentConfig, TrackingObject
 from trignis_spark.deadletter import DeadLetterStore
-from trignis_spark.sinks.base import RetryPolicy
+from trignis_spark.sinks.base import ExportContext, RetryPolicy
 from trignis_spark.sinks.memory import MemorySink
 from trignis_spark.state import PauseStore, StateStore, obj_scope
 from trignis_spark.streaming.poller import PollPipeline
@@ -164,7 +165,8 @@ def test_replay_delivers_and_deletes(rig):
     assert len(rig.dlq.rows()) == 1
     bad.fail_times = 0  # endpoint recovered
     replayer = DeadLetterReplayer(
-        rig.dlq, {"e1": rig.env}, sinks_for_env=lambda n: [bad]
+        rig.dlq, {"e1": rig.env}, sinks_for_env=lambda n: [bad],
+        pipeline_for_env=lambda n: p,
     )
     outcomes = replayer.sweep()
     assert [o.status for o in outcomes] == ["delivered"]
@@ -177,14 +179,16 @@ def test_replay_failure_backs_off_then_unroutable_parks(rig):
     p = rig.pipeline(sinks=[bad])
     p.run_cycle()
     replayer = DeadLetterReplayer(
-        rig.dlq, {"e1": rig.env}, sinks_for_env=lambda n: [bad]
+        rig.dlq, {"e1": rig.env}, sinks_for_env=lambda n: [bad],
+        pipeline_for_env=lambda n: p,
     )
     [o] = replayer.sweep()
     assert o.status == "failed"
     assert rig.dlq.rows()[0]["attempts"] == 1
 
     # environment vanished from config → unroutable, parked
-    replayer2 = DeadLetterReplayer(rig.dlq, {}, sinks_for_env=lambda n: [])
+    replayer2 = DeadLetterReplayer(rig.dlq, {}, sinks_for_env=lambda n: [],
+                                   pipeline_for_env=lambda n: None)
     [o2] = replayer2.sweep(now=rig.dlq.rows()[0]["next_attempt"])
     assert o2.status == "unroutable"
     next_at = rig.dlq.rows()[0]["next_attempt"]
@@ -279,6 +283,132 @@ def test_distributed_export_failure_deadletters_manifest(rig, spark, tmp_path):
     assert manifest["distributed"] is True
     assert (manifest["from_version"], manifest["to_version"]) == (0, 10)
     assert manifest["rows"] == 10
+
+
+class FlakyDataFrameSink:
+    """A ``DataFrameSink`` that fails while ``down`` and otherwise
+    records each batch's versions and envelope metadata."""
+
+    def __init__(self, name):
+        self.name, self.down, self.batches = name, True, []
+
+    def write_df(self, batch, ctx, metadata):
+        if self.down:
+            raise IOError("object store down")
+        self.batches.append(
+            ([r["version"] for r in batch.select("version").collect()],
+             metadata["Sync"])
+        )
+
+
+def test_dead_lettered_manifest_replays_into_its_df_sink_only(rig, spark):
+    """A manifest dead letter is replayed by re-scanning its version range
+    into the DataFrame sink that failed it — never posted to the envelope
+    sinks as if it were a payload — and the replay leaves the watermark
+    alone. While it waits, later batches stretch it instead of reaching
+    that sink, so the sink takes its ranges in version order."""
+    mirror = FlakyDataFrameSink("mirror")
+    p = rig.pipeline(df_sinks=[mirror])
+    replayer = DeadLetterReplayer(rig.dlq, {"e1": rig.env},
+                                  sinks_for_env=lambda _: [rig.sink],
+                                  pipeline_for_env=lambda _: p)
+    p.run_cycle()  # Full sync: routed to the df sink only, which fails
+    rig.rows += outbox_rows(5, start=11)
+    mirror.down = False  # back up, but (0, 10] is still outstanding
+    [r] = p.run_cycle()  # Diff (10, 15]: the envelope sink takes it
+    assert [f.sink_name for f in r.failures] == ["mirror"]
+    assert mirror.batches == []
+    assert rig.state.get_last_version("e1", "obj") == 15
+    [manifest] = [json.loads(r["data"]) for r in rig.dlq.rows()]
+    assert (manifest["type"], manifest["from_version"], manifest["to_version"],
+            manifest["rows"]) == ("Full", 0, 15, 15)
+    sent = list(rig.sink.payloads)
+
+    rig.rows += outbox_rows(2, start=16)  # past the manifest's range
+    assert [o.status for o in replayer.sweep()] == ["delivered"]
+    assert rig.sink.payloads == sent  # no manifest reached the envelope sink
+    assert mirror.batches == [
+        (list(range(1, 16)), {"Version": 15, "Type": "Full", "ReasonCode": 0}),
+    ]
+    assert rig.dlq.rows() == []
+    assert rig.state.get_last_version("e1", "obj") == 15
+    [r] = p.run_cycle()  # nothing outstanding: the mirror takes (15, 17]
+    assert r.failures == []
+    assert mirror.batches[-1] == (
+        [16, 17], {"Version": 17, "Type": "Diff", "ReasonCode": 0}
+    )
+
+
+def test_stretched_manifest_keeps_a_full_batch_and_adds_no_refetched_rows():
+    from trignis_spark.sinks.spark_file import batch_manifest, stretch_manifest
+
+    ctx = ExportContext("e", "db", "o", "e/o")
+    diff = batch_manifest(ctx, 10, 15, 5, "Diff", 0)
+    grown = json.loads(stretch_manifest(diff, batch_manifest(ctx, 15, 20, 5,
+                                                             "Diff", 0)))
+    assert (grown["type"], grown["from_version"], grown["to_version"],
+            grown["rows"]) == ("Diff", 10, 20, 10)
+    # a crash re-fetches a batch the manifest already covers
+    assert stretch_manifest(diff, diff) == diff
+    # a Full resync (min valid version reset) defines the whole state
+    full = json.loads(stretch_manifest(diff, batch_manifest(ctx, 0, 30, 30,
+                                                            "Full", 1)))
+    assert (full["type"], full["reason_code"], full["to_version"]) \
+        == ("Full", 1, 30)
+
+
+def test_manifest_replay_that_cannot_run_fails_its_row_only(rig, spark):
+    """A manifest whose DataFrame sink was renamed away, whose source
+    raises, or whose source is staged (it only holds its next diff) is
+    not delivered: the row backs off and the rest of the sweep runs."""
+    mirror = FlakyDataFrameSink("mirror")
+    bad = MemorySink("bad", fail_times=2)  # fails its capture's two tries
+    p = rig.pipeline(sinks=[bad], df_sinks=[mirror])
+    rig.state.set_last_version("e1", "obj", 0)  # past the initial sync
+    p.run_cycle()  # Diff (0, 10]: the mirror's manifest, then bad's envelope
+    mirror.down = False
+    later = rig.dlq.rows()[0]["timestamp"]
+
+    def sweep(pipeline, days):
+        replayer = DeadLetterReplayer(
+            rig.dlq, {"e1": rig.env}, sinks_for_env=lambda _: [bad],
+            pipeline_for_env=lambda _: pipeline,
+        )
+        return [o.status for o in replayer.sweep(
+            now=later + dt.timedelta(days=days))]
+
+    renamed = FlakyDataFrameSink("mirror2")
+    renamed.down = False
+    assert sweep(rig.pipeline(sinks=[bad], df_sinks=[renamed]), 1) \
+        == ["failed", "delivered"]
+    assert len(bad.payloads) == 1 and renamed.batches == []
+
+    def outage(s, o):
+        raise IOError("source down")
+
+    raising = PollPipeline(spark, rig.env, outage, [bad], rig.state, rig.dlq,
+                           df_sinks=[mirror])
+    assert sweep(raising, 2) == ["failed"]
+
+    class Staged:
+        calls = 0
+
+        def __call__(self, s, o):
+            Staged.calls += 1
+            return make_outbox(s, rig.rows)
+
+        def commit(self, obj):
+            pass
+
+    staged = PollPipeline(spark, rig.env, Staged(), [bad], rig.state, rig.dlq,
+                          df_sinks=[mirror])
+    assert sweep(staged, 3) == ["failed"]
+    assert Staged.calls == 0  # the staged source was never re-read
+    [row] = rig.dlq.rows()
+    assert row["attempts"] == 3 and mirror.batches == []
+    assert sweep(p, 4) == ["delivered"]
+    assert mirror.batches == [(list(range(1, 11)),
+                               {"Version": 10, "Type": "Diff", "ReasonCode": 0})]
 
 
 def test_envelope_path_driver_residency_is_bounded(rig, spark):

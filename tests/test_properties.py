@@ -16,7 +16,6 @@ from trignis_spark.deadletter import (
     payload_hash,
 )
 from trignis_spark.sources.jdbc import POSTGRES, plan_incremental_read
-from trignis_spark.sources.microbatch import _OutboxStreamReader
 
 OBJ = TrackingObject(
     name="o", table_name="outbox", key_columns=("id",), tracked_columns=("v",)
@@ -68,28 +67,6 @@ def test_jdbc_plan_partition_switch_is_exact(from_version, span, threshold):
         )
     else:
         assert opts["query"] == q and "dbtable" not in opts
-
-
-@given(
-    st.integers(min_value=0, max_value=10**9),
-    st.integers(min_value=0, max_value=10**6),
-    st.integers(min_value=1, max_value=64),
-)
-def test_v2_partitions_cover_range_exactly(lo, span, n):
-    """Version-range slices partition (lo, hi] exactly: contiguous,
-    non-overlapping, covering — no version read twice or skipped."""
-    import pyspark.sql.types as T
-
-    hi = lo + span
-    schema = T.StructType([T.StructField("version", T.LongType())])
-    r = _OutboxStreamReader(schema, {"path": "/x", "numpartitions": str(n)})
-    parts = r.partitions({"version": lo, "horizon": 0},
-                         {"version": hi, "horizon": hi + 1})
-    assert parts[0].lo == lo and parts[-1].hi == hi
-    for a, b in zip(parts, parts[1:]):
-        assert a.hi == b.lo  # contiguous, no gap, no overlap
-    assert sum(p.hi - p.lo for p in parts) == span
-    assert len(parts) <= max(1, n)
 
 
 @given(

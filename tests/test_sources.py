@@ -231,3 +231,107 @@ def test_poller_passes_watermark_and_horizon_to_pushdown_source(spark, tmp_path)
     assert calls == [(4, 9)]  # watermark + horizon threaded into the source
     assert r.exported_rows == 4  # versions 5..8 (horizon defers 9,10)
     assert state.get_last_version("e1", "obj") == 8
+
+
+def test_object_sources_keep_each_sources_pushdown_and_commit(spark, tmp_path):
+    """The service hands a pipeline one source per tracking object behind
+    a dict: a pushdown source still gets the watermark, and a
+    staged source still has its snapshot promoted after the export."""
+    from trignis_spark.config import EnvironmentConfig
+    from trignis_spark.deadletter import DeadLetterStore
+    from trignis_spark.sinks.base import RetryPolicy
+    from trignis_spark.sinks.memory import MemorySink
+    from trignis_spark.state import StateStore
+    from trignis_spark.streaming.poller import PollPipeline
+
+    calls, commits = [], []
+    schema = ("version long, xact_id long, operation string, "
+              "user_key long, value double")
+
+    class Pushdown:
+        supports_pushdown = True
+
+        def __call__(self, sp, obj, from_version=0, horizon=None):
+            calls.append(from_version)
+            return sp.createDataFrame([(v, v, "I", 1, 1.0) for v in (5, 6)],
+                                      schema)
+
+    class Staged:
+        def __call__(self, sp, obj):
+            return sp.createDataFrame([(1, 1, "I", 1, 1.0)], schema)
+
+        def commit(self, obj):
+            commits.append(obj.name)
+
+    env = EnvironmentConfig(
+        name="e1",
+        tracking_objects=(TrackingObject(name="a", table_name="ta"),
+                          TrackingObject(name="b", table_name="tb")),
+    )
+    state = StateStore(str(tmp_path / "state"))
+    state.set_last_version("e1", "a", 4)
+    state.set_last_version("e1", "b", 0)
+    p = PollPipeline(
+        spark, env, source_fn={"a": Pushdown(), "b": Staged()},
+        sinks=[MemorySink("m")],
+        state=state, dlq=DeadLetterStore(str(tmp_path / "dlq")),
+        retry=RetryPolicy(attempts=1, delay_seconds=0, sleep=lambda _: None),
+    )
+    assert [r.exported_rows for r in p.run_cycle()] == [2, 1]
+    assert calls == [4] and commits == ["b"]
+
+
+def test_append_outbox_files_is_atomic_under_concurrent_scans(spark, tmp_path):
+    """IO-hammer stress: a producer thread appends batches through the
+    atomic helper while a poll cycle's ``read_outbox`` scan runs in a
+    loop — no ``Invalid column metadata`` is possible by construction,
+    and every observed count is a committed prefix."""
+    import datetime as dt
+    import threading
+
+    import pyarrow as pa
+
+    from trignis_spark.sources.parquet_outbox import append_outbox_files, read_outbox
+
+    path = str(tmp_path / "outbox")
+
+    def batch(v):
+        return pa.table({
+            "version": pa.array([v], pa.int64()),
+            "xact_id": pa.array([v], pa.int64()),
+            "operation": pa.array(["I"]),
+            "user_key": pa.array([v], pa.int64()),
+            "changed": pa.array([["value"]]),
+            "ts": pa.array([dt.datetime(2024, 1, 1)], pa.timestamp("us")),
+            "value": pa.array([1.0]),
+            "props": pa.array(["{}"]),
+        })
+
+    for v in (1, 2):
+        append_outbox_files(batch(v), path)
+    stop = threading.Event()
+    errors: list[BaseException] = []
+
+    def producer():
+        i = 10
+        try:
+            # bounded: enough churn to race every scan below, without
+            # flooding the directory into quadratic listing cost
+            while not stop.is_set() and i < 160:
+                append_outbox_files(batch(i), path)
+                i += 1
+        except BaseException as e:  # surfaced to the assert below
+            errors.append(e)
+
+    t = threading.Thread(target=producer)
+    t.start()
+    try:
+        last = 2
+        for _ in range(25):
+            n = read_outbox(spark, path).count()
+            assert n >= last  # committed prefixes only
+            last = n
+    finally:
+        stop.set()
+        t.join()
+    assert not errors

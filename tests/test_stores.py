@@ -20,6 +20,7 @@ from trignis_spark.config import EnvironmentConfig, TrackingObject
 from trignis_spark.deadletter import DeadLetterStore
 from trignis_spark.sinks.base import RetryPolicy
 from trignis_spark.sinks.memory import MemorySink
+from trignis_spark.sinks.spark_file import DataFrameSink
 from trignis_spark.state import PauseStore, StateStore
 from trignis_spark.streaming import ingest
 from trignis_spark.streaming.poller import PollPipeline
@@ -131,6 +132,18 @@ def test_store_root_of_the_parquet_layout_is_refused(tmp_path, legacy, open_stor
         open_store(str(tmp_path))
 
 
+def test_dead_letter_manifest_without_sync_type_is_refused(tmp_path):
+    """A batch manifest of the layout before it carried its sync type
+    cannot be replayed as the right kind of batch: the store refuses it
+    and names the dead letter."""
+    dlq = DeadLetterStore(str(tmp_path))
+    _save(dlq, "e/o/s", '{"i":1}')
+    _save(dlq, "e/o/mirror", '{"environment":"e","object":"o","from_version":0,'
+          '"to_version":10,"rows":10,"distributed":true}')
+    with pytest.raises(RuntimeError, match=r"dead letters \[2\]"):
+        DeadLetterStore(str(tmp_path))
+
+
 class Crash(BaseException):
     """A process crash: no ``except Exception`` handler catches it."""
 
@@ -141,7 +154,7 @@ class Boundaries:
     def __init__(self, crash_at=None):
         self.crash_at = crash_at
         self.events: list[str] = []
-        self.watermarks: list[int] = []
+        self.watermarks: dict[str, list[int]] = {}
 
     def wrap(self, obj, method, name):
         fn = getattr(obj, method)
@@ -151,7 +164,7 @@ class Boundaries:
                 raise Crash(name)
             self.events.append(name)
             if method == "set_last_version":
-                self.watermarks.append(args[2])
+                self.watermarks.setdefault(args[0], []).append(args[2])
             return fn(*args, **kwargs)
 
         setattr(obj, method, wrapped)
@@ -162,49 +175,88 @@ ENV = EnvironmentConfig(
     tracking_objects=(TrackingObject(name="o", table_name="t",
                                      initial_sync_mode="Full"),),
 )
+#: a second environment whose only destination is a DataFrame sink, so
+#: its dead letter is a version-range manifest, replayed by re-scanning;
+#: its first cycle sees the first two versions, its second cycle the rest
+MIRROR_ENV = EnvironmentConfig(name="m", tracking_objects=ENV.tracking_objects)
 VERSIONS = [1, 2, 3, 4]
 
 
-def _relay(spark, root, sinks, bounds):
-    """A pipeline and a replayer over the stores under ``root``, with
-    every side effect counted by ``bounds``."""
+class MirrorSink(DataFrameSink):
+    """A DataFrame sink that fails while ``always_fail``, else keeps the
+    versions it was given."""
+
+    def __init__(self):
+        self.name, self.always_fail, self.versions = "mirror", True, set()
+
+    def write_df(self, batch, ctx, metadata):
+        if self.always_fail:
+            raise IOError("mirror down")
+        self.versions |= {r["version"] for r in batch.select("version").collect()}
+
+
+def _relay(spark, root, sinks, mirror, mirror_rows, bounds):
+    """Two pipelines (envelope sinks; one DataFrame sink that sees the
+    first ``mirror_rows[0]`` versions) and a replayer over the stores
+    under ``root``, with every side effect counted by ``bounds``."""
     state = StateStore(str(root / "state"))
     dlq = DeadLetterStore(str(root / "dlq"))
     bounds.wrap(state, "set_last_version", "state.set_last_version")
-    for method in ("save", "delete", "record_failure"):
+    for method in ("save", "replace_data", "delete", "record_failure"):
         bounds.wrap(dlq, method, f"dlq.{method}")
     rows = [(v, v, "U", v) for v in VERSIONS]
-    pipe = PollPipeline(
-        spark, ENV,
-        lambda s, o: s.createDataFrame(
-            rows, "version long, xact_id long, operation string, user_key long"
-        ).coalesce(1),
-        sinks, state, dlq,
-        retry=RetryPolicy(attempts=1, delay_seconds=0, sleep=lambda _: None),
+
+    def source(visible):
+        return lambda s, o: s.createDataFrame(
+            rows[:visible()],
+            "version long, xact_id long, operation string, user_key long",
+        ).coalesce(1)
+
+    pipes = {
+        env.name: PollPipeline(
+            spark, env, source(visible), env_sinks, state, dlq,
+            df_sinks=df_sinks,
+            retry=RetryPolicy(attempts=1, delay_seconds=0, sleep=lambda _: None),
+        )
+        for env, env_sinks, df_sinks, visible in (
+            (ENV, sinks, [], lambda: len(rows)),
+            (MIRROR_ENV, [], [mirror], lambda: mirror_rows[0]),
+        )
+    }
+    replayer = DeadLetterReplayer(
+        dlq, {"e": ENV, "m": MIRROR_ENV}, lambda n: pipes[n].sinks,
+        pipes.get, retry=pipes["e"].retry,
     )
-    replayer = DeadLetterReplayer(dlq, {"e": ENV}, lambda _: sinks,
-                                  retry=pipe.retry)
-    return pipe, replayer, state, dlq
+    return pipes, replayer, state, dlq
 
 
 def _crash_run(spark, root, crash_at):
-    """Partner sink down: a poll cycle dead-letters its chunks, a sweep
-    fails them again, the partner returns and a sweep delivers. The
-    process dies before the ``crash_at``-th side effect; a fresh relay
-    over the same stores then runs a cycle and sweeps until nothing is
-    due, with healthy sinks. It is quiet then: the watermark is at the
-    source's last version and the dead-letter store is empty."""
+    """Partner and mirror sinks down: the poll cycles dead-letter the
+    partner's chunks and the mirror's manifest, a second mirror cycle
+    stretches that manifest over its later versions, a sweep fails them
+    again, the sinks return and a sweep delivers. The process dies before the
+    ``crash_at``-th side effect; a fresh relay over the same stores then
+    runs the cycles and sweeps until nothing is due, with healthy sinks.
+    It is quiet then: the watermarks are at the source's last version
+    and the dead-letter store is empty."""
     primary, partner = MemorySink("primary"), MemorySink("partner",
                                                          always_fail=True)
+    mirror = MirrorSink()
     bounds = Boundaries(crash_at)
     for sink in (primary, partner):
         bounds.wrap(sink, "write", f"{sink.name}.write")
-    pipe, replayer, _, _ = _relay(spark, root, [primary, partner], bounds)
+    bounds.wrap(mirror, "write_df", "mirror.write_df")
+    mirror_rows = [2]
+    pipes, replayer, _, _ = _relay(spark, root, [primary, partner], mirror,
+                                   mirror_rows, bounds)
     later = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     try:
-        pipe.run_cycle()
+        for pipe in pipes.values():
+            pipe.run_cycle()
+        mirror_rows[0] = len(VERSIONS)
+        pipes["m"].run_cycle()
         replayer.sweep(now=later + dt.timedelta(hours=1))
-        partner.always_fail = False
+        partner.always_fail = mirror.always_fail = False
         replayer.sweep(now=later + dt.timedelta(days=1))
         crashed = None
     except Crash as e:
@@ -212,9 +264,11 @@ def _crash_run(spark, root, crash_at):
     outage_events = list(bounds.events)
 
     bounds.crash_at = None
-    partner.always_fail = False
-    pipe, replayer, state, dlq = _relay(spark, root, [primary, partner], bounds)
-    pipe.run_cycle()
+    partner.always_fail = mirror.always_fail = False
+    pipes, replayer, state, dlq = _relay(spark, root, [primary, partner],
+                                         mirror, [len(VERSIONS)], bounds)
+    for pipe in pipes.values():
+        pipe.run_cycle()
     for _ in range(3):
         if not replayer.sweep(now=later + dt.timedelta(days=30)):
             break
@@ -224,8 +278,11 @@ def _crash_run(spark, root, crash_at):
         got = {d["version"] for payload, _ in sink.payloads
                for d in json.loads(payload)["Data"]}
         assert got == set(VERSIONS), f"{where}: {sink.name} got {sorted(got)}"
-    assert bounds.watermarks == sorted(bounds.watermarks), where
+    assert mirror.versions == set(VERSIONS), where
+    for watermarks in bounds.watermarks.values():
+        assert watermarks == sorted(watermarks), where
     assert state.get_last_version("e", "o") == VERSIONS[-1], where
+    assert state.get_last_version("m", "o") == VERSIONS[-1], where
     assert dlq.rows() == [], where
     return outage_events, crashed
 
@@ -234,12 +291,20 @@ def test_crash_at_every_side_effect_boundary_loses_no_payload(spark, tmp_path):
     events, crashed = _crash_run(spark, tmp_path / "clean", None)
     assert crashed is None
     # two chunks, each a primary write, a failed partner write and a dead
-    # letter, then the watermark; each dead letter is then replayed twice:
-    # both writes and a recorded failure, both writes and a delete
+    # letter, then the watermark; then the mirror's failed write, its
+    # manifest dead letter and its watermark, and the mirror's second
+    # cycle: the manifest stretched over it and the watermark. Each dead
+    # letter is then replayed twice: the writes and a recorded failure,
+    # then the writes and a delete (the manifest's write is a re-scan
+    # into the mirror)
     chunk = ["primary.write", "partner.write"]
     assert events == (
         (chunk + ["dlq.save"]) * 2 + ["state.set_last_version"]
-        + (chunk + ["dlq.record_failure"]) * 2 + (chunk + ["dlq.delete"]) * 2
+        + ["mirror.write_df", "dlq.save", "state.set_last_version"]
+        + ["dlq.replace_data", "state.set_last_version"]
+        + (chunk + ["dlq.record_failure"]) * 2
+        + ["mirror.write_df", "dlq.record_failure"]
+        + (chunk + ["dlq.delete"]) * 2 + ["mirror.write_df", "dlq.delete"]
     )
     # the scenarios share nothing but the Spark session; run them side by
     # side, since each one's wall is mostly Spark job scheduling

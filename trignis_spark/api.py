@@ -308,7 +308,7 @@ def create_app(
         # timings / accept counts / gated margin / folds, the analog of
         # the reference's per-object cycle health (Program.cs:906-949).
         # Live entries are read through a locked snapshot (ADVICE r10 —
-        # foreachBatch threads mutate the registry mid-request), and
+        # gate threads mutate the registry mid-request), and
         # gates persisted by a PREVIOUS driver process are merged in
         # from the health store so the surface survives a restart the
         # way the reference's SQLite-backed one does (VERDICT r10 #3).

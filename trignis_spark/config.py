@@ -78,6 +78,10 @@ def validate_environment(env: EnvironmentConfig) -> tuple[list[str], list[str]]:
     names = [o.name for o in env.tracking_objects]
     if len(names) != len(set(names)):
         errors.append(f"environment '{env.name}': duplicate tracking object names")
+    # a dead letter's source key env/object/<destination> is its replay route
+    sink_names = [d.name for d in env.destinations]
+    if len(sink_names) != len(set(sink_names)):
+        errors.append(f"environment '{env.name}': duplicate destination names")
     for obj in env.tracking_objects:
         if not obj.name:
             errors.append(f"environment '{env.name}': tracking object without a name")

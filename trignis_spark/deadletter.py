@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import datetime as dt
 import hashlib
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -70,6 +71,18 @@ class DeadLetterStore:
         self._db = SqliteDb(root, "sinkhole.db", _DDL, ("timestamp", "next_attempt"))
         self._db.function("backoff_seconds", 1, backoff_seconds)
         self._db.function("dlq_matches", 5, self._matches)
+        self._holds: dict[str, threading.Lock] = {}
+        self._holds_lock = threading.Lock()
+        # manifests of the layout before they carried "type" end at
+        # "distributed": a replay could not tell a Full batch from a Diff
+        old = [r["id"] for r in self._db.query(
+            "SELECT id FROM dead_letters"
+            " WHERE data LIKE '{\"environment\":%\"distributed\":true}'")]
+        if old:
+            raise RuntimeError(
+                f"{root}: dead letters {old} are batch manifests without a"
+                " sync type; delete them and reset their objects' watermarks"
+            )
 
     # -- capture ----------------------------------------------------------
 
@@ -97,6 +110,20 @@ class DeadLetterStore:
             (source_key, tracking_object_name, environment_name, database_name,
              payload_hash(data), data, error_message, now, now),
         ) > 0
+
+    def hold(self, source_key: str) -> threading.Lock:
+        """The in-process lock of one destination's dead letters: a poll
+        cycle that stretches a pending batch manifest and the replay that
+        delivers it hold it, whichever pipeline instance runs them."""
+        with self._holds_lock:
+            return self._holds.setdefault(source_key, threading.Lock())
+
+    def replace_data(self, dlq_id: int, data: str) -> None:
+        """Rewrite a dead letter's payload, keeping its schedule."""
+        self._db.execute(
+            "UPDATE dead_letters SET data = ?, data_hash = ? WHERE id = ?",
+            (data, payload_hash(data), dlq_id),
+        )
 
     # -- replay scheduling -------------------------------------------------
 
@@ -159,6 +186,14 @@ class DeadLetterStore:
 
     def rows(self) -> list[dict]:
         return self._db.query("SELECT * FROM dead_letters ORDER BY id")
+
+    def first_for(self, source_key: str) -> dict | None:
+        """The oldest dead letter of ``source_key``, due or parked."""
+        rows = self._db.query(
+            "SELECT * FROM dead_letters WHERE source_key = ? ORDER BY id LIMIT 1",
+            (source_key,),
+        )
+        return rows[0] if rows else None
 
     def get(self, dlq_id: int) -> dict | None:
         rows = self._db.query("SELECT * FROM dead_letters WHERE id = ?", (dlq_id,))

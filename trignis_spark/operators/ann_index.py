@@ -84,8 +84,8 @@ def _open_index(spark: SparkSession, table: str):
 
 
 def _refresh(spark: SparkSession, table: str) -> None:
-    # writes may come from a cloned (foreachBatch) session — invalidate
-    # the probing session's cached file listing (see dedup_index)
+    # writes may come from another session — invalidate the probing
+    # session's cached file listing (see dedup_index)
     spark.catalog.refreshTable(table)
     spark.catalog.refreshTable(_ids_table(table))
 

@@ -70,9 +70,9 @@ def _tables(table: str) -> tuple[str, str, str, str]:
 def _refresh(spark: SparkSession, table: str) -> None:
     """Invalidate the caller session's cached file listing for the
     index tables. Needed because writes may run on a *different* session
-    than later reads — inside ``foreachBatch`` the write goes through the
-    micro-batch's cloned session, and without this the probing session
-    keeps serving the pre-append file list."""
+    than later reads — a cloned session or a second relay over the same
+    warehouse — and without this the probing session keeps serving the
+    pre-append file list."""
     for t in _tables(table):
         spark.catalog.refreshTable(t)
 

@@ -201,8 +201,8 @@ def _probe_state(spark: SparkSession, table: str) -> dict:
 
 
 def _refresh(spark: SparkSession, table: str) -> None:
-    # writes may come from a cloned (foreachBatch) session — invalidate
-    # the probing session's cached file listing (see dedup_index)
+    # writes may come from another session — invalidate the probing
+    # session's cached file listing (see dedup_index)
     for t in _all_tables(table):
         spark.catalog.refreshTable(t)
     for t in (_tail_table(table), _tail_codes_table(table)):

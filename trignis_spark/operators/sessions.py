@@ -4,8 +4,8 @@ The reference has no session concept (its stream is a CDC change feed),
 but a training-data / product-analytics pipeline over the same events
 needs it constantly: group a user's events into sessions separated by an
 inactivity gap. Batch form here (two window functions — lag to mark
-session starts, running sum to number them); the streaming twin is
-``F.session_window`` in ``streaming/structured.py``-style jobs.
+session starts, running sum to number them). It runs over any batch,
+including a poll cycle's change batch; there is no streaming form.
 
 Scale notes: one shuffle on the user key; both window passes share the
 same (partitionBy user, orderBy ts) sort, so Spark plans a single

@@ -1716,9 +1716,8 @@ def cf_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time tumbling-window aggregation (batch form of the
-    streaming windowed_rate_stats): per-hour change counts and value
-    totals by operation."""
+    """Event-time tumbling-window aggregation (T3): per-hour change
+    counts and value totals by operation."""
     outbox = _outbox(spark, sf_dir)
     return (
         outbox.groupBy(

@@ -82,6 +82,7 @@ class TrignisSparkService:
             self._envs_snapshot,  # resolved per sweep; race-free vs reloads
             sinks_for_env=self._sinks_for_env,
             retry=retry,
+            pipeline_for_env=self._pipeline_for_env,
         )
 
     # -- wiring ------------------------------------------------------------
@@ -97,13 +98,12 @@ class TrignisSparkService:
         # distributed path; everything else fans out via envelopes
         sinks = [s for s in built if not isinstance(s, DataFrameSink)]
         df_sinks = [s for s in built if isinstance(s, DataFrameSink)]
-        obj_sources = {
-            obj.name: self.source_factory(obj) for obj in env.tracking_objects
-        }
         return PollPipeline(
             self.spark,
             env,
-            source_fn=lambda s, obj: obj_sources[obj.name](s, obj),
+            source_fn={
+                obj.name: self.source_factory(obj) for obj in env.tracking_objects
+            },
             sinks=sinks,
             df_sinks=df_sinks,
             state=self.state,
@@ -112,14 +112,16 @@ class TrignisSparkService:
             retry=self.retry,
         )
 
-    def _sinks_for_env(self, env_name: str):
+    def _pipeline_for_env(self, env_name: str) -> PollPipeline | None:
         with self._lock:
-            pipeline = self._pipelines.get(env_name)
+            return self._pipelines.get(env_name)
+
+    def _sinks_for_env(self, env_name: str):
+        pipeline = self._pipeline_for_env(env_name)
         return pipeline.sinks if pipeline is not None else []
 
     def _run_cycle(self, env: EnvironmentConfig) -> None:
-        with self._lock:
-            pipeline = self._pipelines.get(env.name)
+        pipeline = self._pipeline_for_env(env.name)
         if pipeline is not None:
             pipeline.run_cycle()
 

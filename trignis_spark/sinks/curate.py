@@ -8,10 +8,11 @@ curated training corpus. Each delivered batch runs the ingestion gate
 persistent near-dup index exactly-once; the accepted store accumulates
 the curated corpus.
 
-Rides the distributed ``df_sinks`` path of both the poller and the
-streaming ``foreachBatch`` export, exactly like the mirror and rollup
-sinks — so curation advances with the watermark and inherits the
-at-least-once replay contract (a replayed batch re-admits nothing).
+Rides the distributed ``df_sinks`` path of ``PollPipeline``, exactly
+like the mirror and rollup sinks — so curation advances with the
+watermark and inherits the at-least-once replay contract (a replayed
+batch, or a dead-lettered manifest re-run by ``DeadLetterReplayer``,
+re-admits nothing).
 
 Options: ``index_table`` (a ``dedup_index.build_prefix_index`` index,
 whose meta row fixes the shingle width), ``accepted_path``; optional

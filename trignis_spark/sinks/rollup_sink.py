@@ -6,9 +6,9 @@ delivered change batch is aggregated to the finest resolution
 (``rollup_level``) and merged into the stored rollup
 (``merge_rollup`` — decomposable partial aggregates re-aggregate
 exactly). Registered as a ``DataFrameSink``, it rides the distributed
-``df_sinks`` path of both the poller and the streaming ``foreachBatch``
-export, so the rollup advances with the watermark and inherits the
-at-least-once/idempotent replay contract via generation swap.
+``df_sinks`` path of ``PollPipeline``, so the rollup advances with the
+watermark and inherits the at-least-once/idempotent replay contract via
+generation swap.
 
 Contract: the feed is treated as an **append-only fact stream** — every
 delivered row is one occurrence (the semantics of an events hypertable,

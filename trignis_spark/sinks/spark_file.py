@@ -9,11 +9,13 @@ JSON-lines), and record only envelope metadata + a manifest on the
 driver.
 
 Failure/replay contract at this scale: a failed distributed write
-dead-letters the batch *manifest* (environment, object, version range),
-not the rows — replay re-runs the incremental scan for that version
-range against the source (which is exactly what the reference's
-"nothing advances on error → same rows re-fetched" path does, SURVEY
-§1.4). Payload-inline dead-lettering is only for driver-sized batches.
+dead-letters the batch *manifest* (environment, object, version range,
+sync type), not the rows — ``DeadLetterReplayer`` hands it to the
+owning ``PollPipeline.replay_manifest``, which re-runs the cycle's scan
+for that version range against the source and writes it to the one sink
+that failed (the reference's "nothing advances on error → same rows
+re-fetched" path, SURVEY §1.4). Payload-inline dead-lettering is only
+for driver-sized batches.
 """
 
 from __future__ import annotations
@@ -82,10 +84,13 @@ class PartitionedFileSink(DataFrameSink):
 
 
 def batch_manifest(
-    ctx: ExportContext, from_version: int, to_version: int, rows: int
+    ctx: ExportContext, from_version: int, to_version: int, rows: int,
+    sync_type: str, reason_code: int,
 ) -> str:
     """The replayable description of a distributed batch (what gets
-    dead-lettered instead of the rows)."""
+    dead-lettered instead of the rows). ``type`` and ``reason_code`` are
+    the cycle's sync ``Type`` and ``ReasonCode``, so a replay rebuilds a
+    Full batch as a Full snapshot."""
     return json.dumps(
         {
             "environment": ctx.environment,
@@ -94,6 +99,32 @@ def batch_manifest(
             "to_version": to_version,
             "rows": rows,
             "distributed": True,
+            "type": sync_type,
+            "reason_code": reason_code,
         },
         separators=(",", ":"),
     )
+
+
+def read_manifest(data: str) -> dict | None:
+    """The manifest a dead letter's ``data`` holds, or None for an
+    envelope payload. Only data that starts like a manifest is parsed,
+    so replaying a large envelope costs no JSON decode here."""
+    if not data.startswith('{"environment":'):
+        return None
+    doc = json.loads(data)
+    return doc if doc.get("distributed") is True else None
+
+
+def stretch_manifest(pending: str, later: str) -> str:
+    """The pending manifest grown over a later batch's manifest, so one
+    replay delivers both ranges in version order. A Full batch makes the
+    whole replay Full, since it defines the state; a re-fetched batch
+    that ends inside the pending range adds no rows."""
+    doc, nxt = read_manifest(pending), read_manifest(later)
+    if nxt["to_version"] > doc["to_version"]:
+        doc["to_version"] = nxt["to_version"]
+        doc["rows"] += nxt["rows"]
+    if nxt["type"] == "Full":
+        doc["type"], doc["reason_code"] = "Full", nxt["reason_code"]
+    return json.dumps(doc, separators=(",", ":"))

@@ -1,10 +1,10 @@
-"""Parquet outbox source: batch + Structured Streaming readers.
+"""Parquet outbox source: an atomic file appender and a batch reader.
 
 An append-only directory of parquet files with a monotone version
 column is the file-system twin of the PG outbox table — each new file
-is a committed batch of change events. The streaming reader uses
-Spark's file source (exactly-once file tracking in the checkpoint), so
-offset management (T2/T4) is the stream's native offset log.
+is a committed batch of change events. ``read_outbox`` is a plain
+``source_fn`` body for ``PollPipeline``: the poller's watermark, not a
+stream checkpoint, decides which versions a cycle exports.
 """
 
 from __future__ import annotations
@@ -29,9 +29,9 @@ def append_outbox_files(table, path: str) -> str:
     """Atomically append one committed parquet file to a feed
     directory. ``table`` is a ``pyarrow.Table`` (or anything
     ``pa.table`` accepts). The file is written to a hidden temp name
-    and ``os.replace``d into place, so a concurrent reader — the
-    DSV2 outbox source, Spark's file stream, a second process on
-    shared storage — can never observe a half-written parquet
+    and ``os.replace``d into place, so a concurrent reader — a poll
+    cycle's ``read_outbox`` scan, a second process on shared storage —
+    can never observe a half-written parquet
     (VERDICT r10: a mid-write read raised ``Invalid column metadata``
     under disk contention). Returns the committed file path.
 
@@ -62,16 +62,3 @@ def append_outbox_files(table, path: str) -> str:
 def read_outbox(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
     return spark.read.schema(schema or outbox_schema()).parquet(path)
 
-
-def stream_outbox(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | None = None,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """T1/T4/T5: streaming outbox scan. ``maxFilesPerTrigger`` is the
-    micro-batch size governor (≙ maxOffsetsPerTrigger)."""
-    reader = spark.readStream.schema(schema or outbox_schema())
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(path)

@@ -1,12 +1,12 @@
-"""Streaming corpus ingestion gate: change stream → quality gate →
+"""Corpus ingestion gate: change batches → quality gate →
 near-dup probe against the persistent corpus index → accept + extend.
 
 This is the production composition of the training-data pipeline on the
 reference's poll loop (``ChangeTrackingBackgroundService.cs:360-420``
 delivers batches; here each delivered batch is curated instead of
-exported): documents arrive as micro-batches (the DSv2 outbox source,
-a file stream, or any streaming frame with an id and a text column)
-and each epoch passes through
+exported): documents arrive as change batches (``CurateSink`` on a
+``PollPipeline``'s distributed path, or any frame with an id and a
+text column) and each epoch passes through
 
 1. **membership anti-join** — documents already admitted to the corpus
    index sidecar are dropped first, so a replayed epoch (at-least-once
@@ -39,8 +39,8 @@ idempotent where it matters): the index extend is exactly-once by
 anti-join; the accepted-store append is at-least-once — a crash between
 the append and the extend can leave one epoch's rows appended twice,
 which ``accepted_corpus`` compacts on read by ``doc_id``. In the common
-replay case (epoch completed, offset commit lost) step 1 empties the
-batch and nothing is re-written.
+replay case (epoch completed, watermark commit lost) step 1 empties
+the batch and nothing is re-written.
 
 Scale shape: every gate is an executor-side join against either a
 broadcast batch or the bucketed index — the corpus is never shuffled
@@ -130,7 +130,7 @@ def make_ingest_batch_fn(
     text_col: str = "text",
     stats: list[IngestStats] | None = None,
 ):
-    """Build the ``foreachBatch`` body for a curated-ingestion stream.
+    """Build the per-epoch body of the curated-ingestion gate.
 
     ``index_table`` is a ``dedup_index.build_prefix_index`` index; its
     meta row sets the shingle width of both near-dup passes. The
@@ -147,7 +147,7 @@ def make_ingest_batch_fn(
             F.col(id_col).cast("long").alias("doc_id"),
             F.col(text_col).alias("text"),
         ).observe(arrived, F.count(F.lit(1)).alias("n"))
-        docs = docs.localCheckpoint(eager=True)  # cut the stream lineage
+        docs = docs.localCheckpoint(eager=True)  # cut the source lineage
         n_docs = arrived.get["n"]
         n = di._meta_row(spark, index_table).n
         known = spark.table(di._docs_table(index_table)).select("doc_id")
@@ -256,43 +256,6 @@ def accepted_corpus(spark: SparkSession, accepted_path: str) -> DataFrame:
     )
 
 
-def run_ingest_stream(
-    stream_df: DataFrame,
-    spark: SparkSession,
-    index_table: str,
-    accepted_path: str,
-    checkpoint_dir: str,
-    *,
-    min_quality: float = 0.0,
-    threshold: float = 0.8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stats: list[IngestStats] | None = None,
-    trigger_available_now: bool = True,
-):
-    """Wire the gate into a Structured Streaming query. The checkpoint
-    commits the epoch only after the gate returns, so the index extend
-    rides the same watermark-advances-after-export contract (T2) as the
-    export path."""
-    fn = make_ingest_batch_fn(
-        spark,
-        index_table,
-        accepted_path,
-        min_quality=min_quality,
-        threshold=threshold,
-        id_col=id_col,
-        text_col=text_col,
-        stats=stats,
-    )
-    writer = (
-        stream_df.writeStream.foreachBatch(fn)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def documents_from_outbox(outbox_df: DataFrame) -> DataFrame:
     """Adapter: a document change feed riding the outbox envelope.
 
@@ -300,8 +263,8 @@ def documents_from_outbox(outbox_df: DataFrame) -> DataFrame:
     JSON carries ``{"doc_id": ..., "text": ...}`` (the reference's
     "everything else is yours" payload contract,
     ``stored-procedure.md:70``); deletes carry no text and are not
-    ingestion candidates. Composes upstream of the gate:
-    ``run_ingest_stream(documents_from_outbox(stream), ...)``."""
+    ingestion candidates. Composes upstream of the gate, as
+    ``CurateSink`` does: ``gate(documents_from_outbox(batch), epoch)``."""
     return (
         outbox_df.filter(F.col("operation") != "D")
         .select(
@@ -331,8 +294,8 @@ INGEST_HEALTH: dict[str, dict] = {}
 #: trend (a widening probe stage, a fold spike) at dashboard cost
 INGEST_HISTORY = 20
 
-#: guards the in-memory INGEST_HEALTH registry: foreachBatch worker
-#: threads write entries while the API thread snapshots them (ADVICE
+#: guards the in-memory INGEST_HEALTH registry: gate threads (pollers,
+#: the replay sweeper) write entries while the API thread snapshots them (ADVICE
 #: r10 — an unguarded dict iteration can raise mid-request and see a
 #: half-updated entry)
 _HEALTH_LOCK = threading.Lock()
@@ -439,7 +402,7 @@ def make_embedding_ingest_fn(
     fold_tail_rows: int | None = None,
     health_root: str | None = None,
 ):
-    """``foreachBatch`` body curating an embedding stream against the
+    """Per-epoch body curating an embedding batch against the
     persistent IVF index (``operators/ann_index.py``): vectors already
     indexed are dropped (replay-safe), vectors whose nearest indexed
     neighbor reaches ``cos_threshold`` are rejected as near-duplicates,

@@ -29,8 +29,10 @@ Two export paths:
   executors — ``DataFrameSink``s write it partition-parallel and only
   the (watermark, count) aggregate reaches the driver; failures
   dead-letter a replayable version-range *manifest* instead of rows
-  (``sinks/spark_file.py``). Use this for 100 TB initial syncs and
-  large backfills.
+  (``sinks/spark_file.py``); while a sink has one, later batches stretch
+  it instead of reaching that sink, so every sink takes its version
+  ranges in order. Use this for 100 TB initial syncs and large
+  backfills.
 """
 
 from __future__ import annotations
@@ -46,7 +48,12 @@ from trignis_spark.config import EnvironmentConfig, TrackingObject
 from trignis_spark.deadletter import DeadLetterStore
 from trignis_spark.operators import changefeed as cf
 from trignis_spark.sinks.base import ExportContext, RetryPolicy, Sink, SinkFailure
-from trignis_spark.sinks.spark_file import DataFrameSink, batch_manifest
+from trignis_spark.sinks.spark_file import (
+    DataFrameSink,
+    batch_manifest,
+    read_manifest,
+    stretch_manifest,
+)
 from trignis_spark.state import PauseStore, StateStore
 
 log = logging.getLogger("trignis_spark.poller")
@@ -135,7 +142,8 @@ class PollPipeline:
         self,
         spark: SparkSession,
         env: EnvironmentConfig,
-        source_fn,  # (spark, TrackingObject) -> outbox DataFrame
+        source_fn,  # (spark, TrackingObject) -> outbox DataFrame, or a dict
+        # of them by object name (each object's own pushdown and commit)
         sinks: list[Sink],
         state: StateStore,
         dlq: DeadLetterStore,
@@ -163,7 +171,6 @@ class PollPipeline:
 
     def run_cycle(self) -> list[CycleResult]:
         results = []
-        commit = getattr(self.source_fn, "commit", None)
         for obj in self.env.tracking_objects:
             if self.pauses is not None and self.pauses.is_paused(
                 self.env.name, obj.name
@@ -171,6 +178,7 @@ class PollPipeline:
                 results.append(CycleResult(obj.name, "paused"))
                 continue
             results.append(self.poll_object(obj))
+            commit = getattr(self._source_of(obj), "commit", None)
             if commit is not None:
                 # sources with staged state (snapshot diff) promote it only
                 # after the export attempt — a crash earlier re-emits
@@ -182,7 +190,7 @@ class PollPipeline:
 
         # mode decision (ChangeTrackingBackgroundService.cs:447-480)
         if last is None:
-            outbox = self.source_fn(self.spark, obj)
+            outbox = self._source_of(obj)(self.spark, obj)
             if obj.initial_sync_mode == "Full":
                 return self._full_sync(obj, outbox)
             return self._seed(obj, outbox)
@@ -199,7 +207,7 @@ class PollPipeline:
                     self.env.name, obj.name, last,
                 )
                 return self._full_sync(
-                    obj, self.source_fn(self.spark, obj), reason_code=1
+                    obj, self._source_of(obj)(self.spark, obj), reason_code=1
                 )
 
         # incremental: probe the horizon first so pushdown-capable sources
@@ -208,13 +216,22 @@ class PollPipeline:
         horizon = (
             self.horizon_fn(self.spark, obj) if self.horizon_fn is not None else None
         )
-        if getattr(self.source_fn, "supports_pushdown", False):
-            outbox = self.source_fn(
-                self.spark, obj, from_version=from_version, horizon=horizon
-            )
-        else:
-            outbox = self.source_fn(self.spark, obj)
+        outbox = self._read_from(obj, from_version, horizon)
         return self._sync(obj, outbox, from_version, horizon)
+
+    def _source_of(self, obj: TrackingObject):
+        if isinstance(self.source_fn, dict):
+            return self.source_fn[obj.name]
+        return self.source_fn
+
+    def _read_from(
+        self, obj: TrackingObject, from_version: int, horizon: int | None
+    ) -> DataFrame:
+        source = self._source_of(obj)
+        if getattr(source, "supports_pushdown", False):
+            return source(self.spark, obj, from_version=from_version,
+                          horizon=horizon)
+        return source(self.spark, obj)
 
     # -- modes -------------------------------------------------------------
 
@@ -254,6 +271,64 @@ class PollPipeline:
 
     # -- export + commit ---------------------------------------------------
 
+    def _context(self, obj: TrackingObject) -> ExportContext:
+        return ExportContext(
+            environment=self.env.name,
+            database=obj.database,
+            object_name=obj.name,
+            key=f"{self.env.name}/{obj.name}",
+        )
+
+    def _dead_letter_key(self, obj: TrackingObject, sink_name: str) -> str:
+        return f"{self.env.name}/{obj.name}/{sink_name}"
+
+    def _dead_letter(self, obj: TrackingObject, fail: SinkFailure, data: str) -> None:
+        self.dlq.save(
+            source_key=self._dead_letter_key(obj, fail.sink_name),
+            tracking_object_name=obj.name,
+            environment_name=self.env.name,
+            database_name=obj.database,
+            data=data,
+            error_message=fail.error,
+        )
+
+    def _write_df(self, dfs: DataFrameSink, batch: DataFrame,
+                  ctx: ExportContext, metadata: dict) -> SinkFailure | None:
+        """One ``DataFrameSink`` writes the batch executor-side."""
+        try:
+            dfs.write_df(batch, ctx, metadata)
+        except Exception as e:  # noqa: BLE001
+            return SinkFailure(dfs.name, str(e), True)
+        return None
+
+    def _export_df(self, obj: TrackingObject, ordered: DataFrame,
+                   ctx: ExportContext, metadata: dict,
+                   manifest: str) -> list[SinkFailure]:
+        """The distributed path's fan-out; failures are independent per
+        sink. A ``DataFrameSink`` takes its version ranges in order: while
+        it has a dead-lettered manifest, the batch stretches that manifest
+        instead of reaching the sink. A failed write dead-letters the
+        manifest, not the rows."""
+        failures: list[SinkFailure] = []
+        for dfs in self.df_sinks:
+            key = self._dead_letter_key(obj, dfs.name)
+            with self.dlq.hold(key):  # no replay of this sink meanwhile
+                pending = self.dlq.first_for(key)
+                if pending is None:
+                    fail = self._write_df(dfs, ordered, ctx, metadata)
+                    if fail is not None:
+                        self._dead_letter(obj, fail, manifest)
+                else:
+                    self.dlq.replace_data(
+                        pending["id"], stretch_manifest(pending["data"], manifest)
+                    )
+                    fail = SinkFailure(
+                        dfs.name, f"behind dead letter {pending['id']}", True
+                    )
+            if fail is not None:
+                failures.append(fail)
+        return failures
+
     def _export(
         self,
         obj: TrackingObject,
@@ -262,14 +337,10 @@ class PollPipeline:
         default_version: int,
         reason_code: int = 0,
     ) -> CycleResult:
-        ctx = ExportContext(
-            environment=self.env.name,
-            database=obj.database,
-            object_name=obj.name,
-            key=f"{self.env.name}/{obj.name}",
-        )
+        ctx = self._context(obj)
         ordered = batch.orderBy(cf.VERSION)
         failures: list[SinkFailure] = []
+        mode = "full" if sync_type == "Full" else "sync"
 
         # watermark + size computed executor-side — the driver never sees
         # the rows themselves until the bounded chunk iteration below
@@ -288,44 +359,26 @@ class PollPipeline:
                 "Sync": {"Version": new_wm, "Type": sync_type,
                          "ReasonCode": reason_code}
             }
-            manifest = batch_manifest(ctx, default_version, new_wm, n_rows)
-            for dfs in self.df_sinks:
-                try:
-                    dfs.write_df(ordered, ctx, metadata)
-                except Exception as e:  # noqa: BLE001
-                    failures.append(SinkFailure(dfs.name, str(e), True))
-                    # dead-letter the replayable MANIFEST, not the rows —
-                    # replay re-scans the version range from the source
-                    self.dlq.save(
-                        source_key=f"{self.env.name}/{obj.name}/{dfs.name}",
-                        tracking_object_name=obj.name,
-                        environment_name=self.env.name,
-                        database_name=obj.database,
-                        data=manifest,
-                        error_message=str(e),
-                    )
+            manifest = batch_manifest(ctx, default_version, new_wm, n_rows,
+                                      sync_type, reason_code)
+            failures = self._export_df(obj, ordered, ctx, metadata, manifest)
             if not self.sinks or sync_type == "Full":
                 # Full syncs route to the distributed path automatically:
                 # a snapshot through a collect-based envelope sink is the
                 # one shape that grows with table size, not change rate
-                if self.sinks and sync_type == "Full":
+                if self.sinks:
                     log.info(
                         "%s/%s: full sync routed to distributed sinks; "
                         "%d envelope sink(s) skipped",
                         self.env.name, obj.name, len(self.sinks),
                     )
                 self.state.set_last_version(self.env.name, obj.name, new_wm)
-                return CycleResult(
-                    obj.name,
-                    sync_type.lower() if sync_type == "Full" else "sync",
-                    n_rows, new_wm, failures,
-                )
+                return CycleResult(obj.name, mode, n_rows, new_wm, failures)
 
         # envelope path: bounded chunks — at most max_records_per_batch
         # rows on the driver at a time, each chunk its own envelope with
         # its own (monotone) chunk-max version; DLQ rows are per-chunk so
         # replay granularity matches what was actually sent
-        failed_df_sinks = {d.name for d in self.df_sinks}
         exported = 0
         for chunk in iter_envelope_chunks(
             ordered, self.env.max_records_per_batch
@@ -336,18 +389,48 @@ class PollPipeline:
             # write-ordering: dead letters BEFORE the watermark advance, so
             # a crash between the two re-fetches rather than losing payload
             for fail in chunk_failures:
-                if fail.sink_name in failed_df_sinks:
-                    continue  # manifest already dead-lettered above
-                self.dlq.save(
-                    source_key=f"{self.env.name}/{obj.name}/{fail.sink_name}",
-                    tracking_object_name=obj.name,
-                    environment_name=self.env.name,
-                    database_name=obj.database,
-                    data=payload,
-                    error_message=fail.error,
-                )
+                self._dead_letter(obj, fail, payload)
             failures += chunk_failures
             exported += len(chunk)
         self.state.set_last_version(self.env.name, obj.name, new_wm)
-        return CycleResult(obj.name, sync_type.lower() if sync_type == "Full" else "sync",
-                           exported, new_wm, failures)
+        return CycleResult(obj.name, mode, exported, new_wm, failures)
+
+    # -- manifest replay ---------------------------------------------------
+
+    def replay_manifest(self, obj_name: str, row: dict) -> bool:
+        """Re-deliver the dead-lettered distributed batch ``row``: re-read
+        the object's source, rebuild ``(from_version, to_version]`` the way
+        the cycle built it, and write it to the one ``DataFrameSink`` whose
+        dead letter it is. The watermark is never touched. A delivered row
+        is deleted under the sink's hold, so no cycle stretches it after.
+        Raises when the object or sink is gone or the source is staged."""
+        obj = next((o for o in self.env.tracking_objects if o.name == obj_name),
+                   None)
+        key = row["source_key"]
+        dfs = next((d for d in self.df_sinks if obj is not None
+                    and self._dead_letter_key(obj, d.name) == key), None)
+        if dfs is None:
+            raise LookupError(f"{key}: no such DataFrame sink")
+        source = self._source_of(obj)
+        if getattr(source, "commit", None) is not None:
+            # a staged source (snapshot diff) holds only its next diff
+            raise ValueError(f"{key}: a staged source cannot re-read a past "
+                             "version range")
+        with self.dlq.hold(key):
+            row = self.dlq.get(row["id"])  # a cycle may have stretched it
+            if row is None:
+                return True  # delivered or purged meanwhile
+            m = read_manifest(row["data"])
+            if m["type"] == "Full":
+                batch = cf.full_snapshot(source(self.spark, obj))
+            else:
+                lo = m["from_version"]
+                batch = cf.outbox_scan(self._read_from(obj, lo, None), lo)
+            hi = m["to_version"]
+            batch = batch.filter(F.col(cf.VERSION) <= F.lit(hi)).orderBy(cf.VERSION)
+            metadata = {"Sync": {"Version": hi, "Type": m["type"],
+                                 "ReasonCode": m["reason_code"]}}
+            if self._write_df(dfs, batch, self._context(obj), metadata):
+                return False
+            self.dlq.delete(row["id"])
+            return True
