@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from trignis_spark.config import EnvironmentConfig, TrackingObject
 from trignis_spark.deadletter import DeadLetterStore
-from trignis_spark.maintenance import ParquetCompactor
+from trignis_spark.maintenance import ParquetCompactor, drop_table_and_location
 from trignis_spark.operators import dedup_index as di
 from trignis_spark.session import get_spark
 from trignis_spark.sinks.curate import CurateSink
@@ -58,7 +58,7 @@ def main() -> int:
     # 1. seed the persistent index with the first half of the corpus
     seed = docs.filter("doc_id % 2 = 0").select("doc_id", "text")
     di.build_prefix_index(spark, seed, index, threshold=0.5)
-    print(f"index seeded: {spark.table(di._docs_table(index)).count()} docs")
+    print(f"index seeded: {di.members(spark, index).count()} docs")
 
     # 2. the other half arrives as outbox change events, in two waves;
     # one poll cycle curates each (a Full sync, then a Diff from the
@@ -125,8 +125,8 @@ def main() -> int:
     for r in packed.groupBy("shard").count().orderBy("shard").collect():
         print(f"  shard {r['shard']}: {r['count']} sequences")
 
-    spark.sql(f"DROP TABLE IF EXISTS {index}")
-    spark.sql(f"DROP TABLE IF EXISTS {di._docs_table(index)}")
+    for t in di._tables(index):
+        drop_table_and_location(spark, t)
     return 0
 
 

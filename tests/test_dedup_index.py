@@ -19,8 +19,8 @@ def _frame(spark, rows):
 @pytest.fixture
 def pindex(spark):
     yield "dedup_pidx_t"
-    for suffix in ("", "_full", "_docs", "_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS dedup_pidx_t{suffix}")
+    for t in di._tables("dedup_pidx_t"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def _pairs(df):
@@ -56,7 +56,7 @@ def test_extend_is_idempotent_and_grows_probe_results(spark, pindex):
     newcomer = _frame(spark, [(2, BASE)])
     assert di.extend(spark, newcomer, pindex) == 1
     assert di.extend(spark, newcomer, pindex) == 0  # replay: no-op
-    docs = spark.table(di._docs_table(pindex))
+    docs = di.members(spark, pindex)
     assert docs.filter(F.col("doc_id") == 2).count() == 1
 
     # and the probe now sees the near-dup through the extended index
@@ -178,6 +178,10 @@ def test_prefix_index_compaction_preserves_probe_results(spark, pindex):
         di.extend(
             spark, _frame(spark, _rand_docs(seed, 4, start=start)), pindex
         )
+        if start < 700:
+            # base runs for the compaction to merge; the last extend
+            # stays in the delta for the compaction to fold
+            di._fold_delta(spark, pindex)
     # same generator seed as the corpus build => identical texts under
     # fresh doc ids, so the probe is guaranteed non-empty
     batch = _frame(spark, _rand_docs(8, 5, start=3000))
@@ -186,10 +190,12 @@ def test_prefix_index_compaction_preserves_probe_results(spark, pindex):
                                              0.5).collect()}
     files_before = sum(
         len(table_data_files(spark, t))
-        for t in (pindex, pindex + "_full", pindex + "_docs")
+        for t in (pindex, pindex + "_full", pindex + "_docs",
+                  pindex + "_delta")
     )
     n_after = di.compact_prefix_index(spark, pindex)
     assert n_after < files_before
+    assert spark.table(di._delta_table(pindex)).count() == 0
     after = {(r.batch_doc, r.corpus_doc, round(r.jaccard, 9))
              for r in di.probe(spark, pindex, batch,
                                             0.5).collect()}
@@ -231,8 +237,7 @@ def test_prefix_probe_unaffected_by_replayed_duplicate_rows(spark):
         assert after == before and before
         assert all(j <= 1.0 for _, _, j in after)
     finally:
-        for t in (name, di._full_table(name), di._docs_table(name),
-                  di._meta_table(name)):
+        for t in di._tables(name):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
@@ -290,8 +295,7 @@ def test_prefix_probe_sort_merge_fallback_identical_pairs(spark):
             di.MAX_BROADCAST_SHINGLES = orig
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        for t in (name, di._full_table(name), di._docs_table(name),
-                  di._meta_table(name)):
+        for t in di._tables(name):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
@@ -316,7 +320,7 @@ def test_attach_prefix_index_restores_probes(spark, pindex):
 
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     twin = pindex + "_reattached"
-    for suffix in ("", "_full", "_docs", "_meta"):
+    for suffix in ("", "_full", "_docs", "_delta", "_meta"):
         spark.sql(f"DROP TABLE IF EXISTS {twin}{suffix}")
         dst = os.path.join(wh, twin + suffix)
         if os.path.isdir(dst):
@@ -329,7 +333,7 @@ def test_attach_prefix_index_restores_probes(spark, pindex):
                                               threshold=0.5).collect()}
         assert got == want
     finally:
-        for suffix in ("", "_full", "_docs", "_meta"):
+        for suffix in ("", "_full", "_docs", "_delta", "_meta"):
             spark.sql(f"DROP TABLE IF EXISTS {twin}{suffix}")
             dst = os.path.join(wh, twin + suffix)
             if os.path.isdir(dst):
@@ -360,7 +364,7 @@ def test_compaction_after_attach_swaps_external_tables(spark, pindex):
                                            0.5).collect()}
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     twin = pindex + "_reatt"
-    for suffix in ("", "_full", "_docs", "_meta"):
+    for suffix in ("", "_full", "_docs", "_delta", "_meta"):
         src, dst = pindex + suffix, twin + suffix
         spark.sql(f"DROP TABLE IF EXISTS {dst}")
         if os.path.isdir(os.path.join(wh, dst)):
@@ -380,8 +384,98 @@ def test_compaction_after_attach_swaps_external_tables(spark, pindex):
             spark, _frame(spark, more), twin
         ) == len(more)
     finally:
-        for suffix in ("", "_full", "_docs", "_meta"):
+        for suffix in ("", "_full", "_docs", "_delta", "_meta"):
             t = twin + suffix
             spark.sql(f"DROP TABLE IF EXISTS {t}")
             if os.path.isdir(os.path.join(wh, t)):
                 shutil.rmtree(os.path.join(wh, t))
+
+
+def _split_index(spark, name):
+    """An index whose corpus sits partly in the bucketed base and
+    partly in the delta, with a batch of one-word edits of both parts
+    (jaccard spread over the thresholds by doc length), a verbatim copy
+    from each, and unrelated docs. Returns (corpus, batch)."""
+    base_rows, delta_rows = _rand_docs(3, 16), _rand_docs(13, 10, start=500)
+    di.build_prefix_index(spark, _frame(spark, base_rows), name,
+                          threshold=0.5)
+    assert di.extend(spark, _frame(spark, delta_rows), name) == 15
+    assert spark.table(di._delta_table(name)).count() == 15
+    batch = _frame(spark, _rand_docs(4, 6, start=1000) + [
+        (1100 + i, text.rsplit(" ", 1)[0] + " zz")
+        for i, (_, text) in enumerate(base_rows[:6] + delta_rows[:6])
+    ] + [(1200, base_rows[20][1]), (1201, delta_rows[3][1])])
+    return _frame(spark, base_rows + delta_rows), batch
+
+
+def _assert_probe_matches(spark, name, corpus, batch):
+    for t in (0.5, 0.7, 0.9):
+        want = _one_shot(corpus, batch, t)
+        assert want
+        for broadcast_batch in (None, False):
+            got = _pairs(di.probe(spark, name, batch, threshold=t,
+                                  broadcast_batch=broadcast_batch))
+            assert got == want, (t, broadcast_batch)
+
+
+def test_probe_matches_one_shot_across_base_and_delta(spark, pindex):
+    """With the corpus split across the base and the delta, the probe
+    returns the one-shot operator's pairs on the broadcast and the
+    sort-merge paths — and again after the delta is folded."""
+    corpus, batch = _split_index(spark, pindex)
+    _assert_probe_matches(spark, pindex, corpus, batch)
+
+    assert di._fold_delta(spark, pindex) == 15
+    assert spark.table(di._delta_table(pindex)).count() == 0
+    assert spark.table(di._docs_table(pindex)).count() == 39
+    _assert_probe_matches(spark, pindex, corpus, batch)
+
+
+def test_append_folds_once_the_delta_reaches_the_bound(spark, pindex,
+                                                       monkeypatch):
+    di.build_prefix_index(spark, _frame(spark, _rand_docs(5, 10)), pindex,
+                          threshold=0.5)
+    monkeypatch.setattr(di, "FOLD_DELTA_ROWS", 20)
+    assert di.extend(spark, _frame(spark, _rand_docs(6, 8, start=500)),
+                     pindex) == 12
+    assert spark.table(di._delta_table(pindex)).count() == 12
+    assert di.extend(spark, _frame(spark, _rand_docs(7, 6, start=600)),
+                     pindex) == 9
+    # 21 delta rows crossed the bound: the second append folded them
+    assert spark.table(di._delta_table(pindex)).count() == 0
+    assert spark.table(di._docs_table(pindex)).count() == 15 + 21
+    assert di.members(spark, pindex).count() == 36
+
+
+def test_crash_between_fold_append_and_truncate_loses_nothing(
+        spark, pindex, monkeypatch):
+    """A fold that dies after its base append but before the delta
+    truncate leaves every delta document in both the base and the
+    delta: no document is lost, the probe pairs are unchanged, and the
+    re-fold appends nothing."""
+    corpus, batch = _split_index(spark, pindex)
+    want = _pairs(di.probe(spark, pindex, batch, threshold=0.5))
+    members = {r["doc_id"] for r in corpus.collect()}
+
+    def crash(spark, table):
+        raise RuntimeError("crash before the truncate")
+
+    real_truncate = di._truncate_delta
+    monkeypatch.setattr(di, "_truncate_delta", crash)
+    with pytest.raises(RuntimeError, match="crash before"):
+        di._fold_delta(spark, pindex)
+    assert spark.table(di._delta_table(pindex)).count() == 15
+    assert spark.table(di._docs_table(pindex)).count() == 39
+    assert {r["doc_id"] for r in
+            di.members(spark, pindex).collect()} == members
+    for broadcast_batch in (None, False):
+        assert _pairs(di.probe(spark, pindex, batch, threshold=0.5,
+                               broadcast_batch=broadcast_batch)) == want
+
+    monkeypatch.setattr(di, "_truncate_delta", real_truncate)
+    assert di._fold_delta(spark, pindex) == 0
+    assert spark.table(di._delta_table(pindex)).count() == 0
+    assert spark.table(di._docs_table(pindex)).count() == 39
+    assert _pairs(di.probe(spark, pindex, batch, threshold=0.5)) == want
+    # a replayed extend of the folded documents still adds nothing
+    assert di.extend(spark, corpus, pindex) == 0

@@ -30,8 +30,8 @@ def _frame(spark, rows):
 @pytest.fixture
 def index(spark):
     yield "ingest_idx_t"
-    for s in ("", "_full", "_docs", "_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS ingest_idx_t{s}")
+    for t in di._tables("ingest_idx_t"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_gate_stages_filter_and_extend(spark, index, tmp_path):
@@ -62,9 +62,7 @@ def test_gate_stages_filter_and_extend(spark, index, tmp_path):
     got = spark.read.parquet(accepted_path)
     assert {r["doc_id"] for r in got.collect()} == {11, 15}
     # the index sidecar now carries the admitted docs alongside the seeds
-    members = {
-        r["doc_id"] for r in spark.table(di._docs_table(index)).collect()
-    }
+    members = {r["doc_id"] for r in di.members(spark, index).collect()}
     assert members == {1, 2, 11, 15}
 
     # replay of the same epoch: membership anti-join drops everything
@@ -318,9 +316,7 @@ def test_curate_sink_through_poll_pipeline(spark, index, tmp_path):
     p.run_cycle()
     got = {r["doc_id"] for r in spark.read.parquet(accepted).collect()}
     assert got == {11}
-    members = {
-        r["doc_id"] for r in spark.table(di._docs_table(index)).collect()
-    }
+    members = {r["doc_id"] for r in di.members(spark, index).collect()}
     assert members == {1, 11}
 
     # replayed cycle (same rows, watermark unmoved → same batch): no-op
@@ -349,8 +345,8 @@ def test_curate_sink_through_poll_pipeline(spark, index, tmp_path):
 @pytest.fixture
 def pindex(spark):
     yield "ingest_pidx_t"
-    for s in ("", "_full", "_docs", "_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS ingest_pidx_t{s}")
+    for t in di._tables("ingest_pidx_t"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def _stats(s: ingest.IngestStats) -> dict:
@@ -391,8 +387,7 @@ def test_gate_works_over_prefix_index(spark, pindex, tmp_path):
         "low_quality": 1, "corpus_near_dup": 3, "batch_near_dup": 0,
         "accepted": 0,
     }
-    members = {r["doc_id"]
-               for r in spark.table(di._docs_table(pindex)).collect()}
+    members = {r["doc_id"] for r in di.members(spark, pindex).collect()}
     assert members == {1, 2, 11, 15}
 
     # an insert and an update of one doc_id in one poll window: two
@@ -433,11 +428,12 @@ def test_gate_without_stats_and_empty_epoch(spark, pindex, tmp_path):
     assert {r["doc_id"] for r in
             spark.read.parquet(accepted_path).collect()} == {11, 15}
     assert {r["doc_id"] for r in
-            spark.table(di._docs_table(pindex)).collect()} == {1, 2, 11, 15}
+            di.members(spark, pindex).collect()} == {1, 2, 11, 15}
 
 
-def _rows(spark, table):
-    return sorted(tuple(r) for r in spark.table(table).collect())
+def _rows(spark, table, path=None):
+    df = spark.table(table) if path is None else spark.read.parquet(path)
+    return sorted(tuple(r) for r in df.collect())
 
 
 def test_gate_append_matches_extend_prefix_index(spark, pindex, tmp_path):
@@ -461,7 +457,7 @@ def test_gate_append_matches_extend_prefix_index(spark, pindex, tmp_path):
         acc = spark.read.parquet(accepted_path).select("doc_id", "text")
         assert {r["doc_id"] for r in acc.collect()} == {11, 15}
         assert di.extend(spark, acc, ref) == 2
-        for sfx in ("", "_full", "_docs"):
+        for sfx in ("", "_full", "_docs", "_delta"):
             assert _rows(spark, pindex + sfx) == _rows(spark, ref + sfx)
 
         # the next epoch's near-dup of an admitted doc is a corpus hit
@@ -473,11 +469,76 @@ def test_gate_append_matches_extend_prefix_index(spark, pindex, tmp_path):
         assert stats[-1].accepted == 2
         later = spark.read.parquet(accepted_path).filter("epoch_id > 0")
         assert di.extend(spark, later.select("doc_id", "text"), ref) == 3
-        for sfx in ("", "_full", "_docs"):
+        for sfx in ("", "_full", "_docs", "_delta"):
             assert _rows(spark, pindex + sfx) == _rows(spark, ref + sfx)
     finally:
-        for sfx in ("", "_full", "_docs", "_meta"):
-            spark.sql(f"DROP TABLE IF EXISTS {ref}{sfx}")
+        for t in di._tables(ref):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_gate_stats_identical_across_a_folding_epoch(spark, pindex,
+                                                     tmp_path, monkeypatch):
+    """The same epochs over two copies of one index give identical
+    ``IngestStats``, accepted rows and members whether the appends stay
+    in the delta or an epoch's append folds it into the base — and the
+    epochs after the fold see the folded documents as corpus."""
+    ref = "ingest_pidx_nofold"
+    corpus = _frame(spark, [(1, BASE), (2, OTHER)])
+    first = [(10, NEAR_BASE), (11, CLEAN_A), (12, CLEAN_A),
+             (13, JUNK), (14, NEAR_A), (15, CLEAN_B)]
+    epochs = [
+        first,                                  # accepts 11, 15
+        [(20, CLEAN_C), (21, NEAR_A), (22, CLEAN_D)],  # 21 ~ 11
+        first,                                  # replay of epoch 0
+        [(30, CLEAN_C), (31, CLEAN_D), (32, BASE)],    # all corpus hits
+    ]
+
+    def run(name):
+        di.build_prefix_index(spark, corpus, name, threshold=0.5)
+        stats: list[ingest.IngestStats] = []
+        acc = str(tmp_path / f"accepted_{name}")
+        fn = ingest.make_ingest_batch_fn(
+            spark, name, acc, min_quality=0.05, threshold=0.5, stats=stats,
+        )
+        for epoch, rows in enumerate(epochs):
+            fn(_frame(spark, rows), epoch_id=epoch)
+        return (stats, _rows(spark, None, acc),
+                sorted(r["doc_id"] for r in di.members(spark, name).collect()))
+
+    folds = []
+    real_fold = di._fold_delta
+
+    def counting_fold(*a, **kw):
+        folds.append(real_fold(*a, **kw))
+        return folds[-1]
+
+    monkeypatch.setattr(di, "_fold_delta", counting_fold)
+    try:
+        plain = run(ref)
+        assert folds == []
+        # the second epoch's append takes the delta from 2 to 4 rows
+        monkeypatch.setattr(di, "FOLD_DELTA_ROWS", 3)
+        folded = run(pindex)
+        assert folds == [4]
+        assert spark.table(di._delta_table(pindex)).count() == 0
+        assert spark.table(di._docs_table(pindex)).count() == 6
+    finally:
+        for t in di._tables(ref):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    assert folded == plain
+    stats = plain[0]
+    assert [s.accepted for s in stats] == [2, 2, 0, 0]
+    assert _stats(stats[1]) == {
+        "arrived": 3, "already_known": 0, "exact_dup": 0,
+        "low_quality": 0, "corpus_near_dup": 1, "batch_near_dup": 0,
+        "accepted": 2,
+    }
+    assert _stats(stats[3]) == {
+        "arrived": 3, "already_known": 0, "exact_dup": 0,
+        "low_quality": 0, "corpus_near_dup": 3, "batch_near_dup": 0,
+        "accepted": 0,
+    }
+    assert plain[2] == [1, 2, 11, 15, 20, 22]
 
 
 def test_self_probe_rejects_what_incremental_pairs_rejects(spark):
@@ -524,10 +585,11 @@ def test_self_probe_rejects_what_incremental_pairs_rejects(spark):
 #: epoch over a prefix index runs on the six-document batch below, with
 #: every stage executed once. A stage that re-executes its lineage — a
 #: stats count() that re-runs the probe, an extend that repeats the
-#: membership anti-join — pushes an epoch over this. Measured: 27 jobs
-#: in each of three fresh sessions on a 4-core box; the margin of 3 is
-#: the run-to-run spread of adaptive map stages seen before (56-59).
-GATE_EPOCH_MAX_JOBS = 30
+#: membership anti-join — pushes an epoch over this. Measured: 21 jobs
+#: in each of three fresh sessions on a 4-core box (the index append is
+#: one delta write); the margin of 3 is the run-to-run spread of
+#: adaptive map stages seen before (56-59).
+GATE_EPOCH_MAX_JOBS = 24
 
 
 def test_gate_epoch_spark_job_budget(spark, pindex, tmp_path):

@@ -255,8 +255,8 @@ def test_prefix_index_probe_pushes_candidate_ids_into_verify_scan(spark):
         assert "sortmergejoin" not in plan
         assert "count(distinct" not in plan
     finally:
-        for s in ("", "_full", "_docs", "_meta"):
-            spark.sql(f"DROP TABLE IF EXISTS plans_pidx{s}")
+        for t in di._tables("plans_pidx"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_2level_clustered_near_dup_never_cartesian(spark):

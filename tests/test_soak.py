@@ -210,7 +210,7 @@ def test_soak_advancing_feed_failures_and_reloads(spark, tmp_path, monkeypatch):
     from trignis_spark.maintenance import table_data_files
 
     # every document slice was folded in; replays added nothing
-    assert spark.table(idx + "_docs").count() == n_docs
+    assert di.members(spark, idx).count() == n_docs
     assert di.extend(spark, docs, idx) == 0
     probe_batch = docs.filter("doc_id % 7 = 3")
     before = {
@@ -219,7 +219,7 @@ def test_soak_advancing_feed_failures_and_reloads(spark, tmp_path, monkeypatch):
     }
     files_before = sum(
         len(table_data_files(spark, t))
-        for t in (idx, idx + "_full", idx + "_docs")
+        for t in (idx, idx + "_full", idx + "_docs", idx + "_delta")
     )
     files_after = di.compact_prefix_index(spark, idx)
     assert files_after < files_before, (

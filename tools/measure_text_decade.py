@@ -169,7 +169,7 @@ def main() -> int:
                 "leg": "compact", "files": nf,
                 "sec": round(time.time() - tc, 1),
             }), flush=True)
-        n_docs = spark.table(di._docs_table(args.name)).count()
+        n_docs = di.members(spark, args.name).count()
         print(json.dumps({
             "leg": "build_prefix_index", "docs": n_docs,
             "threshold": args.threshold, "chunks": nc,

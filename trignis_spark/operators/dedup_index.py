@@ -4,7 +4,8 @@
 sizes on every call — right for a one-shot query, wrong for the
 production loop where the same 100 TB corpus is probed by every poll
 cycle. This module materializes a prefix-pruned index once and makes
-each cycle a cheap probe. Four tables per index ``<name>``:
+each cycle a cheap probe. Five tables per index ``<name>``: a bucketed
+*base* of three tables, a plain per-epoch *delta*, and the meta row.
 
 - ``<name>`` (probe table): only each corpus doc's
   floor((1-t)·|d|)+1 *rarest* shingles (rarest-first under the
@@ -16,7 +17,7 @@ each cycle a cheap probe. Four tables per index ``<name>``:
   stored prefix's complement holds only ceil(t·|C|)-1 of C's shingles,
   so at least one shared shingle is always stored. The argument never
   compares orders across documents — any per-doc choice of that many
-  shingles works — so extends may rank against their *own* df
+  shingles works — so folds may rank against their *own* df
   snapshot; df ordering is a performance heuristic (short posting
   lists), not a correctness requirement, and staleness cannot lose
   pairs.
@@ -26,11 +27,29 @@ each cycle a cheap probe. Four tables per index ``<name>``:
   into the scan as an ``In`` filter, so row-group min-max pruning bounds
   verify I/O by the CANDIDATES at any corpus size.
 - ``<name>_docs`` — (doc_id, sz) membership sidecar bucketed by doc_id:
-  O(lookup) idempotence for extends (a replayed batch anti-joins to
-  nothing) without scanning the index.
+  O(lookup) idempotence for folds (a re-fold anti-joins to nothing)
+  without scanning the index.
+- ``<name>_delta`` — the log: one plain, unbucketed (doc_id, shs, sz)
+  row per document appended since the last fold, one file per append.
+  Membership is ``_docs`` ∪ the delta's ids (``members``); the probe
+  joins the batch to the delta's *fully exploded* arrays beside the
+  probe table (every delta shingle is stored, so the pigeonhole holds
+  trivially) and verifies against ``_full`` ∪ the delta.
 - ``<name>_meta`` — (threshold, n): probes below the build threshold are
   rejected (the stored prefix would be too short), and the shingle
   width is read from here by every probe, extend and caller.
+
+Roles: ``build_prefix_index`` writes the base and an empty delta. Every
+append — ``extend`` and the text gate's accept alike — is one
+``coalesce(1)`` delta write (``_append_delta``): no ranking, no
+bucketed write, one table refreshed. Once the delta holds
+``FOLD_DELTA_ROWS`` rows, the append that crossed the bound folds it
+into the base inline (``_fold_delta``): anti-join against ``_docs``,
+one ranked, bucketed base append (``_append_prefix_docs``), truncate.
+``compact_prefix_index`` folds first, then rewrites the base to ~one
+file per bucket. A document that a crashed fold left in both the base
+and the delta is one pair per (batch, corpus) doc: the probe's
+``dropDuplicates`` absorbs it.
 
 Probe shape at scale: the batch side is one poll cycle (small), so it
 broadcasts and the bucketed probe table is scanned in place — no shuffle
@@ -42,7 +61,7 @@ count; the corpus is still never shuffled.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from trignis_spark.plans.bucketing import batch_anti_join
@@ -62,9 +81,13 @@ def _meta_table(table: str) -> str:
     return f"{table}_meta"
 
 
-def _tables(table: str) -> tuple[str, str, str, str]:
+def _delta_table(table: str) -> str:
+    return f"{table}_delta"
+
+
+def _tables(table: str) -> tuple[str, str, str, str, str]:
     return (table, _full_table(table), _docs_table(table),
-            _meta_table(table))
+            _delta_table(table), _meta_table(table))
 
 
 def _refresh(spark: SparkSession, table: str) -> None:
@@ -85,19 +108,36 @@ def _refresh(spark: SparkSession, table: str) -> None:
 #: only meta writers/registrars — drop entries.
 _META_CACHE: dict = {}
 
+#: per-(warehouse, table) tally of the rows appended to the delta since
+#: its last fold, so deciding to fold costs no Spark job per epoch. A
+#: process counts the delta once, on its first append; build and fold
+#: set the tally, attach drops it. Appends from another process make it
+#: an undercount, which only delays a fold.
+_DELTA_ROWS: dict = {}
+
+
+def _cache_key(spark: SparkSession, table: str) -> tuple[str, str]:
+    return (spark.conf.get("spark.sql.warehouse.dir", ""), table)
+
 
 def _meta_row(spark: SparkSession, table: str):
-    key = (spark.conf.get("spark.sql.warehouse.dir", ""), table)
+    key = _cache_key(spark, table)
     row = _META_CACHE.get(key)
     if row is None:
         _META_CACHE[key] = row = spark.table(_meta_table(table)).collect()[0]
     return row
 
 
-def _drop_meta_cache(spark: SparkSession, table: str) -> None:
-    _META_CACHE.pop(
-        (spark.conf.get("spark.sql.warehouse.dir", ""), table), None
-    )
+def _delta_rows(spark: SparkSession, table: str) -> int:
+    key = _cache_key(spark, table)
+    if key not in _DELTA_ROWS:
+        _DELTA_ROWS[key] = spark.table(_delta_table(table)).count()
+    return _DELTA_ROWS[key]
+
+
+def _drop_caches(spark: SparkSession, table: str) -> None:
+    _META_CACHE.pop(_cache_key(spark, table), None)
+    _DELTA_ROWS.pop(_cache_key(spark, table), None)
 
 
 #: parquet row-group size for the doc_id-SORTED doc-array verify table.
@@ -250,9 +290,10 @@ def build_prefix_index(
 ) -> None:
     """Materialize the prefix-pruned probe table, the doc_id-SORTED
     doc-array verify table (see ``VERIFY_BLOCK_BYTES``), the membership
-    sidecar and the meta row (overwrites all four, including orphaned
-    locations left by other sessions). The corpus is tokenized once:
-    the verify table is written first and the other two read it."""
+    sidecar, an empty delta and the meta row (overwrites all five,
+    including orphaned locations left by other sessions). The corpus is
+    tokenized once: the verify table is written first and the other two
+    base tables read it."""
     from trignis_spark.maintenance import drop_table_and_location
 
     for t in _tables(table):
@@ -283,12 +324,18 @@ def build_prefix_index(
         .format("parquet")
         .saveAsTable(_docs_table(table))
     )
+    # an empty write still leaves one schema-bearing file, which is
+    # what lets ``attach_prefix_index`` infer the delta's schema
+    full.limit(0).write.mode("overwrite").format("parquet").saveAsTable(
+        _delta_table(table)
+    )
     spark.createDataFrame(
         [(float(threshold), n)], "threshold double, n int"
     ).write.mode("overwrite").format("parquet").saveAsTable(
         _meta_table(table)
     )
-    _drop_meta_cache(spark, table)
+    _drop_caches(spark, table)
+    _DELTA_ROWS[_cache_key(spark, table)] = 0
     _refresh(spark, table)
 
 
@@ -302,7 +349,7 @@ def _bucket_count(spark: SparkSession, table: str) -> int:
 
 def attach_prefix_index(spark: SparkSession, table: str,
                         n_buckets: int = DEFAULT_BUCKETS) -> None:
-    """Re-register a persisted prefix index's four tables in a fresh
+    """Re-register a persisted prefix index's five tables in a fresh
     session's catalog (see ``ivfpq_index.attach_ivfpq_index`` — same
     in-memory-catalog restart story). The shingle and docs tables
     re-declare their bucket specs so bucketed extends still append;
@@ -316,8 +363,9 @@ def attach_prefix_index(spark: SparkSession, table: str,
     attach_table(spark, _full_table(table))
     attach_table(spark, _docs_table(table), bucket_cols=["doc_id"],
                  n_buckets=n_buckets)
+    attach_table(spark, _delta_table(table))
     attach_table(spark, _meta_table(table))
-    _drop_meta_cache(spark, table)
+    _drop_caches(spark, table)
 
 
 def _in_pred(col: str, values) -> str:
@@ -397,10 +445,12 @@ def probe(
 
     Phase 1 (candidates): the batch's shingle rows ⋈ the pruned probe
     table — hot shingles are absent from the index by construction, so
-    candidate volume tracks rare-shingle collisions only. Phase 2
-    (verify): the doc-array verify table — one narrow row per corpus
-    doc, the exact intersection computed by ``array_intersect`` inside
-    the projection — joined to the candidates and, separately, to the
+    candidate volume tracks rare-shingle collisions only — plus the
+    batch's shingle rows ⋈ the delta's exploded arrays. Phase 2
+    (verify): the doc-array verify table ∪ the delta — one narrow row
+    per corpus doc, the exact intersection computed by
+    ``array_intersect`` inside the projection — joined to the
+    candidates and, separately, to the
     batch arrays (one per batch doc, never duplicated per pair — ADVICE
     r10). On the broadcast path one bounded limit-collect of the
     candidate pairs answers the size gate from the row count, replaces
@@ -473,9 +523,14 @@ def probe(
     def _b(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if broadcast_batch else df
 
+    delta = spark.table(_delta_table(table))
     cand = (
         spark.table(table)
         .join(bsh, "shingle")
+        .unionByName(
+            delta.select(F.explode("shs").alias("shingle"), "doc_id", "sz")
+            .join(bsh, "shingle")
+        )
         # lossless SSJoin length filter (Arasu/Chaudhuri prefix-filter
         # family, public algorithm): jaccard ≥ t ⇒ t·|A| ≤ |B| ≤ |A|/t
         # — the probe table rows carry the corpus doc's shingle-set
@@ -514,7 +569,8 @@ def probe(
             # candidate scan
             cand = cand.localCheckpoint(eager=True)
     pairs = (
-        scan.withColumnRenamed("doc_id", "corpus_doc")
+        scan.unionByName(delta)
+        .withColumnRenamed("doc_id", "corpus_doc")
         .join(_b(cand), "corpus_doc")
         .join(_b(barr), "batch_doc")
         .select(
@@ -524,7 +580,8 @@ def probe(
             F.col("sz").alias("szc"),
             "szb",
         )
-        # replayed crash-window extends can duplicate whole doc rows;
+        # a crashed fold leaves a doc in the base and the delta, and
+        # replayed crash-window appends duplicate whole doc rows;
         # dedup AFTER the projection so the guard shuffle carries
         # scalars, not shingle arrays (duplicate rows hold identical
         # arrays ⇒ identical isz — which survives is immaterial; same
@@ -541,6 +598,15 @@ def probe(
     ).filter(F.col("jaccard") >= threshold)
 
 
+def members(spark: SparkSession, table: str) -> DataFrame:
+    """(doc_id) of every indexed document: the docs sidecar ∪ the
+    delta. A document that a crashed fold left in both appears twice,
+    which changes no anti- or semi-join against it."""
+    return spark.table(_docs_table(table)).select("doc_id").unionByName(
+        spark.table(_delta_table(table)).select("doc_id")
+    )
+
+
 def extend(
     spark: SparkSession,
     docs: DataFrame,
@@ -549,13 +615,98 @@ def extend(
 ) -> int:
     """Append new documents (idempotent under replay): the membership
     anti-join drops docs the index already holds, then
-    ``_append_prefix_docs`` writes the rest. Returns the number of
-    documents added."""
-    known = spark.table(_docs_table(table)).select("doc_id")
+    ``_append_delta`` writes the rest. Returns the number of documents
+    added."""
     fresh = _doc_shingles(
-        batch_anti_join(docs, known, "doc_id"), _meta_row(spark, table).n
+        batch_anti_join(docs, members(spark, table), "doc_id"),
+        _meta_row(spark, table).n,
     ).localCheckpoint(eager=True)
-    return _append_prefix_docs(spark, fresh, table, fresh.count(), n_buckets)
+    return _append_delta(spark, fresh, table, fresh.count(), n_buckets)
+
+
+#: delta rows at which an append folds the delta into the base: the
+#: crossover of the delta's read cost against the fold's cost, measured
+#: on a 4-core box at the curate shape (``tools/soak_text_gate.py``'s
+#: 200-doc base and 60 accepted 60-word docs per epoch). Every 1 000
+#: delta rows add s ≈ 0.033 s to an epoch (membership scan, candidate
+#: join and verify; a fit over 150 fold-free epochs, 60 to 9 000
+#: rows). A fold takes F ≈ 3.4-4.5 s at 600 to 9 000 rows, flat in the
+#: delta size, and its ~33 base files add c ≈ 0.4 ms each to every
+#: later epoch (the file growth of the per-epoch bucketed append this
+#: replaced: 2.5 → 3.7 s over ~2 900 files). At r = 60 rows an epoch,
+#: a bound B costs s·B/2 of delta reads plus (F + 33·c·H/2)·r/B of
+#: folds per epoch over a horizon of H epochs; at H = 300 that is
+#: least at B ≈ 3 700-4 600 rows, ~0.15 s an epoch.
+FOLD_DELTA_ROWS = 4_000
+
+
+def _append_delta(
+    spark: SparkSession,
+    arrs: DataFrame,
+    table: str,
+    added: int,
+    n_buckets: int = DEFAULT_BUCKETS,
+) -> int:
+    """The one append path of the index (``extend`` and the text gate):
+    write ``added`` documents, given as a materialized array frame
+    (doc_id, shs, sz) at the index's shingle width (``_doc_shingles``;
+    other columns are ignored) that the caller has already anti-joined
+    against ``members``, to the delta as one file, and refresh only the
+    delta. The append that takes the delta to ``FOLD_DELTA_ROWS`` folds
+    it into the base before returning. Returns ``added``."""
+    if added == 0:
+        return 0
+    pending = _delta_rows(spark, table)
+    (
+        arrs.select("doc_id", "shs", "sz")
+        .coalesce(1)
+        .write.mode("append")
+        .format("parquet")
+        .saveAsTable(_delta_table(table))
+    )
+    spark.catalog.refreshTable(_delta_table(table))
+    _DELTA_ROWS[_cache_key(spark, table)] = pending + added
+    if pending + added >= FOLD_DELTA_ROWS:
+        _fold_delta(spark, table, n_buckets)
+    return added
+
+
+def _fold_delta(
+    spark: SparkSession, table: str, n_buckets: int = DEFAULT_BUCKETS
+) -> int:
+    """Move the delta into the bucketed base: anti-join it against the
+    docs sidecar, append the rest through ``_append_prefix_docs`` and
+    truncate the delta. The anti-join makes a re-fold idempotent: after
+    a crash between the base append and the truncate, every delta
+    document is already in ``_docs`` and the re-fold appends nothing.
+    Returns the number of documents moved."""
+    moved = Observation()
+    fresh = (
+        batch_anti_join(
+            spark.table(_delta_table(table)),
+            spark.table(_docs_table(table)).select("doc_id"),
+            "doc_id", rows=_delta_rows(spark, table),
+        )
+        .observe(moved, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    added = _append_prefix_docs(spark, fresh, table, moved.get["n"],
+                                n_buckets)
+    _truncate_delta(spark, table)
+    return added
+
+
+def _truncate_delta(spark: SparkSession, table: str) -> None:
+    """Empty the delta in place. An insert-overwrite rather than a
+    ``TRUNCATE TABLE``, which refuses the EXTERNAL tables that
+    ``attach_prefix_index`` registers; the overwrite leaves one
+    schema-bearing empty file."""
+    delta = _delta_table(table)
+    spark.createDataFrame([], spark.table(delta).schema).write.insertInto(
+        delta, overwrite=True
+    )
+    spark.catalog.refreshTable(delta)
+    _DELTA_ROWS[_cache_key(spark, table)] = 0
 
 
 def _append_prefix_docs(
@@ -565,18 +716,16 @@ def _append_prefix_docs(
     added: int,
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> int:
-    """Append ``added`` documents given as a materialized array frame
-    (doc_id, shs, sz) at the index's shingle width (``_doc_shingles``;
-    other columns are ignored), which the caller has already
-    anti-joined against the membership sidecar (the text gate's
-    accepted set is such a frame: its first stage is that anti-join).
-    All three tables are written from these arrays; nothing is
-    tokenized here. Prefix rows for the new docs rank against the *new
-    batch's own* df snapshot — safe because corpus-side prefix pruning
-    is lossless under any per-doc shingle choice of the required length
-    (see module notes); the df order only tunes posting-list length.
+    """The fold's base append: write ``added`` documents, given as a
+    materialized array frame (doc_id, shs, sz) already anti-joined
+    against the docs sidecar, to all three base tables. Nothing is
+    tokenized here. Prefix rows for the new docs rank against the
+    *folded delta's own* df snapshot — safe because corpus-side prefix
+    pruning is lossless under any per-doc shingle choice of the
+    required length (see module notes); the df order only tunes
+    posting-list length.
 
-    Each append writes its own doc_id-sorted run to the verify table —
+    Each fold writes its own doc_id-sorted run to the verify table —
     row-group min-max stats are per-file, so probe pruning keeps working
     across overlapping runs; ``compact_prefix_index`` restores one
     global run."""
@@ -584,7 +733,11 @@ def _append_prefix_docs(
         return 0
     meta = _meta_row(spark, table)
     (
+        # one task per bucket, as compaction does: a fold adds at most
+        # one file per bucket to each bucketed table, not one per
+        # (task, bucket)
         _prefix_rows(arrs, meta.threshold)
+        .repartition(n_buckets, "shingle")
         .write.mode("append")
         .option("parquet.block.size", str(PROBE_BLOCK_BYTES))
         .bucketBy(n_buckets, "shingle")
@@ -606,6 +759,7 @@ def _append_prefix_docs(
     )
     (
         full.select("doc_id", "sz")
+        .repartition(n_buckets, "doc_id")
         .write.mode("append")
         .bucketBy(n_buckets, "doc_id")
         .format("parquet")
@@ -618,19 +772,24 @@ def _append_prefix_docs(
 def compact_prefix_index(
     spark: SparkSession, table: str, n_buckets: int = DEFAULT_BUCKETS
 ) -> int:
-    """Housekeeping under sustained polling: every ``extend`` appends a
-    file set to the bucketed probe table, a sorted run to the verify
-    table, and a file set to the docs sidecar. Rewrites the bucketed
-    tables to ~one file per bucket and merges the verify table's runs
-    back into one global doc_id-sorted run, via the maintenance
-    catalog-swap helpers; probe results are unchanged by construction
-    (same rows, same specs — asserted in tests). Appends must be
-    quiesced during the swap. Returns the post-compaction file count."""
+    """Housekeeping under sustained polling: every append adds a file
+    to the delta, and every fold a file set to the bucketed probe
+    table, a sorted run to the verify table, and a file set to the docs
+    sidecar. Folds the delta first, then rewrites the bucketed tables to
+    ~one file per bucket and merges the verify table's runs back into
+    one global doc_id-sorted run, via the maintenance catalog-swap
+    helpers; probe results are unchanged by construction (same rows,
+    same specs — asserted in tests). Appends must be quiesced during
+    the swap. Returns the post-compaction file count, the delta's
+    included."""
     from trignis_spark.maintenance import (
         compact_bucketed_table,
         compact_sorted_table,
+        table_data_files,
     )
 
+    if _delta_rows(spark, table):
+        _fold_delta(spark, table, n_buckets)
     n = compact_bucketed_table(
         spark, table, "shingle", n_buckets, sort_col="shingle",
         block_bytes=PROBE_BLOCK_BYTES,
@@ -641,4 +800,4 @@ def compact_prefix_index(
     )
     n += compact_bucketed_table(spark, _docs_table(table), "doc_id", n_buckets)
     _refresh(spark, table)
-    return n
+    return n + len(table_data_files(spark, _delta_table(table)))

@@ -9,8 +9,9 @@ exported): documents arrive as change batches (``CurateSink`` on a
 text column) and each epoch passes through
 
 1. **membership anti-join** — documents already admitted to the corpus
-   index sidecar are dropped first, so a replayed epoch (at-least-once
-   upstream) re-admits nothing;
+   index (``dedup_index.members``: the docs sidecar ∪ the delta) are
+   dropped first, so a replayed epoch (at-least-once upstream)
+   re-admits nothing;
 2. **exact in-batch dedup** — lowest ``doc_id`` per content hash wins;
 3. **quality gate** — ``operators.text.quality_score`` at or above
    ``min_quality``;
@@ -25,8 +26,11 @@ text column) and each epoch passes through
    (``dedup.cluster_near_duplicates``) resolves offline if needed) —
    a self-join of the survivors' shingle arrays;
 6. **accept** — append ``(doc_id, text, epoch_id)`` to the accepted
-   store and add the same rows to the index straight through its
-   append (they passed step 1's anti-join this epoch).
+   store and the same rows' shingle arrays to the index delta as one
+   file (``dedup_index._append_delta``; they passed step 1's anti-join
+   this epoch). The append that takes the delta to
+   ``dedup_index.FOLD_DELTA_ROWS`` folds it into the bucketed base
+   inline, so that epoch also carries the fold.
 
 Both near-dup passes use the shingle width the index was built with
 (its meta row), so corpus and in-batch decisions agree. The batch is
@@ -44,7 +48,11 @@ the batch and nothing is re-written.
 
 Scale shape: every gate is an executor-side join against either a
 broadcast batch or the bucketed index — the corpus is never shuffled
-per epoch. Each stage runs once per epoch. The gate makes four
+per epoch. The index write is one small unbucketed delta file per
+epoch; the ranked, bucketed base writes run once per fold, and the
+delta the probe reads stays under the fold bound, so neither the
+epoch's write cost nor the index's file count grows with every epoch.
+Each stage runs once per epoch. The gate makes four
 batch-sized ``localCheckpoint``s: the arrived batch; the good rows of
 steps 1-3 with their shingle arrays; the survivors of step 4, so the
 probe's verify runs once; and the accepted set. Every stage count comes
@@ -150,7 +158,7 @@ def make_ingest_batch_fn(
         docs = docs.localCheckpoint(eager=True)  # cut the source lineage
         n_docs = arrived.get["n"]
         n = di._meta_row(spark, index_table).n
-        known = spark.table(di._docs_table(index_table)).select("doc_id")
+        known = di.members(spark, index_table)
         by_text = Window.partitionBy(F.sha2(F.col("text"), 256)) \
             .orderBy("doc_id")
         ranked = batch_anti_join(docs, known, "doc_id", rows=n_docs) \
@@ -239,7 +247,7 @@ def make_ingest_batch_fn(
         )
         # accepted ⊆ fresh, which already passed the membership
         # anti-join this epoch: append its arrays without repeating it
-        di._append_prefix_docs(spark, accepted, index_table, n_acc)
+        di._append_delta(spark, accepted, index_table, n_acc)
 
     return ingest_batch
 
