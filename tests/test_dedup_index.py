@@ -439,29 +439,70 @@ def test_append_folds_once_the_delta_reaches_the_bound(spark, pindex,
     assert di.extend(spark, _frame(spark, _rand_docs(6, 8, start=500)),
                      pindex) == 12
     assert spark.table(di._delta_table(pindex)).count() == 12
+
+    from trignis_spark.maintenance import table_data_files
+
+    def base_files():
+        return sum(len(table_data_files(spark, t)) for t in (
+            pindex, di._full_table(pindex), di._docs_table(pindex)))
+
+    files_before = base_files()
     assert di.extend(spark, _frame(spark, _rand_docs(7, 6, start=600)),
                      pindex) == 9
     # 21 delta rows crossed the bound: the second append folded them
     assert spark.table(di._delta_table(pindex)).count() == 0
     assert spark.table(di._docs_table(pindex)).count() == 15 + 21
     assert di.members(spark, pindex).count() == 36
+    # one file per bucket to each bucketed table and one verify run,
+    # not one file per (shuffle task, bucket)
+    assert base_files() - files_before <= 2 * di.DEFAULT_BUCKETS + 1
+    # the emptied delta keeps one schema-bearing file for re-attach
+    assert len(table_data_files(spark, di._delta_table(pindex))) == 1
 
 
-def test_crash_between_fold_append_and_truncate_loses_nothing(
+def test_append_during_a_fold_stays_in_the_delta(spark, pindex,
+                                                 monkeypatch):
+    """A delta file written while a fold runs (by another process, which
+    does not share this one's lock) is not among the files the fold
+    read, so the fold leaves it in the delta: its documents stay
+    members and the next fold moves them."""
+    di.build_prefix_index(spark, _frame(spark, _rand_docs(5, 10)), pindex,
+                          threshold=0.5)
+    assert di.extend(spark, _frame(spark, _rand_docs(6, 8, start=500)),
+                     pindex) == 12
+    late = _rand_docs(7, 6, start=600)
+    real_append = di._append_prefix_docs
+
+    def append_then_race(*a, **kw):
+        added = real_append(*a, **kw)
+        di._write_delta(di._doc_shingles(_frame(spark, late), 3), pindex)
+        return added
+
+    monkeypatch.setattr(di, "_append_prefix_docs", append_then_race)
+    assert di._fold_delta(spark, pindex) == 12
+    monkeypatch.setattr(di, "_append_prefix_docs", real_append)
+    ids = {r["doc_id"] for r in di.members(spark, pindex).collect()}
+    assert {d for d, _ in late} <= ids and len(ids) == 15 + 12 + 9
+    assert spark.table(di._delta_table(pindex)).count() == 9
+    assert di._fold_delta(spark, pindex) == 9
+    assert spark.table(di._docs_table(pindex)).count() == 15 + 12 + 9
+
+
+def test_crash_between_fold_append_and_delete_loses_nothing(
         spark, pindex, monkeypatch):
-    """A fold that dies after its base append but before the delta
-    truncate leaves every delta document in both the base and the
+    """A fold that dies after its base append but before it deletes the
+    delta files leaves every delta document in both the base and the
     delta: no document is lost, the probe pairs are unchanged, and the
     re-fold appends nothing."""
     corpus, batch = _split_index(spark, pindex)
     want = _pairs(di.probe(spark, pindex, batch, threshold=0.5))
     members = {r["doc_id"] for r in corpus.collect()}
 
-    def crash(spark, table):
-        raise RuntimeError("crash before the truncate")
+    def crash(spark, table, files):
+        raise RuntimeError("crash before the delete")
 
-    real_truncate = di._truncate_delta
-    monkeypatch.setattr(di, "_truncate_delta", crash)
+    real_delete = di._delete_delta_files
+    monkeypatch.setattr(di, "_delete_delta_files", crash)
     with pytest.raises(RuntimeError, match="crash before"):
         di._fold_delta(spark, pindex)
     assert spark.table(di._delta_table(pindex)).count() == 15
@@ -472,7 +513,7 @@ def test_crash_between_fold_append_and_truncate_loses_nothing(
         assert _pairs(di.probe(spark, pindex, batch, threshold=0.5,
                                broadcast_batch=broadcast_batch)) == want
 
-    monkeypatch.setattr(di, "_truncate_delta", real_truncate)
+    monkeypatch.setattr(di, "_delete_delta_files", real_delete)
     assert di._fold_delta(spark, pindex) == 0
     assert spark.table(di._delta_table(pindex)).count() == 0
     assert spark.table(di._docs_table(pindex)).count() == 39

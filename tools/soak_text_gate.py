@@ -1,14 +1,16 @@
 """Long-horizon soak of the text curation gate at the curate shape.
 
-Builds a 200-document prefix index and runs ``--epochs`` gate epochs
-(``streaming.ingest.make_ingest_batch_fn``) against it. Every epoch is
-a 200-document batch planted like the relay benchmark's curate
-workload: 60 novel documents, 40 exact and 40 one-word-edited copies of
-indexed documents, 30 one-word edits and 30 exact copies of the batch's
-own novel documents. The copies are drawn from every document indexed
-so far, so they hit the bucketed base and the per-epoch delta alike.
-Random 60-word texts over a 5 000-word vocabulary share no shingles, so
-every epoch's ``IngestStats`` are known in advance.
+Builds the relay benchmark's curate prefix index and runs ``--epochs``
+gate epochs (``streaming.ingest.make_ingest_batch_fn``) against it.
+Documents, index and batches come from ``relaybench/curate.py``
+(``Docs`` and ``FULL``), so the soak follows the benchmark's shape: a
+200-document index and 200-document batches of 60 novel documents,
+40 exact and 40 one-word-edited copies of indexed documents, 30
+one-word edits and 30 exact copies of the batch's own novel documents.
+The copies are drawn from every document indexed so far, so they hit
+the bucketed base and the per-epoch delta alike. Random 60-word texts
+over a 5 000-word vocabulary share no shingles, so every epoch's
+``IngestStats`` are known in advance.
 
 Per epoch it prints one JSON line:
 
@@ -35,13 +37,16 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import random
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "relaybench"))
+
+import curate  # noqa: E402  (relaybench's workload: Docs, FULL)
 
 from trignis_spark.maintenance import (  # noqa: E402
     drop_table_and_location,
@@ -52,54 +57,22 @@ from trignis_spark.session import get_spark  # noqa: E402
 from trignis_spark.streaming import ingest  # noqa: E402
 
 INDEX = "soak_text_gate_idx"
-THRESHOLD = 0.8
-CORPUS, NOVEL, CORPUS_EXACT, CORPUS_NEAR = 200, 60, 40, 40
-BATCH_NEAR, BATCH_EXACT, WORDS, VOCAB = 30, 30, 60, 5000
+THRESHOLD = curate.THRESHOLD
 
 
 def _plan(epoch_id: int) -> ingest.IngestStats:
+    c = curate.FULL
     return ingest.IngestStats(
         epoch_id=epoch_id,
-        arrived=NOVEL + CORPUS_EXACT + CORPUS_NEAR + BATCH_NEAR + BATCH_EXACT,
+        arrived=(c["novel"] + c["corpus_exact"] + c["corpus_near"]
+                 + c["batch_near"] + c["batch_exact"]),
         already_known=0,
-        exact_dup=BATCH_EXACT,
+        exact_dup=c["batch_exact"],
         low_quality=0,
-        corpus_near_dup=CORPUS_EXACT + CORPUS_NEAR,
-        batch_near_dup=BATCH_NEAR,
-        accepted=NOVEL,
+        corpus_near_dup=c["corpus_exact"] + c["corpus_near"],
+        batch_near_dup=c["batch_near"],
+        accepted=c["novel"],
     )
-
-
-class _Docs:
-    def __init__(self, seed: int):
-        self.rng = random.Random(seed)
-        self.vocab = [f"w{i}" for i in range(VOCAB)]
-        self.next_id = 1
-
-    def text(self) -> str:
-        return " ".join(self.rng.choices(self.vocab, k=WORDS))
-
-    def edit(self, text: str) -> str:
-        words = text.split()
-        words[len(words) // 2] = f"edit{self.rng.randrange(10**9)}"
-        return " ".join(words)
-
-    def ids(self, n: int) -> list[int]:
-        out = list(range(self.next_id, self.next_id + n))
-        self.next_id += n
-        return out
-
-    def batch(self, indexed: list[str]):
-        novel = [self.text() for _ in range(NOVEL)]
-        picks = self.rng.sample(indexed, CORPUS_EXACT + CORPUS_NEAR)
-        texts = (
-            novel
-            + picks[:CORPUS_EXACT]
-            + [self.edit(t) for t in picks[CORPUS_EXACT:]]
-            + [self.edit(t) for t in novel[:BATCH_NEAR]]
-            + novel[BATCH_NEAR:BATCH_NEAR + BATCH_EXACT]
-        )
-        return list(zip(self.ids(len(texts)), texts)), novel
 
 
 def _wrap(fn, log: list):
@@ -129,12 +102,12 @@ def main() -> int:
     spark = get_spark("soak-text-gate")
     spark.sparkContext.setLogLevel("ERROR")
     schema = "doc_id long, text string"
-    docs = _Docs(args.seed)
-    indexed = [docs.text() for _ in range(CORPUS)]
+    docs = curate.Docs(args.seed, curate.FULL)
+    indexed = [docs.text() for _ in range(curate.FULL["corpus_docs"])]
     for t in di._tables(INDEX):
         drop_table_and_location(spark, t)
     di.build_prefix_index(
-        spark, spark.createDataFrame(list(zip(docs.ids(CORPUS), indexed)),
+        spark, spark.createDataFrame(list(zip(docs.ids(len(indexed)), indexed)),
                                      schema),
         INDEX, threshold=THRESHOLD)
     build_files = _files(spark)
@@ -154,13 +127,13 @@ def main() -> int:
     since_fold, files, bad = 0, build_files, None
     try:
         for epoch in range(args.epochs):
-            rows, novel = docs.batch(indexed)
+            rows, novel_ids = docs.batch(indexed)
             frame = spark.createDataFrame(rows, schema)
             n_probe, n_fold = len(probe_log), len(fold_log)
             t = time.perf_counter()
             fn(frame, epoch)
             wall = time.perf_counter() - t
-            indexed += novel
+            indexed += [t for d, t in rows if d in novel_ids]
             folded = len(fold_log) > n_fold
             since_fold = 0 if folded else since_fold + 1
             files = _files(spark)

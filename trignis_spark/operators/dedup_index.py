@@ -44,8 +44,14 @@ append — ``extend`` and the text gate's accept alike — is one
 ``coalesce(1)`` delta write (``_append_delta``): no ranking, no
 bucketed write, one table refreshed. Once the delta holds
 ``FOLD_DELTA_ROWS`` rows, the append that crossed the bound folds it
-into the base inline (``_fold_delta``): anti-join against ``_docs``,
-one ranked, bucketed base append (``_append_prefix_docs``), truncate.
+into the base inline (``_fold_delta``): list the delta's files,
+anti-join their rows against ``_docs``, one ranked, bucketed base
+append (``_append_prefix_docs``), delete exactly the listed files. In
+one process, a per-index lock runs appends and folds one at a time; an
+append from another process during a fold lands in a file the fold did
+not list and stays in the delta. A probe that reads the delta while
+another thread or process folds it can fail on a deleted file; the
+relay then retries or dead-letters that epoch like any failed write.
 ``compact_prefix_index`` folds first, then rewrites the base to ~one
 file per bucket. A document that a crashed fold left in both the base
 and the delta is one pair per (batch, corpus) doc: the probe's
@@ -60,6 +66,9 @@ count; the corpus is still never shuffled.
 """
 
 from __future__ import annotations
+
+import os
+import threading
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -115,6 +124,13 @@ _META_CACHE: dict = {}
 #: an undercount, which only delays a fold.
 _DELTA_ROWS: dict = {}
 
+#: per-(warehouse, table) lock around an append's write and tally
+#: update and around a whole fold: the environments' gate threads and
+#: the dead-letter replay thread may append to one index at once, and
+#: one fold at a time keeps a document from being folded twice.
+_LOCKS: dict = {}
+_LOCKS_GUARD = threading.Lock()
+
 
 def _cache_key(spark: SparkSession, table: str) -> tuple[str, str]:
     return (spark.conf.get("spark.sql.warehouse.dir", ""), table)
@@ -133,6 +149,11 @@ def _delta_rows(spark: SparkSession, table: str) -> int:
     if key not in _DELTA_ROWS:
         _DELTA_ROWS[key] = spark.table(_delta_table(table)).count()
     return _DELTA_ROWS[key]
+
+
+def _index_lock(spark: SparkSession, table: str) -> threading.Lock:
+    with _LOCKS_GUARD:
+        return _LOCKS.setdefault(_cache_key(spark, table), threading.Lock())
 
 
 def _drop_caches(spark: SparkSession, table: str) -> None:
@@ -635,8 +656,15 @@ def extend(
 #: later epoch (the file growth of the per-epoch bucketed append this
 #: replaced: 2.5 → 3.7 s over ~2 900 files). At r = 60 rows an epoch,
 #: a bound B costs s·B/2 of delta reads plus (F + 33·c·H/2)·r/B of
-#: folds per epoch over a horizon of H epochs; at H = 300 that is
-#: least at B ≈ 3 700-4 600 rows, ~0.15 s an epoch.
+#: folds per epoch over a horizon of H epochs, least at
+#: B* = sqrt(2·r·(F + 33·c·H/2) / s). H = 300 is the soak's length and
+#: nothing else — no workload fixes a horizon — and the file term
+#: assumes no compaction runs in that time (nothing in the service
+#: calls ``compact_prefix_index``). Over F's range: at H = 300,
+#: B* ≈ 4 400-4 900 rows, ~0.15 s an epoch, and 4 000 costs ≤ 0.003 s
+#: an epoch more; without the file term (compaction after every fold)
+#: B* ≈ 3 500-4 000; at H = 3 000, B* ≈ 9 200-9 400, where 4 000 costs
+#: ~0.12 s an epoch more.
 FOLD_DELTA_ROWS = 4_000
 
 
@@ -656,7 +684,17 @@ def _append_delta(
     it into the base before returning. Returns ``added``."""
     if added == 0:
         return 0
-    pending = _delta_rows(spark, table)
+    with _index_lock(spark, table):
+        pending = _delta_rows(spark, table) + added
+        _write_delta(arrs, table)
+        spark.catalog.refreshTable(_delta_table(table))
+        _DELTA_ROWS[_cache_key(spark, table)] = pending
+        if pending >= FOLD_DELTA_ROWS:
+            _fold_delta(spark, table, n_buckets)
+    return added
+
+
+def _write_delta(arrs: DataFrame, table: str) -> None:
     (
         arrs.select("doc_id", "shs", "sz")
         .coalesce(1)
@@ -664,26 +702,28 @@ def _append_delta(
         .format("parquet")
         .saveAsTable(_delta_table(table))
     )
-    spark.catalog.refreshTable(_delta_table(table))
-    _DELTA_ROWS[_cache_key(spark, table)] = pending + added
-    if pending + added >= FOLD_DELTA_ROWS:
-        _fold_delta(spark, table, n_buckets)
-    return added
 
 
 def _fold_delta(
     spark: SparkSession, table: str, n_buckets: int = DEFAULT_BUCKETS
 ) -> int:
-    """Move the delta into the bucketed base: anti-join it against the
-    docs sidecar, append the rest through ``_append_prefix_docs`` and
-    truncate the delta. The anti-join makes a re-fold idempotent: after
-    a crash between the base append and the truncate, every delta
+    """Move the delta into the bucketed base: list the delta's files,
+    anti-join their rows against the docs sidecar, append the rest
+    through ``_append_prefix_docs`` and delete exactly the listed files.
+    A file appended after the listing (by another process) stays in the
+    delta for the next fold. The anti-join makes a re-fold idempotent:
+    after a crash between the base append and the deletes, every listed
     document is already in ``_docs`` and the re-fold appends nothing.
-    Returns the number of documents moved."""
+    The caller holds ``_index_lock``. Returns the number of documents
+    moved."""
+    from trignis_spark.maintenance import table_data_files
+
+    delta = _delta_table(table)
+    files = table_data_files(spark, delta)
     moved = Observation()
     fresh = (
         batch_anti_join(
-            spark.table(_delta_table(table)),
+            spark.read.schema(spark.table(delta).schema).parquet(*files),
             spark.table(_docs_table(table)).select("doc_id"),
             "doc_id", rows=_delta_rows(spark, table),
         )
@@ -692,19 +732,33 @@ def _fold_delta(
     )
     added = _append_prefix_docs(spark, fresh, table, moved.get["n"],
                                 n_buckets)
-    _truncate_delta(spark, table)
+    _delete_delta_files(spark, table, files)
     return added
 
 
-def _truncate_delta(spark: SparkSession, table: str) -> None:
-    """Empty the delta in place. An insert-overwrite rather than a
-    ``TRUNCATE TABLE``, which refuses the EXTERNAL tables that
-    ``attach_prefix_index`` registers; the overwrite leaves one
-    schema-bearing empty file."""
+def _delete_delta_files(
+    spark: SparkSession, table: str, files: list[str]
+) -> None:
+    """Delete the delta files a fold has moved into the base, with
+    their checksum files, and reset the tally. Deleting files rather
+    than overwriting the table keeps every file the fold did not read,
+    and works on the EXTERNAL tables that ``attach_prefix_index``
+    registers. When no file is left, an empty append writes the one
+    schema-bearing file that ``attach_prefix_index`` infers the delta's
+    schema from."""
+    from trignis_spark.maintenance import table_data_files
+
     delta = _delta_table(table)
-    spark.createDataFrame([], spark.table(delta).schema).write.insertInto(
-        delta, overwrite=True
-    )
+    for f in files:
+        crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+        for path in (f, crc):
+            try:
+                os.remove(path)
+            except FileNotFoundError:
+                pass
+    if not table_data_files(spark, delta):
+        spark.createDataFrame([], spark.table(delta).schema).write.mode(
+            "append").format("parquet").saveAsTable(delta)
     spark.catalog.refreshTable(delta)
     _DELTA_ROWS[_cache_key(spark, table)] = 0
 
@@ -788,8 +842,9 @@ def compact_prefix_index(
         table_data_files,
     )
 
-    if _delta_rows(spark, table):
-        _fold_delta(spark, table, n_buckets)
+    with _index_lock(spark, table):
+        if _delta_rows(spark, table):
+            _fold_delta(spark, table, n_buckets)
     n = compact_bucketed_table(
         spark, table, "shingle", n_buckets, sort_col="shingle",
         block_bytes=PROBE_BLOCK_BYTES,
